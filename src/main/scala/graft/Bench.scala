@@ -224,7 +224,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus(32)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "30").toInt
     // Reference-parity fraction sweep (PDF §4 Tables 1–4): same corpus,
     // first 25/50/75/100 % of rows. Empty SPARK_GRAFT_FRACTIONS disables.
@@ -253,15 +253,7 @@ object Bench {
           System.err.println(s"[bench] no sibling sf0.01 beside $sfDir — SF sweep skipped")
           Seq.empty
       })
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     quietBenignAccumulatorRace()
 
     // Extended ops run one SF down by default (same sibling derivation

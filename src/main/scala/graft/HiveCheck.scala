@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.sources.TableOps
 
 /** Standalone check that the DDL surface (sources/TableOps) works against
@@ -13,16 +12,9 @@ object HiveCheck {
   def main(args: Array[String]): Unit = {
     val base = java.nio.file.Files.createTempDirectory("graft_hive").toString
     System.setProperty("derby.system.home", s"$base/derby")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+    val spark = GraftSession.local(4, _
       .config("spark.sql.warehouse.dir", s"$base/warehouse")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .enableHiveSupport()
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .enableHiveSupport())
     require(spark.conf.get("spark.sql.catalogImplementation") == "hive",
       "expected a hive catalog")
 

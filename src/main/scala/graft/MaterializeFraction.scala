@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev-tool main: materialize the first pct % of every table under a
   * scale-factor dir (by primary-key order — `Bench.materializeFraction`'s
@@ -18,15 +17,7 @@ import org.apache.spark.sql.SparkSession
 object MaterializeFraction {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outBase, pctS) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus(8))
     val out = Bench.materializeFraction(spark, sfDir, pctS.toInt, outBase)
     println(s"[materialize-fraction] wrote $out")
     spark.stop()

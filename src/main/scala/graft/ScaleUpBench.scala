@@ -257,17 +257,8 @@ object ScaleUpBench {
     val factors = sys.env.getOrElse("SPARK_GRAFT_SCALEUP_FACTORS", "10,30")
       .split(",").map(_.trim.toInt).toSeq
     val runs = sys.env.getOrElse("SPARK_GRAFT_SCALEUP_RUNS", "5").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val nCores = cpus.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val nCores = GraftSession.cpus(32)
+    val spark = GraftSession.local(nCores)
     // same benign accumulator-race exposure as Bench (see the scaladoc
     // on Bench.quietBenignAccumulatorRace) — keep it out of this
     // artifact's tail too

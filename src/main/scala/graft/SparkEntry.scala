@@ -120,7 +120,7 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // — reference surface (hive.py Q1-Q4 over events) —
     "q1_time_filter" -> srt(ReferenceQueries.q1TimeFilter _, col("event_id")),
     "q2_hourly_avg"  -> srt(ReferenceQueries.q2HourlyAvg _, col("hour_bucket")),

@@ -28,18 +28,11 @@ object ThriftCheck {
       val probe = new java.net.ServerSocket(0)
       try probe.getLocalPort finally probe.close()
     }
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+    val spark = GraftSession.local(4, _
       .config("spark.sql.warehouse.dir", s"$base/warehouse")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .config("hive.server2.thrift.port", port.toString)
       .config("hive.server2.thrift.bind.host", "127.0.0.1")
-      .enableHiveSupport()
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .enableHiveSupport())
 
     // The events table, registered globally so Thrift sessions see it.
     Tables.events(spark, "/root/testdata/sf0.001")

@@ -2249,7 +2249,7 @@ object TextAnalysis {
   private[graft] def corpusMixTokensOn(docs: DataFrame, seed: String): DataFrame = {
     graft.functions.Md5Prefix60.register(docs.sparkSession)
     // NULL text counts as zero tokens — the same defined semantic as
-    // the streaming twin (StreamMixTokens.batchD), so the two halves
+    // the streaming twin (StreamMixTokens.weightExpr), so the two halves
     // cannot diverge on a NULL-text doc (fixture-free edge; the DuckDB
     // twin never sees one)
     val keyed = docs.select(col("doc_id"), col("source"),
@@ -2268,7 +2268,7 @@ object TextAnalysis {
     val tot = caps.agg(sum(col("t_s")).as("b"), sum(col("w")).as("wsum"))
     // t_s = 0 (a source whose every doc is zero-token / NULL-text)
     // yields zero epochs + zero remainder — the streaming twin's
-    // defined semantic (StreamMixTokens.fullNew); a bare division
+    // defined semantic (StreamMixTokens.quotas); a bare division
     // would raise DIVIDE_BY_ZERO under ANSI-on sessions
     val quotas = caps.crossJoin(broadcast(tot))
       .select(col("source"), col("t_s"), expr("(w * b) div wsum").as("b_s"))

@@ -58,6 +58,16 @@ object ReferenceQueries {
         val boundRaw = (maxRaw / scale - 3600L * 1000000L) * scale
         raw.filter(col("ts") >= lit(boundRaw))
           .withColumn("ts", timestamp_micros(expr(s"ts div $scale")))
+      case org.apache.spark.sql.types.TimestampType =>
+        // UTC-adjusted footer (Spark's own TIMESTAMP_MICROS write): the
+        // max collects as java.sql.Timestamp (java.time.Instant under
+        // the java8 datetime API); both keep the footer's µs, and
+        // Instant.minus is exact, so the literal bound is the oracle's
+        val maxTs = raw.agg(max(col("ts"))).collect()(0).get(0) match {
+          case t: java.sql.Timestamp => t.toInstant
+          case i: java.time.Instant => i
+        }
+        raw.filter(col("ts") >= lit(maxTs.minus(1L, java.time.temporal.ChronoUnit.HOURS)))
       case _ =>
         // LocalDateTime keeps the footer's full µs precision (a
         // java.sql.Timestamp round-trip through getTime would floor to

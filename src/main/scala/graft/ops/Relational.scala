@@ -1023,13 +1023,6 @@ object Relational {
       |       TRUE AS within_10pct
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  /** Sketch-only approximate percentile — the library operator (exact
-    * percentile buffers every value per group; the GK sketch does not). */
-  def approxPercentileSketch(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.lineitem(spark, sfDir)
-      .groupBy(col("l_returnflag"))
-      .agg(expr("approx_percentile(l_quantity, 0.5D, 10000)").as("approx_median"))
-
   /** Verification twin (same contract as `approxDistinct`): deliberately
     * computes the exact interpolated median next to the engine-specific
     * sketch and asserts the estimate lands within ±1 quantity unit; the

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -54,9 +53,12 @@ import graft.ext.Similarity
   * path. [[compactStore]] owns the append file pile and rescales the
   * bucket count with store bytes, the same maintenance contract as
   * [[StreamDedup]]. */
-object StreamAnnIndex {
+object StreamAnnIndex extends StoreOperator {
   import StreamStoreOps.MaxPruneKeys
 
+  protected val opName = "streamingIndexAdd"
+  // created by the index build (Similarity.annIndexWrite), not here
+  private[graft] val storeTables = Seq(StoreTable("codes", None, Seq("cell")))
   private def codesT(prefix: String) = s"${prefix}_codes"
 
   /** One micro-batch: encode against the frozen model, append the
@@ -77,11 +79,8 @@ object StreamAnnIndex {
       batch: DataFrame, batchId: Long): DataFrame = {
     val (cents, cb) = Similarity.loadIvfPqModel(spark, prefix)
     StreamStoreOps.withPushdownInWindow(spark) {
-      val w = Window.partitionBy(col("vec_id")).orderBy(col("embedding"))
-      val encoded = Similarity.ivfPqEncode(
-        batch.select(col("vec_id"), col("embedding"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).drop("rn"),
+      val encoded = Similarity.ivfPqEncode(StoreOperator.collapse(
+          batch.select(col("vec_id"), col("embedding")), "vec_id", col("embedding")),
         cents, cb).localCheckpoint(true)
       // store-side read pruned by the batch's own ids (capped — over
       // the cap the full scan is the cheaper plan anyway); restricting
@@ -96,7 +95,7 @@ object StreamAnnIndex {
         .join(slice, Seq("vec_id"), "left_anti")
         .select(col("vec_id"), col("cell"), col("codes"))
         .localCheckpoint(true)
-      StreamStoreOps.appendToStore(spark, codesT(prefix), fresh, Seq("cell"))
+      appendInOrder(spark, prefix, Some(fresh))
       // Append-revision stamp: blue-green serve loops key their codes
       // re-list on (rebuild id, store rev), so new vectors become
       // servable at the next serve-batch boundary WITHOUT a restart
@@ -151,14 +150,8 @@ object StreamAnnIndex {
     * see the object doc). */
   def streamingIndexAdd(vectors: DataFrame, prefix: String = "ann_ivfpq",
       checkpoint: Option[String] = None)
-      (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val writer = vectors.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(processBatch(batch.sparkSession, prefix, batch, batchId), batchId)
-      }
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    start(vectors, prefix, checkpoint)(processBatch(_, prefix, _, _))(sink)
 
   /** Registry replay twin (`e_ann_index_streamed`, oracled by
     * `Similarity.annIndexStreamedSql`): train + persist the index over

@@ -61,9 +61,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * matched_old is the smallest verified kept-corpus match (store drop),
   * the component representative (within-batch drop), or NULL (kept).
   */
-object StreamDedup {
+object StreamDedup extends StoreOperator {
   import StreamStoreOps.MaxPruneKeys
 
+  protected val opName = "streamingDedup"
   private def bands(prefix: String) = s"${prefix}_bands"
   private def toks(prefix: String) = s"${prefix}_toks"
   private def decisions(prefix: String) = s"${prefix}_decisions"
@@ -120,47 +121,32 @@ object StreamDedup {
     math.min(65536L, math.max(BandBuckets.toLong, pow2)).toInt
   }
 
-  /** Idempotent store DDL. All three store tables are BUCKETED+SORTED
-    * on their probe key — bands on the composite candidate-join key
-    * (see [[BandBuckets]]), toks and the decisions ledger on doc_id —
-    * the layout that removes every corpus-proportional serve-path term:
-    * after [[compactStore]] each store is a constant-file-count,
-    * key-clustered table, so a micro-batch's candidate join reads a
-    * bounded file set and shuffles only the batch side, doc_id-keyed
-    * joins (the verify join, the append guards) find the store side
-    * pre-partitioned, and the pushed doc_id IN-lists prune whole
-    * BUCKETS (single-column bucket pruning) on top of the row-group
-    * skips the within-bucket sort provides.
+  /** The store, in append order (store first, decisions last). All three
+    * tables are BUCKETED+SORTED on their probe key — bands on the
+    * composite candidate-join key (see [[BandBuckets]]), toks and the
+    * decisions ledger on doc_id — the layout that removes every
+    * corpus-proportional serve-path term: after [[compactStore]] each
+    * store is a constant-file-count, key-clustered table, so a
+    * micro-batch's candidate join reads a bounded file set and shuffles
+    * only the batch side, doc_id-keyed joins (the verify join, the
+    * append guards) find the store side pre-partitioned, and the pushed
+    * doc_id IN-lists prune whole BUCKETS (single-column bucket pruning)
+    * on top of the row-group skips the within-bucket sort provides.
     * `d_dedup_pipeline_bucketed` proves bucketing cannot change any
     * answer; a store created before this DDL (flat toks/decisions from
     * rounds <= 16) keeps working — appends and compaction follow the
     * catalog's actual spec. */
-  def ensureStore(spark: SparkSession, prefix: String): Unit = {
-    // residue-proof across JVMs: an uncataloged table whose warehouse
-    // directory survived a previous JVM must not adopt the stale files
-    // (TableOps.ensureFreshLocation — the r17 sd_cpa_bands flake)
-    Seq(bands(prefix), toks(prefix), decisions(prefix))
-      .foreach(graft.sources.TableOps.ensureFreshLocation(spark, _))
-    spark.sql(s"CREATE TABLE IF NOT EXISTS ${bands(prefix)} " +
-      "(doc_id BIGINT, band_idx INT, band STRING) USING parquet " +
-      "CLUSTERED BY (band_idx, band) SORTED BY (band_idx, band) " +
-      s"INTO $BandBuckets BUCKETS")
-    spark.sql(s"CREATE TABLE IF NOT EXISTS ${toks(prefix)} " +
-      "(doc_id BIGINT, toks ARRAY<STRING>) USING parquet " +
-      "CLUSTERED BY (doc_id) SORTED BY (doc_id) " +
-      s"INTO $BandBuckets BUCKETS")
-    spark.sql(s"CREATE TABLE IF NOT EXISTS ${decisions(prefix)} " +
-      "(doc_id BIGINT, source STRING, kept BOOLEAN, matched_old BIGINT, " +
-      "batch_id BIGINT) USING parquet " +
-      "CLUSTERED BY (doc_id) SORTED BY (doc_id) " +
-      s"INTO $BandBuckets BUCKETS")
-  }
-
-  // bucket-layout-aligned appends are shared streaming-store
-  // infrastructure — see [[StreamStoreOps.appendToStore]]
-  private def appendToStore(spark: SparkSession, table: String,
-      df: DataFrame, sortCols: Seq[String]): Unit =
-    StreamStoreOps.appendToStore(spark, table, df, sortCols)
+  private[graft] val storeTables = Seq(
+    StoreTable("bands", Some("(doc_id BIGINT, band_idx INT, band STRING) " +
+      "USING parquet CLUSTERED BY (band_idx, band) SORTED BY (band_idx, band) " +
+      s"INTO $BandBuckets BUCKETS"), Seq("band_idx", "band")),
+    StoreTable("toks", Some("(doc_id BIGINT, toks ARRAY<STRING>) USING parquet " +
+      s"CLUSTERED BY (doc_id) SORTED BY (doc_id) INTO $BandBuckets BUCKETS"),
+      Seq("doc_id")),
+    StoreTable("decisions", Some("(doc_id BIGINT, source STRING, kept BOOLEAN, " +
+      "matched_old BIGINT, batch_id BIGINT) USING parquet " +
+      s"CLUSTERED BY (doc_id) SORTED BY (doc_id) INTO $BandBuckets BUCKETS"),
+      Seq("doc_id")))
 
   /** One micro-batch: decide fresh docs, append store then decisions
     * (each anti-joined — see the object doc's crash-window analysis),
@@ -185,23 +171,18 @@ object StreamDedup {
     // restricting either side of an equi-/anti-join on doc_id to the
     // batch's ids is a no-op). With a doc_id-ordered ledger layout
     // ([[compactStore]]) the pushed id range skips files outright.
-    // Within-batch doc_id collapse (the StreamAnnIndex device): an
-    // at-least-once source can redeliver a doc INSIDE one micro-batch;
-    // without the collapse both rows flow through — duplicate verdict
+    // Within-batch doc_id collapse (StoreOperator.collapse): without it
+    // a redelivered doc flows through twice — duplicate verdict
     // emissions, duplicate ledger/toks rows multiplying every later
     // replay join, and (for same-id-different-text redelivery) a
     // minhash signature silently merged from both texts. One
     // deterministic winner (smallest (source, text)) pins replay.
-    val bw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("source"), col("text"))
     // batch1 feeds the id collect, the replay join, and the fresh split;
     // decided feeds the replay join and the fresh anti-join — both
     // pinned ONCE (decidedSlice pins the under-cap ledger slice and
     // stays lazy over the cap) instead of re-running the window / the
     // ledger scan per consumer.
-    val batch1 = batch
-      .withColumn("rn", row_number().over(bw))
-      .filter(col("rn") === 1).drop("rn")
+    val batch1 = StoreOperator.collapse(batch, "doc_id", col("source"), col("text"))
       .localCheckpoint(true)
     val batchIds = batch1.select(col("doc_id")).distinct()
       .limit(MaxPruneKeys + 1).collect().map(_.getLong(0)).toIndexedSeq
@@ -254,28 +235,27 @@ object StreamDedup {
       .join(bandSlice, Seq("doc_id", "band_idx"), "left_anti")
       .select(col("doc_id"), col("band_idx"), col("band"))
       .localCheckpoint(true)
-    // each append follows its table's LIVE bucket layout (the counts
-    // drift upward across compactStore rebucketings; the checkpoints
-    // above already isolated the read sides, so the lazy repartition is
-    // safe to evaluate inside the insert)
-    appendToStore(spark, bands(prefix), newBands, Seq("band_idx", "band"))
     val newToks = keptToks
       .join(storeIdSlice(toks(prefix)), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("toks"))
       .localCheckpoint(true)
-    appendToStore(spark, toks(prefix), newToks, Seq("doc_id"))
     val freshDecisions = verdicts
       .withColumn("batch_id", lit(batchId))
       .select(col("doc_id"), col("source"), col("kept"),
         col("matched_old"), col("batch_id"))
       .localCheckpoint(true)
-    // No guard anti-join here — it is provably redundant: freshDecisions
-    // derives from `fresh` = batch1 ∖ decided, with `decided` PINNED
-    // before any append and only this batch writing the ledger, so a
-    // second anti-join against the same pinned set removes nothing in
-    // any crash window (partial-append residue lands in `decided` on
-    // the NEXT replay, where those docs take the replayed path).
-    appendToStore(spark, decisions(prefix), freshDecisions, Seq("doc_id"))
+    // Each append follows its table's LIVE bucket layout (the counts
+    // drift upward across compactStore rebucketings; the checkpoints
+    // above already isolated the read sides, so the lazy repartition is
+    // safe to evaluate inside the insert). No guard anti-join on the
+    // decisions — it is provably redundant: freshDecisions derives from
+    // `fresh` = batch1 ∖ decided, with `decided` PINNED before any
+    // append and only this batch writing the ledger, so a second
+    // anti-join against the same pinned set removes nothing in any
+    // crash window (partial-append residue lands in `decided` on the
+    // NEXT replay, where those docs take the replayed path).
+    appendInOrder(spark, prefix, Some(newBands), Some(newToks),
+      Some(freshDecisions))
     freshDecisions.union(replayed)
     }
   }
@@ -320,10 +300,10 @@ object StreamDedup {
       } else graft.sources.TableOps.compactTable(spark, table,
         targetFileBytes, orderBy = orderBy)
     }
-    Map(
-      bands(prefix) -> compactOne(bands(prefix), Seq("band_idx", "band")),
-      toks(prefix) -> compactOne(toks(prefix), Seq("doc_id")),
-      decisions(prefix) -> compactOne(decisions(prefix), Seq("doc_id")))
+    storeTables.map { t =>
+      val name = tableName(prefix, t.suffix)
+      name -> compactOne(name, t.sortCols)
+    }.toMap
   }
 
   /** Start the online dedup filter over a streaming (doc_id, source,
@@ -332,13 +312,6 @@ object StreamDedup {
     * recovery contract — see the object doc). */
   def streamingDedup(docs: DataFrame, prefix: String = "stream_dedup",
       checkpoint: Option[String] = None)
-      (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    ensureStore(docs.sparkSession, prefix)
-    val writer = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(processBatch(batch.sparkSession, prefix, batch, batchId), batchId)
-      }
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    start(docs, prefix, checkpoint)(processBatch(_, prefix, _, _))(sink)
 }

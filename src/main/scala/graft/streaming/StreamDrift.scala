@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -49,7 +48,13 @@ import graft.ext.TextAnalysis
   * (source, text)) — the siblings' replay device. Zero-gram docs
   * (NULL/empty text, NULL source) contribute nothing by the gram law.
   */
-object StreamDrift {
+object StreamDrift extends StoreOperator {
+  protected val opName = "streamingDrift"
+  private[graft] val storeTables = Seq(
+    StoreTable("counts", Some("(source STRING, f BIGINT, c_s BIGINT, " +
+      "batch_id BIGINT) USING parquet"), Seq("source", "f")),
+    StoreTable("applied", Some("(batch_id BIGINT) USING parquet"), Seq("batch_id")))
+  override protected val sideTables = Seq("model")
 
   private[graft] def modelT(prefix: String) = s"${prefix}_model"
   private[graft] def countsT(prefix: String) = s"${prefix}_counts"
@@ -62,7 +67,7 @@ object StreamDrift {
   private def appliedStageT(prefix: String) =
     graft.sources.TableOps.stagingNameFor(appliedT(prefix))
 
-  def ensureStore(spark: SparkSession, prefix: String): Unit = {
+  override def ensureStore(spark: SparkSession, prefix: String): Unit = {
     // half-swap recovery FIRST (the TableOps.compactTable drop+RENAME
     // caveat, closed here rather than documented away: a death between
     // the fold's drop and rename leaves the staging table holding the
@@ -90,13 +95,7 @@ object StreamDrift {
         spark.catalog.tableExists(appliedStageT(prefix)))
       spark.sql(
         s"ALTER TABLE ${appliedStageT(prefix)} RENAME TO ${appliedT(prefix)}")
-    // residue-proof across JVMs (TableOps.ensureFreshLocation contract)
-    Seq(countsT(prefix), appliedT(prefix))
-      .foreach(graft.sources.TableOps.ensureFreshLocation(spark, _))
-    spark.sql(s"CREATE TABLE IF NOT EXISTS ${countsT(prefix)} " +
-      "(source STRING, f BIGINT, c_s BIGINT, batch_id BIGINT) USING parquet")
-    spark.sql(s"CREATE TABLE IF NOT EXISTS ${appliedT(prefix)} " +
-      "(batch_id BIGINT) USING parquet")
+    super.ensureStore(spark, prefix)
   }
 
   /** Fit + persist the frozen pool model: dense B-row (f, c_q) bucket
@@ -189,11 +188,9 @@ object StreamDrift {
         .withColumn("batch_id", lit(batchId)).localCheckpoint(true)
 
     // ---- deterministic within-batch collapse, then the delta reduce
-    val bw = Window.partitionBy(col("doc_id")).orderBy(col("source"), col("text"))
-    val collapsed = batch.select(col("doc_id"), col("source"), col("text"))
-      .withColumn("rn", row_number().over(bw))
-      .filter(col("rn") === 1).drop("rn")
-    val deltas = TextAnalysis.dsirSourceCounts(collapsed)
+    val deltas = TextAnalysis.dsirSourceCounts(StoreOperator.collapse(
+        batch.select(col("doc_id"), col("source"), col("text")),
+        "doc_id", col("source"), col("text")))
       .localCheckpoint(true)
 
     // ---- crash-window recovery: counts residue without the applied
@@ -209,19 +206,15 @@ object StreamDrift {
         s"streamingDrift($prefix): counts residue for batch_id=$batchId " +
           "does not match this batch's recomputed deltas — the store " +
           "prefix is bound to a different checkpoint")
-    } else if (deltas.limit(1).count() > 0) {
-      deltas.withColumn("batch_id", lit(batchId))
-        .coalesce(1).sortWithinPartitions("source", "f")
-        .write.insertInto(countsT(prefix))
     }
-    // marker AFTER the counts append — the analyzed crash order. A
-    // zero-gram batch writes neither (its replay recomputes the same
-    // empty delta and the same snapshot).
-    if (hasResidue || deltas.limit(1).count() > 0) {
-      import spark.implicits._
-      Seq(batchId).toDF("batch_id").coalesce(1)
-        .write.insertInto(appliedT(prefix))
-    }
+    // counts, then the applied marker — the declared crash order; the
+    // residue path skips the re-append. A zero-gram batch writes neither
+    // (its replay recomputes the same empty delta and the same snapshot).
+    val changed = hasResidue || deltas.limit(1).count() > 0
+    import spark.implicits._
+    appendInOrder(spark, prefix,
+      Option.when(changed && !hasResidue)(deltas.withColumn("batch_id", lit(batchId))),
+      Option.when(changed)(Seq(batchId).toDF("batch_id")))
     snapshot(spark, prefix)
       .withColumn("batch_id", lit(batchId)).localCheckpoint(true)
   }
@@ -270,15 +263,8 @@ object StreamDrift {
     * contract). */
   def streamingDrift(docs: DataFrame, prefix: String = "stream_drift",
       checkpoint: Option[String] = None)
-      (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    ensureStore(docs.sparkSession, prefix)
-    val writer = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(processBatch(batch.sparkSession, prefix, batch, batchId), batchId)
-      }
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    start(docs, prefix, checkpoint)(processBatch(_, prefix, _, _))(sink)
 
   /** The oracled batch twin (registry entry `d_dsir_kl_streamed`, the
     * `d_dsir_streamed` device): model frozen over the FULL documents
@@ -294,13 +280,12 @@ object StreamDrift {
     * steady-state cost is ONE processBatch per micro-batch. */
   def dsirKlStreamed(spark: SparkSession, sfDir: String): DataFrame = {
     val prefix = "drf_replay"
-    Seq(modelT(prefix), countsT(prefix), appliedT(prefix))
-      .foreach(graft.sources.TableOps.dropWithLocation(spark, _))
+    resetStore(spark, prefix)
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
     modelWrite(spark, prefix, docs)
     val waved = docs
-      .withColumn("wave", expr("CAST(pmod(doc_id DIV 20, 4) AS INT)"))
+      .withColumn("wave", StoreOperator.wave)
       .localCheckpoint(true)
     (0 until 4).map { w =>
       processBatch(spark, prefix,

@@ -31,21 +31,21 @@ import graft.ext.TextAnalysis
   * whose thresholds move both ways), no corpus re-rank, no windows.
   *
   * Store tables (all `USING parquet`, appends sorted on their probe
-  * key so row-group stats prune between compactions):
-  *   - `<prefix>_model`  (f, lr_u) — the frozen 512-row log-ratio
-  *     model; written once by [[modelWrite]], read per batch.
-  *   - `<prefix>_scores` (doc_id, gkey, batch_id) — every pool doc
-  *     ever scored, insert-once on doc_id, key-ordered for the
-  *     bounded selected-set range read.
+  * key so row-group stats prune between compactions), in append order:
   *   - `<prefix>_thr`    (batch_id, t_key, t_doc, n_sel) — the
   *     threshold snapshot per batch ((Long.MinValue, Long.MaxValue)
   *     sentinel while fewer than k docs are pooled: everything
   *     selected).
+  *   - `<prefix>_scores` (doc_id, gkey, batch_id) — every pool doc
+  *     ever scored, insert-once on doc_id, key-ordered for the
+  *     bounded selected-set range read.
   *   - `<prefix>_ledger` (doc_id, gkey, kept, batch_id) — the change
   *     EVENT LOG: every fresh doc's first verdict plus every eviction
   *     flip; the replay fast-path re-emits its batch slice.
+  * plus the frozen side table `<prefix>_model` (f, lr_u), the 512-row
+  * log-ratio model written once by [[modelWrite]], read per batch.
   *
-  * Crash-window order is thr → scores → ledger, the [[StreamMix]]
+  * Crash-window order is thr → scores → ledger, the [[ThresholdMixer]]
   * posture: a thr row without its ledger rows marks a recovering
   * batch, whose recomputed state must MATCH the stored snapshot
   * (foreign-checkpoint refusal) and whose emissions are re-derived;
@@ -63,8 +63,16 @@ import graft.ext.TextAnalysis
   * fixed-point log: no libm in either engine, keys bit-identical by
   * construction. Target-domain arrivals (the sources the model's p side
   * was fitted on) are not candidates and are filtered out. */
-object StreamDsir {
-  import StreamStoreOps.MaxPruneKeys
+object StreamDsir extends StoreOperator {
+  protected val opName = "streamingDsir"
+  private[graft] val storeTables = Seq(
+    StoreTable("thr", Some("(batch_id BIGINT, t_key BIGINT, t_doc BIGINT, " +
+      "n_sel BIGINT) USING parquet"), Seq("batch_id")),
+    StoreTable("scores", Some("(doc_id BIGINT, gkey BIGINT, batch_id BIGINT) " +
+      "USING parquet"), Seq("gkey", "doc_id")),
+    StoreTable("ledger", Some("(doc_id BIGINT, gkey BIGINT, kept BOOLEAN, " +
+      "batch_id BIGINT) USING parquet"), Seq("doc_id")))
+  override protected val sideTables = Seq("model")
 
   private[graft] def modelT(prefix: String) = s"${prefix}_model"
   private[graft] def scoresT(prefix: String) = s"${prefix}_scores"
@@ -81,20 +89,6 @@ object StreamDsir {
     (col("gkey") > lit(tKey)) ||
       (col("gkey") === lit(tKey) && col("doc_id") <= lit(tDoc))
 
-  def ensureStore(spark: SparkSession, prefix: String): Unit = {
-    // residue-proof across JVMs (TableOps.ensureFreshLocation contract)
-    Seq(scoresT(prefix), thrT(prefix), ledgerT(prefix))
-      .foreach(graft.sources.TableOps.ensureFreshLocation(spark, _))
-    spark.sql(s"CREATE TABLE IF NOT EXISTS ${scoresT(prefix)} " +
-      "(doc_id BIGINT, gkey BIGINT, batch_id BIGINT) USING parquet")
-    spark.sql(s"CREATE TABLE IF NOT EXISTS ${thrT(prefix)} " +
-      "(batch_id BIGINT, t_key BIGINT, t_doc BIGINT, n_sel BIGINT) " +
-      "USING parquet")
-    spark.sql(s"CREATE TABLE IF NOT EXISTS ${ledgerT(prefix)} " +
-      "(doc_id BIGINT, gkey BIGINT, kept BOOLEAN, batch_id BIGINT) " +
-      "USING parquet")
-  }
-
   /** Fit + persist the frozen log-ratio model over the reference
     * corpus (target sources vs raw pool — `TextAnalysis.dsirModel`).
     * Train-once: a REFIT under a running selection stream would
@@ -110,18 +104,13 @@ object StreamDsir {
 
   /** ORDERED small-file compaction + thr-history retention — the
     * shared threshold-store maintenance contract
-    * ([[StreamStoreOps.compactThresholdStore]]: rank-based snapshot
+    * ([[StoreOperator.compactThresholdStore]]: rank-based snapshot
     * retention, staged trim), with scores ordered on the (gkey,
     * doc_id) probe key the selected-set range read prunes on. */
   def compactStore(spark: SparkSession, prefix: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
-      retainThrBatches: Int = 8): Map[String, (Int, Int)] = {
-    ensureStore(spark, prefix)
-    StreamStoreOps.compactThresholdStore(spark,
-      Seq(scoresT(prefix) -> Seq("gkey", "doc_id"),
-        ledgerT(prefix) -> Seq("doc_id")),
-      thrT(prefix), targetFileBytes, retainThrBatches)
-  }
+      retainThrBatches: Int = 8): Map[String, (Int, Int)] =
+    compactThresholdStore(spark, prefix, targetFileBytes, retainThrBatches)
 
   /** One micro-batch: score the fresh pool docs against the frozen
     * model, advance the monotone top-k threshold, emit fresh verdicts
@@ -139,77 +128,31 @@ object StreamDsir {
     require(spark.catalog.tableExists(modelT(prefix)),
       s"streamingDsir($prefix): no frozen model at ${modelT(prefix)} — " +
         "fit it once with StreamDsir.modelWrite before streaming")
-    val ledger = spark.table(ledgerT(prefix))
-    val emptyEmission = ledger.filter(lit(false))
-      .select(col("doc_id"), col("gkey"), col("kept"), col("batch_id"))
 
     // Deterministic within-batch collapse + pool filter (the model's
     // own target-domain sources are not candidates), then the frozen
     // scoring law — keys are exact integers, so replays re-derive them
     // bit-identically.
-    val bw = Window.partitionBy(col("doc_id")).orderBy(col("source"), col("text"))
-    val pool = batch.select(col("doc_id"), col("source"), col("text"))
-      .withColumn("rn", row_number().over(bw))
-      .filter(col("rn") === 1).drop("rn")
+    val pool = StoreOperator.collapse(
+        batch.select(col("doc_id"), col("source"), col("text")),
+        "doc_id", col("source"), col("text"))
       .filter(!col("source").isin(targetSources: _*))
     val batchD = TextAnalysis.dsirScore(pool, spark.table(modelT(prefix)),
         seed, buckets)
       .localCheckpoint(true)
-    if (batchD.isEmpty) return emptyEmission
-
-    val batchIds = batchD.select(col("doc_id"))
-      .limit(MaxPruneKeys + 1).collect().map(_.getLong(0)).toIndexedSeq
-    val decidedSlice = StreamStoreOps.decidedSlice(spark, ledger, batchIds)
-
-    // ---- replay fast-path with the foreign-checkpoint guard
-    if (decidedSlice.filter(col("batch_id") === batchId).limit(1).count() > 0) {
-      val undecided = batchD
-        .join(decidedSlice.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .limit(1).count()
-      require(undecided == 0L,
-        s"streamingDsir($prefix): ledger already carries batch_id=$batchId " +
-          "but this batch contains undecided doc_ids — the store prefix " +
-          "is bound to a different checkpoint; use a new prefix or " +
-          "restore the original checkpoint")
-      return ledger.filter(col("batch_id") === batchId)
-        .select(col("doc_id"), col("gkey"), col("kept"), col("batch_id"))
-        .localCheckpoint(true)
+    // fresh pool docs (never decided); crash-residue scores rows of THIS
+    // batch are excluded from every old-side read below
+    val freshK = decidedSplit(spark, prefix, batchD, batchId) match {
+      case Left(emission) => return emission
+      case Right(f) => f.localCheckpoint(true)
     }
 
-    // ---- threshold state (tiny reads, the StreamMix shape)
-    val thrTable = spark.table(thrT(prefix))
-    val ahead = thrTable.filter(col("batch_id") > batchId).limit(1).count()
-    require(ahead == 0L,
-      s"streamingDsir($prefix): thresholds table carries batch ids " +
-        s"beyond $batchId — the store prefix is bound to a different " +
-        "(newer) checkpoint; use a new prefix or restore the original")
-    def thrAt(b: Long): Option[(Long, Long, Long)] =
-      thrTable.filter(col("batch_id") === b)
-        .select(col("t_key"), col("t_doc"), col("n_sel"))
-        .collect().headOption
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val prevBatchId = thrTable.filter(col("batch_id") < batchId)
-      .agg(max(col("batch_id"))).head() match {
-        case r if r.isNullAt(0) => None
-        case r => Some(r.getLong(0))
-      }
-    val prevThr = prevBatchId.flatMap(thrAt)
-    val curThr = thrAt(batchId)
-    val recovering = curThr.isDefined
-    if (prevThr.isEmpty) {
-      val scoresNonEmpty = spark.table(scoresT(prefix)).limit(1).count() > 0
-      require(!scoresNonEmpty || recovering,
-        s"streamingDsir($prefix): scores table is non-empty but no " +
-          "thresholds snapshot precedes this batch — inconsistent store")
-    }
-
-    // ---- fresh pool docs (never decided); crash-residue scores rows
-    // of THIS batch are excluded from every old-side read below.
-    val freshK = batchD
-      .join(decidedSlice.select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-
+    def thrRow(rows: Array[org.apache.spark.sql.Row]) = rows.headOption
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val st = thrState(spark, prefix, batchId,
+      Seq(col("t_key"), col("t_doc"), col("n_sel")), "scores")
+    val prevThr = thrRow(st.prev)
+    val curThr = thrRow(st.cur)
     // ---- the standing selected set: at most k rows, read through the
     // key-range predicate the key-ordered store prunes on. Keys are
     // static, so docs at-or-below the previous threshold are out
@@ -262,7 +205,7 @@ object StreamDsir {
 
     // Recovery-binding guard: a legit crash-after-thr replay re-derives
     // the SAME snapshot; any mismatch is a foreign checkpoint.
-    if (recovering)
+    if (st.recovering)
       require(curThr.contains((tKey, tDoc, nSel)),
         s"streamingDsir($prefix): thresholds already stored for " +
           s"batch_id=$batchId do not match this batch's recomputed " +
@@ -283,22 +226,17 @@ object StreamDsir {
       .withColumn("batch_id", lit(batchId))
       .localCheckpoint(true)
 
-    // ---- appends: thr → scores → ledger (the crash-window order the
-    // object doc analyzes); insertInto is positional.
-    if (!recovering)
-      Seq((batchId, tKey, tDoc, nSel))
-        .toDF("batch_id", "t_key", "t_doc", "n_sel")
-        .coalesce(1).write.insertInto(thrT(prefix))
+    // ---- appends in the declared order thr → scores → ledger
     val scoresToAppend =
-      if (!recovering) freshK
+      if (!st.recovering) freshK
       else freshK.join(spark.table(scoresT(prefix)).select(col("doc_id")),
         Seq("doc_id"), "left_anti").localCheckpoint(true)
-    scoresToAppend.select(col("doc_id"), col("gkey"))
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).sortWithinPartitions("gkey", "doc_id")
-      .write.insertInto(scoresT(prefix))
-    delta.coalesce(1).sortWithinPartitions("doc_id")
-      .write.insertInto(ledgerT(prefix))
+    appendInOrder(spark, prefix,
+      Option.when(!st.recovering)(Seq((batchId, tKey, tDoc, nSel))
+        .toDF("batch_id", "t_key", "t_doc", "n_sel")),
+      Some(scoresToAppend.select(col("doc_id"), col("gkey"))
+        .withColumn("batch_id", lit(batchId))),
+      Some(delta))
     delta
   }
 
@@ -329,16 +267,9 @@ object StreamDsir {
       seed: String = "dsir42", k: Int = TextAnalysis.DsirK,
       targetSources: Seq[String] = TextAnalysis.DsirTargetSources,
       checkpoint: Option[String] = None)
-      (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    ensureStore(docs.sparkSession, prefix)
-    val writer = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(processBatch(batch.sparkSession, prefix, batch, batchId,
-          seed, k, targetSources), batchId)
-      }
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    start(docs, prefix, checkpoint)(
+      processBatch(_, prefix, _, _, seed, k, targetSources))(sink)
 
   /** The oracled batch twin (registry entry `d_dsir_streamed`, the
     * same device as `d_corpus_mix_streamed`): model frozen over the
@@ -355,14 +286,11 @@ object StreamDsir {
     * micro-batch. */
   def dsirStreamed(spark: SparkSession, sfDir: String): DataFrame = {
     val prefix = "dsr_replay"
-    Seq(modelT(prefix), scoresT(prefix), thrT(prefix), ledgerT(prefix))
-      .foreach(graft.sources.TableOps.dropWithLocation(spark, _))
+    resetStore(spark, prefix)
     val docs = graft.Tables.documents(spark, sfDir)
     modelWrite(spark, prefix, docs)
-    // integer div, never double/floor: above 2^53 a double quotient
-    // loses ulps and could mis-wave a doc vs the twin's integer `//`
     val waved = docs
-      .withColumn("wave", expr("CAST(pmod(doc_id DIV 20, 4) AS INT)"))
+      .withColumn("wave", StoreOperator.wave)
       .select(col("doc_id"), col("source"), col("text"), col("wave"))
       .localCheckpoint(true)
     (0 until 4).foreach { w =>
@@ -383,7 +311,7 @@ object StreamDsir {
         max(when(col("rnLast") === 1, col("kept"))).as("kept"))
     spark.table(scoresT(prefix))
       .select(col("doc_id"), col("gkey"),
-        expr("CAST(pmod(doc_id DIV 20, 4) AS INT)").as("wave"))
+        StoreOperator.wave.as("wave"))
       .join(verdicts, Seq("doc_id"))
       .select(col("doc_id"), col("gkey"), col("wave"),
         col("admitted"), col("kept"))

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -13,117 +12,52 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * everything on hand under the exact-integer law (`u12 = min over
   * sources of n·(12/w)`, `quota = (w·u12) div 12`, kept = the quota docs
   * with the smallest shuffle keys, ties by doc_id), and the caller's sink
-  * receives the batch's VERDICT CHANGES — the dynamics `corpusMixIncr`
-  * pins batch-side: an arrival that shrinks the binding source EVICTS
-  * previously-kept docs, growth ADMITS new ones.
+  * receives the batch's VERDICT CHANGES — an arrival that shrinks the
+  * binding source EVICTS previously-kept docs, growth ADMITS new ones.
   *
-  * == The scale design: thresholds, not ranks ==
-  *
-  * `kept ⟺ pos ≤ quota` over the (skey, doc_id) rank within a source is
-  * EQUIVALENT to `kept ⟺ (skey, doc_id) ≤ T(source)` where T is the key
-  * of the source's quota-th smallest doc — shuffle keys are unique per
-  * doc, so the rank predicate collapses to a total-order comparison
-  * against ONE key per source. That equivalence is the whole design:
-  *
-  *   - the mix STATE is a ~|sources|-row thresholds table, not a per-doc
-  *     kept column — a doc's current verdict is recomputed from its key
-  *     and its source's threshold in O(1), so there is no per-batch
-  *     window over the change ledger (the round-15 scale residual: a
-  *     `row_number` over the FULL ledger every micro-batch);
-  *   - per-source counts are maintained INCREMENTALLY (n' = n + fresh
-  *     arrivals), so quota recomputation is driver-side integer
-  *     arithmetic over ~|sources| rows — no per-batch corpus aggregate;
-  *   - a batch changes verdicts ONLY in the boundary region between the
-  *     old and new thresholds, so the flip scan is a range-pruned read
-  *     of the key-ordered docs store (files outside [T_old, T_new] are
-  *     skipped via parquet min/max), never a full-corpus rank window
-  *     (the other round-15 residual: `corpusMixOn`'s per-source
-  *     `row_number` over the WHOLE accumulated corpus every batch);
-  *   - the new threshold itself is found by DENSITY-GUIDED RANGE PROBES:
-  *     md5-prefix keys are uniform on [0, 2^60), so the window expected
-  *     to hold the k keys past T_old is k/n·2^60 wide — one range-pruned
-  *     scan of ~4× that window (geometrically widened on undershoot,
-  *     full-range fallback guaranteed to terminate) ranks a slice of
-  *     O(|quota shift|) rows instead of the whole source. Quota shifts
-  *     are batch-bounded in steady state (`Δquota ≤ w·|batch| ≤
-  *     4·|batch|`); the one mass-flip case — a NEW source arriving small
-  *     shrinks u12 and evicts across every source — costs O(flips),
-  *     which is the size of the emission itself, the best possible
-  *     bound.
-  *
-  * Per-batch cost is therefore O(batch + flips + pruned-scan overhead)
-  * — it does NOT grow with the accumulated corpus except through
-  * file-skip constants, the same posture the streaming-dedup serve path
-  * measured at 2.0× for a 100× corpus (BENCH_SCALEUP.json; the
-  * `mix_serve` probe in [[graft.ScaleUpBench]] records this operator's
-  * own curve).
-  *
-  * == Store tables (created on first use) ==
-  *
-  *   - `<prefix>_docs`   (doc_id, source, skey) — the accumulated
-  *     corpus; compacted ordered by (source, skey, doc_id)
-  *     ([[compactStore]]) so boundary probes and flip scans are
-  *     file-skipping range reads. Document BODIES are never stored: the
-  *     mix is keyed on (doc_id, source) alone.
-  *   - `<prefix>_ledger` (doc_id, source, kept, batch_id) — one row per
-  *     VERDICT CHANGE (first verdict on arrival, then a row per flip);
-  *     the replay log AND the decided-set filter, probed only by the
-  *     batch's own doc_ids (bounded IN-list, doc_id-ordered compaction
-  *     turns it into row-group skips). Never windowed.
+  * The [[ThresholdMixer]] with every doc weighing 1: kept ⟺ rank ≤ quota
+  * ⟺ (skey, doc_id) ≤ T(source). Store tables, in append order:
   *   - `<prefix>_thr`    (source, w, n, quota, t_skey, t_doc, batch_id)
-  *     — the thresholds snapshot appended per state-changing batch;
-  *     current state = rows at the highest batch_id. ~|sources| rows per
-  *     batch; a deployment trims history to the trailing batches during
-  *     compaction (retention policy — the tail is only read for crash
-  *     recovery of the most recent batch).
-  *
-  * == Exactly-once contract ==
-  *
-  * Append order is thr → docs → ledger, each append atomic under
-  * Spark's file-commit protocol, giving three crash windows that all
-  * converge under foreachBatch's serial replay:
-  *
-  *   - crash BEFORE the thr append: plain re-run — nothing recorded.
-  *   - crash after thr, before docs: the replay finds thr rows carrying
-  *     this batch_id and REUSES them (the stored thresholds are the
-  *     deterministic function of the same corpus+batch, recomputing is
-  *     legal but pointless); fresh docs are re-derived from the ledger
-  *     (unwritten), the docs append proceeds, the delta is recomputed
-  *     against the SAME stored thresholds — identical emission.
-  *   - crash after docs, before ledger: as above, plus the docs append
-  *     guards with an anti-join — taken ONLY on this recovery path
-  *     (normal batches skip the probe entirely: a crash after docs
-  *     implies thr already carries the batch_id, so `curThr.nonEmpty`
-  *     detects the window). Old-doc flip scans exclude the batch's own
-  *     fresh ids so the half-appended docs cannot masquerade as old
-  *     corpus.
-  *   - crash after ledger, before the sink completed: the replay finds
-  *     ledger rows for this batch_id AND every batch doc decided, and
-  *     re-emits exactly the recorded rows — the sink must be idempotent
-  *     per batchId (the standard foreachBatch recovery contract).
-  *
-  * A replay detection that matches the batch_id but finds UNDECIDED
-  * batch docs refuses loudly: that state means the store prefix is
-  * bound to a DIFFERENT checkpoint (a fresh checkpoint restarts batch
-  * ids at 0 against a store whose ledger already carries them — the
-  * silent-swallow hazard), never a crash window of this contract.
+  *   - `<prefix>_docs`   (doc_id, source, skey)
+  *   - `<prefix>_ledger` (doc_id, source, kept, batch_id)
   *
   * Emitted rows: (doc_id, source, kept, batch_id). Folding emissions by
   * latest batch_id reproduces the full kept set after every batch —
   * spec-asserted equal to `corpusMixIncr`'s per-wave kept columns
   * (StreamMixSpec), which ties the online operator to the DuckDB-oracled
   * law. */
-object StreamMix {
-  import StreamStoreOps.{KeySpace, MaxPruneKeys, NoKeyD, NoKeyS, keyGT, keyLE}
+object StreamMix extends ThresholdMixer {
+  protected val opName = "streamingMix"
+  private[graft] val storeTables = Seq(
+    StoreTable("thr", Some("(source STRING, w BIGINT, n BIGINT, quota BIGINT, " +
+      "t_skey BIGINT, t_doc BIGINT, batch_id BIGINT) USING parquet"), Seq("batch_id")),
+    StoreTable("docs", Some("(doc_id BIGINT, source STRING, skey BIGINT) " +
+      "USING parquet"), Seq("source", "skey", "doc_id")),
+    StoreTable("ledger", Some("(doc_id BIGINT, source STRING, kept BOOLEAN, " +
+      "batch_id BIGINT) USING parquet"), Seq("doc_id")))
+  protected val verdict = "kept"
+  protected val weightExpr = None
+  protected val inputCols = Seq("doc_id", "source")
+  // cum_t of the count law is the quota itself; no epochs
+  protected val thrCanonical = Seq(col("w"), col("n"), lit(0L), col("quota"),
+    col("t_skey"), col("t_doc"), col("quota"))
+  protected def thrValues(t: MixThr): Seq[Long] = Seq(t.w, t.total, t.rem, t.tS, t.tD)
 
-  private def docsT(prefix: String) = s"${prefix}_docs"
-  private def ledgerT(prefix: String) = s"${prefix}_ledger"
-  private def thrT(prefix: String) = s"${prefix}_thr"
-
-  /** Threshold row: per-source state. (tSkey, tDoc) is the key of the
-    * source's quota-th smallest doc, or the sentinel when quota = 0. */
-  private final case class Thr(source: String, w: Long, n: Long,
-      quota: Long, tSkey: Long, tDoc: Long)
+  /** The 12-trick (`v = n·(12/w)`, `quota = (w·u12) div 12`) is EXACT
+    * integer math only for weights dividing 12 — the batch law's
+    * documented constraint (TextAnalysis corpusMix scaladoc). An
+    * unvalidated caller weight of 5 silently distorts the mix (12/5=2),
+    * 13+ zeroes every quota (mass eviction), 0 divides by zero. */
+  protected def quotas(prefix: String, totals: Map[String, Long],
+      weights: Map[String, Long]): Map[String, (Long, Long)] = {
+    weights.foreach { case (s, w) =>
+      require(w >= 1 && 12L % w == 0L,
+        s"$opName($prefix): weight $w for source '$s' — the exact-integer " +
+          "quota law requires a divisor of 12 ({1, 2, 3, 4, 6, 12})")
+    }
+    val u12 = totals.map { case (s, n) => n * (12L / weights(s)) }.min
+    totals.map { case (s, _) => s -> ((0L, (weights(s) * u12) / 12L)) }
+  }
 
   /** Default source-weight law: the fixture's `(srcN mod 4) + 1`, the
     * same parse `corpusMixOn` applies batch-side. A source's weight only
@@ -146,425 +80,28 @@ object StreamMix {
     math.floorMod(source.drop(3).take(10).toLong, 4L) + 1L
   }
 
-  def ensureStore(spark: SparkSession, prefix: String): Unit = {
-    // residue-proof across JVMs (TableOps.ensureFreshLocation contract)
-    Seq(docsT(prefix), ledgerT(prefix), thrT(prefix))
-      .foreach(graft.sources.TableOps.ensureFreshLocation(spark, _))
-    spark.sql(s"CREATE TABLE IF NOT EXISTS ${docsT(prefix)} " +
-      "(doc_id BIGINT, source STRING, skey BIGINT) USING parquet")
-    spark.sql(s"CREATE TABLE IF NOT EXISTS ${ledgerT(prefix)} " +
-      "(doc_id BIGINT, source STRING, kept BOOLEAN, batch_id BIGINT) " +
-      "USING parquet")
-    spark.sql(s"CREATE TABLE IF NOT EXISTS ${thrT(prefix)} " +
-      "(source STRING, w BIGINT, n BIGINT, quota BIGINT, " +
-      "t_skey BIGINT, t_doc BIGINT, batch_id BIGINT) USING parquet")
-  }
-
-  /** ORDERED small-file compaction of the store — the maintenance pass
-    * the serve path's pruning assumes, run with the stream idle (same
-    * contract as [[StreamDedup.compactStore]]): docs range-partitioned +
-    * sorted on (source, skey, doc_id) so boundary probes and flip scans
-    * skip every file outside their per-source key window; the ledger on
-    * doc_id so the batch IN-list skips row groups; thr TRIMMED to the
-    * trailing `retainThrBatches` snapshots then compacted on batch_id —
-    * the thresholds table otherwise grows ~|sources| rows per batch
-    * forever, while recovery only ever reads the trailing snapshot
-    * (older history is an audit convenience, not state). Returns
-    * per-table (filesBefore, filesAfter). */
-  def compactStore(spark: SparkSession, prefix: String,
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      retainThrBatches: Int = 8): Map[String, (Int, Int)] = {
-    ensureStore(spark, prefix)
-    StreamStoreOps.compactMixStore(spark, docsT(prefix), ledgerT(prefix),
-      thrT(prefix), targetFileBytes, retainThrBatches)
-  }
-
-  /** One micro-batch: extend the corpus, shift the per-source
-    * thresholds, emit the verdict changes. Exposed package-private so
-    * specs can drive replay/crash windows without a running stream.
-    * Returns the batch's emission frame (recomputed or replayed — see
-    * the object doc's crash-window analysis), eagerly materialized. */
+  /** One micro-batch (see [[ThresholdMixer]]); package-private so specs
+    * drive replay/crash windows without a running stream. */
   private[graft] def processBatch(spark: SparkSession, prefix: String,
       batch: DataFrame, batchId: Long, seed: String = "mix42",
-      weights: String => Long = FixtureWeights): DataFrame = {
-    ensureStore(spark, prefix)
-    graft.functions.Md5Prefix60.register(spark)
-    val ledger = spark.table(ledgerT(prefix))
-    val emptyEmission = ledger.filter(lit(false))
-      .select(col("doc_id"), col("source"), col("kept"), col("batch_id"))
+      weights: String => Long = FixtureWeights): DataFrame =
+    mixBatch(spark, prefix, batch, batchId, seed, weights)
 
-    // Deterministic within-batch collapse (smallest source — same
-    // replay device as StreamDedup/StreamMixTokens): dropDuplicates
-    // keeps a partition-order-dependent row, so a crash-after-thr
-    // replay of an at-least-once redelivery that carried one doc_id
-    // under two sources could recompute different per-source counts
-    // and wedge on the recovery consistency guard. Ties (same doc_id,
-    // same source) are indistinguishable downstream.
-    val bw = Window.partitionBy(col("doc_id")).orderBy(col("source"))
-    val batchD = batch.select(col("doc_id"), col("source"))
-      .withColumn("rn", row_number().over(bw))
-      .filter(col("rn") === 1).drop("rn").localCheckpoint(true)
-    if (batchD.isEmpty) return emptyEmission
+  /** Current kept verdict for every stored doc from the latest
+    * thresholds snapshot — compared against `corpusMixOn`'s full re-rank
+    * by audits and the ScaleUpBench mix-serve probe. */
+  def currentKept(spark: SparkSession, prefix: String): DataFrame =
+    currentState(spark, prefix)
+      .select(col("doc_id"), col("source"), col("in").as("kept"))
 
-    // ---- decided-set slice: ONE pruned ledger read serves both the
-    // replay detection and the fresh-doc split (capped IN-list pushed
-    // natively, lazy full read over the cap — StreamStoreOps doc).
-    val batchIds = batchD.select(col("doc_id"))
-      .limit(MaxPruneKeys + 1).collect().map(_.getLong(0)).toIndexedSeq
-    val decidedSlice = StreamStoreOps.decidedSlice(spark, ledger, batchIds)
-
-    // ---- replay fast-path with the checkpoint-binding guard: ledger
-    // rows for this batch_id mean the batch fully committed — but ONLY
-    // if every batch doc is decided. A fresh checkpoint restarted
-    // against an existing store presents old batch ids with NEW docs;
-    // silently re-emitting history would swallow them, so refuse.
-    if (decidedSlice.filter(col("batch_id") === batchId).limit(1).count() > 0) {
-      val undecided = batchD
-        .join(decidedSlice.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .limit(1).count()
-      require(undecided == 0L,
-        s"streamingMix($prefix): ledger already carries batch_id=$batchId " +
-          "but this batch contains undecided doc_ids — the store prefix is " +
-          "bound to a different checkpoint (a fresh checkpoint restarts " +
-          "batch ids against a store that already used them); use a new " +
-          "prefix or restore the original checkpoint")
-      return ledger.filter(col("batch_id") === batchId)
-        .select(col("doc_id"), col("source"), col("kept"), col("batch_id"))
-        .localCheckpoint(true)
-    }
-
-    // ---- thresholds state: current (prev batch) + possibly this
-    // batch's own rows from a crashed attempt. Tiny table reads.
-    val thrTable = spark.table(thrT(prefix))
-    val ahead = thrTable.filter(col("batch_id") > batchId).limit(1).count()
-    require(ahead == 0L,
-      s"streamingMix($prefix): thresholds table carries batch ids beyond " +
-        s"$batchId — the store prefix is bound to a different (newer) " +
-        "checkpoint; use a new prefix or restore the original checkpoint")
-    val prevBatchId = thrTable.filter(col("batch_id") < batchId)
-      .agg(max(col("batch_id"))).head() match {
-        case r if r.isNullAt(0) => None
-        case r => Some(r.getLong(0))
-      }
-    def collectThr(b: Long): Map[String, Thr] =
-      thrTable.filter(col("batch_id") === b)
-        .select(col("source"), col("w"), col("n"), col("quota"),
-          col("t_skey"), col("t_doc"))
-        .collect()
-        .map(r => r.getString(0) -> Thr(r.getString(0), r.getLong(1),
-          r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
-        .toMap
-    val prevThr: Map[String, Thr] = prevBatchId.map(collectThr).getOrElse(Map.empty)
-    val curThr: Map[String, Thr] = collectThr(batchId)
-    val recovering = curThr.nonEmpty
-    if (prevThr.isEmpty) {
-      val docsNonEmpty = spark.table(docsT(prefix)).limit(1).count() > 0
-      require(!docsNonEmpty || recovering,
-        s"streamingMix($prefix): docs table is non-empty but no thresholds " +
-          "snapshot precedes this batch — inconsistent store state")
-    }
-
-    // ---- fresh docs (never decided), keyed. The ledger anti-join is
-    // against the pruned slice, so this is batch-sized work.
-    val freshK = batchD
-      .join(decidedSlice.select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("source"),
-        // seed goes through lit(), never string interpolation into the
-        // expr — a quote in a caller seed would break parsing (or worse,
-        // splice expressions); the function itself is the registered
-        // md5_prefix60, same as the batch law's
-        call_function("md5_prefix60",
-          concat(lit(seed), lit(":"), col("doc_id").cast("string")))
-          .as("skey"))
-      .localCheckpoint(true)
-
-    // Old-corpus reads below must never see this batch's own docs: on
-    // the crash-after-docs recovery path they are already in the table.
-    // Fresh is micro-batch-sized, so the anti-join broadcasts.
-    def oldDocs: DataFrame = spark.table(docsT(prefix))
-      .join(broadcast(freshK.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-
-    // ---- per-source fresh counts and b = |fresh ≤ T_old| (one job).
-    import spark.implicits._
-    val prevDf = prevThr.values.toSeq
-      .map(t => (t.source, t.tSkey, t.tDoc)).toDF("source", "p_skey", "p_doc")
-    val freshStats = freshK
-      .join(broadcast(prevDf), Seq("source"), "left")
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("cf"),
-        sum(when((col("skey") < coalesce(col("p_skey"), lit(NoKeyS))) ||
-          (col("skey") === coalesce(col("p_skey"), lit(NoKeyS)) &&
-            col("doc_id") <= coalesce(col("p_doc"), lit(NoKeyD))), 1L)
-          .otherwise(0L)).as("b"))
-      .collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-
-    // ---- the exact-integer quota law over incrementally-maintained
-    // counts: driver arithmetic on ~|sources| rows, no corpus scan.
-    val sources = (prevThr.keySet ++ freshStats.keySet).toSeq.sorted
-    val nNew: Map[String, Long] = sources.map { s =>
-      s -> (prevThr.get(s).map(_.n).getOrElse(0L) +
-        freshStats.get(s).map(_._1).getOrElse(0L))
-    }.toMap
-    val wOf: Map[String, Long] = sources.map { s =>
-      s -> prevThr.get(s).map(_.w).getOrElse(weights(s))
-    }.toMap
-    // The 12-trick (`v = n·(12/w)`, `quota = (w·u12) div 12`) is EXACT
-    // integer math only for weights dividing 12 — the batch law's
-    // documented constraint (TextAnalysis corpusMix scaladoc). An
-    // unvalidated caller weight of 5 silently distorts the mix (12/5=2),
-    // 13+ zeroes every quota (mass eviction), 0 divides by zero.
-    wOf.foreach { case (s, w) =>
-      require(w >= 1 && 12L % w == 0L,
-        s"streamingMix($prefix): weight $w for source '$s' — the " +
-          "exact-integer quota law requires a divisor of 12 " +
-          "({1, 2, 3, 4, 6, 12})")
-    }
-    val u12 = sources.map(s => nNew(s) * (12L / wOf(s))).min
-    val quotaNew: Map[String, Long] =
-      sources.map(s => s -> (wOf(s) * u12) / 12L).toMap
-
-    // Recovery-binding guard: a legit crash-after-thr replay re-derives
-    // the SAME (sources, w, n, quota) from the same corpus+batch, so any
-    // mismatch against the stored snapshot means the batch_id collision
-    // is a foreign checkpoint (fresh checkpoint restarted against a used
-    // store prefix), not a crash window — refuse rather than mix this
-    // batch against thresholds computed from different documents.
-    if (recovering) {
-      val consistent = curThr.keySet == sources.toSet &&
-        sources.forall { s =>
-          val t = curThr(s)
-          t.w == wOf(s) && t.n == nNew(s) && t.quota == quotaNew(s)
-        }
-      require(consistent,
-        s"streamingMix($prefix): thresholds already stored for " +
-          s"batch_id=$batchId do not match this batch's recomputed state " +
-          "— the store prefix is bound to a different checkpoint; use a " +
-          "new prefix or restore the original checkpoint")
-    }
-
-    val newThr: Map[String, Thr] =
-      if (recovering) curThr
-      else {
-        // rank of T_old within the MERGED (decided ∪ fresh) source =
-        // quota_old + b; the threshold must move delta positions.
-        final case class Probe(source: String, dir: Int, k: Long,
-            tS: Long, tD: Long, var width: Long)
-        val resolved = scala.collection.mutable.Map[String, (Long, Long)]()
-        val probes = scala.collection.mutable.ArrayBuffer[Probe]()
-        sources.foreach { s =>
-          val q = quotaNew(s)
-          val told = prevThr.get(s).map(t => (t.tSkey, t.tDoc))
-            .getOrElse((NoKeyS, NoKeyD))
-          val rankAtTold = prevThr.get(s).map(_.quota).getOrElse(0L) +
-            freshStats.get(s).map(_._2).getOrElse(0L)
-          val delta = q - rankAtTold
-          if (q == 0L) resolved(s) = (NoKeyS, NoKeyD)
-          else if (delta == 0L) resolved(s) = told
-          else {
-            // k-th needed key past T_old (ascending if the threshold
-            // moves right, descending if left — position r−q+1 counts
-            // T_old itself); starting window = 4× the uniform-density
-            // expectation for k keys out of n on [0, 2^60).
-            val k = if (delta > 0) delta else rankAtTold - q + 1
-            val w0 = ((BigInt(k) * KeySpace * 4) / BigInt(nNew(s)).max(1))
-              .min(KeySpace).toLong.max(1L)
-            probes += Probe(s, if (delta > 0) 1 else -1, k,
-              told._1, told._2, w0)
-          }
-        }
-        var rounds = 0
-        while (probes.nonEmpty) {
-          rounds += 1
-          require(rounds <= 64,
-            "streamingMix: boundary probe failed to converge (bug)")
-          val pred: Column = probes.map { p =>
-            val base = col("source") === lit(p.source)
-            if (p.dir > 0)
-              base && keyGT(col("skey"), col("doc_id"), p.tS, p.tD) &&
-                col("skey") <= lit(math.min(KeySpace - 1,
-                  if (p.tS > KeySpace - p.width) KeySpace - 1 else p.tS + p.width))
-            else
-              base && keyLE(col("skey"), col("doc_id"), p.tS, p.tD) &&
-                col("skey") >= lit(math.max(-1L, p.tS - p.width))
-          }.reduce(_ || _)
-          val slice = oldDocs.filter(pred)
-            .select(col("doc_id"), col("source"), col("skey"))
-            .unionByName(freshK.filter(pred)
-              .select(col("doc_id"), col("source"), col("skey")))
-          val kdir = probes.map(p => (p.source, p.dir, p.k))
-            .toSeq.toDF("source", "dir", "k")
-          // one aggregation job: slice size and the k-th key per source.
-          // (doc_id·dir ordering assumes |doc_id| < 2^62 — true of any
-          // realistic id scheme; skey < 2^60 by construction.)
-          val rnW = Window.partitionBy(col("source"))
-            .orderBy((col("skey") * col("dir")).asc,
-              (col("doc_id") * col("dir")).asc)
-          val res = slice.join(broadcast(kdir), Seq("source"))
-            .withColumn("rn", row_number().over(rnW))
-            .groupBy(col("source"))
-            .agg(count(lit(1)).as("cnt"),
-              max(when(col("rn") === col("k"),
-                struct(col("skey"), col("doc_id")))).as("hit"))
-            .collect()
-            .map(r => r.getString(0) ->
-              (r.getLong(1), Option(r.getStruct(2))
-                .map(h => (h.getLong(0), h.getLong(1)))))
-            .toMap
-          val still = probes.filter { p =>
-            res.get(p.source).flatMap(_._2) match {
-              case Some(hit) => resolved(p.source) = hit; false
-              case None =>
-                val covered =
-                  if (p.dir > 0) p.tS + p.width >= KeySpace - 1 || p.tS > KeySpace - p.width
-                  else p.tS - p.width <= -1L
-                require(!covered, s"streamingMix: source ${p.source} has " +
-                  s"fewer than k=${p.k} keys in the fully-widened probe " +
-                  "window — threshold accounting is inconsistent (bug)")
-                p.width = math.min(KeySpace, p.width * 8)
-                true
-            }
-          }
-          probes.clear(); probes ++= still
-        }
-        sources.map(s => s -> Thr(s, wOf(s), nNew(s), quotaNew(s),
-          resolved(s)._1, resolved(s)._2)).toMap
-      }
-
-    // ---- delta emission. Old docs flip ONLY inside the per-source
-    // (T_old, T_new] boundary region — a range-pruned scan of the
-    // key-ordered store; fresh docs all emit their first verdict.
-    val flipSpecs = sources.flatMap { s =>
-      val told = prevThr.get(s).map(t => (t.tSkey, t.tDoc))
-        .getOrElse((NoKeyS, NoKeyD))
-      val tnew = (newThr(s).tSkey, newThr(s).tDoc)
-      val cmp = implicitly[Ordering[(Long, Long)]].compare(tnew, told)
-      if (cmp == 0) None
-      else if (cmp > 0) Some((s, told, tnew, true)) // admitted
-      else Some((s, tnew, told, false)) // evicted
-    }
-    val oldFlips =
-      if (flipSpecs.isEmpty)
-        emptyEmission.select(col("doc_id"), col("source"), col("kept"))
-      else {
-        val pred = flipSpecs.map { case (s, lo, hi, _) =>
-          col("source") === lit(s) &&
-            keyGT(col("skey"), col("doc_id"), lo._1, lo._2) &&
-            keyLE(col("skey"), col("doc_id"), hi._1, hi._2)
-        }.reduce(_ || _)
-        val keptDf = flipSpecs.map { case (s, _, _, kept) => (s, kept) }
-          .toDF("source", "kept_new")
-        oldDocs.filter(pred)
-          .join(broadcast(keptDf), Seq("source"))
-          .select(col("doc_id"), col("source"), col("kept_new").as("kept"))
-      }
-    val newDf = newThr.values.toSeq
-      .map(t => (t.source, t.tSkey, t.tDoc)).toDF("source", "n_skey", "n_doc")
-    val freshVerdicts = freshK
-      .join(broadcast(newDf), Seq("source"))
-      .select(col("doc_id"), col("source"),
-        ((col("skey") < col("n_skey")) ||
-          (col("skey") === col("n_skey") && col("doc_id") <= col("n_doc")))
-          .as("kept"))
-    val delta = oldFlips.unionByName(freshVerdicts)
-      .withColumn("batch_id", lit(batchId))
-      .select(col("doc_id"), col("source"), col("kept"), col("batch_id"))
-      .localCheckpoint(true)
-
-    // ---- appends, thr → docs → ledger (the crash-window order the
-    // object doc analyzes). insertInto is positional: columns are
-    // selected in table order above/here.
-    if (!recovering) {
-      newThr.values.toSeq
-        .map(t => (t.source, t.w, t.n, t.quota, t.tSkey, t.tDoc, batchId))
-        .toDF("source", "w", "n", "quota", "t_skey", "t_doc", "batch_id")
-        .coalesce(1)
-        .write.insertInto(thrT(prefix))
-    }
-    val docsToAppend =
-      if (!recovering) freshK // normal path: no existence probe at all
-      else freshK.join(spark.table(docsT(prefix)).select(col("doc_id")),
-        Seq("doc_id"), "left_anti").localCheckpoint(true)
-    // appends land SORTED on their table's probe key (batch-sized sorts,
-    // one small file each): a fresh file's parquet row-group stats then
-    // keep pruning the boundary probes / ledger IN-lists between
-    // compactions, instead of every post-compaction append being a
-    // stats-opaque full read until the next maintenance pass
-    docsToAppend.select(col("doc_id"), col("source"), col("skey"))
-      .coalesce(1).sortWithinPartitions("source", "skey", "doc_id")
-      .write.insertInto(docsT(prefix))
-    delta.coalesce(1).sortWithinPartitions("doc_id")
-      .write.insertInto(ledgerT(prefix))
-    delta
-  }
-
-  /** Current kept verdict for every stored doc, derived in O(one store
-    * scan + a ~|sources|-row broadcast) from the LATEST thresholds
-    * snapshot — no window, no ledger read. The serve path never needs
-    * this (verdict changes are emitted incrementally); it exists for
-    * audits and the ScaleUpBench mix-serve probe's law-equality check,
-    * where it is compared against `corpusMixOn`'s full re-rank over the
-    * same accumulated corpus. */
-  def currentKept(spark: SparkSession, prefix: String): DataFrame = {
-    ensureStore(spark, prefix)
-    val thr = spark.table(thrT(prefix))
-    val lastRow = thr.agg(max(col("batch_id"))).head()
-    val docs = spark.table(docsT(prefix))
-    if (lastRow.isNullAt(0))
-      return docs.select(col("doc_id"), col("source"), lit(false).as("kept"))
-        .filter(lit(false))
-    val cur = thr.filter(col("batch_id") === lastRow.getLong(0))
-      .select(col("source"), col("t_skey"), col("t_doc"))
-    docs.join(broadcast(cur), Seq("source"), "left")
-      .select(col("doc_id"), col("source"),
-        (col("t_skey").isNotNull &&
-          ((col("skey") < col("t_skey")) ||
-            (col("skey") === col("t_skey") && col("doc_id") <= col("t_doc"))))
-          .as("kept"))
-  }
-
-  /** The oracled batch twin of the online mixer (registry entry
-    * `d_corpus_mix_streamed`, the same device as `ext.Dedup.dedupStreamed`
-    * for the dedup stream): the documents table arrives in the FOUR waves
-    * `corpusMixIncr` uses (`wave = (doc_id div 20) mod 4`, seed "incr42"),
-    * each wave runs [[processBatch]] against a scratch store, and the
-    * emissions are folded into per-wave kept flags — (doc_id, source,
-    * wave, kept0..kept3), NULL before the doc arrives. The DuckDB twin
-    * (`ext.TextAnalysis.corpusMixStreamedSql`) re-derives every wave's
-    * kept set from the rank law, so the oracle pins the threshold/probe
-    * dataflow — the part the streaming path computes DIFFERENTLY from
-    * the batch twin — to the same exact-integer quota semantics. Like
-    * `d_dedup_streamed`, it is a sequential-replay twin: Bench excludes
-    * it (4 × per-wave job-scheduling floor, not data cost; the live
-    * steady-state cost is ONE [[processBatch]] per micro-batch and is
-    * what `BENCH_SCALEUP`'s mix_serve probe measures). */
-  def corpusMixStreamed(spark: SparkSession, sfDir: String): DataFrame = {
-    val prefix = "cmx_replay"
-    // drop + clear the managed location: the scratch store must reset
-    // idempotently even when a PREVIOUS JVM left its warehouse dirs
-    // behind (in-memory catalog forgets the tables, the dirs survive)
-    Seq(docsT(prefix), ledgerT(prefix), thrT(prefix))
-      .foreach(graft.sources.TableOps.dropWithLocation(spark, _))
-    val docs = graft.Tables.documents(spark, sfDir)
-      .withColumn("wave", pmod(floor(col("doc_id") / 20), lit(4L)).cast("int"))
-      .select(col("doc_id"), col("source"), col("wave"))
-      .localCheckpoint(true)
-    var state: DataFrame = null // latest verdict per arrived doc
-    val folds = (0 until 4).map { w =>
-      val delta = processBatch(spark, prefix,
-        docs.filter(col("wave") === lit(w)).select(col("doc_id"), col("source")),
-        w.toLong, "incr42")
-        .select(col("doc_id"), col("kept"))
-      state = (if (state == null) delta
-        else delta.unionByName(
-          state.join(delta.select(col("doc_id")), Seq("doc_id"), "left_anti")))
-        .localCheckpoint(true)
-      state.withColumnRenamed("kept", s"kept$w")
-    }
-    folds.foldLeft(docs)((acc, f) => acc.join(f, Seq("doc_id"), "left"))
-  }
+  /** Registry twin `d_corpus_mix_streamed` (seed "incr42", the waves of
+    * `corpusMixIncr`): (doc_id, source, wave, kept0..kept3). The DuckDB
+    * twin (`ext.TextAnalysis.corpusMixStreamedSql`) re-derives every
+    * wave's kept set from the rank law, pinning the threshold/probe
+    * dataflow to the exact-integer quota semantics. */
+  def corpusMixStreamed(spark: SparkSession, sfDir: String): DataFrame =
+    wavesTwin(spark, sfDir, "cmx_replay", "incr42")(
+      (state, w) => state.select(col("doc_id"), col("v").as(s"kept$w")))
 
   /** Start the online mixer over a streaming (doc_id, source) DataFrame.
     * `sink` receives each batch's verdict-change frame and its batchId
@@ -572,14 +109,7 @@ object StreamMix {
   def streamingMix(docs: DataFrame, prefix: String = "stream_mix",
       seed: String = "mix42", checkpoint: Option[String] = None,
       weights: String => Long = FixtureWeights)
-      (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    ensureStore(docs.sparkSession, prefix)
-    val writer = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(processBatch(batch.sparkSession, prefix, batch, batchId, seed,
-          weights), batchId)
-      }
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    start(docs, prefix, checkpoint)(
+      processBatch(_, prefix, _, _, seed, weights))(sink)
 }

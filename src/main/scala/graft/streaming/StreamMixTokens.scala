@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -17,531 +16,87 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (`cum_before < rem`). A doc's repetition count in the mixture is
   * `copies = full_epochs(source) + (in_partial ? 1 : 0)`.
   *
-  * == The scale design: token thresholds, not rank windows ==
-  *
-  * `in_partial ⟺ cum_before < rem` over the (skey, doc_id) order is a
-  * PREFIX predicate (cum_before is nondecreasing in key order), so it
-  * collapses to `key ≤ T(source)` where T is the key of the prefix's
-  * last doc — the same threshold equivalence [[StreamMix]] exploits for
-  * the doc-count law, with the rank replaced by a cumulative token sum:
-  *
-  *   - mix STATE is a ~|sources|-row thresholds table carrying, per
-  *     source, (w, t_tok, full_epochs, rem, T, cum_t) where cum_t is the
-  *     tokens at-or-below T — never a per-doc copies column;
-  *   - per-source token totals update INCREMENTALLY (t' = t + fresh
-  *     tokens), so the whole quota law is driver-side integer arithmetic
-  *     over ~|sources| rows — no per-batch corpus aggregate;
-  *   - per-doc emissions are IN_PARTIAL changes only, and a batch flips
-  *     in_partial only in the boundary region between T_old and T_new —
-  *     a range-pruned scan of the (source, skey, doc_id)-ordered docs
-  *     store. `full_epochs` changes are per-SOURCE (they ride the
-  *     thresholds snapshot, ~|sources| rows), so a batch that bumps
-  *     every doc's copies by one epoch costs O(|sources|), not
-  *     O(corpus) — the reason the emission is split into a per-doc
-  *     partial flag and a per-source epoch count instead of a per-doc
-  *     copies stream;
-  *   - T_new is found by DENSITY-GUIDED RANGE PROBES like StreamMix's,
-  *     with the probe's inner law a running token sum instead of a
-  *     row_number: keys are uniform on [0, 2^60), so the window expected
-  *     to hold g missing tokens is g/t_s·2^60 wide; one range-pruned
-  *     scan of ~4× that window (geometrically widened on undershoot,
-  *     full-range fallback) walks the merged (old ∪ fresh) slice in key
-  *     order accumulating tokens from cum@T_old until it crosses rem.
-  *
-  * Per-batch cost is O(batch + flips + |sources| + pruned-scan
-  * overhead); the corpus enters only through file-skip constants.
-  *
-  * == Store tables (created on first use) ==
-  *
-  *   - `<prefix>_docs`   (doc_id, source, skey, tok) — the accumulated
-  *     corpus with each doc's whitespace token count; compacted ordered
-  *     by (source, skey, doc_id). Document BODIES are never stored —
-  *     `tok` is extracted on arrival.
-  *   - `<prefix>_ledger` (doc_id, source, in_partial, batch_id) — one
-  *     row per PARTIAL-MEMBERSHIP change; the replay log AND decided-set
-  *     filter, probed only by the batch's own doc_ids.
+  * The [[ThresholdMixer]] with a doc weighing its whitespace token count
+  * (NULL text counts ZERO tokens — a NULL in the store would poison every
+  * later cum-sum). Per-doc emissions are IN_PARTIAL changes only:
+  * `full_epochs` changes are per-SOURCE and ride the thresholds snapshot,
+  * so a batch that bumps every doc's copies by one epoch costs
+  * O(|sources|), not O(corpus). Store tables, in append order:
   *   - `<prefix>_thr`    (source, w, t_tok, full_epochs, rem, t_skey,
-  *     t_doc, cum_t, batch_id) — the per-batch thresholds snapshot;
-  *     current state = rows at the highest batch_id; history trimmed at
-  *     compaction.
-  *
-  * == Exactly-once contract ==
-  *
-  * Identical to [[StreamMix]]'s, table for table: append order
-  * thr → docs → ledger; a replay reuses this batch's stored thresholds
-  * when present; the docs append anti-join guard is taken only on the
-  * crash-after-docs recovery path; a ledger that carries the batch_id
-  * with every batch doc decided re-emits the recorded rows; batch_id
-  * collisions with undecided docs or inconsistent stored thresholds
-  * refuse loudly (foreign-checkpoint guard). Sinks must be idempotent
-  * per batchId (standard foreachBatch recovery contract).
+  *     t_doc, cum_t, batch_id)
+  *   - `<prefix>_docs`   (doc_id, source, skey, tok)
+  *   - `<prefix>_ledger` (doc_id, source, in_partial, batch_id)
   *
   * Emitted rows: (doc_id, source, in_partial, batch_id). Folding the
-  * latest in_partial per doc with the thresholds snapshot's
-  * full_epochs reproduces every doc's copies after every batch —
-  * spec-asserted equal to `corpusMixTokensOn` over each arrival prefix
-  * (StreamMixTokensSpec) and oracled through the 4-wave replay twin
-  * [[corpusMixTokensStreamed]] (`d_corpus_mix_tokens_streamed`,
-  * DuckDB CTE chain `ext.TextAnalysis.corpusMixTokensStreamedSql`). */
-object StreamMixTokens {
-  import StreamStoreOps.{KeySpace, MaxPruneKeys, NoKeyD, NoKeyS, keyGT, keyLE}
+  * latest in_partial per doc with the snapshot's full_epochs reproduces
+  * every doc's copies after every batch — spec-asserted equal to
+  * `corpusMixTokensOn` over each arrival prefix (StreamMixTokensSpec) and
+  * oracled through [[corpusMixTokensStreamed]]. */
+object StreamMixTokens extends ThresholdMixer {
+  protected val opName = "streamingMixTokens"
+  private[graft] val storeTables = Seq(
+    StoreTable("thr", Some("(source STRING, w BIGINT, t_tok BIGINT, " +
+      "full_epochs BIGINT, rem BIGINT, t_skey BIGINT, t_doc BIGINT, " +
+      "cum_t BIGINT, batch_id BIGINT) USING parquet"), Seq("batch_id")),
+    StoreTable("docs", Some("(doc_id BIGINT, source STRING, skey BIGINT, " +
+      "tok BIGINT) USING parquet"), Seq("source", "skey", "doc_id")),
+    StoreTable("ledger", Some("(doc_id BIGINT, source STRING, " +
+      "in_partial BOOLEAN, batch_id BIGINT) USING parquet"), Seq("doc_id")))
+  protected val verdict = "in_partial"
+  protected val weightExpr =
+    Some(coalesce(size(split(col("text"), " ")).cast("long"), lit(0L)))
+  protected val inputCols = Seq("doc_id", "source", "text")
+  protected val thrCanonical = Seq(col("w"), col("t_tok"), col("full_epochs"),
+    col("rem"), col("t_skey"), col("t_doc"), col("cum_t"))
+  protected def thrValues(t: MixThr): Seq[Long] =
+    Seq(t.w, t.total, t.full, t.rem, t.tS, t.tD, t.cumT)
 
-  private def docsT(prefix: String) = s"${prefix}_docs"
-  private def ledgerT(prefix: String) = s"${prefix}_ledger"
-  private def thrT(prefix: String) = s"${prefix}_thr"
-
-  /** Threshold row: per-source state. (tSkey, tDoc) is the key of the
-    * partial epoch's last doc (sentinel when rem = 0); cumT the token
-    * sum at-or-below it. */
-  private final case class Thr(source: String, w: Long, tTok: Long,
-      fullEpochs: Long, rem: Long, tSkey: Long, tDoc: Long, cumT: Long)
-
-  def ensureStore(spark: SparkSession, prefix: String): Unit = {
-    // residue-proof across JVMs (TableOps.ensureFreshLocation contract)
-    Seq(docsT(prefix), ledgerT(prefix), thrT(prefix))
-      .foreach(graft.sources.TableOps.ensureFreshLocation(spark, _))
-    spark.sql(s"CREATE TABLE IF NOT EXISTS ${docsT(prefix)} " +
-      "(doc_id BIGINT, source STRING, skey BIGINT, tok BIGINT) USING parquet")
-    spark.sql(s"CREATE TABLE IF NOT EXISTS ${ledgerT(prefix)} " +
-      "(doc_id BIGINT, source STRING, in_partial BOOLEAN, batch_id BIGINT) " +
-      "USING parquet")
-    spark.sql(s"CREATE TABLE IF NOT EXISTS ${thrT(prefix)} " +
-      "(source STRING, w BIGINT, t_tok BIGINT, full_epochs BIGINT, " +
-      "rem BIGINT, t_skey BIGINT, t_doc BIGINT, cum_t BIGINT, " +
-      "batch_id BIGINT) USING parquet")
+  /** Token quotas are generic integer arithmetic — no divide-12
+    * constraint — but a non-positive weight still yields a zero/negative
+    * share or a zero wsum. A source with ZERO accumulated tokens has no
+    * servable epochs: full = rem = 0, the batch law's guarded branch
+    * (corpusMixTokensOn's CASE WHEN t_s = 0), never a division. */
+  protected def quotas(prefix: String, totals: Map[String, Long],
+      weights: Map[String, Long]): Map[String, (Long, Long)] = {
+    weights.foreach { case (s, w) =>
+      require(w >= 1,
+        s"$opName($prefix): weight $w for source '$s' — weights must be >= 1")
+    }
+    val budget = totals.values.sum
+    val wsum = weights.values.sum
+    totals.map { case (s, t) =>
+      val b = (weights(s) * budget) / wsum
+      s -> (if (t == 0L) (0L, 0L) else (b / t, b % t))
+    }
   }
 
-  /** ORDERED small-file compaction + thresholds-history retention —
-    * the same maintenance contract as [[StreamMix.compactStore]]
-    * (docs on (source, skey, doc_id) for range-pruned probes, ledger
-    * on doc_id for IN-list skips, thr trimmed via compactTable's
-    * staged retention filter then ordered on batch_id). */
-  def compactStore(spark: SparkSession, prefix: String,
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      retainThrBatches: Int = 8): Map[String, (Int, Int)] = {
-    ensureStore(spark, prefix)
-    StreamStoreOps.compactMixStore(spark, docsT(prefix), ledgerT(prefix),
-      thrT(prefix), targetFileBytes, retainThrBatches)
-  }
-
-  /** One micro-batch: extend the corpus, move the per-source token
-    * thresholds, emit the in_partial changes. Package-private so specs
-    * drive replay/crash windows without a running stream. Returns the
-    * batch's emission frame, eagerly materialized. */
+  /** One micro-batch (see [[ThresholdMixer]]); package-private so specs
+    * drive replay/crash windows without a running stream. */
   private[graft] def processBatch(spark: SparkSession, prefix: String,
       batch: DataFrame, batchId: Long, seed: String = "epoch42",
-      weights: String => Long = StreamMix.FixtureWeights): DataFrame = {
-    ensureStore(spark, prefix)
-    graft.functions.Md5Prefix60.register(spark)
-    val ledger = spark.table(ledgerT(prefix))
-    val emptyEmission = ledger.filter(lit(false))
-      .select(col("doc_id"), col("source"), col("in_partial"), col("batch_id"))
+      weights: String => Long = StreamMix.FixtureWeights): DataFrame =
+    mixBatch(spark, prefix, batch, batchId, seed, weights)
 
-    // token counts are extracted HERE — bodies never reach a store
-    // table. NULL text counts as ZERO tokens (coalesce): a NULL tok in
-    // the docs store would poison every later cum-sum and boundary
-    // probe over this source (NULL-struct getLong NPE on the resolved
-    // hit; silent exclusion from ascending windows) — zero is the
-    // defined semantic, matching the batch law's treatment.
-    // Within-batch duplicate doc_ids collapse to ONE DETERMINISTIC
-    // winner (smallest (source, tok) — StreamDedup's replay device):
-    // dropDuplicates keeps a partition-order-dependent row, so a
-    // crash-after-thr replay of an at-least-once redelivery could
-    // recompute different token sums and wedge on the recovery-binding
-    // equality guard. Ties in (source, tok) are indistinguishable to
-    // every downstream read, so the winner is replay-stable.
-    val bw = Window.partitionBy(col("doc_id")).orderBy(col("source"), col("tok"))
-    val batchD = batch
-      .select(col("doc_id"), col("source"),
-        coalesce(size(split(col("text"), " ")).cast("long"), lit(0L))
-          .as("tok"))
-      .withColumn("rn", row_number().over(bw))
-      .filter(col("rn") === 1).drop("rn").localCheckpoint(true)
-    if (batchD.isEmpty) return emptyEmission
-
-    // ---- decided-set slice: ONE pruned ledger read serves the replay
-    // detection and the fresh-doc split (capped IN-list pushed
-    // natively, lazy full read over the cap — StreamStoreOps doc).
-    val batchIds = batchD.select(col("doc_id"))
-      .limit(MaxPruneKeys + 1).collect().map(_.getLong(0)).toIndexedSeq
-    val decidedSlice = StreamStoreOps.decidedSlice(spark, ledger, batchIds)
-
-    // ---- replay fast-path with the foreign-checkpoint guard
-    if (decidedSlice.filter(col("batch_id") === batchId).limit(1).count() > 0) {
-      val undecided = batchD
-        .join(decidedSlice.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .limit(1).count()
-      require(undecided == 0L,
-        s"streamingMixTokens($prefix): ledger already carries " +
-          s"batch_id=$batchId but this batch contains undecided doc_ids — " +
-          "the store prefix is bound to a different checkpoint; use a new " +
-          "prefix or restore the original checkpoint")
-      return ledger.filter(col("batch_id") === batchId)
-        .select(col("doc_id"), col("source"), col("in_partial"),
-          col("batch_id"))
-        .localCheckpoint(true)
-    }
-
-    // ---- thresholds state (tiny table reads)
-    val thrTable = spark.table(thrT(prefix))
-    val ahead = thrTable.filter(col("batch_id") > batchId).limit(1).count()
-    require(ahead == 0L,
-      s"streamingMixTokens($prefix): thresholds table carries batch ids " +
-        s"beyond $batchId — the store prefix is bound to a different " +
-        "(newer) checkpoint; use a new prefix or restore the original " +
-        "checkpoint")
-    val prevBatchId = thrTable.filter(col("batch_id") < batchId)
-      .agg(max(col("batch_id"))).head() match {
-        case r if r.isNullAt(0) => None
-        case r => Some(r.getLong(0))
-      }
-    def collectThr(b: Long): Map[String, Thr] =
-      thrTable.filter(col("batch_id") === b)
-        .select(col("source"), col("w"), col("t_tok"), col("full_epochs"),
-          col("rem"), col("t_skey"), col("t_doc"), col("cum_t"))
-        .collect()
-        .map(r => r.getString(0) -> Thr(r.getString(0), r.getLong(1),
-          r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
-          r.getLong(6), r.getLong(7)))
-        .toMap
-    val prevThr: Map[String, Thr] = prevBatchId.map(collectThr).getOrElse(Map.empty)
-    val curThr: Map[String, Thr] = collectThr(batchId)
-    val recovering = curThr.nonEmpty
-    if (prevThr.isEmpty) {
-      val docsNonEmpty = spark.table(docsT(prefix)).limit(1).count() > 0
-      require(!docsNonEmpty || recovering,
-        s"streamingMixTokens($prefix): docs table is non-empty but no " +
-          "thresholds snapshot precedes this batch — inconsistent store state")
-    }
-
-    // ---- fresh docs (never decided), keyed
-    val freshK = batchD
-      .join(decidedSlice.select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("source"), col("tok"),
-        // seed through lit(), never interpolated into the expr (see
-        // StreamMix: quote-bearing caller seeds must not break parsing)
-        call_function("md5_prefix60",
-          concat(lit(seed), lit(":"), col("doc_id").cast("string")))
-          .as("skey"))
-      .localCheckpoint(true)
-
-    // Old-corpus reads must never see this batch's own docs (the
-    // crash-after-docs recovery path has them in the table already)
-    def oldDocs: DataFrame = spark.table(docsT(prefix))
-      .join(broadcast(freshK.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-
-    // ---- per-source fresh token sums and bTok = Σ tok(fresh ≤ T_old)
-    import spark.implicits._
-    val prevDf = prevThr.values.toSeq
-      .map(t => (t.source, t.tSkey, t.tDoc)).toDF("source", "p_skey", "p_doc")
-    // both sums coalesce: a NULL-text doc's tok is NULL (contributing
-    // nothing, like the batch law), and a source whose ENTIRE arrival is
-    // NULL-text sums to NULL — which Row.getLong refuses; zero tokens is
-    // the defined outcome (→ zero servable epochs below)
-    val freshStats = freshK
-      .join(broadcast(prevDf), Seq("source"), "left")
-      .groupBy(col("source"))
-      .agg(coalesce(sum(col("tok")), lit(0L)).as("ft"),
-        coalesce(sum(when((col("skey") < coalesce(col("p_skey"), lit(NoKeyS))) ||
-          (col("skey") === coalesce(col("p_skey"), lit(NoKeyS)) &&
-            col("doc_id") <= coalesce(col("p_doc"), lit(NoKeyD))),
-          col("tok")).otherwise(0L)), lit(0L)).as("btok"))
-      .collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-
-    // ---- the exact-integer token quota law over incrementally-
-    // maintained sums: driver arithmetic on ~|sources| rows.
-    val sources = (prevThr.keySet ++ freshStats.keySet).toSeq.sorted
-    val tTokNew: Map[String, Long] = sources.map { s =>
-      s -> (prevThr.get(s).map(_.tTok).getOrElse(0L) +
-        freshStats.get(s).map(_._1).getOrElse(0L))
-    }.toMap
-    val wOf: Map[String, Long] = sources.map { s =>
-      s -> prevThr.get(s).map(_.w).getOrElse(weights(s))
-    }.toMap
-    // token quotas are generic integer arithmetic (`(w·B) div Σw`) — no
-    // divide-12 constraint like the doc-count law — but a non-positive
-    // weight still yields a zero/negative quota share or a zero wsum
-    wOf.foreach { case (s, w) =>
-      require(w >= 1,
-        s"streamingMixTokens($prefix): weight $w for source '$s' — " +
-          "weights must be >= 1")
-    }
-    val budget = sources.map(tTokNew).sum
-    val wsum = sources.map(wOf).sum
-    val bS: Map[String, Long] =
-      sources.map(s => s -> (wOf(s) * budget) / wsum).toMap
-    // A source with ZERO accumulated tokens (every doc NULL-text) has
-    // no servable epochs: full_epochs = rem = 0 — the SAME guarded
-    // branch the batch law takes (corpusMixTokensOn's CASE WHEN t_s=0),
-    // where a bare division here would instead kill the stream with an
-    // ArithmeticException under ANSI.
-    val fullNew: Map[String, Long] =
-      sources.map(s => s -> (if (tTokNew(s) == 0L) 0L
-        else bS(s) / tTokNew(s))).toMap
-    val remNew: Map[String, Long] =
-      sources.map(s => s -> (if (tTokNew(s) == 0L) 0L
-        else bS(s) % tTokNew(s))).toMap
-
-    // Recovery-binding guard (see StreamMix: a legit crash-after-thr
-    // replay re-derives the SAME state; any mismatch is a foreign
-    // checkpoint)
-    if (recovering) {
-      val consistent = curThr.keySet == sources.toSet &&
-        sources.forall { s =>
-          val t = curThr(s)
-          t.w == wOf(s) && t.tTok == tTokNew(s) &&
-            t.fullEpochs == fullNew(s) && t.rem == remNew(s)
-        }
-      require(consistent,
-        s"streamingMixTokens($prefix): thresholds already stored for " +
-          s"batch_id=$batchId do not match this batch's recomputed state " +
-          "— the store prefix is bound to a different checkpoint; use a " +
-          "new prefix or restore the original checkpoint")
-    }
-
-    val newThr: Map[String, Thr] =
-      if (recovering) curThr
-      else {
-        // cum@T_old over the MERGED corpus = stored cum_t + fresh
-        // tokens at-or-below T_old; the probe walks from there until
-        // the running sum crosses rem.
-        final case class Probe(source: String, dir: Int, rem: Long,
-            cumAtTold: Long, tS: Long, tD: Long, var width: Long)
-        val resolved = scala.collection.mutable.Map[String, (Long, Long, Long)]()
-        val probes = scala.collection.mutable.ArrayBuffer[Probe]()
-        sources.foreach { s =>
-          val told = prevThr.get(s).map(t => (t.tSkey, t.tDoc))
-            .getOrElse((NoKeyS, NoKeyD))
-          val cumAtTold = prevThr.get(s).map(_.cumT).getOrElse(0L) +
-            freshStats.get(s).map(_._2).getOrElse(0L)
-          val rem = remNew(s)
-          if (rem == 0L) resolved(s) = (NoKeyS, NoKeyD, 0L)
-          else {
-            // token gap to cover; window = 4× its uniform-density width
-            val g = math.max(1L, math.abs(rem - cumAtTold))
-            val w0 = ((BigInt(g) * KeySpace * 4) / BigInt(tTokNew(s)).max(1))
-              .min(KeySpace).toLong.max(1L)
-            probes += Probe(s, if (cumAtTold < rem) 1 else -1, rem,
-              cumAtTold, told._1, told._2, w0)
-          }
-        }
-        var rounds = 0
-        while (probes.nonEmpty) {
-          rounds += 1
-          require(rounds <= 64,
-            "streamingMixTokens: boundary probe failed to converge (bug)")
-          def coveredEnd(p: Probe): Boolean =
-            p.tS + p.width >= KeySpace - 1 || p.tS > KeySpace - p.width
-          def coveredStart(p: Probe): Boolean = p.tS - p.width <= -1L
-          val pred: Column = probes.map { p =>
-            val base = col("source") === lit(p.source)
-            if (p.dir > 0)
-              base && keyGT(col("skey"), col("doc_id"), p.tS, p.tD) &&
-                col("skey") <= lit(math.min(KeySpace - 1,
-                  if (p.tS > KeySpace - p.width) KeySpace - 1 else p.tS + p.width))
-            else
-              base && keyLE(col("skey"), col("doc_id"), p.tS, p.tD) &&
-                col("skey") >= lit(math.max(-1L, p.tS - p.width))
-          }.reduce(_ || _)
-          val slice = oldDocs.filter(pred)
-            .select(col("doc_id"), col("source"), col("skey"), col("tok"))
-            .unionByName(freshK.filter(pred)
-              .select(col("doc_id"), col("source"), col("skey"), col("tok")))
-          val params = probes.map(p => (p.source, p.dir, p.rem, p.cumAtTold))
-            .toSeq.toDF("source", "dir", "rem", "cum0")
-          // one aggregation job per round: walk each slice in key order
-          // with a running token sum; cb is the row's TRUE cum_before in
-          // both directions (ascending: cum0 + run − tok; descending:
-          // cum0 − run), so the last key with cb < rem IS the new
-          // threshold and cb+tok its cumulative. (key·dir ordering
-          // assumes |doc_id| < 2^62; skey < 2^60 by construction.)
-          val rnW = Window.partitionBy(col("source"))
-            .orderBy((col("skey") * col("dir")).asc,
-              (col("doc_id") * col("dir")).asc)
-          val res = slice.join(broadcast(params), Seq("source"))
-            .withColumn("run", sum(col("tok")).over(
-              rnW.rowsBetween(Window.unboundedPreceding, 0)))
-            .withColumn("cb", when(col("dir") > 0,
-              col("cum0") + col("run") - col("tok"))
-              .otherwise(col("cum0") - col("run")))
-            .groupBy(col("source"))
-            .agg(count(lit(1)).as("cnt"),
-              max(when(col("cb") >= col("rem"), 1).otherwise(0)).as("saw_stop"),
-              max(when(col("cb") < col("rem"),
-                struct(col("skey"), col("doc_id"),
-                  (col("cb") + col("tok")).as("cum")))).as("hit"))
-            .collect()
-            .map(r => r.getString(0) ->
-              (r.getLong(1), r.getInt(2) == 1, Option(r.getStruct(3))
-                .map(h => (h.getLong(0), h.getLong(1), h.getLong(2)))))
-            .toMap
-          val still = probes.filter { p =>
-            res.get(p.source) match {
-              case Some((_, sawStop, hitOpt)) if p.dir > 0 =>
-                if (sawStop || coveredEnd(p)) {
-                  resolved(p.source) = hitOpt.getOrElse((p.tS, p.tD, p.cumAtTold))
-                  false
-                } else { p.width = math.min(KeySpace, p.width * 8); true }
-              case Some((_, _, Some(hit))) => // dir < 0, found
-                resolved(p.source) = hit; false
-              case Some((_, _, None)) => // dir < 0, not yet
-                require(!coveredStart(p), s"streamingMixTokens: source " +
-                  s"${p.source} exhausted the fully-widened descending " +
-                  "probe without crossing rem — token accounting is " +
-                  "inconsistent (bug)")
-                p.width = math.min(KeySpace, p.width * 8); true
-              case None => // empty slice
-                if (p.dir > 0 && coveredEnd(p)) {
-                  resolved(p.source) = (p.tS, p.tD, p.cumAtTold); false
-                } else {
-                  require(p.dir > 0 || !coveredStart(p),
-                    s"streamingMixTokens: source ${p.source} has no docs " +
-                      "below its threshold — token accounting is " +
-                      "inconsistent (bug)")
-                  p.width = math.min(KeySpace, p.width * 8); true
-                }
-            }
-          }
-          probes.clear(); probes ++= still
-        }
-        sources.map(s => s -> Thr(s, wOf(s), tTokNew(s), fullNew(s),
-          remNew(s), resolved(s)._1, resolved(s)._2, resolved(s)._3)).toMap
-      }
-
-    // ---- delta emission: old docs flip in_partial only inside the
-    // per-source (T_old, T_new] boundary; fresh docs emit their first
-    // membership. full_epochs changes ride the thresholds snapshot.
-    val flipSpecs = sources.flatMap { s =>
-      val told = prevThr.get(s).map(t => (t.tSkey, t.tDoc))
-        .getOrElse((NoKeyS, NoKeyD))
-      val tnew = (newThr(s).tSkey, newThr(s).tDoc)
-      val cmp = implicitly[Ordering[(Long, Long)]].compare(tnew, told)
-      if (cmp == 0) None
-      else if (cmp > 0) Some((s, told, tnew, true))
-      else Some((s, tnew, told, false))
-    }
-    val oldFlips =
-      if (flipSpecs.isEmpty)
-        emptyEmission.select(col("doc_id"), col("source"), col("in_partial"))
-      else {
-        val pred = flipSpecs.map { case (s, lo, hi, _) =>
-          col("source") === lit(s) &&
-            keyGT(col("skey"), col("doc_id"), lo._1, lo._2) &&
-            keyLE(col("skey"), col("doc_id"), hi._1, hi._2)
-        }.reduce(_ || _)
-        val keptDf = flipSpecs.map { case (s, _, _, k) => (s, k) }
-          .toDF("source", "p_new")
-        oldDocs.filter(pred)
-          .join(broadcast(keptDf), Seq("source"))
-          .select(col("doc_id"), col("source"), col("p_new").as("in_partial"))
-      }
-    val newDf = newThr.values.toSeq
-      .map(t => (t.source, t.tSkey, t.tDoc)).toDF("source", "n_skey", "n_doc")
-    val freshVerdicts = freshK
-      .join(broadcast(newDf), Seq("source"))
-      .select(col("doc_id"), col("source"),
-        ((col("skey") < col("n_skey")) ||
-          (col("skey") === col("n_skey") && col("doc_id") <= col("n_doc")))
-          .as("in_partial"))
-    val delta = oldFlips.unionByName(freshVerdicts)
-      .withColumn("batch_id", lit(batchId))
-      .select(col("doc_id"), col("source"), col("in_partial"), col("batch_id"))
-      .localCheckpoint(true)
-
-    // ---- appends, thr → docs → ledger (StreamMix's crash-window order)
-    if (!recovering) {
-      newThr.values.toSeq
-        .map(t => (t.source, t.w, t.tTok, t.fullEpochs, t.rem,
-          t.tSkey, t.tDoc, t.cumT, batchId))
-        .toDF("source", "w", "t_tok", "full_epochs", "rem",
-          "t_skey", "t_doc", "cum_t", "batch_id")
-        .coalesce(1)
-        .write.insertInto(thrT(prefix))
-    }
-    val docsToAppend =
-      if (!recovering) freshK
-      else freshK.join(spark.table(docsT(prefix)).select(col("doc_id")),
-        Seq("doc_id"), "left_anti").localCheckpoint(true)
-    docsToAppend.select(col("doc_id"), col("source"), col("skey"), col("tok"))
-      .coalesce(1).sortWithinPartitions("source", "skey", "doc_id")
-      .write.insertInto(docsT(prefix))
-    delta.coalesce(1).sortWithinPartitions("doc_id")
-      .write.insertInto(ledgerT(prefix))
-    delta
-  }
-
-  /** Current copies for every stored doc, derived in O(one store scan +
-    * a ~|sources|-row broadcast) from the LATEST thresholds snapshot —
-    * the audit/law-equality surface (compared against
+  /** Current copies for every stored doc from the latest thresholds
+    * snapshot — the audit/law-equality surface (compared against
     * `corpusMixTokensOn` over the same accumulated corpus). */
-  def currentCopies(spark: SparkSession, prefix: String): DataFrame = {
-    ensureStore(spark, prefix)
-    val thr = spark.table(thrT(prefix))
-    val lastRow = thr.agg(max(col("batch_id"))).head()
-    val docs = spark.table(docsT(prefix))
-    if (lastRow.isNullAt(0))
-      return docs.select(col("doc_id"), col("source"),
-        lit(0L).as("copies")).filter(lit(false))
-    val cur = thr.filter(col("batch_id") === lastRow.getLong(0))
-      .select(col("source"), col("full_epochs"), col("t_skey"), col("t_doc"))
-    docs.join(broadcast(cur), Seq("source"), "left")
-      .select(col("doc_id"), col("source"),
-        (coalesce(col("full_epochs"), lit(0L)) +
-          when(col("t_skey").isNotNull &&
-            ((col("skey") < col("t_skey")) ||
-              (col("skey") === col("t_skey") && col("doc_id") <= col("t_doc"))),
-            1L).otherwise(0L))
-          .as("copies"))
-  }
+  def currentCopies(spark: SparkSession, prefix: String): DataFrame =
+    currentState(spark, prefix).select(col("doc_id"), col("source"),
+      (col("full") + when(col("in"), 1L).otherwise(0L)).as("copies"))
 
-  /** The oracled batch twin of the online token mixer (registry entry
-    * `d_corpus_mix_tokens_streamed`): the documents table arrives in
-    * the same FOUR waves as `corpusMixIncr` (`wave = (doc_id div 20)
-    * mod 4`, seed "epoch42" — the batch tokens law's own seed), each
-    * wave runs [[processBatch]] against a scratch store, and the
-    * emissions are folded WITH each wave's thresholds snapshot into
-    * per-wave copies — (doc_id, source, wave, copies0..copies3), NULL
-    * before the doc arrives. The DuckDB twin
-    * (`ext.TextAnalysis.corpusMixTokensStreamedSql`) re-derives every
-    * wave's copies from the running-cum rank law, pinning the
-    * threshold/probe dataflow — everything the streaming path computes
-    * differently — to the exact-integer token semantics. Sequential
-    * replay twin: Bench excludes it like `d_corpus_mix_streamed`. */
-  def corpusMixTokensStreamed(spark: SparkSession, sfDir: String): DataFrame = {
-    val prefix = "cmxt_replay"
-    Seq(docsT(prefix), ledgerT(prefix), thrT(prefix))
-      .foreach(graft.sources.TableOps.dropWithLocation(spark, _))
-    val docs = graft.Tables.documents(spark, sfDir)
-      .withColumn("wave", pmod(floor(col("doc_id") / 20), lit(4L)).cast("int"))
-      .select(col("doc_id"), col("source"), col("text"), col("wave"))
-      .localCheckpoint(true)
-    var state: DataFrame = null // latest in_partial per arrived doc
-    val folds = (0 until 4).map { w =>
-      val delta = processBatch(spark, prefix,
-        docs.filter(col("wave") === lit(w))
-          .select(col("doc_id"), col("source"), col("text")),
-        w.toLong, "epoch42")
-        .select(col("doc_id"), col("source").as("src"), col("in_partial"))
-      state = (if (state == null) delta
-        else delta.unionByName(
-          state.join(delta.select(col("doc_id")), Seq("doc_id"), "left_anti")))
-        .localCheckpoint(true)
-      // copies at wave w = this wave's full_epochs (per source) + the
-      // folded in_partial flag
-      val fe = spark.table(thrT(prefix))
+  /** Registry twin `d_corpus_mix_tokens_streamed` (seed "epoch42", the
+    * batch token law's own): emissions folded WITH each wave's thresholds
+    * snapshot into (doc_id, source, wave, copies0..copies3). The DuckDB
+    * twin (`ext.TextAnalysis.corpusMixTokensStreamedSql`) re-derives every
+    * wave's copies from the running-cum rank law. */
+  def corpusMixTokensStreamed(spark: SparkSession, sfDir: String): DataFrame =
+    wavesTwin(spark, sfDir, "cmxt_replay", "epoch42") { (state, w) =>
+      val fe = spark.table(tableName("cmxt_replay", "thr"))
         .filter(col("batch_id") === lit(w.toLong))
         .select(col("source").as("src"), col("full_epochs"))
-      state.join(broadcast(fe), Seq("src"))
-        .select(col("doc_id"),
-          (col("full_epochs") +
-            when(col("in_partial"), 1L).otherwise(0L)).as(s"copies$w"))
+      state.join(broadcast(fe), Seq("src")).select(col("doc_id"),
+        (col("full_epochs") + when(col("v"), 1L).otherwise(0L)).as(s"copies$w"))
     }
-    folds.foldLeft(docs.select(col("doc_id"), col("source"), col("wave")))(
-      (acc, f) => acc.join(f, Seq("doc_id"), "left"))
-  }
 
   /** Start the online token mixer over a streaming (doc_id, source,
     * text) DataFrame. `sink` receives each batch's in_partial-change
@@ -549,20 +104,11 @@ object StreamMixTokens {
     * counts ride the `<prefix>_thr` snapshot. The appends run in
     * foreachBatch's cloned session, so a consumer polling the thr
     * table from a DIFFERENT session must `refreshTable` before each
-    * read (the standard cross-session listing-cache contract; the
-    * operator's own reads share the writer session and never go
-    * stale). */
+    * read (the standard cross-session listing-cache contract). */
   def streamingMixTokens(docs: DataFrame, prefix: String = "stream_mix_tok",
       seed: String = "epoch42", checkpoint: Option[String] = None,
       weights: String => Long = StreamMix.FixtureWeights)
-      (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    ensureStore(docs.sparkSession, prefix)
-    val writer = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(processBatch(batch.sparkSession, prefix, batch, batchId, seed,
-          weights), batchId)
-      }
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    start(docs, prefix, checkpoint)(
+      processBatch(_, prefix, _, _, seed, weights))(sink)
 }

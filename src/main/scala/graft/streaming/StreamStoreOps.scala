@@ -1,35 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Infrastructure shared by the streaming store operators
-  * ([[StreamDedup]], [[StreamMix]], [[StreamMixTokens]]) — one source
-  * of truth for the keyspace/sentinel constants, the threshold-key
-  * order predicates, the capped ledger-slice prune, the native-IN
-  * pushdown window, and the mix-store compaction body, so a fix to any
-  * of them cannot silently diverge between the operators. */
+/** Store-read and store-append primitives shared by the streaming
+  * store operators ([[StoreOperator]]) — one source of truth for the
+  * capped ledger-slice prune, the native-IN pushdown window and the
+  * bucket-aligned append, so a fix to any of them cannot silently
+  * diverge between the operators. */
 private[graft] object StreamStoreOps {
-
-  /** skey = first 60 bits of md5 (functions/Md5Prefix60), so the
-    * keyspace is exactly [0, 2^60) and uniform — the density estimate
-    * every boundary probe relies on. */
-  val KeySpace: Long = 1L << 60
-
-  /** Sentinel threshold ordering BEFORE every real key (quota/rem 0
-    * keeps nothing; real skeys are non-negative). */
-  val NoKeyS = -1L
-  val NoKeyD = -1L
 
   /** Cap on any probe-side key collect: above it, the unpruned scan is
     * the cheaper plan anyway. */
   val MaxPruneKeys = 100000
-
-  /** key ≤ (tS, tD) lexicographically — the kept/in-partial predicate. */
-  def keyLE(skey: Column, docId: Column, tS: Long, tD: Long): Column =
-    (skey < lit(tS)) || (skey === lit(tS) && docId <= lit(tD))
-  def keyGT(skey: Column, docId: Column, tS: Long, tD: Long): Column =
-    (skey > lit(tS)) || (skey === lit(tS) && docId > lit(tD))
 
   /** Run `body` with the parquet native-IN pushdown window widened to
     * 1000 keys: parquet receives an IN-list as a real In predicate only
@@ -75,7 +58,7 @@ private[graft] object StreamStoreOps {
     }
 
   /** Bucket-layout-aligned append shared by every store-backed streaming
-    * operator ([[StreamDedup]], [[StreamAnnIndex]]): repartition on the
+    * operator ([[StoreOperator.appendInOrder]]): repartition on the
     * table's LIVE bucket columns/count (it drifts upward across
     * compaction rebucketings) so each task carries exactly one bucket
     * id — an append adds at most one file per NON-EMPTY bucket instead
@@ -103,56 +86,4 @@ private[graft] object StreamStoreOps {
     }
     laid.write.insertInto(table)
   }
-
-  /** Shared threshold-store compaction body — ONE implementation for
-    * every operator that pairs key-ordered data tables with a
-    * per-batch thresholds snapshot ([[StreamMix]], [[StreamMixTokens]],
-    * [[StreamDsir]]), so a retention/staging fix cannot silently
-    * diverge between them. Each data table is rewritten ordered on its
-    * probe key; thr is TRIMMED to the trailing `retainThrBatches`
-    * snapshots via compactTable's staged retention filter — survivors
-    * land on disk in the staging table BEFORE the live table is
-    * touched, so the recovery-critical state never has a crash window
-    * where the dropped rows' table is its only copy — then ordered on
-    * batch_id. */
-  def compactThresholdStore(spark: SparkSession,
-      dataTables: Seq[(String, Seq[String])], thrT: String,
-      targetFileBytes: Long, retainThrBatches: Int): Map[String, (Int, Int)] = {
-    // >= 2, not >= 1: healthy-path recovery reads only the trailing
-    // snapshot, but a crash-after-thr replay of the NEWEST batch N
-    // recomputes its state from snapshot N-1 — trimming to N alone
-    // would make that replay recompute from scratch, fail the
-    // foreign-checkpoint consistency guard, and permanently wedge the
-    // stream (the snapshot it needs is deleted; no prefix or
-    // checkpoint fix recovers it).
-    require(retainThrBatches >= 2,
-      "retainThrBatches: a crash-after-thr replay of the newest batch " +
-        "recovers from its PREDECESSOR snapshot — keep >= 2")
-    // Retention by RANK over the DISTINCT stored batch ids, never by id
-    // arithmetic: batch ids are NOT contiguous in the thr table (a
-    // batch whose pool filter leaves nothing writes no snapshot), so a
-    // `max - (retain-1)` range cut could land inside a gap and delete
-    // the PREDECESSOR snapshot the newest batch's crash-after-thr
-    // replay recovers from — wedging (mixers) or, worse, degrading the
-    // recovery to the no-history sentinel (selector).
-    val keepIds = spark.table(thrT).select(col("batch_id")).distinct()
-      .orderBy(col("batch_id").desc).limit(retainThrBatches)
-      .collect().map(_.getLong(0))
-    val thrCut: Option[String] =
-      if (keepIds.isEmpty) None // empty store — nothing to trim
-      else Some(s"batch_id >= ${keepIds.min}")
-    dataTables.map { case (t, ord) =>
-      t -> graft.sources.TableOps.compactTable(spark, t,
-        targetFileBytes, orderBy = ord)
-    }.toMap + (thrT -> graft.sources.TableOps.compactTable(spark, thrT,
-      targetFileBytes, orderBy = Seq("batch_id"), where = thrCut))
-  }
-
-  /** [[compactThresholdStore]] with the mixers' table layout. */
-  def compactMixStore(spark: SparkSession, docsT: String, ledgerT: String,
-      thrT: String, targetFileBytes: Long,
-      retainThrBatches: Int): Map[String, (Int, Int)] =
-    compactThresholdStore(spark,
-      Seq(docsT -> Seq("source", "skey", "doc_id"), ledgerT -> Seq("doc_id")),
-      thrT, targetFileBytes, retainThrBatches)
 }

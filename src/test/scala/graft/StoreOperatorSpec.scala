@@ -1,0 +1,170 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+
+import graft.streaming._
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
+
+/** Exactly-once over the [[StoreOperator]] skeleton, for all six
+  * store-backed operators, against their DECLARED append order:
+  *
+  *  1. partial-append replay — store A runs the fixture's four waves; for
+  *     every k below the table count, store B is A-before-wave-2 plus the
+  *     first k tables' wave-2 rows (A's after-minus-before diff: a crash
+  *     after the k-th append), and replaying wave 2 on B must leave every
+  *     store table and the emission equal to A's;
+  *  2. checkpoint restart — a real checkpointed stream through the
+  *     skeleton's starter is stopped after wave 2 and restarted on the same
+  *     checkpoint with waves 3-4; its stores and its folded sink must
+  *     equal the uninterrupted run A (one micro-batch per wave, batch ids
+  *     0-3 in both). */
+class StoreOperatorSpec extends SparkSpec {
+
+  /** An operator under test: `setup` fits its frozen side state under a
+    * prefix, `waves` are its four inputs, `step` one processBatch, and
+    * `stream` its streaming starter with a checkpoint. */
+  private case class Case(op: StoreOperator, setup: String => Unit,
+      waves: IndexedSeq[DataFrame],
+      step: (String, DataFrame, Long) => DataFrame,
+      stream: (DataFrame, String, String) => ((DataFrame, Long) => Unit) =>
+        org.apache.spark.sql.streaming.StreamingQuery)
+
+  private lazy val docs = Tables.documents(spark, sf001)
+    .select(col("doc_id"), col("source"), col("text"))
+  private def docWaves(cols: String*) = (0 until 4).map(w =>
+    docs.filter(StoreOperator.wave === w).select(cols.map(col): _*))
+  private lazy val emb = Tables.embeddings(spark, sf001)
+    .select(col("vec_id"), col("embedding"))
+
+  private lazy val cases: Seq[(String, Case)] = Seq(
+    "mix" -> Case(StreamMix, _ => (), docWaves("doc_id", "source"),
+      StreamMix.processBatch(spark, _, _, _, "incr42"),
+      (in, p, ck) => StreamMix.streamingMix(in, p, "incr42", Some(ck))),
+    "mixtok" -> Case(StreamMixTokens, _ => (), docWaves("doc_id", "source", "text"),
+      StreamMixTokens.processBatch(spark, _, _, _),
+      (in, p, ck) => StreamMixTokens.streamingMixTokens(in, p, checkpoint = Some(ck))),
+    "dsir" -> Case(StreamDsir, StreamDsir.modelWrite(spark, _, docs),
+      docWaves("doc_id", "source", "text"),
+      StreamDsir.processBatch(spark, _, _, _),
+      (in, p, ck) => StreamDsir.streamingDsir(in, p, checkpoint = Some(ck))),
+    "drift" -> Case(StreamDrift, StreamDrift.modelWrite(spark, _, docs),
+      docWaves("doc_id", "source", "text"),
+      StreamDrift.processBatch(spark, _, _, _),
+      (in, p, ck) => StreamDrift.streamingDrift(in, p, Some(ck))),
+    "dedup" -> Case(StreamDedup, _ => (), docWaves("doc_id", "source", "text"),
+      StreamDedup.processBatch(spark, _, _, _),
+      (in, p, ck) => StreamDedup.streamingDedup(in, p, Some(ck))),
+    // the index trains on the base 80% (deterministic seeds); the other
+    // 20% streams in four waves
+    "ann" -> Case(StreamAnnIndex,
+      graft.ext.Similarity.annIndexWriteFrom(spark, emb.filter(col("vec_id") % 5 =!= 0), _),
+      (0 until 4).map(w => emb.filter(col("vec_id") % 5 === 0)
+        .filter(expr("pmod(vec_id DIV 5, 4)") === w)),
+      StreamAnnIndex.processBatch(spark, _, _, _),
+      (in, p, ck) => StreamAnnIndex.streamingIndexAdd(in, p, Some(ck))))
+
+  private def fresh(c: Case, prefix: String): Unit = {
+    (Seq("model", "centroids", "codebooks").map(s => s"${prefix}_$s") ++
+      c.op.storeTableNames(prefix)).foreach(graft.sources.TableOps.dropWithLocation(spark, _))
+    c.setup(prefix)
+    c.op.ensureStore(spark, prefix)
+  }
+
+  /** A frame's rows, pinned on the driver (the store mutates later). */
+  private def pinned(df: DataFrame): DataFrame =
+    spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+
+  private def snap(table: String): DataFrame = {
+    spark.catalog.refreshTable(table)
+    pinned(spark.table(table))
+  }
+
+  private def same(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  private def replace(table: String, rows: DataFrame): Unit = {
+    spark.sql(s"TRUNCATE TABLE $table")
+    rows.write.insertInto(table)
+  }
+
+  private val runs = scala.collection.mutable.Map[String,
+    (IndexedSeq[Seq[DataFrame]], IndexedSeq[DataFrame])]()
+
+  /** Store A after each wave (index w+1; 0 = before any) and the
+    * emissions — the uninterrupted reference run, once per operator. */
+  private def runA(name: String, c: Case) = runs.getOrElseUpdate(name, {
+    val a = s"soa_$name"
+    fresh(c, a)
+    val tables = c.op.storeTableNames(a)
+    val stores = scala.collection.mutable.ArrayBuffer(tables.map(snap))
+    val emitted = c.waves.indices.map { w =>
+      val e = pinned(c.step(a, c.waves(w), w.toLong))
+      stores += tables.map(snap)
+      e
+    }
+    (stores.toIndexedSeq, emitted)
+  })
+
+  cases.foreach { case (name, c) =>
+    test(s"$name: a crash after any prefix of the declared appends replays to the clean store") {
+      val (storesA, emittedA) = runA(name, c)
+      val b = s"sob_$name"
+      fresh(c, b)
+      val tablesB = c.op.storeTableNames(b)
+      tablesB.indices.foreach { k =>
+        // A before wave 2, then the first k tables' wave-2 rows
+        tablesB.indices.foreach { i =>
+          replace(tablesB(i), storesA(2)(i))
+          if (i < k) pinned(storesA(3)(i).exceptAll(storesA(2)(i)))
+            .write.insertInto(tablesB(i))
+        }
+        val replayed = c.step(b, c.waves(2), 2L)
+        assert(same(replayed, emittedA(2)),
+          s"$name k=$k: replayed wave-2 emission differs from the clean run")
+        tablesB.indices.foreach { i =>
+          assert(same(snap(tablesB(i)), storesA(3)(i)),
+            s"$name k=$k: ${c.op.storeTables(i).suffix} differs from the clean run")
+        }
+      }
+    }
+
+    test(s"$name: a checkpointed stream stopped after wave 2 resumes to the uninterrupted run") {
+      val (storesA, emittedA) = runA(name, c)
+      val p = s"sos_$name"
+      fresh(c, p)
+      val ckpt = java.nio.file.Files.createTempDirectory(s"sos_${name}_ck").toString
+      implicit val enc: Encoder[Row] = Encoders.row(c.waves(0).schema)
+      implicit val sq = spark.sqlContext
+      val mem = MemoryStream[Row]
+      val input = mem.toDF()
+      val sink = new java.util.concurrent.ConcurrentHashMap[Long, DataFrame]()
+      def start() = c.stream(input, p, ckpt) { (out, id) =>
+        // idempotent per batchId: a replayed batch overwrites its entry
+        sink.put(id, pinned(out)): Unit
+      }
+      val q1 = start()
+      (0 until 2).foreach { w =>
+        mem.addData(c.waves(w).collect().toSeq: _*); q1.processAllAvailable()
+      }
+      q1.stop()
+      mem.addData(c.waves(2).collect().toSeq: _*)
+      val q2 = start()
+      q2.processAllAvailable()
+      mem.addData(c.waves(3).collect().toSeq: _*)
+      q2.processAllAvailable()
+      q2.stop()
+      assert(sink.keySet.asScala.toSet == Set(0L, 1L, 2L, 3L),
+        s"$name: sink saw batches ${sink.keySet}")
+      (0 until 4).foreach { w =>
+        assert(same(sink.get(w.toLong), emittedA(w)),
+          s"$name: restarted stream's batch $w differs from the uninterrupted run")
+      }
+      c.op.storeTableNames(p).indices.foreach { i =>
+        assert(same(snap(c.op.storeTableNames(p)(i)), storesA(4)(i)),
+          s"$name: ${c.op.storeTables(i).suffix} differs after the restart")
+      }
+    }
+  }
+}

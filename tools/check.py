@@ -29,6 +29,13 @@ def main():
     if os.path.exists(rows_only_path):
         with open(rows_only_path) as f:
             rows_only = set(json.load(f))
+    # Queries that threw inside Verify (failed.json: name -> message);
+    # their messages explain the FAIL-miss lines below.
+    failed_path = os.path.join(out_dir, "failed.json")
+    failed = {}
+    if os.path.exists(failed_path):
+        with open(failed_path) as f:
+            failed = json.load(f)
     n_pass = n_fail = 0
     # Result-TYPE gate (r18 judge finding): the driver's hasher is
     # type-sensitive (INT64 vs INT128 physical encoding) while the
@@ -114,7 +121,8 @@ def main():
     if only:
         expected &= only
     for name in sorted(expected - seen):
-        print(f"[FAIL-miss] {name}: expected but no output directory written")
+        why = f" — Verify: {failed[name]}" if name in failed else ""
+        print(f"[FAIL-miss] {name}: expected but no output directory written{why}")
         n_fail += 1
     print(f"== {n_pass} pass, {n_fail} fail")
     sys.exit(1 if n_fail else 0)
