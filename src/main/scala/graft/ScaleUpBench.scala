@@ -489,8 +489,7 @@ object ScaleUpBench {
     def mixServe(dir: String, pfx: String)
         : (Double, Double, Long, Long, Double, Long) = {
       import graft.streaming.StreamMix
-      Seq("docs", "ledger", "thr").foreach(t =>
-        graft.sources.TableOps.dropWithLocation(spark, s"${pfx}_$t"))
+      StreamMix.resetStore(spark, pfx)
       val docs = Tables.table(spark, dir, "documents")
         .select(col("doc_id"), col("source"))
       val t0 = System.nanoTime()
@@ -573,8 +572,7 @@ object ScaleUpBench {
     def dedupServeFull(dir: String, pfx: String)
         : (Double, Double, Long, Long, Boolean) = {
       import graft.streaming.StreamDedup
-      Seq("bands", "toks", "decisions").foreach(t =>
-        graft.sources.TableOps.dropWithLocation(spark, s"${pfx}_$t"))
+      StreamDedup.resetStore(spark, pfx)
       val docs = Tables.table(spark, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))
       val t0 = System.nanoTime()
@@ -631,8 +629,7 @@ object ScaleUpBench {
     def mixTokensServe(dir: String, pfx: String)
         : (Double, Double, Long, Long) = {
       import graft.streaming.StreamMixTokens
-      Seq("docs", "ledger", "thr").foreach(t =>
-        graft.sources.TableOps.dropWithLocation(spark, s"${pfx}_$t"))
+      StreamMixTokens.resetStore(spark, pfx)
       val docs = Tables.table(spark, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))
       val t0 = System.nanoTime()
@@ -684,8 +681,7 @@ object ScaleUpBench {
       * for the streaming index-add probe — see [[annAddProbe]]. */
     def annAdd(dir: String, pfx: String): (Double, Double, Boolean) = {
       import graft.streaming.StreamAnnIndex
-      Seq("codes", "centroids", "codebooks").foreach(t =>
-        graft.sources.TableOps.dropWithLocation(spark, s"${pfx}_$t"))
+      StreamAnnIndex.resetStore(spark, pfx)
       val embD = Tables.table(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val t0 = System.nanoTime()
@@ -732,8 +728,7 @@ object ScaleUpBench {
         : (Double, Double, Long, Long, Double, Long) = {
       import graft.streaming.StreamDsir
       import graft.ext.TextAnalysis
-      Seq("model", "scores", "thr", "ledger").foreach(t =>
-        graft.sources.TableOps.dropWithLocation(spark, s"${pfx}_$t"))
+      StreamDsir.resetStore(spark, pfx)
       val docs = Tables.table(spark, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))
       val t0 = System.nanoTime()
@@ -877,8 +872,7 @@ object ScaleUpBench {
     def driftServe(dir: String, pfx: String): (Double, Double, Long) = {
       import graft.streaming.StreamDrift
       import graft.ext.TextAnalysis
-      Seq("model", "counts", "applied").foreach(t =>
-        graft.sources.TableOps.dropWithLocation(spark, s"${pfx}_$t"))
+      StreamDrift.resetStore(spark, pfx)
       val docs = Tables.table(spark, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))
       val t0 = System.nanoTime()
@@ -950,8 +944,7 @@ object ScaleUpBench {
         : (Int, Int, Double, Long, Double) = {
       import graft.streaming.StreamDsir
       import graft.ext.TextAnalysis
-      Seq("model", "scores", "thr", "ledger").foreach(t =>
-        graft.sources.TableOps.dropWithLocation(spark, s"${pfx}_$t"))
+      StreamDsir.resetStore(spark, pfx)
       val docs = Tables.table(spark, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))
       val calB = TextAnalysis.dsirCalibratedBuckets(docs)
@@ -1206,23 +1199,19 @@ object ScaleUpBench {
         Seq("bands", "toks").foreach(t =>
           spark.sql(s"DROP TABLE IF EXISTS scup_sdp_${fx}_$t"): Unit)
       if (mixServeProbe)
-        Seq("docs", "ledger", "thr").foreach(t =>
-          spark.sql(s"DROP TABLE IF EXISTS scup_mx_${fx}_$t"): Unit)
+        graft.streaming.StreamMix.resetStore(spark, s"scup_mx_$fx")
       if (dedupServeFullProbe)
-        Seq("bands", "toks", "decisions").foreach(t =>
-          spark.sql(s"DROP TABLE IF EXISTS scup_sdf_${fx}_$t"): Unit)
+        graft.streaming.StreamDedup.resetStore(spark, s"scup_sdf_$fx")
       if (mixTokensServeProbe)
-        Seq("docs", "ledger", "thr").foreach(t =>
-          spark.sql(s"DROP TABLE IF EXISTS scup_mxt_${fx}_$t"): Unit)
+        graft.streaming.StreamMixTokens.resetStore(spark, s"scup_mxt_$fx")
       if (annAddProbe)
-        Seq("codes", "centroids", "codebooks").foreach(t =>
-          spark.sql(s"DROP TABLE IF EXISTS scup_sa_${fx}_$t"): Unit)
+        graft.streaming.StreamAnnIndex.resetStore(spark, s"scup_sa_$fx")
       if (dsirServeProbe)
-        Seq("model", "scores", "thr", "ledger").foreach(t =>
-          spark.sql(s"DROP TABLE IF EXISTS scup_ds_${fx}_$t"): Unit)
+        graft.streaming.StreamDsir.resetStore(spark, s"scup_ds_$fx")
       if (dsirStormCalProbe)
-        Seq("model", "scores", "thr", "ledger").foreach(t =>
-          spark.sql(s"DROP TABLE IF EXISTS scup_dsc_${fx}_$t"): Unit)
+        graft.streaming.StreamDsir.resetStore(spark, s"scup_dsc_$fx")
+      if (driftServeProbe)
+        graft.streaming.StreamDrift.resetStore(spark, s"scup_dr_$fx")
       if (dedupBucketedGuardProbe)
         spark.sql(s"DROP TABLE IF EXISTS scup_bg_${fx}_bands"): Unit
     }

@@ -1,6 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType}
 
 /** Catalog/table lifecycle operators — the engine analog of the
   * reference's DDL surface (SURVEY.md S5/S6):
@@ -27,8 +30,10 @@ object TableOps {
     * the reset idempotent under both catalogs.) */
   private[graft] def dropWithLocation(spark: SparkSession, name: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $name")
-    val path = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), name.toLowerCase)
+    deleteDir(spark, warehousePath(spark, name))
+  }
+
+  private def deleteDir(spark: SparkSession, path: Path): Unit = {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(path)) fs.delete(path, true): Unit
   }
@@ -52,13 +57,8 @@ object TableOps {
     * directory squatting at `warehouse/<name>` while the name is
     * uncataloged is deleted. Do not route external tables through
     * here; [[registerExternal]] is their reset path. */
-  private[graft] def ensureFreshLocation(spark: SparkSession, name: String): Unit = {
-    if (!spark.catalog.tableExists(name)) {
-      val path = warehousePath(spark, name)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(path)) fs.delete(path, true): Unit
-    }
-  }
+  private[graft] def ensureFreshLocation(spark: SparkSession, name: String): Unit =
+    if (!spark.catalog.tableExists(name)) deleteDir(spark, warehousePath(spark, name))
 
   /** Idempotent reset: drop-if-exists then recreate from a DataFrame,
     * partitioned by the given columns (the reference's six per-room
@@ -103,7 +103,7 @@ object TableOps {
       s"('graft.rebuild.id' = '${java.util.UUID.randomUUID()}')")
   }
 
-  private def dataFiles(spark: SparkSession, p: org.apache.hadoop.fs.Path)
+  private def dataFiles(spark: SparkSession, p: Path)
       : Seq[org.apache.hadoop.fs.FileStatus] = {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(p).toIndexedSeq
@@ -117,8 +117,10 @@ object TableOps {
     dataFiles(spark, tableLocation(spark, name)).map(_.getLen).sum
 
   private[sources] def warehousePath(spark: SparkSession, name: String) =
-    new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), name.toLowerCase)
+    new Path(spark.conf.get("spark.sql.warehouse.dir"), name.toLowerCase)
+
+  private[graft] def catalogMeta(spark: SparkSession, name: String): CatalogTable =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(name))
 
   /** The table's CATALOG storage location. Prefer this over
     * [[warehousePath]] wherever the table already exists: a
@@ -129,17 +131,14 @@ object TableOps {
     * only where no metadata exists to ask (post-DROP location sweeps,
     * pre-CREATE staging probes). */
   private[sources] def tableLocation(spark: SparkSession, name: String) =
-    new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
-        .location)
+    new Path(catalogMeta(spark, name).location)
 
-  /** The DEFAULT staging-table name a [[compactTable]] of `name` swaps
-    * through. Shared so half-swap recovery code (and its specs) probe
-    * the same name the compactor actually uses — a hardcoded copy of
-    * the suffix would silently reopen the recovery window if this
-    * default ever changed (`StreamDrift.ensureStore` re-points the
-    * orphaned staging table after a death between drop and rename). */
+  /** The staging-table name a [[compactTable]] or [[compactBucketedTable]]
+    * of `name` swaps through. Shared so half-swap recovery code (and its
+    * specs) probe the same name the compactor actually uses — a hardcoded
+    * copy of the suffix would silently reopen the recovery window if
+    * this name ever changed (`StoreOperator.ensureStore` renames the
+    * orphaned staging table back after a death between drop and rename). */
   private[graft] def stagingNameFor(name: String): String =
     s"${name}_compacting"
 
@@ -161,15 +160,16 @@ object TableOps {
     * The sort costs one extra shuffle over the plain rewrite; both run
     * on the staging copy, never the live table.
     *
-    * `where` (optional SQL condition) makes the rewrite a RETENTION
-    * pass: only matching rows survive into the staged copy. The trim
-    * inherits the stage+swap crash posture for free — survivors land on
-    * disk in the staging table BEFORE anything touches the live one, so
-    * no crash window exists where the dropped rows' table is the only
-    * copy (the hazard of a collect-then-reset trim). */
+    * `rewrite` (default: the rows as they are) transforms the rows the
+    * staged copy receives — a retention trim or a fold. It inherits the
+    * stage+swap crash posture for free — survivors land on disk in the
+    * staging table BEFORE anything touches the live one, so no crash
+    * window exists where the dropped rows' table is the only copy (the
+    * hazard of a collect-then-reset trim). */
   private[graft] def stageCompaction(spark: SparkSession, name: String,
       targetFileBytes: Long, stagingName: String = null,
-      orderBy: Seq[String] = Nil, where: Option[String] = None): (String, Int) = {
+      orderBy: Seq[String] = Nil,
+      rewrite: DataFrame => DataFrame = identity): (String, Int) = {
     val loc = warehousePath(spark, name)
     // Partitioned tables keep their data under per-partition
     // SUBDIRECTORIES; compacting through a flat rewrite would silently
@@ -188,9 +188,7 @@ object TableOps {
     // Exchange-free join keyed on the buckets would silently regain a
     // shuffle. Refuse loudly; a bucketed table is compacted by rewriting
     // through resetBucketedTable with its original spec.
-    val bucketSpec = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
-      .bucketSpec
+    val bucketSpec = catalogMeta(spark, name).bucketSpec
     require(bucketSpec.isEmpty,
       s"compactTable($name): table is bucketed (${bucketSpec.orNull}) — a " +
         "flat rewrite would drop the bucket layout; recompact via " +
@@ -199,8 +197,7 @@ object TableOps {
     val nOut = math.max(1L,
       (before.map(_.getLen).sum + targetFileBytes - 1) / targetFileBytes).toInt
     val staging = Option(stagingName).getOrElse(stagingNameFor(name))
-    val src = where.foldLeft(spark.table(name))(
-      (d, cond) => d.filter(org.apache.spark.sql.functions.expr(cond)))
+    val src = rewrite(spark.table(name))
     val laid =
       if (orderBy.isEmpty) src.repartition(nOut)
       else src
@@ -219,23 +216,32 @@ object TableOps {
     * I/O happens there, crash-safe) and swaps in via drop+RENAME, so a
     * reader never sees a HALF-WRITTEN table. The swap itself is two
     * metadata ops, not atomic: a death between them loses the table
-    * NAME but never data (the staging table holds the full compacted
-    * copy; re-point or re-run to recover) — the classic
-    * non-transactional-catalog caveat a production lake closes with a
-    * metastore-atomic rename or a table format's commit protocol (see
-    * SCALING.md). Returns (filesBefore, filesAfter). */
+    * NAME but never data (the staging table, [[stagingNameFor]], holds
+    * the full compacted copy; the store operators' ensureStore renames
+    * it back) — the classic non-transactional-catalog caveat a
+    * production lake closes with a metastore-atomic rename or a table
+    * format's commit protocol (see SCALING.md). Returns (filesBefore,
+    * filesAfter). */
   def compactTable(spark: SparkSession, name: String,
                    targetFileBytes: Long = 128L * 1024 * 1024,
                    orderBy: Seq[String] = Nil,
-                   where: Option[String] = None): (Int, Int) = {
-    val props = graftProps(spark, name)
+                   rewrite: DataFrame => DataFrame = identity): (Int, Int) = {
     val (staging, nBefore) =
       stageCompaction(spark, name, targetFileBytes, orderBy = orderBy,
-        where = where)
+        rewrite = rewrite)
+    (nBefore, swapIn(spark, staging, name))
+  }
+
+  /** The swap tail of [[compactTable]] and [[compactBucketedTable]]: the
+    * live table's `graft.*` identity is stamped on the staged copy, then
+    * drop + RENAME. Stamped BEFORE the drop, so a death between the two
+    * metadata ops leaves a staged copy that is the whole table, identity
+    * included. Returns filesAfter. */
+  private def swapIn(spark: SparkSession, staging: String, name: String): Int = {
+    restoreGraftProps(spark, staging, graftProps(spark, name))
     dropWithLocation(spark, name)
     spark.sql(s"ALTER TABLE $staging RENAME TO $name")
-    restoreGraftProps(spark, name, props)
-    (nBefore, dataFiles(spark, warehousePath(spark, name)).length)
+    dataFiles(spark, warehousePath(spark, name)).length
   }
 
   /** Engine-stamped table properties (`graft.*`) must SURVIVE a
@@ -246,11 +252,9 @@ object TableOps {
     * version (`graft.rebuild.id`: reintroducing the createTime
     * millisecond-tick stale-model hazard the stamp closed), and the
     * append revision (`graft.store.rev`). Captured from the live
-    * metadata before the drop, re-applied after the rename. */
+    * metadata and stamped on the replacement table. */
   private def graftProps(spark: SparkSession, name: String): Map[String, String] =
-    spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
-      .properties.filter(_._1.startsWith("graft."))
+    catalogMeta(spark, name).properties.filter(_._1.startsWith("graft."))
 
   private def restoreGraftProps(spark: SparkSession, name: String,
       props: Map[String, String]): Unit =
@@ -262,10 +266,9 @@ object TableOps {
       // identity props the build-once guards read. alterTable is the
       // same call the SET TBLPROPERTIES command bottoms out in, minus
       // the parser.
-      val cat = spark.sessionState.catalog
-      val id = org.apache.spark.sql.catalyst.TableIdentifier(name)
-      val meta = cat.getTableMetadata(id)
-      cat.alterTable(meta.copy(properties = meta.properties ++ props))
+      val meta = catalogMeta(spark, name)
+      spark.sessionState.catalog.alterTable(
+        meta.copy(properties = meta.properties ++ props))
     }
 
   /** [[compactTable]] for BUCKETED tables — the form [[stageCompaction]]
@@ -290,8 +293,7 @@ object TableOps {
     * policy (see `StreamDedup.bucketsFor`). */
   def compactBucketedTable(spark: SparkSession, name: String,
       newBuckets: Option[Int] = None): (Int, Int) = {
-    val meta = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
+    val meta = catalogMeta(spark, name)
     val spec = meta.bucketSpec
       .getOrElse(throw new IllegalArgumentException(
         s"compactBucketedTable($name): table has no bucket spec — " +
@@ -308,7 +310,7 @@ object TableOps {
         "would drop the partition layout; compact per partition slice")
     val before = dataFiles(spark, warehousePath(spark, name)).length
     val cols = spec.bucketColumnNames.map(org.apache.spark.sql.functions.col)
-    val staging = s"${name}_compacting"
+    val staging = stagingNameFor(name)
     dropWithLocation(spark, staging)
     // The rewrite must read the live table WITHOUT bucket grouping: a
     // bucketed scan advertises HashPartitioning(bucketCols, n), which
@@ -332,20 +334,14 @@ object TableOps {
        else writer)
         .saveAsTable(staging)
     } finally spark.conf.set(bucketReadKey, savedBucketRead)
-    dropWithLocation(spark, name)
-    spark.sql(s"ALTER TABLE $staging RENAME TO $name")
-    // identity properties survive maintenance (see [[graftProps]])
-    restoreGraftProps(spark, name,
-      meta.properties.filter(_._1.startsWith("graft.")))
-    (before, dataFiles(spark, warehousePath(spark, name)).length)
+    (before, swapIn(spark, staging, name))
   }
 
   /** Current backing version N of a VIEW-fronted table (`name` resolves
     * through a view to `name_vN` — see [[resetViewedTable]]). */
   private[graft] def backingVersion(spark: SparkSession, name: String): Int = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(name))
-    require(meta.tableType == org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW,
+    val meta = catalogMeta(spark, name)
+    require(meta.tableType == CatalogTableType.VIEW,
       s"$name is not a view — use compactTable for directly-named tables")
     val txt = meta.viewText.getOrElse("")
     s"(?i)${java.util.regex.Pattern.quote(name)}_v(\\d+)".r
@@ -362,9 +358,7 @@ object TableOps {
   def resetViewedTable(spark: SparkSession, name: String, df: DataFrame): Unit = {
     // the name may pre-exist as either form; drop with the matching DDL
     if (spark.catalog.tableExists(name)) {
-      val isView = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(name))
-        .tableType == org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW
+      val isView = catalogMeta(spark, name).tableType == CatalogTableType.VIEW
       if (isView) spark.sql(s"DROP VIEW $name") else dropWithLocation(spark, name)
     }
     // reclaim every stale backing version from prior generations
@@ -450,7 +444,7 @@ object TableOps {
     // and a warehouse-reconstructed path would refuse with "no such
     // partition directory" on the first fold of any external lake
     val tableLoc = tableLocation(spark, name)
-    val partPath = new org.apache.hadoop.fs.Path(tableLoc, partDirName)
+    val partPath = new Path(tableLoc, partDirName)
     val fs = partPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Half-swapped recovery: a crash between compactPartition's two
     // renames leaves the LIVE directory absent while the data sits intact
@@ -463,17 +457,15 @@ object TableOps {
     // the retired originals — either way the next attempt starts from a
     // whole partition, with no manual spelunking through hidden dirs.
     if (!fs.exists(partPath)) {
-      val staged = new org.apache.hadoop.fs.Path(
-        tableLoc, s".compacting_$partDirName")
-      val retired = new org.apache.hadoop.fs.Path(
-        tableLoc, s".old_$partDirName")
+      val staged = new Path(tableLoc, s".compacting_$partDirName")
+      val retired = new Path(tableLoc, s".old_$partDirName")
       val stagedCommitted = fs.exists(staged) &&
-        fs.exists(new org.apache.hadoop.fs.Path(staged, "_SUCCESS"))
+        fs.exists(new Path(staged, "_SUCCESS"))
       if (stagedCommitted) {
         require(fs.rename(staged, partPath),
           s"compactPartition($name, $partDirName): recovery could not " +
             s"promote $staged")
-        if (fs.exists(retired)) fs.delete(retired, true): Unit
+        deleteDir(spark, retired)
         refreshLiveRelationIndex(spark, name)
         spark.catalog.refreshTable(name)
       } else if (fs.exists(retired)) {
@@ -507,8 +499,7 @@ object TableOps {
       .filter(org.apache.spark.sql.functions.col(partCol).cast("string")
         === partVal)
       .drop(partCol)
-    val staging = new org.apache.hadoop.fs.Path(
-      tableLoc, s".compacting_$partDirName")
+    val staging = new Path(tableLoc, s".compacting_$partDirName")
     slice.repartition(nOut).write.mode("overwrite").parquet(staging.toString)
     (staging, before.length, live)
   }
@@ -536,11 +527,10 @@ object TableOps {
     val partDirName = s"$partCol=$partVal"
     // catalog location, same external-lake contract as the stage phase
     val tableLoc = tableLocation(spark, name)
-    val partPath = new org.apache.hadoop.fs.Path(tableLoc, partDirName)
+    val partPath = new Path(tableLoc, partDirName)
     val fs = partPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val retired = new org.apache.hadoop.fs.Path(
-      tableLoc, s".old_$partDirName")
-    if (fs.exists(retired)) fs.delete(retired, true): Unit
+    val retired = new Path(tableLoc, s".old_$partDirName")
+    deleteDir(spark, retired)
     require(fs.rename(partPath, retired),
       s"compactPartition($name, $partDirName): could not retire live dir")
     require(fs.rename(staging, partPath),

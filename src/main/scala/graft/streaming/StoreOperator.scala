@@ -9,8 +9,8 @@ import graft.sources.TableOps
 
 /** One store table of a [[StoreOperator]]: `<prefix>_<suffix>`, created
   * from `ddl` by [[StoreOperator.ensureStore]] (None: another writer owns
-  * its creation, e.g. the ANN index build) and appended — and compacted —
-  * ordered on `sortCols` ([[StreamStoreOps.appendToStore]]). */
+  * its creation, e.g. the ANN index build) and, when flat, appended — and
+  * compacted — ordered on `sortCols` ([[StreamStoreOps.appendToStore]]). */
 private[graft] final case class StoreTable(suffix: String, ddl: Option[String],
     sortCols: Seq[String])
 
@@ -26,19 +26,21 @@ private[graft] final case class StoreTable(suffix: String, ddl: Option[String],
   *     leaves a PREFIX of the list written — the state every operator's
   *     replay converges from (spec-proven for every prefix length,
   *     `StoreOperatorSpec`);
-  *   - [[ensureStore]]'s cross-JVM fresh-location sweep + idempotent DDL,
-  *     and the replay twins' scratch reset ([[resetStore]]);
+  *   - [[ensureStore]]: cross-JVM fresh-location sweep, DDL, and the
+  *     half-swapped-compaction recovery; the scratch reset
+  *     ([[resetStore]]) and the four-wave replay loop ([[replayWaves]]);
   *   - the one `foreachBatch` + `checkpointLocation` starter ([[start]]);
   *   - the ledger operators' prologue ([[decidedSplit]]: decided-set
   *     slice, replay fast path, undecided-docs guard) and the thresholds
   *     state read ([[thrState]]: ahead / prev-cur / recovering /
   *     inconsistent-store guards);
-  *   - thresholds-store compaction with rank-based snapshot retention.
+  *   - compaction of every store table ([[compactStoreTables]]: the
+  *     bucketed or ordered flat rewrite by the live catalog spec,
+  *     rank-based thr snapshot retention).
   *
   * Sinks must be idempotent per batchId — the standard foreachBatch
   * recovery contract every operator inherits. */
 private[graft] trait StoreOperator {
-  import StreamStoreOps.MaxPruneKeys
 
   /** Operator name the refusal messages carry, e.g. `streamingMix`. */
   protected def opName: String
@@ -57,22 +59,51 @@ private[graft] trait StoreOperator {
   private[graft] def storeTableNames(prefix: String): Seq[String] =
     storeTables.map(t => tableName(prefix, t.suffix))
 
-  /** Idempotent store DDL, residue-proof across JVMs: an uncataloged
-    * table whose warehouse directory survived a previous JVM must not
-    * adopt the stale files (TableOps.ensureFreshLocation). */
-  def ensureStore(spark: SparkSession, prefix: String): Unit = {
-    val owned = storeTables.filter(_.ddl.isDefined)
-    owned.foreach(t =>
-      TableOps.ensureFreshLocation(spark, tableName(prefix, t.suffix)))
-    owned.foreach(t => spark.sql(
-      s"CREATE TABLE IF NOT EXISTS ${tableName(prefix, t.suffix)} ${t.ddl.get}"))
-  }
+  /** One existence check per declared store table (the owned ones and
+    * those another writer creates):
+    *
+    *   - live table present: nothing to do;
+    *   - live table absent but its compaction staging table
+    *     (`TableOps.stagingNameFor`) present: a compaction died between
+    *     its drop and its rename, and the staged copy is the ONLY copy —
+    *     rename it back. CREATEing an empty table here instead would let
+    *     the next compaction's staging reset delete the data for good
+    *     (an empty ledger re-decides old docs, an empty thr table
+    *     refuses every later batch);
+    *   - both absent: sweep the managed location (an uncataloged table
+    *     whose warehouse directory survived a previous JVM must not
+    *     adopt the stale files — TableOps.ensureFreshLocation), then
+    *     CREATE from the declared DDL.
+    *
+    * PRECONDITION of the half-swap rename: a PERSISTENT metastore — the
+    * recovery pivots on the catalog still knowing the staging table. A
+    * non-persistent catalog that dies mid-swap loses the entry, the
+    * residue is orphaned at the staging name's warehouse path, and the
+    * store comes back empty; that deployment shape needs the
+    * metastore-atomic rename / table-format commit SCALING.md's
+    * compaction section prescribes. */
+  def ensureStore(spark: SparkSession, prefix: String): Unit =
+    storeTables.foreach { t =>
+      val name = tableName(prefix, t.suffix)
+      val staged = TableOps.stagingNameFor(name)
+      if (spark.catalog.tableExists(name)) ()
+      else if (spark.catalog.tableExists(staged)) {
+        TableOps.ensureFreshLocation(spark, name)
+        spark.sql(s"ALTER TABLE $staged RENAME TO $name")
+      } else t.ddl.foreach { ddl =>
+        TableOps.ensureFreshLocation(spark, name)
+        spark.sql(s"CREATE TABLE IF NOT EXISTS $name $ddl")
+      }
+    }
 
-  /** Drop + clear the managed location of every store and side table:
-    * a replay twin's scratch store must reset idempotently even when a
-    * PREVIOUS JVM left its warehouse dirs behind. */
-  protected def resetStore(spark: SparkSession, prefix: String): Unit =
-    (sideTables.map(tableName(prefix, _)) ++ storeTableNames(prefix))
+  /** Drop + clear the managed location of every store and side table
+    * and of each store table's compaction staging table: a replay
+    * twin's (or a probe's) scratch store must reset idempotently even
+    * when a PREVIOUS JVM left its warehouse dirs behind, and must not
+    * resurrect an orphaned staged copy on its next ensureStore. */
+  private[graft] def resetStore(spark: SparkSession, prefix: String): Unit =
+    (sideTables.map(tableName(prefix, _)) ++ storeTableNames(prefix) ++
+      storeTableNames(prefix).map(TableOps.stagingNameFor))
       .foreach(TableOps.dropWithLocation(spark, _))
 
   /** Append one frame per store table (None: nothing to write), in the
@@ -120,9 +151,8 @@ private[graft] trait StoreOperator {
       batchD: DataFrame, batchId: Long): Either[DataFrame, DataFrame] = {
     val ledger = spark.table(tableName(prefix, "ledger"))
     if (batchD.isEmpty) return Left(ledger.filter(lit(false)))
-    val batchIds = batchD.select(col("doc_id"))
-      .limit(MaxPruneKeys + 1).collect().map(_.getLong(0)).toIndexedSeq
-    val decided = StreamStoreOps.decidedSlice(spark, ledger, batchIds)
+    val decided = StreamStoreOps.decidedSlice(spark, ledger,
+      StreamStoreOps.batchKeys(batchD, "doc_id"))
     if (decided.filter(col("batch_id") === batchId).limit(1).count() > 0) {
       val undecided = batchD
         .join(decided.select(col("doc_id")), Seq("doc_id"), "left_anti")
@@ -162,16 +192,33 @@ private[graft] trait StoreOperator {
     st
   }
 
-  /** ORDERED small-file compaction of a thresholds store, run with the
-    * stream idle: each data table rewritten ordered on its probe key
-    * (its `sortCols`), then `<prefix>_thr` TRIMMED to the trailing
-    * `retainThrBatches` snapshots via compactTable's staged retention
-    * filter — survivors land on disk in the staging table BEFORE the
-    * live table is touched, so the recovery-critical state never has a
-    * crash window where the dropped rows' table is its only copy.
-    * Returns per-table (filesBefore, filesAfter). */
-  protected def compactThresholdStore(spark: SparkSession, prefix: String,
-      targetFileBytes: Long, retainThrBatches: Int): Map[String, (Int, Int)] = {
+  /** The rewrite a FLAT store table's compaction stages (default: the
+    * rows as they are); [[StreamDrift]] folds its count deltas here. */
+  protected def compactRewrite(spark: SparkSession, prefix: String,
+      suffix: String): DataFrame => DataFrame = identity
+
+  /** Small-file compaction of every store table, run with the stream
+    * idle — between micro-batches or with the stream stopped, same
+    * contract as every in-place lake maintenance job here. Each table's
+    * LIVE catalog bucket spec picks the rewrite:
+    *
+    *   - bucketed: `TableOps.compactBucketedTable`, one right-sized file
+    *     per non-empty bucket, the bucket count rescaled with store bytes
+    *     ([[StreamDedup.bucketsFor]]; a bucket count is immutable outside
+    *     a full rewrite, and a grown store's per-bucket files would blow
+    *     past the target size);
+    *   - flat: `TableOps.compactTable` ordered on the table's `sortCols`
+    *     (tight per-file key ranges, so the pushed probe predicates skip
+    *     whole files), staging [[compactRewrite]]'s rows — and, for
+    *     `<prefix>_thr`, only the trailing `retainThrBatches` snapshots.
+    *
+    * `thr` goes last. Every rewrite lands in the staging table BEFORE the
+    * live table is touched, so a trim or fold never has a crash window
+    * where the dropped rows' table is the only copy; a death between the
+    * swap's drop and rename is healed by [[ensureStore]]. Returns
+    * per-table (filesBefore, filesAfter). */
+  protected def compactStoreTables(spark: SparkSession, prefix: String,
+      targetFileBytes: Long, retainThrBatches: Int = 2): Map[String, (Int, Int)] = {
     ensureStore(spark, prefix)
     // >= 2, not >= 1: healthy-path recovery reads only the trailing
     // snapshot, but a crash-after-thr replay of the NEWEST batch N
@@ -183,24 +230,45 @@ private[graft] trait StoreOperator {
     require(retainThrBatches >= 2,
       "retainThrBatches: a crash-after-thr replay of the newest batch " +
         "recovers from its PREDECESSOR snapshot — keep >= 2")
-    // Retention by RANK over the DISTINCT stored batch ids, never by id
-    // arithmetic: batch ids are NOT contiguous in the thr table (a
-    // batch whose pool filter leaves nothing writes no snapshot), so a
-    // `max - (retain-1)` range cut could land inside a gap and delete
-    // the PREDECESSOR snapshot the newest batch's crash-after-thr
-    // replay recovers from — wedging (mixers) or, worse, degrading the
-    // recovery to the no-history sentinel (selector).
-    val keepIds = spark.table(tableName(prefix, "thr"))
-      .select(col("batch_id")).distinct()
-      .orderBy(col("batch_id").desc).limit(retainThrBatches)
-      .collect().map(_.getLong(0))
     storeTables.sortBy(_.suffix == "thr").map { t =>
       val name = tableName(prefix, t.suffix)
-      val where = Option.when(t.suffix == "thr" && keepIds.nonEmpty)(
-        s"batch_id >= ${keepIds.min}")
-      name -> TableOps.compactTable(spark, name, targetFileBytes,
-        orderBy = t.sortCols, where = where)
+      name -> (StreamStoreOps.liveBucketSpec(spark, name) match {
+        case Some(_) => TableOps.compactBucketedTable(spark, name,
+          Some(StreamDedup.bucketsFor(TableOps.tableDataBytes(spark, name),
+            targetFileBytes)))
+        case None => TableOps.compactTable(spark, name, targetFileBytes,
+          t.sortCols,
+          if (t.suffix == "thr") thrTrim(spark, name, retainThrBatches)
+          else compactRewrite(spark, prefix, t.suffix))
+      })
     }.toMap
+  }
+
+  /** Retention by RANK over the DISTINCT stored batch ids, never by id
+    * arithmetic: batch ids are NOT contiguous in the thr table (a batch
+    * whose pool filter leaves nothing writes no snapshot), so a
+    * `max - (retain-1)` range cut could land inside a gap and delete the
+    * PREDECESSOR snapshot the newest batch's crash-after-thr replay
+    * recovers from — wedging (mixers) or, worse, degrading the recovery
+    * to the no-history sentinel (selector). */
+  private def thrTrim(spark: SparkSession, thr: String,
+      retainThrBatches: Int): DataFrame => DataFrame = {
+    val keepIds = spark.table(thr).select(col("batch_id")).distinct()
+      .orderBy(col("batch_id").desc).limit(retainThrBatches)
+      .collect().map(_.getLong(0))
+    if (keepIds.isEmpty) identity
+    else _.filter(col("batch_id") >= keepIds.min)
+  }
+
+  /** The replay twins' four arrivals: `input` tagged with
+    * [[StoreOperator.wave]] and pinned, then `step` — one processBatch
+    * against the twin's store — per wave in order. Returns each wave's
+    * emission. */
+  protected def replayWaves(input: DataFrame)
+      (step: (DataFrame, Long) => DataFrame): IndexedSeq[DataFrame] = {
+    val waved = input.withColumn("wave", StoreOperator.wave).localCheckpoint(true)
+    (0 until 4).map(w =>
+      step(waved.filter(col("wave") === lit(w)).drop("wave"), w.toLong))
   }
 }
 

@@ -54,12 +54,11 @@ import graft.ext.Similarity
   * bucket count with store bytes, the same maintenance contract as
   * [[StreamDedup]]. */
 object StreamAnnIndex extends StoreOperator {
-  import StreamStoreOps.MaxPruneKeys
-
   protected val opName = "streamingIndexAdd"
   // created by the index build (Similarity.annIndexWrite), not here
   private[graft] val storeTables = Seq(StoreTable("codes", None, Seq("cell")))
-  private def codesT(prefix: String) = s"${prefix}_codes"
+  // the frozen model the same build writes
+  override protected val sideTables = Seq("centroids", "codebooks")
 
   /** One micro-batch: encode against the frozen model, append the
     * not-yet-present rows (anti-joined on vec_id, store side pruned by
@@ -85,10 +84,9 @@ object StreamAnnIndex extends StoreOperator {
       // store-side read pruned by the batch's own ids (capped — over
       // the cap the full scan is the cheaper plan anyway); restricting
       // the anti-join's right side to left-side keys is a no-op
-      val batchIds = encoded.select(col("vec_id"))
-        .limit(MaxPruneKeys + 1).collect().map(_.getLong(0)).toIndexedSeq
+      val batchIds = StreamStoreOps.batchKeys(encoded, "vec_id")
       val slice = StreamStoreOps.keySlice(
-        spark.table(codesT(prefix))
+        spark.table(tableName(prefix, "codes"))
           .select(col("vec_id"), col("cell").as("standing_cell")),
         "vec_id", batchIds)
       val fresh = encoded
@@ -103,9 +101,7 @@ object StreamAnnIndex extends StoreOperator {
       // not just fresh appends — so the crash window "files landed,
       // stamp didn't" heals on the batch's replay instead of leaving
       // the rows invisible to running serve fleets indefinitely.
-      if (batchIds.nonEmpty)
-        spark.sql(s"ALTER TABLE ${codesT(prefix)} SET TBLPROPERTIES " +
-          s"('graft.store.rev' = '${java.util.UUID.randomUUID()}')"): Unit
+      if (batchIds.nonEmpty) bumpRev(spark, prefix)
       // Ack cell = the cell the vector is SERVED from: the STANDING
       // row's cell when the insert-once guard kept it (a re-submitted
       // vec_id with a changed embedding must not be acked into a cell
@@ -120,24 +116,23 @@ object StreamAnnIndex extends StoreOperator {
     }
   }
 
+  private def bumpRev(spark: SparkSession, prefix: String): Unit =
+    spark.sql(s"ALTER TABLE ${tableName(prefix, "codes")} SET TBLPROPERTIES " +
+      s"('graft.store.rev' = '${java.util.UUID.randomUUID()}')"): Unit
+
   /** Bucketed compaction of the codes store — collapses the per-append
     * file pile back to one right-sized file per non-empty bucket and
-    * rescales the bucket count with store bytes (the
-    * [[StreamDedup.bucketsFor]] growth policy; the CREATE-time count
-    * fits the base build). Run with the add stream idle, same contract
-    * as every in-place lake maintenance job here. */
+    * rescales the bucket count with store bytes
+    * ([[StoreOperator.compactStoreTables]]; the CREATE-time count fits
+    * the base build). Run with the add stream idle. The rewrite replaces
+    * every FILE under an unchanged identity (compaction preserves the
+    * graft.* properties), so the append revision is bumped: running
+    * blue-green fleets re-list proactively instead of through the
+    * missing-file retry path. */
   def compactStore(spark: SparkSession, prefix: String,
       targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val r = graft.sources.TableOps.compactBucketedTable(spark, codesT(prefix),
-      newBuckets = Some(StreamDedup.bucketsFor(
-        graft.sources.TableOps.tableDataBytes(spark, codesT(prefix)),
-        targetFileBytes)))
-    // the rewrite replaced every FILE under an unchanged identity
-    // (compaction preserves the graft.* properties) — bump the append
-    // revision so running blue-green fleets re-list proactively instead
-    // of through the missing-file retry path
-    spark.sql(s"ALTER TABLE ${codesT(prefix)} SET TBLPROPERTIES " +
-      s"('graft.store.rev' = '${java.util.UUID.randomUUID()}')"): Unit
+    val r = compactStoreTables(spark, prefix, targetFileBytes).values.head
+    bumpRev(spark, prefix)
     r
   }
 
@@ -169,7 +164,7 @@ object StreamAnnIndex extends StoreOperator {
     val prefix = "annx_replay"
     val emb = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
-    Similarity.ensureFromSource(spark, codesT(prefix), sfDir) {
+    Similarity.ensureFromSource(spark, tableName(prefix, "codes"), sfDir) {
       Similarity.annIndexWriteFrom(spark,
         emb.filter(col("vec_id") % 5 =!= 0), prefix)
       (0 until 2).foreach { wave =>
@@ -180,7 +175,7 @@ object StreamAnnIndex extends StoreOperator {
       }
     }
     val (cents, cb) = Similarity.loadIvfPqModel(spark, prefix)
-    Similarity.ivfPqScore(emb, spark.table(codesT(prefix)), cents, cb,
+    Similarity.ivfPqScore(emb, spark.table(tableName(prefix, "codes")), cents, cb,
         probes = 1)
       .withColumn("src", when(col("neighbor_id") % 5 === 0, lit("new"))
         .otherwise(lit("base")))

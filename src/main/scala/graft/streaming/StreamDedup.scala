@@ -62,12 +62,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the component representative (within-batch drop), or NULL (kept).
   */
 object StreamDedup extends StoreOperator {
-  import StreamStoreOps.MaxPruneKeys
-
   protected val opName = "streamingDedup"
-  private def bands(prefix: String) = s"${prefix}_bands"
-  private def toks(prefix: String) = s"${prefix}_toks"
-  private def decisions(prefix: String) = s"${prefix}_decisions"
 
   /** Bucket count for the bands store, bucketed on the full candidate
     * join key (band_idx, band). The COMPOSITE key is load-bearing:
@@ -177,17 +172,17 @@ object StreamDedup extends StoreOperator {
     // replay join, and (for same-id-different-text redelivery) a
     // minhash signature silently merged from both texts. One
     // deterministic winner (smallest (source, text)) pins replay.
-    // batch1 feeds the id collect, the replay join, and the fresh split;
+    // batch1 (one row per doc_id, so the id collect needs no distinct)
+    // feeds the id collect, the replay join, and the fresh split;
     // decided feeds the replay join and the fresh anti-join — both
     // pinned ONCE (decidedSlice pins the under-cap ledger slice and
     // stays lazy over the cap) instead of re-running the window / the
     // ledger scan per consumer.
     val batch1 = StoreOperator.collapse(batch, "doc_id", col("source"), col("text"))
       .localCheckpoint(true)
-    val batchIds = batch1.select(col("doc_id")).distinct()
-      .limit(MaxPruneKeys + 1).collect().map(_.getLong(0)).toIndexedSeq
+    val batchIds = StreamStoreOps.batchKeys(batch1, "doc_id")
     val decided = StreamStoreOps.decidedSlice(
-      spark, spark.table(decisions(prefix)), batchIds)
+      spark, spark.table(tableName(prefix, "decisions")), batchIds)
     // Both sides of the already-decided split are frozen BEFORE any
     // append (decidedSlice pinned the ledger slice; the frames below
     // checkpoint): the appends mutate the very tables these frames
@@ -208,8 +203,8 @@ object StreamDedup extends StoreOperator {
     // doc_id-ordered toks layout turns the pushed id range into row-group
     // skips, and a batch with no store candidates never scans toks at all).
     val (verdicts, keptBands, keptToks) = graft.ext.Dedup.streamDedupStep(
-      fresh, spark.table(bands(prefix)), spark.table(toks(prefix)),
-      prune = true)
+      fresh, spark.table(tableName(prefix, "bands")),
+      spark.table(tableName(prefix, "toks")), prune = true)
     // Anti-joined appends: each frame is materialized (localCheckpoint)
     // before its insert so no plan both reads and writes one table.
     // The guard's left side carries only BATCH doc_ids, so restricting
@@ -229,14 +224,14 @@ object StreamDedup extends StoreOperator {
     // colliding only on those bands would be kept). toks/decisions are
     // one row per doc and keep the doc-granular guard.
     val bandSlice = StreamStoreOps.keySlice(
-      spark.table(bands(prefix)).select(col("doc_id"), col("band_idx")),
+      spark.table(tableName(prefix, "bands")).select(col("doc_id"), col("band_idx")),
       "doc_id", batchIds).distinct()
     val newBands = keptBands
       .join(bandSlice, Seq("doc_id", "band_idx"), "left_anti")
       .select(col("doc_id"), col("band_idx"), col("band"))
       .localCheckpoint(true)
     val newToks = keptToks
-      .join(storeIdSlice(toks(prefix)), Seq("doc_id"), "left_anti")
+      .join(storeIdSlice(tableName(prefix, "toks")), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("toks"))
       .localCheckpoint(true)
     val freshDecisions = verdicts
@@ -260,51 +255,21 @@ object StreamDedup extends StoreOperator {
     }
   }
 
-  /** ORDERED small-file compaction of the three store tables — the
-    * maintenance pass the serve path's probe pruning assumes. Every
-    * micro-batch appends a few small files to each table; after N
-    * batches the stores are N-file piles with interleaved key ranges, so
-    * the pushed id-range predicates ([[processBatch]]'s ledger pruning,
+  /** Small-file compaction of the three store tables — the maintenance
+    * pass the serve path's probe pruning assumes. Every micro-batch
+    * appends a few small files to each table; after N batches the stores
+    * are N-file piles with interleaved key ranges, so the pushed id-range
+    * predicates ([[processBatch]]'s ledger pruning,
     * `streamDedupStep(prune = true)`'s toks pruning) can skip nothing.
-    * Compaction rewrites each table back to one right-sized file per
-    * non-empty bucket, rescaling the bucket count with store bytes
-    * ([[bucketsFor]]) — bands keyed on (band_idx, band), toks and the
-    * decisions ledger on doc_id — via
-    * `TableOps.compactBucketedTable`'s stage+swap protocol (crash
-    * before the swap leaves the live table byte-identical; the swap's
-    * drop+RENAME caveat is documented there). A legacy flat store gets
-    * the ordered `compactTable` rewrite instead. Run it with the filter idle — between
-    * micro-batches or with the stream stopped — same contract as every
-    * in-place lake maintenance job here. Returns per-table
-    * (filesBefore, filesAfter). */
+    * [[StoreOperator.compactStoreTables]] rewrites each bucketed table to
+    * one right-sized file per non-empty bucket, rescaling the bucket
+    * count with store bytes ([[bucketsFor]]) — the fixed-16 layout was
+    * the remaining 2x in the 100x pruned-serve datum; a legacy flat
+    * store gets the ordered rewrite. Returns per-table (filesBefore,
+    * filesAfter). */
   def compactStore(spark: SparkSession, prefix: String,
-      targetFileBytes: Long = 128L * 1024 * 1024): Map[String, (Int, Int)] = {
-    ensureStore(spark, prefix)
-    // Every bucketed store's compaction must preserve the bucket spec,
-    // collapsing the per-append file pile back to one file per
-    // non-empty bucket, and is ALSO where the bucket count scales with
-    // store bytes ([[bucketsFor]]): the CREATE-time count fits an empty
-    // store, and without the rescale a grown store's per-bucket files
-    // blow past the target size (the fixed-16 layout was the remaining
-    // 2x in the 100x pruned-serve datum). A store created before the
-    // bucketed DDL keeps the ordered flat rewrite.
-    def compactOne(table: String, orderBy: Seq[String]): (Int, Int) = {
-      val bucketed = spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-        .bucketSpec.isDefined
-      if (bucketed) {
-        val desired = bucketsFor(
-          graft.sources.TableOps.tableDataBytes(spark, table), targetFileBytes)
-        graft.sources.TableOps.compactBucketedTable(spark, table,
-          newBuckets = Some(desired))
-      } else graft.sources.TableOps.compactTable(spark, table,
-        targetFileBytes, orderBy = orderBy)
-    }
-    storeTables.map { t =>
-      val name = tableName(prefix, t.suffix)
-      name -> compactOne(name, t.sortCols)
-    }.toMap
-  }
+      targetFileBytes: Long = 128L * 1024 * 1024): Map[String, (Int, Int)] =
+    compactStoreTables(spark, prefix, targetFileBytes)
 
   /** Start the online dedup filter over a streaming (doc_id, source,
     * text) DataFrame. `sink` receives each batch's verdict frame and its

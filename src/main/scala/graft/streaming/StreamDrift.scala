@@ -56,48 +56,6 @@ object StreamDrift extends StoreOperator {
     StoreTable("applied", Some("(batch_id BIGINT) USING parquet"), Seq("batch_id")))
   override protected val sideTables = Seq("model")
 
-  private[graft] def modelT(prefix: String) = s"${prefix}_model"
-  private[graft] def countsT(prefix: String) = s"${prefix}_counts"
-  private[graft] def appliedT(prefix: String) = s"${prefix}_applied"
-
-  private def stageT(prefix: String) = s"${countsT(prefix)}_compact_stage"
-  // TableOps.compactTable's default staging name for the applied ledger
-  // — read from the compactor itself, not a hardcoded suffix copy, so
-  // a change to the default can never silently desync this recovery
-  private def appliedStageT(prefix: String) =
-    graft.sources.TableOps.stagingNameFor(appliedT(prefix))
-
-  override def ensureStore(spark: SparkSession, prefix: String): Unit = {
-    // half-swap recovery FIRST (the TableOps.compactTable drop+RENAME
-    // caveat, closed here rather than documented away: a death between
-    // the fold's drop and rename leaves the staging table holding the
-    // ONLY copy, and without this re-point the CREATE below would
-    // materialize an empty counts table that the next compactStore
-    // folds — discarding the staged copy it starts by dropping)
-    if (!spark.catalog.tableExists(countsT(prefix)) &&
-        spark.catalog.tableExists(stageT(prefix)))
-      spark.sql(s"ALTER TABLE ${stageT(prefix)} RENAME TO ${countsT(prefix)}")
-    // same window for the APPLIED ledger (compactStore compacts it via
-    // TableOps.compactTable): a death between ITS drop and rename would
-    // otherwise recreate the ledger empty below, and every historical
-    // counts row would be silently semi-joined out of all future
-    // snapshots — those batches are checkpoint-committed and never
-    // replay, so the baseline would be wrong without being loud.
-    // PRECONDITION (both re-points): a PERSISTENT metastore — the
-    // recovery pivots on the catalog still knowing the staging table.
-    // A non-persistent catalog that dies mid-swap loses the entry, the
-    // residue is orphaned at the staging name's warehouse path (which
-    // the ensureFreshLocation sweeps below never probe — they sweep the
-    // LIVE names), and the store comes back empty; that deployment
-    // shape needs the metastore-atomic rename / table-format commit
-    // SCALING.md's compaction section prescribes, not this code path.
-    if (!spark.catalog.tableExists(appliedT(prefix)) &&
-        spark.catalog.tableExists(appliedStageT(prefix)))
-      spark.sql(
-        s"ALTER TABLE ${appliedStageT(prefix)} RENAME TO ${appliedT(prefix)}")
-    super.ensureStore(spark, prefix)
-  }
-
   /** Fit + persist the frozen pool model: dense B-row (f, c_q) bucket
     * counts over the reference corpus's NON-target sources — the
     * distribution every subsequent snapshot diverges from. Train-once:
@@ -110,7 +68,7 @@ object StreamDrift extends StoreOperator {
     val pool = TextAnalysis.dsirSourceCounts(documents)
       .filter(!col("source").isin(targetSources: _*))
       .groupBy(col("f")).agg(sum(col("c_s")).as("c_q"))
-    graft.sources.TableOps.resetTable(spark, modelT(prefix),
+    graft.sources.TableOps.resetTable(spark, tableName(prefix, "model"),
       spark.range(TextAnalysis.DsirBuckets).toDF("f")
         .join(pool, Seq("f"), "left").na.fill(0L, Seq("c_q"))
         .coalesce(1).sortWithinPartitions("f"))
@@ -120,7 +78,7 @@ object StreamDrift extends StoreOperator {
     * (qByF, qTot) — dense model rows plus their sum. */
   private def frozenQ(spark: SparkSession, prefix: String)
       : (DataFrame, DataFrame) = {
-    val m = spark.table(modelT(prefix))
+    val m = spark.table(tableName(prefix, "model"))
     // Loud B-consistency guard (same contract as TextAnalysis.dsirScore):
     // the frozen model is a dense DsirBuckets-row spine, so a later JVM
     // with a different SPARK_GRAFT_DSIR_BUCKETS would hash batch grams
@@ -141,8 +99,8 @@ object StreamDrift extends StoreOperator {
     * to the tiny applied ledger so unapplied crash residue can never
     * leak into a snapshot. */
   private def snapshot(spark: SparkSession, prefix: String): DataFrame = {
-    val applied = spark.table(appliedT(prefix)).select(col("batch_id"))
-    val sByF = spark.table(countsT(prefix))
+    val applied = spark.table(tableName(prefix, "applied")).select(col("batch_id"))
+    val sByF = spark.table(tableName(prefix, "counts"))
       .join(broadcast(applied.distinct()), Seq("batch_id"), "left_semi")
       .groupBy(col("source"), col("f")).agg(sum(col("c_s")).as("c_s"))
       .localCheckpoint(true)
@@ -164,8 +122,8 @@ object StreamDrift extends StoreOperator {
   private[graft] def processBatch(spark: SparkSession, prefix: String,
       batch: DataFrame, batchId: Long): DataFrame = {
     ensureStore(spark, prefix)
-    require(spark.catalog.tableExists(modelT(prefix)),
-      s"streamingDrift($prefix): no frozen model at ${modelT(prefix)} — " +
+    require(spark.catalog.tableExists(tableName(prefix, "model")),
+      s"streamingDrift($prefix): no frozen model at ${tableName(prefix, "model")} — " +
         "fit it once with StreamDrift.modelWrite before streaming")
     // B-consistency BEFORE any write (frozenQ re-checks on the serve
     // path): without this, a JVM whose SPARK_GRAFT_DSIR_BUCKETS differs
@@ -174,7 +132,7 @@ object StreamDrift extends StoreOperator {
     // refusal keeps the counts table clean of mixed-B rows.
     frozenQ(spark, prefix): Unit
 
-    val applied = spark.table(appliedT(prefix))
+    val applied = spark.table(tableName(prefix, "applied"))
     val ahead = applied.filter(col("batch_id") > batchId).limit(1).count()
     require(ahead == 0L,
       s"streamingDrift($prefix): applied ledger carries batch ids " +
@@ -195,7 +153,7 @@ object StreamDrift extends StoreOperator {
 
     // ---- crash-window recovery: counts residue without the applied
     // marker must equal the recomputed deltas bit-for-bit
-    val residue = spark.table(countsT(prefix))
+    val residue = spark.table(tableName(prefix, "counts"))
       .filter(col("batch_id") === batchId)
       .select(col("source"), col("f"), col("c_s"))
     val hasResidue = residue.limit(1).count() > 0
@@ -219,42 +177,39 @@ object StreamDrift extends StoreOperator {
       .withColumn("batch_id", lit(batchId)).localCheckpoint(true)
   }
 
-  /** ORDERED fold compaction: applied deltas collapse to ONE row per
-    * (source, f) tagged with the max applied batch id (the steady-state
-    * O(|sources|·B) store the serve read assumes); unapplied crash
-    * residue is DROPPED by the applied semi-join (its batch replays
-    * and re-appends). Staged like TableOps.compactTable: survivors
-    * land in the staging table before the live table is touched. Run
-    * with the stream idle (the siblings' contract). Returns
+  /** Fold compaction ([[StoreOperator.compactStoreTables]]): applied
+    * deltas collapse to ONE row per (source, f) tagged with the max
+    * applied batch id (the steady-state O(|sources|·B) store the serve
+    * read assumes); unapplied crash residue is DROPPED by the applied
+    * semi-join (its batch replays and re-appends). Nothing is compacted
+    * before the first applied batch. Run with the stream idle. Returns
     * (rows before, rows after) per table. */
   def compactStore(spark: SparkSession, prefix: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Map[String, (Long, Long)] = {
     ensureStore(spark, prefix)
-    val counts = spark.table(countsT(prefix))
-    val before = counts.count()
-    val applied = spark.table(appliedT(prefix))
-    val maxApplied = applied.agg(max(col("batch_id"))).head()
-    if (maxApplied.isNullAt(0)) return Map(
-      countsT(prefix) -> (before, before), appliedT(prefix) -> (0L, 0L))
-    val folded = counts
-      .join(broadcast(applied.select(col("batch_id")).distinct()),
-        Seq("batch_id"), "left_semi")
-      .groupBy(col("source"), col("f")).agg(sum(col("c_s")).as("c_s"))
-      .withColumn("batch_id", lit(maxApplied.getLong(0)))
-      .select(col("source"), col("f"), col("c_s"), col("batch_id"))
-    val staging = stageT(prefix)
-    graft.sources.TableOps.dropWithLocation(spark, staging)
-    folded.coalesce(1).sortWithinPartitions("source", "f")
-      .write.saveAsTable(staging)
-    val after = spark.table(staging).count()
-    graft.sources.TableOps.dropWithLocation(spark, countsT(prefix))
-    spark.sql(s"ALTER TABLE $staging RENAME TO ${countsT(prefix)}")
-    val aBefore = applied.count()
-    graft.sources.TableOps.compactTable(spark, appliedT(prefix),
-      targetFileBytes, orderBy = Seq("batch_id")): Unit
-    Map(countsT(prefix) -> (before, after),
-      appliedT(prefix) -> (aBefore, spark.table(appliedT(prefix)).count()))
+    val names = storeTableNames(prefix)
+    def rows() = names.map(spark.table(_).count())
+    val before = rows()
+    if (maxApplied(spark, prefix).isDefined)
+      compactStoreTables(spark, prefix, targetFileBytes): Unit
+    names.zip(before.zip(rows())).toMap
   }
+
+  private def maxApplied(spark: SparkSession, prefix: String): Option[Long] = {
+    val m = spark.table(tableName(prefix, "applied")).agg(max(col("batch_id"))).head()
+    Option.when(!m.isNullAt(0))(m.getLong(0))
+  }
+
+  override protected def compactRewrite(spark: SparkSession, prefix: String,
+      suffix: String): DataFrame => DataFrame =
+    if (suffix != "counts") identity
+    else { counts =>
+      val applied = spark.table(tableName(prefix, "applied")).select(col("batch_id"))
+      counts.join(broadcast(applied.distinct()), Seq("batch_id"), "left_semi")
+        .groupBy(col("source"), col("f")).agg(sum(col("c_s")).as("c_s"))
+        .withColumn("batch_id", lit(maxApplied(spark, prefix).get))
+        .select(col("source"), col("f"), col("c_s"), col("batch_id"))
+    }
 
   /** Start the online drift monitor over a streaming (doc_id, source,
     * text) DataFrame. The frozen model must exist ([[modelWrite]]).
@@ -284,16 +239,9 @@ object StreamDrift extends StoreOperator {
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
     modelWrite(spark, prefix, docs)
-    val waved = docs
-      .withColumn("wave", StoreOperator.wave)
-      .localCheckpoint(true)
-    (0 until 4).map { w =>
-      processBatch(spark, prefix,
-        waved.filter(col("wave") === lit(w))
-          .select(col("doc_id"), col("source"), col("text")),
-        w.toLong)
-        .select(col("batch_id").cast("int").as("wave"), col("source"),
-          col("n_grams"), col("kl_micro"))
-    }.reduce(_ unionByName _)
+    replayWaves(docs)(processBatch(spark, prefix, _, _))
+      .map(_.select(col("batch_id").cast("int").as("wave"), col("source"),
+        col("n_grams"), col("kl_micro")))
+      .reduce(_ unionByName _)
   }
 }

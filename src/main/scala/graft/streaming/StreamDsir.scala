@@ -74,11 +74,6 @@ object StreamDsir extends StoreOperator {
       "batch_id BIGINT) USING parquet"), Seq("doc_id")))
   override protected val sideTables = Seq("model")
 
-  private[graft] def modelT(prefix: String) = s"${prefix}_model"
-  private[graft] def scoresT(prefix: String) = s"${prefix}_scores"
-  private[graft] def thrT(prefix: String) = s"${prefix}_thr"
-  private[graft] def ledgerT(prefix: String) = s"${prefix}_ledger"
-
   /** No-threshold sentinel: selection is `gkey > t_key || (gkey ==
     * t_key && doc_id <= t_doc)`, so (MinValue, MaxValue) selects every
     * scored doc — the state while the pool holds fewer than k docs. */
@@ -99,18 +94,17 @@ object StreamDsir extends StoreOperator {
       buckets: Int = TextAnalysis.DsirBuckets): Unit = {
     TextAnalysis.dsirModel(documents, buckets)
       .coalesce(1).sortWithinPartitions("f")
-      .write.mode("overwrite").saveAsTable(modelT(prefix))
+      .write.mode("overwrite").saveAsTable(tableName(prefix, "model"))
   }
 
-  /** ORDERED small-file compaction + thr-history retention — the
-    * shared threshold-store maintenance contract
-    * ([[StoreOperator.compactThresholdStore]]: rank-based snapshot
+  /** ORDERED small-file compaction + thr-history retention
+    * ([[StoreOperator.compactStoreTables]]: rank-based snapshot
     * retention, staged trim), with scores ordered on the (gkey,
     * doc_id) probe key the selected-set range read prunes on. */
   def compactStore(spark: SparkSession, prefix: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       retainThrBatches: Int = 8): Map[String, (Int, Int)] =
-    compactThresholdStore(spark, prefix, targetFileBytes, retainThrBatches)
+    compactStoreTables(spark, prefix, targetFileBytes, retainThrBatches)
 
   /** One micro-batch: score the fresh pool docs against the frozen
     * model, advance the monotone top-k threshold, emit fresh verdicts
@@ -125,8 +119,8 @@ object StreamDsir extends StoreOperator {
       : DataFrame = {
     ensureStore(spark, prefix)
     graft.functions.Md5Prefix60.register(spark)
-    require(spark.catalog.tableExists(modelT(prefix)),
-      s"streamingDsir($prefix): no frozen model at ${modelT(prefix)} — " +
+    require(spark.catalog.tableExists(tableName(prefix, "model")),
+      s"streamingDsir($prefix): no frozen model at ${tableName(prefix, "model")} — " +
         "fit it once with StreamDsir.modelWrite before streaming")
 
     // Deterministic within-batch collapse + pool filter (the model's
@@ -137,7 +131,7 @@ object StreamDsir extends StoreOperator {
         batch.select(col("doc_id"), col("source"), col("text")),
         "doc_id", col("source"), col("text"))
       .filter(!col("source").isin(targetSources: _*))
-    val batchD = TextAnalysis.dsirScore(pool, spark.table(modelT(prefix)),
+    val batchD = TextAnalysis.dsirScore(pool, spark.table(tableName(prefix, "model")),
         seed, buckets)
       .localCheckpoint(true)
     // fresh pool docs (never decided); crash-residue scores rows of THIS
@@ -160,7 +154,7 @@ object StreamDsir extends StoreOperator {
     // rescans the corpus.
     val oldSel: Array[(Long, Long)] = prevThr match {
       case Some((pKey, pDoc, nSelPrev)) =>
-        val sel = spark.table(scoresT(prefix))
+        val sel = spark.table(tableName(prefix, "scores"))
           .filter(selPred(pKey, pDoc))
           .join(broadcast(freshK.select(col("doc_id"))),
             Seq("doc_id"), "left_anti")
@@ -178,7 +172,7 @@ object StreamDsir extends StoreOperator {
         // to the driver and emit spurious evictions for every
         // unselected doc (the exact garbage path a thr history trimmed
         // past the predecessor would open).
-        val residue = spark.table(scoresT(prefix))
+        val residue = spark.table(tableName(prefix, "scores"))
           .join(broadcast(freshK.select(col("doc_id"))),
             Seq("doc_id"), "left_anti")
           .limit(1).count()
@@ -229,7 +223,7 @@ object StreamDsir extends StoreOperator {
     // ---- appends in the declared order thr → scores → ledger
     val scoresToAppend =
       if (!st.recovering) freshK
-      else freshK.join(spark.table(scoresT(prefix)).select(col("doc_id")),
+      else freshK.join(spark.table(tableName(prefix, "scores")).select(col("doc_id")),
         Seq("doc_id"), "left_anti").localCheckpoint(true)
     appendInOrder(spark, prefix,
       Option.when(!st.recovering)(Seq((batchId, tKey, tDoc, nSel))
@@ -246,9 +240,9 @@ object StreamDsir extends StoreOperator {
     * threshold read. */
   def currentSelected(spark: SparkSession, prefix: String): DataFrame = {
     ensureStore(spark, prefix)
-    val thr = spark.table(thrT(prefix))
+    val thr = spark.table(tableName(prefix, "thr"))
     val lastRow = thr.agg(max(col("batch_id"))).head()
-    val scores = spark.table(scoresT(prefix))
+    val scores = spark.table(tableName(prefix, "scores"))
     if (lastRow.isNullAt(0))
       return scores.select(col("doc_id"), col("gkey"),
         lit(false).as("selected")).filter(lit(false))
@@ -289,17 +283,9 @@ object StreamDsir extends StoreOperator {
     resetStore(spark, prefix)
     val docs = graft.Tables.documents(spark, sfDir)
     modelWrite(spark, prefix, docs)
-    val waved = docs
-      .withColumn("wave", StoreOperator.wave)
-      .select(col("doc_id"), col("source"), col("text"), col("wave"))
-      .localCheckpoint(true)
-    (0 until 4).foreach { w =>
-      processBatch(spark, prefix,
-        waved.filter(col("wave") === lit(w))
-          .select(col("doc_id"), col("source"), col("text")),
-        w.toLong): Unit
-    }
-    val led = spark.table(ledgerT(prefix))
+    replayWaves(docs.select(col("doc_id"), col("source"), col("text")))(
+      processBatch(spark, prefix, _, _)): Unit
+    val led = spark.table(tableName(prefix, "ledger"))
     val first = Window.partitionBy(col("doc_id")).orderBy(col("batch_id"))
     val verdicts = led
       .withColumn("rn", row_number().over(first))
@@ -309,7 +295,7 @@ object StreamDsir extends StoreOperator {
       .groupBy(col("doc_id"))
       .agg(max(when(col("rn") === 1, col("kept"))).as("admitted"),
         max(when(col("rnLast") === 1, col("kept"))).as("kept"))
-    spark.table(scoresT(prefix))
+    spark.table(tableName(prefix, "scores"))
       .select(col("doc_id"), col("gkey"),
         StoreOperator.wave.as("wave"))
       .join(verdicts, Seq("doc_id"))

@@ -14,6 +14,20 @@ private[graft] object StreamStoreOps {
     * the cheaper plan anyway. */
   val MaxPruneKeys = 100000
 
+  /** The batch's `key` values for a store-side prune, collected capped at
+    * one past [[MaxPruneKeys]] (past the cap [[keySlice]] keeps the full
+    * scan, so the exact count above it never matters). */
+  def batchKeys(batch: DataFrame, key: String): IndexedSeq[Long] =
+    batch.select(col(key)).limit(MaxPruneKeys + 1).collect()
+      .map(_.getLong(0)).toIndexedSeq
+
+  /** A store table's LIVE catalog bucket spec (None: flat). It drifts
+    * upward across compaction rebucketings, so appends and compaction
+    * read it per call instead of trusting the CREATE-time DDL. */
+  def liveBucketSpec(spark: SparkSession, table: String)
+      : Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] =
+    graft.sources.TableOps.catalogMeta(spark, table).bucketSpec
+
   /** Run `body` with the parquet native-IN pushdown window widened to
     * 1000 keys: parquet receives an IN-list as a real In predicate only
     * up to `spark.sql.parquet.pushdown.inFilterThreshold` values
@@ -70,15 +84,12 @@ private[graft] object StreamStoreOps {
     * buckets writes up to min(|batch|, B) small files per table, so
     * the inter-compaction file pile grows B× faster — the price of
     * the Exchange-free store joins and bucket-pruned probes the
-    * layout buys; each operator's compactStore cadence owns the pile,
+    * layout buys; the compaction cadence owns the pile,
     * and at deployment scale batches outweigh bucket counts, amortizing
     * the per-file cost back out. */
   def appendToStore(spark: SparkSession, table: String,
       df: DataFrame, sortCols: Seq[String]): Unit = {
-    val spec = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec
-    val laid = spec match {
+    val laid = liveBucketSpec(spark, table) match {
       case Some(s) =>
         df.repartition(s.numBuckets, s.bucketColumnNames.map(col): _*)
       case None =>

@@ -117,7 +117,7 @@ private[graft] abstract class ThresholdMixer extends StoreOperator {
   def compactStore(spark: SparkSession, prefix: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       retainThrBatches: Int = 8): Map[String, (Int, Int)] =
-    compactThresholdStore(spark, prefix, targetFileBytes, retainThrBatches)
+    compactStoreTables(spark, prefix, targetFileBytes, retainThrBatches)
 
   /** One micro-batch: extend the corpus, move the per-source thresholds,
     * emit the verdict changes (doc_id, source, <verdict>, batch_id),
@@ -369,22 +369,19 @@ private[graft] abstract class ThresholdMixer extends StoreOperator {
       seed: String)(perWave: (DataFrame, Int) => DataFrame): DataFrame = {
     resetStore(spark, prefix)
     val docs = graft.Tables.documents(spark, sfDir)
-      .withColumn("wave", StoreOperator.wave)
-      .select((inputCols :+ "wave").map(col): _*)
-      .localCheckpoint(true)
+    val deltas = replayWaves(docs.select(inputCols.map(col): _*))(
+      mixBatch(spark, prefix, _, _, seed, StreamMix.FixtureWeights))
     var state: DataFrame = null // latest verdict per arrived doc
-    val folds = (0 until 4).map { w =>
-      val delta = mixBatch(spark, prefix,
-        docs.filter(col("wave") === lit(w)).select(inputCols.map(col): _*),
-        w.toLong, seed, StreamMix.FixtureWeights)
-        .select(col("doc_id"), col("source").as("src"), col(verdict).as("v"))
+    val folds = deltas.zipWithIndex.map { case (d, w) =>
+      val delta = d.select(col("doc_id"), col("source").as("src"), col(verdict).as("v"))
       state = (if (state == null) delta
         else delta.unionByName(
           state.join(delta.select(col("doc_id")), Seq("doc_id"), "left_anti")))
         .localCheckpoint(true)
       perWave(state, w)
     }
-    folds.foldLeft(docs.select(col("doc_id"), col("source"), col("wave")))(
+    folds.foldLeft(docs.select(col("doc_id"), col("source"),
+        StoreOperator.wave.as("wave")))(
       (acc, f) => acc.join(f, Seq("doc_id"), "left"))
   }
 }

@@ -19,7 +19,14 @@ import org.apache.spark.sql.functions._
   *     skeleton's starter is stopped after wave 2 and restarted on the same
   *     checkpoint with waves 3-4; its stores and its folded sink must
   *     equal the uninterrupted run A (one micro-batch per wave, batch ids
-  *     0-3 in both). */
+  *     0-3 in both);
+  *  3. half-swapped compaction — for every store table, A-after-wave-2
+  *     with that table present ONLY as its compaction staging copy (a
+  *     death between the swap's drop and rename): ensureStore must bring
+  *     back every table equal to A's, and waves 3-4 must emit A's rows;
+  *  4. compaction — compactStore between waves 2 and 3 changes no
+  *     emission and no store row (StreamDrift's counts compared as their
+  *     per-(source, f) fold, which is what its compaction keeps). */
 class StoreOperatorSpec extends SparkSpec {
 
   /** An operator under test: `setup` fits its frozen side state under a
@@ -107,6 +114,22 @@ class StoreOperatorSpec extends SparkSpec {
     (stores.toIndexedSeq, emitted)
   })
 
+  /** Each operator's compactStore (their return types differ, so the
+    * trait cannot carry it). */
+  private lazy val compactions: Map[String, String => Unit] = Map(
+    "mix" -> ((p: String) => StreamMix.compactStore(spark, p): Unit),
+    "mixtok" -> ((p: String) => StreamMixTokens.compactStore(spark, p): Unit),
+    "dsir" -> ((p: String) => StreamDsir.compactStore(spark, p): Unit),
+    "drift" -> ((p: String) => StreamDrift.compactStore(spark, p): Unit),
+    "dedup" -> ((p: String) => StreamDedup.compactStore(spark, p): Unit),
+    "ann" -> ((p: String) => StreamAnnIndex.compactStore(spark, p): Unit))
+
+  /** A store table's rows as compaction must keep them: StreamDrift
+    * folds its count deltas, so only their per-(source, f) sums hold. */
+  private def kept(suffix: String, rows: DataFrame): DataFrame =
+    if (suffix != "counts") rows
+    else rows.groupBy(col("source"), col("f")).agg(sum(col("c_s")).as("c_s"))
+
   cases.foreach { case (name, c) =>
     test(s"$name: a crash after any prefix of the declared appends replays to the clean store") {
       val (storesA, emittedA) = runA(name, c)
@@ -164,6 +187,62 @@ class StoreOperatorSpec extends SparkSpec {
       c.op.storeTableNames(p).indices.foreach { i =>
         assert(same(snap(c.op.storeTableNames(p)(i)), storesA(4)(i)),
           s"$name: ${c.op.storeTables(i).suffix} differs after the restart")
+      }
+    }
+
+    test(s"$name: a compaction that died between drop and rename of any store table heals on ensureStore") {
+      val (storesA, emittedA) = runA(name, c)
+      val h = s"soh_$name"
+      fresh(c, h)
+      val tables = c.op.storeTableNames(h)
+      def suffix(i: Int) = c.op.storeTables(i).suffix
+      // every table is tried; the failures are reported together
+      val broken = tables.indices.flatMap { k =>
+        scala.util.Try {
+          tables.indices.foreach(i => replace(tables(i), storesA(2)(i)))
+          // the staged copy keeps the live layout (bucket spec included)
+          // and is the ONLY copy once the live table is dropped
+          val staged = graft.sources.TableOps.stagingNameFor(tables(k))
+          graft.sources.TableOps.dropWithLocation(spark, staged)
+          spark.sql(s"CREATE TABLE $staged LIKE ${tables(k)}")
+          spark.sql(s"INSERT INTO $staged SELECT * FROM ${tables(k)}")
+          graft.sources.TableOps.dropWithLocation(spark, tables(k))
+          c.op.ensureStore(spark, h)
+          tables.indices.foreach { i =>
+            assert(same(snap(tables(i)), storesA(2)(i)),
+              s"${suffix(i)} differs from the clean run after recovery")
+          }
+          assert(!spark.catalog.tableExists(staged), "the staged copy was left behind")
+          (2 until 4).foreach { w =>
+            assert(same(c.step(h, c.waves(w), w.toLong), emittedA(w)),
+              s"wave $w after recovery differs from the clean run")
+          }
+          tables.indices.foreach { i =>
+            assert(same(snap(tables(i)), storesA(4)(i)),
+              s"${suffix(i)} differs from the clean run after waves 3-4")
+          }
+        }.failed.toOption.map(e => s"${suffix(k)} half-swapped: ${e.getMessage}")
+      }
+      assert(broken.isEmpty, s"$name:\n${broken.mkString("\n")}")
+    }
+
+    test(s"$name: compactStore between waves 2 and 3 changes no emission and no store row") {
+      val (storesA, emittedA) = runA(name, c)
+      val p = s"soc_$name"
+      fresh(c, p)
+      val tables = c.op.storeTableNames(p)
+      tables.indices.foreach(i => replace(tables(i), storesA(2)(i)))
+      compactions(name)(p)
+      tables.foreach(t => assert(!spark.catalog.tableExists(
+        graft.sources.TableOps.stagingNameFor(t)), s"$t: staging table left behind"))
+      (2 until 4).foreach { w =>
+        assert(same(c.step(p, c.waves(w), w.toLong), emittedA(w)),
+          s"$name: wave $w after compaction differs from the uninterrupted run")
+      }
+      tables.indices.foreach { i =>
+        val sfx = c.op.storeTables(i).suffix
+        assert(same(kept(sfx, snap(tables(i))), kept(sfx, storesA(4)(i))),
+          s"$name: $sfx differs from the uninterrupted run after compaction")
       }
     }
   }

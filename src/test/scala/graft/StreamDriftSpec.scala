@@ -160,12 +160,13 @@ class StreamDriftSpec extends SparkSpec {
     val before = rowsOf(StreamDrift.currentDrift(spark, "drf_hs"))
     // simulate a death between compactStore's drop and rename: the
     // staged copy is the ONLY copy
-    spark.table("drf_hs_counts").write.saveAsTable("drf_hs_counts_compact_stage")
+    val countsStage = graft.sources.TableOps.stagingNameFor("drf_hs_counts")
+    spark.table("drf_hs_counts").write.saveAsTable(countsStage)
     graft.sources.TableOps.dropWithLocation(spark, "drf_hs_counts")
     StreamDrift.ensureStore(spark, "drf_hs")
     assert(rowsOf(StreamDrift.currentDrift(spark, "drf_hs")) == before,
       "half-swap recovery lost the counts store")
-    assert(!spark.catalog.tableExists("drf_hs_counts_compact_stage"))
+    assert(!spark.catalog.tableExists(countsStage))
     dropStore("drf_hs")
   }
 
