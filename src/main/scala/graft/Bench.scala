@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.util.control.NonFatal
+
 /** Benchmark main — the engine-side analog of the reference's timing
   * harness (`/root/reference/hive.py:101-136`: one warm-up run, then timed
   * runs per query with mean / sample stddev / 95 % CI = 1.96·σ/√n).
@@ -288,12 +290,16 @@ object Bench {
     }
     def sentinelRead(): Double =
       try timeQuery((_, _) => sentinelDf, spark, sfDir, 5).median
-      catch { case _: Throwable => -1.0 }
+      catch {
+        case NonFatal(e) =>
+          System.err.println(s"[bench] sentinel read failed: ${e.getMessage}")
+          -1.0
+      }
     def runExt(names: Seq[String]): Seq[(String, Double)] = names.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
         try name -> timeQuery(fn, spark, extSfDir, math.max(5, runs / 6)).median
         catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] extended $name failed: ${e.getMessage}")
             name -> -1.0
         }
@@ -322,7 +328,7 @@ object Bench {
         SparkEntry.queries.get(name).map { fn =>
           try name -> timeQuery(fn, spark, sfDir, runs)
           catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[bench] $name failed: ${e.getMessage}")
               name -> Stat(-1.0, 0.0, 0.0, 0, -1.0)
           }
@@ -381,7 +387,7 @@ object Bench {
             // NonFatal only (round 21, VERDICT r20 item 3): a fatal error
             // (OOM, thread death) in the re-measure must propagate, not be
             // silently absorbed into a kept-wide read.
-            case scala.util.control.NonFatal(e) =>
+            case NonFatal(e) =>
               System.err.println(
                 s"[bench] re-measure of $name failed (${e.getMessage}) — " +
                   "keeping the original read")
@@ -439,7 +445,7 @@ object Bench {
         val perQuery = headline.flatMap(SparkEntry.queries.get).map { fn =>
           try timeQuery(fn, spark, dir, math.max(5, runs / 3)).median
           catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[bench] sweep $dir failed: ${e.getMessage}")
               -1.0
           }
@@ -473,7 +479,7 @@ object Bench {
               n -> timeQuery(fn, spark, dir, fracRuns).median))
           pct -> (perQuery.map(_._2).sum, perQuery)
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] fraction $pct% failed: ${e.getMessage}")
             pct -> (-1.0, Seq.empty[(String, Double)])
         }
@@ -488,7 +494,7 @@ object Bench {
       SparkEntry.queries.get("d_dedup_pipeline").map { fn =>
         try timeQuery(fn, spark, sfDir, math.max(5, runs / 6)).median
         catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] pipeline failed: ${e.getMessage}")
             -1.0
         }
