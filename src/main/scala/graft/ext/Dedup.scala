@@ -800,10 +800,29 @@ object Dedup {
     * point — even before this change (counts never collided mid-run on
     * this corpus; plans/r22/d_dedup_groups_rounds.txt), so the job-count
     * delta here is hardening, not a bench win. Returns the
-    * node→component-min labeling plus the round count so specs can
-    * assert the logarithmic bound. */
+    * node→component-min labeling (doc_id, group_id, group_size) plus the
+    * round count so specs can assert the logarithmic bound;
+    * [[componentLabelsWithRounds]] is the same without `group_size`. */
   def connectedComponentsWithRounds(nodes: DataFrame, pairs: DataFrame,
-      maxRounds: Int = 25): (DataFrame, Int) = {
+      maxRounds: Int = 25, localMaxEdges: Long = 0L): (DataFrame, Int) = {
+    val (labels, rounds) =
+      componentLabelsWithRounds(nodes, pairs, maxRounds, localMaxEdges)
+    val sizes = labels.groupBy(col("group_id")).agg(count(lit(1)).as("group_size"))
+    (labels.join(sizes, "group_id")
+      .select(col("doc_id"), col("group_id"), col("group_size")), rounds)
+  }
+
+  /** The (doc_id, group_id) labeling of [[connectedComponentsWithRounds]]
+    * and its round count. `localMaxEdges` is the driver-finish bound: when
+    * the canonical edge set holds at most that many edges (and at least
+    * one), it is collected and finished by union-find on the driver
+    * ([[localStar]]) in 0 rounds instead of star contraction. A
+    * micro-batch's within-batch graph is tiny, and each contraction round
+    * costs several small jobs whatever the data volume. The labels are the
+    * component minimum on both paths, so they are identical; the default 0
+    * keeps every batch caller on the distributed path. */
+  def componentLabelsWithRounds(nodes: DataFrame, pairs: DataFrame,
+      maxRounds: Int = 25, localMaxEdges: Long = 0L): (DataFrame, Int) = {
     // Eager localCheckpoint, not cache(): each round's plan references the
     // previous round's edge set ~5×, so an uncheckpointed lineage grows
     // exponentially with rounds (an 8-round run OOM'd the driver just
@@ -830,6 +849,10 @@ object Dedup {
     var (edgeCount, edgeXor) = countAndXor(edges)
     var rounds = 0
     var done = edgeCount == 0
+    if (!done && edgeCount <= localMaxEdges) {
+      edges = localStar(edges)
+      done = true
+    }
     while (!done) {
       require(rounds < maxRounds,
         s"star contraction did not converge in $maxRounds rounds")
@@ -869,20 +892,41 @@ object Dedup {
     // center, so the labeling is one left join away; checkpointing it
     // releases the last round's edge blocks once callers drop this frame.
     // DETERMINISM PRECONDITION (ADVICE r21): this is a LAZY checkpoint
-    // that fans out into two consumers (the sizes aggregate and the join)
-    // within one action — before the cache fills, partitions can be
-    // computed more than once concurrently, so the upstream lineage must
-    // be deterministic (it is: checkpointed edges + a join; no
-    // sample/rand). A future nondeterministic upstream here requires
-    // eager=true or the two consumers can diverge.
-    val labels = nodes.select(col("doc_id"))
+    // that can fan out into two consumers (connectedComponentsWithRounds'
+    // sizes aggregate and join) within one action — before the cache
+    // fills, partitions can be computed more than once concurrently, so
+    // the upstream lineage must be deterministic (it is: checkpointed
+    // edges or a driver-built star + a join; no sample/rand). A future
+    // nondeterministic upstream here requires eager=true or the two
+    // consumers can diverge.
+    (nodes.select(col("doc_id"))
       .join(edges.select(col("u").as("doc_id"), col("v").as("label")),
         Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("group_id"))
-      .localCheckpoint(false)
-    val sizes = labels.groupBy(col("group_id")).agg(count(lit(1)).as("group_size"))
-    (labels.join(sizes, "group_id")
-      .select(col("doc_id"), col("group_id"), col("group_size")), rounds)
+      .localCheckpoint(false), rounds)
+  }
+
+  /** Driver-side finish of [[componentLabelsWithRounds]]: collects the
+    * canonical (u, v) edges (the caller bounds their count) and runs
+    * union-find, always linking the larger root under the smaller, so
+    * every root is its component's minimum. Returns the converged star
+    * forest the contraction rounds would reach: one (u → min) edge per
+    * non-minimum node. */
+  private def localStar(edges: DataFrame): DataFrame = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var root = x
+      while (parent.getOrElse(root, root) != root) root = parent(root)
+      var y = x
+      while (y != root) { val up = parent(y); parent(y) = root; y = up }
+      root
+    }
+    edges.collect().foreach { r =>
+      val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val star = parent.keys.toSeq.map(u => (u, find(u)))
+    edges.sparkSession.createDataFrame(star).toDF("u", "v")
   }
 
   /** Near-duplicate GROUPS from a precomputed similarity pair frame — the
@@ -1145,9 +1189,12 @@ object Dedup {
     * (bucket the persisted store on those keys and the big side arrives
     * pre-partitioned, as [[bandPairsBucketed]] proves); verification
     * touches only candidate-matched store docs' token sets. Batch inputs
-    * are eagerly localCheckpoint'ed once — signatures are computed once
-    * per batch, not once per downstream join, and the CC iterations
-    * start from a truncated lineage.
+    * and the verified store matches are eagerly localCheckpoint'ed once —
+    * signatures and the store verify run once per batch, not once per
+    * downstream join. The within-batch components are finished on the
+    * driver when their graph has at most `maxPruneKeys` edges (the same
+    * driver-collect cap as pruning); a larger graph runs the star
+    * contraction rounds from a truncated lineage.
     *
     * `prune = true` turns on PROBE-SIDE STORE PRUNING — the serve-path
     * optimization for a parquet-backed store that dwarfs the micro-batch
@@ -1195,11 +1242,12 @@ object Dedup {
     if (prune) spark.conf.set(inKey, math.min(maxPruneKeys, 1000))
     try {
     // The batch's band/token frames are pinned EAGERLY (one job each):
-    // the CC iterations below re-read them once per round, and
-    // re-hashing every shingle per round costs far more than the two
-    // materialization jobs. A caller that already holds them — the
-    // batch twin computes signatures ONCE for all four waves — passes
-    // them via `pre` and pays neither hash nor job.
+    // the store join, the within-batch self-join, both verify joins and
+    // the kept frames re-read them (and CC rounds over a graph above the
+    // cap once per round), and re-hashing every shingle per read costs
+    // far more than the two materialization jobs. A caller that already
+    // holds them — the batch twin computes signatures ONCE for all four
+    // waves — passes them via `pre` and pays neither hash nor job.
     val (bandsB, toksB) = pre.getOrElse((
       minhashBands(batch).localCheckpoint(true),
       batch.select(col("doc_id"),
@@ -1237,9 +1285,14 @@ object Dedup {
         else if (ids.length > maxPruneKeys) storeToks
         else storeToks.filter(col("doc_id").isin(ids: _*))
       }
+    // Pinned once: the survivors anti-join (the within-batch candidates
+    // and the component nodes) and the verdict join all read it, and
+    // unpinned each would re-run the verify join and the toks store scan.
+    // Bounded by the micro-batch: one row per matched batch doc.
     val storeMatch = jaccardVerifyToks(storeCand, storeToksP, toksB)
       .groupBy(col("doc_b").as("doc_id"))
       .agg(min(col("doc_a")).as("matched_old"))
+      .localCheckpoint(true)
     val survivors = batch.select(col("doc_id"))
       .join(storeMatch.select(col("doc_id")), Seq("doc_id"), "left_anti")
     val bandsR = bandsB.join(survivors, "doc_id")
@@ -1250,8 +1303,10 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
     val withinPairs = jaccardVerifyToks(withinCand, toksB, toksB)
-    val groups = dedupGroupsFromPairs(survivors, withinPairs)
-      .select(col("doc_id"), col("group_id"))
+    // Labels only (group_size is never read), finished on the driver when
+    // the within-batch graph fits under the same driver-collect cap.
+    val groups = componentLabelsWithRounds(survivors, withinPairs,
+      localMaxEdges = maxPruneKeys)._1
     // kept: survived the store check AND is its component's representative.
     // group_id is NULL exactly for store-dropped docs (not in `survivors`),
     // so the conjunction below is never NULL: the left conjunct is false

@@ -91,6 +91,42 @@ class ExtensionsSpec extends SparkSpec {
     assert(rows.forall(_.getLong(2) == 64L))
   }
 
+  test("driver-finished components match star contraction on every graph shape") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    // (nodes, edges): each graph is labeled with the bound at 0 (star
+    // contraction) and at Long.MaxValue (union-find on the driver)
+    val graphs = Seq(
+      "path" -> ((0L until 64L), (0L until 63L).map(i => (i, i + 1))),
+      "star" -> ((0L until 40L), (1L until 40L).map(i => (i, 0L))),
+      "disjoint+isolated" -> ((0L until 30L),
+        Seq((3L, 1L), (1L, 2L), (10L, 12L), (12L, 11L), (20L, 25L))),
+      "reversed+duplicate+self-loop" -> ((0L until 10L),
+        Seq((1L, 2L), (2L, 1L), (1L, 2L), (5L, 5L), (7L, 6L), (6L, 7L), (8L, 8L))),
+      "random" -> ((0L until 1500L),
+        Seq.fill(2000)((rnd.nextInt(1500).toLong, rnd.nextInt(1500).toLong))))
+    graphs.foreach { case (name, (ids, edges)) =>
+      val nodes = ids.toDF("doc_id")
+      val pairs = edges.toDF("doc_a", "doc_b")
+      def run(bound: Long) = {
+        val (cc, rounds) = Dedup.connectedComponentsWithRounds(nodes, pairs,
+          localMaxEdges = bound)
+        (cc.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet,
+          rounds)
+      }
+      val (dist, distRounds) = run(0L)
+      val (local, localRounds) = run(Long.MaxValue)
+      assert(dist.size == ids.size, s"$name: a node lost its label")
+      assert(local == dist, s"$name: driver finish changed a label or size")
+      assert(localRounds == 0, s"$name: driver finish reported $localRounds rounds")
+      assert(distRounds > 0, s"$name: bound 0 skipped star contraction")
+      val labelsOnly = Dedup.componentLabelsWithRounds(nodes, pairs,
+        localMaxEdges = Long.MaxValue)._1.collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(labelsOnly == dist.map(t => (t._1, t._2)), s"$name: labels-only diverged")
+    }
+  }
+
   test("banded pipeline: verified pairs share a minhash band; groups consistent") {
     val docs = Tables.documents(spark, sf001)
     val bandMates = Dedup.bandCandidates(docs).collect()

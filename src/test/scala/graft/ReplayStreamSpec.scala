@@ -17,7 +17,6 @@ import java.nio.file.attribute.FileTime
   * one spec ties the whole ingest dataflow together.
   */
 class ReplayStreamSpec extends SparkSpec {
-  private val measurements = "/root/reference/Measurements"
   private val GapMs = 600000L // 10-minute per-entity throttle
 
   private def iso(epochS: Long): String =
@@ -43,6 +42,7 @@ class ReplayStreamSpec extends SparkSpec {
       s"""{"type":"Property","value":$v,"observedAt":"${iso(epochS)}"}}]}"""
 
   test("CSV replay through stream parse, throttle, sink matches the sequential model") {
+    assumeMeasurements()
     import spark.implicits._
     // Chronological replay of two rooms' sensors, chunked into 4 files =
     // 4 micro-batches (mtimes pinned so the file source preserves order).
@@ -107,6 +107,7 @@ class ReplayStreamSpec extends SparkSpec {
   }
 
   test("full-width replay: all 18 reference CSVs, 6-entity round-robin, batch-boundary-independent") {
+    assumeMeasurements()
     // ST3 at the reference's full width: every room × sensor stream
     // multiplexed into one chronological replay (reduced row count per
     // CSV so the interleave, not the volume, is what's exercised). The

@@ -202,11 +202,24 @@ class StreamDedupSpec extends SparkSpec {
     assert(ktQ.select(col("doc_id")).collect().toSet ==
       ktP.select(col("doc_id")).collect().toSet,
       "pruning changed the kept toks rows")
-    // tiny cap: every key list overflows maxPruneKeys → unpruned fall-back
-    val (vCap, _, _) = ext.Dedup.streamDedupStep(
+    // tiny cap: every key list overflows maxPruneKeys → unpruned fall-back,
+    // and the within-batch graph (> 1 edge) takes star contraction instead
+    // of the driver finish
+    val (vCap, kbC, ktC) = ext.Dedup.streamDedupStep(
       batch, spark.table("sd_pr_bands"), spark.table("sd_pr_toks"),
       prune = true, maxPruneKeys = 1)
     assert(norm(vCap) == norm(vPlain), "cap fall-back diverged")
+    val batchIds = batch.select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    assert(norm(vPlain).count(v => !v._2 && batchIds.contains(v._3)) >= 2,
+      "fixture must drop >= 2 docs within the batch (a graph over the cap)")
+    assert(kbC.select(col("doc_id"), col("band_idx"), col("band")).collect().toSet ==
+      kbP.select(col("doc_id"), col("band_idx"), col("band")).collect().toSet,
+      "cap fall-back changed the kept band rows")
+    assert(ktC.select(col("doc_id"), col("toks")).collect().map(r =>
+      (r.getLong(0), r.getSeq[String](1))).toSet ==
+      ktP.select(col("doc_id"), col("toks")).collect().map(r =>
+        (r.getLong(0), r.getSeq[String](1))).toSet,
+      "cap fall-back changed the kept toks rows")
     // all-novel batch (salted tokens → no band ever collides with the
     // store): candidate set is empty, the pruned toks scan short-circuits,
     // and every doc not duplicated within the batch is kept
