@@ -802,11 +802,12 @@ object Dedup {
     * delta here is hardening, not a bench win. Returns the
     * node→component-min labeling (doc_id, group_id, group_size) plus the
     * round count so specs can assert the logarithmic bound;
-    * [[componentLabelsWithRounds]] is the same without `group_size`. */
+    * [[componentLabelsWithRounds]] is the same without `group_size`.
+    * Always star contraction: only the streaming step, through the
+    * labels-only function, finishes small graphs on the driver. */
   def connectedComponentsWithRounds(nodes: DataFrame, pairs: DataFrame,
-      maxRounds: Int = 25, localMaxEdges: Long = 0L): (DataFrame, Int) = {
-    val (labels, rounds) =
-      componentLabelsWithRounds(nodes, pairs, maxRounds, localMaxEdges)
+      maxRounds: Int = 25): (DataFrame, Int) = {
+    val (labels, rounds) = componentLabelsWithRounds(nodes, pairs, maxRounds)
     val sizes = labels.groupBy(col("group_id")).agg(count(lit(1)).as("group_size"))
     (labels.join(sizes, "group_id")
       .select(col("doc_id"), col("group_id"), col("group_size")), rounds)
@@ -820,7 +821,8 @@ object Dedup {
     * micro-batch's within-batch graph is tiny, and each contraction round
     * costs several small jobs whatever the data volume. The labels are the
     * component minimum on both paths, so they are identical; the default 0
-    * keeps every batch caller on the distributed path. */
+    * (always contraction) is what [[connectedComponentsWithRounds]] and so
+    * every batch caller uses. */
   def componentLabelsWithRounds(nodes: DataFrame, pairs: DataFrame,
       maxRounds: Int = 25, localMaxEdges: Long = 0L): (DataFrame, Int) = {
     // Eager localCheckpoint, not cache(): each round's plan references the
