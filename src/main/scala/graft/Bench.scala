@@ -288,21 +288,23 @@ object Bench {
       df.count() // materialize the cache so timed passes are pure compute
       (df, df.groupBy(col("b")).agg(sum(col("h")).as("s")))
     }
-    def sentinelRead(): Double =
-      try timeQuery((_, _) => sentinelDf, spark, sfDir, 5).median
+    // Every timed section degrades the same way: a failure prints one
+    // stderr line and yields the section's fallback reading. NonFatal
+    // only: a fatal error (OOM, thread death) must propagate, not be
+    // silently absorbed into a reading.
+    def guarded[T](what: String, fallback: => T)(body: => T): T =
+      try body
       catch {
         case NonFatal(e) =>
-          System.err.println(s"[bench] sentinel read failed: ${e.getMessage}")
-          -1.0
+          System.err.println(s"[bench] $what failed: ${e.getMessage}")
+          fallback
       }
+    def sentinelRead(): Double =
+      guarded("sentinel read", -1.0)(timeQuery((_, _) => sentinelDf, spark, sfDir, 5).median)
     def runExt(names: Seq[String]): Seq[(String, Double)] = names.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
-        try name -> timeQuery(fn, spark, extSfDir, math.max(5, runs / 6)).median
-        catch {
-          case NonFatal(e) =>
-            System.err.println(s"[bench] extended $name failed: ${e.getMessage}")
-            name -> -1.0
-        }
+        guarded(s"extended $name", name -> -1.0)(
+          name -> timeQuery(fn, spark, extSfDir, math.max(5, runs / 6)).median)
       }
     }
     // Extended/scale ops: point estimates only, no CI claim — max(5,
@@ -326,12 +328,8 @@ object Bench {
       val s0 = sentinelRead()
       val results = headline.flatMap { name =>
         SparkEntry.queries.get(name).map { fn =>
-          try name -> timeQuery(fn, spark, sfDir, runs)
-          catch {
-            case NonFatal(e) =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              name -> Stat(-1.0, 0.0, 0.0, 0, -1.0)
-          }
+          guarded(name, name -> Stat(-1.0, 0.0, 0.0, 0, -1.0))(
+            name -> timeQuery(fn, spark, sfDir, runs))
         }
       }
       val s1 = sentinelRead()
@@ -381,18 +379,9 @@ object Bench {
         System.err.println(f"[bench] $name ci95 ${s0.ci95}%.3f > " +
           f"${WideCiFrac * 100}%.0f%% of mean ${s0.mean}%.3f — " +
           "re-measuring once")
-        val s1 =
-          try timeQuery(SparkEntry.queries(name), spark, sfDir, runs)
-          catch {
-            // NonFatal only (round 21, VERDICT r20 item 3): a fatal error
-            // (OOM, thread death) in the re-measure must propagate, not be
-            // silently absorbed into a kept-wide read.
-            case NonFatal(e) =>
-              System.err.println(
-                s"[bench] re-measure of $name failed (${e.getMessage}) — " +
-                  "keeping the original read")
-              s0
-          }
+        // a failed re-measure keeps the original read
+        val s1 = guarded(s"re-measure of $name", s0)(
+          timeQuery(SparkEntry.queries(name), spark, sfDir, runs))
         val keep =
           if (s1.mean > 0 && s1.ci95 / s1.mean < s0.ci95 / s0.mean) s1 else s0
         (name, keep, true)
@@ -443,12 +432,7 @@ object Bench {
     val sweepSec = bracket("sf-sweep") {
       sweepDirs.map { dir =>
         val perQuery = headline.flatMap(SparkEntry.queries.get).map { fn =>
-          try timeQuery(fn, spark, dir, math.max(5, runs / 3)).median
-          catch {
-            case NonFatal(e) =>
-              System.err.println(s"[bench] sweep $dir failed: ${e.getMessage}")
-              -1.0
-          }
+          guarded(s"sweep $dir", -1.0)(timeQuery(fn, spark, dir, math.max(5, runs / 3)).median)
         }
         dir -> (if (perQuery.exists(_ < 0)) -1.0 else perQuery.sum)
       }
@@ -472,16 +456,12 @@ object Bench {
     // the anomaly wasn't diagnosable from the artifact alone).
     val fracSec = bracket("fractions") {
       fractions.map { pct =>
-        try {
+        guarded(s"fraction $pct%", pct -> (-1.0, Seq.empty[(String, Double)])) {
           val dir = materializeFraction(spark, sfDir, pct)
           val perQuery = refQueries.flatMap(n =>
             SparkEntry.queries.get(n).map(fn =>
               n -> timeQuery(fn, spark, dir, fracRuns).median))
           pct -> (perQuery.map(_._2).sum, perQuery)
-        } catch {
-          case NonFatal(e) =>
-            System.err.println(s"[bench] fraction $pct% failed: ${e.getMessage}")
-            pct -> (-1.0, Seq.empty[(String, Double)])
         }
       }
     }
@@ -492,12 +472,7 @@ object Bench {
     // candidate-bounded and must demonstrate that at sf0.1.
     val pipeSec = bracket("pipeline") {
       SparkEntry.queries.get("d_dedup_pipeline").map { fn =>
-        try timeQuery(fn, spark, sfDir, math.max(5, runs / 6)).median
-        catch {
-          case NonFatal(e) =>
-            System.err.println(s"[bench] pipeline failed: ${e.getMessage}")
-            -1.0
-        }
+        guarded("pipeline", -1.0)(timeQuery(fn, spark, sfDir, math.max(5, runs / 6)).median)
       }
     }
     val pipelineSec = pipeSec.result

@@ -1437,8 +1437,10 @@ object TextAnalysis {
     * localize overlap to positions, so a downstream pass can show WHERE
     * the copied run sits. */
   def winnowOverlap(spark: SparkSession, sfDir: String): DataFrame = {
+    // eager: four branches of one action read u, and a lazy checkpoint
+    // lets concurrent stages compute the same partition twice
     val u = winnow(spark, sfDir).select(col("doc_id"), col("fp"))
-      .distinct().localCheckpoint(false)
+      .distinct().localCheckpoint(true)
     val shared = u.select(col("doc_id").as("doc_a"), col("fp"))
       .join(u.select(col("doc_id").as("doc_b"), col("fp")), "fp")
       .filter(col("doc_a") < col("doc_b"))

@@ -22,6 +22,11 @@ import org.apache.spark.sql.functions._
 object Num {
   /** round to 4 decimals, tie-safe across engines; SQL twin: `round(x + 1e-9, 4)` */
   def r4(c: Column): Column = round(c + lit(1e-9), 4)
+  /** [[r4]] on a finite JVM double, for typed/stateful operators: Spark
+    * rounds a double through `BigDecimal.valueOf` HALF_UP, so both give the
+    * same bits */
+  def r4(x: Double): Double =
+    java.math.BigDecimal.valueOf(x + 1e-9).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
   /** round to 2 decimals for exact-cent sums; SQL twin: `round(x, 2)` */
   def r2(c: Column): Column = round(c, 2)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.ops.Num
 
 /** One flattened sensor reading from an NGSI-LD notification. */
 case class SensorReading(
@@ -309,13 +310,7 @@ object StreamIngest {
                 val d = v - mean
                 mean += d / n
                 m2 += d * (v - mean)
-                // Num.r4's exact convention (+1e-9 nudge, HALF_UP) —
-                // math.rint was HALF_EVEN with no nudge, so a z with a
-                // trailing 5 at the 5th decimal rounded differently
-                // from the batch twin and every sibling streaming op
-                (uid, eid, java.math.BigDecimal.valueOf(z + 1e-9)
-                  .setScale(4, java.math.RoundingMode.HALF_UP)
-                  .doubleValue(), math.abs(z) > 2)
+                (uid, eid, Num.r4(z), math.abs(z) > 2)
             }
             state.update((n, mean, m2))
             out.iterator
@@ -420,9 +415,7 @@ object StreamIngest {
               case (_, eid, v, _) =>
                 y = if (seeded) alpha * v + (1 - alpha) * y else v
                 seeded = true
-                (uid, eid,
-                  java.math.BigDecimal.valueOf(y + 1e-9)
-                    .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue())
+                (uid, eid, Num.r4(y))
             }
             state.update((seeded, y))
             out.iterator
@@ -484,10 +477,7 @@ object StreamIngest {
                 c += (if (ok) v - mu - 0.5 * sigma else 0.0)
                 m = math.min(m, c)
                 val s = c - math.min(m, 0.0)
-                (uid, eid,
-                  java.math.BigDecimal.valueOf(s + 1e-9)
-                    .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue(),
-                  ok && s > 4.0 * sigma)
+                (uid, eid, Num.r4(s), ok && s > 4.0 * sigma)
             }
             state.update((c, m))
             out.iterator
@@ -622,13 +612,9 @@ object StreamIngest {
           }
           val hk = if (sk.isEmpty) 0L else sk.last
           val nSeen = sk.length.toLong
-          // Same r4 convention as the batch twin: +1e-9 nudge, then
-          // HALF_UP at 4 dp via BigDecimal — bit-identical to Num.r4.
           val est =
             if (nSeen < k) nSeen.toDouble
-            else java.math.BigDecimal
-              .valueOf((k - 1).toDouble * domain / hk.toDouble + 1e-9)
-              .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+            else Num.r4((k - 1).toDouble * domain / hk.toDouble)
           state.update((ver + 1, sk.toSeq))
           (grp, ver + 1, hk, nSeen, est)
       }
