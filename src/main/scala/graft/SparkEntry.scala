@@ -249,12 +249,12 @@ object SparkEntry {
     row("q_regexp_funcs", Relational.regexpFuncs, Relational.regexpFuncsSql, col("c_custkey")),
     row("q_skew_join_salted", Relational.skewJoinSalted,
       Relational.skewJoinSaltedSql, col("o_orderpriority")),
-    row("q_orc_scan", sources.OrcSource.orcScan, sources.OrcSource.orcScanSql, col("o_orderstatus")),
+    row("q_orc_scan", sources.OrcSource.orcScan, sources.OrcSource.scanAggSql, col("o_orderstatus")),
     row("q_schema_drift", sources.SchemaDrift.schemaDrift,
       sources.SchemaDrift.schemaDriftSql, col("o_orderkey")),
     row("q_partition_pruned", sources.PartitionedScan.partitionPruned,
       sources.PartitionedScan.partitionPrunedSql, col("day")),
-    row("q_json_scan", sources.JsonSource.jsonScan, sources.JsonSource.jsonScanSql, col("o_orderstatus")),
+    row("q_json_scan", sources.JsonSource.jsonScan, sources.OrcSource.scanAggSql, col("o_orderstatus")),
     // — LLM-data-pipeline extensions (SURVEY.md §7.2 step 8) —
     row("d_text_stats", ext.TextAnalysis.textStats, ext.TextAnalysis.textStatsSql, col("doc_id")),
     row("d_lang_id", ext.TextAnalysis.langId, ext.TextAnalysis.langIdSql, col("doc_id")),

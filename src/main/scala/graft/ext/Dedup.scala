@@ -2,7 +2,7 @@ package graft.ext
 
 import graft.Tables
 import graft.ops.Num
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -425,6 +425,14 @@ object Dedup {
     * two (fpp ≈ 4e-4 at k=5); at 1e7 eval shingles that is a 20 MB bit
     * array — still broadcast-trivial. */
 
+  /** The distinct k-token shingles of the token-array column `toksCol`,
+    * as one array — THE k-shingle expression of the decontamination
+    * family ([[shinglesOf]], [[paraScreen]] and the streaming screens in
+    * StreamIngest), so the shingle form cannot drift between them. */
+  private[graft] def shingleArray(toksCol: String, k: Int): Column = expr(
+    s"""array_distinct(transform(sequence(0, size($toksCol) - $k),
+       |  i -> concat_ws(' ', slice($toksCol, i + 1, $k))))""".stripMargin)
+
   /** k-gram shingle explosion over a (doc_id, text) frame — ONE
     * definition for the whole decontamination family (contamination,
     * bloomDecontamination, dailyIngest, and the streaming screens in
@@ -434,10 +442,7 @@ object Dedup {
       k: Int): DataFrame = df
     .withColumn("tokens", split(col("text"), " "))
     .filter(size(col("tokens")) >= k)
-    .select(col("doc_id").as(idCol), explode(expr(
-      s"""array_distinct(transform(sequence(0, size(tokens) - $k),
-         |  i -> concat_ws(' ', slice(tokens, i + 1, $k))))""".stripMargin))
-      .as("shingle"))
+    .select(col("doc_id").as(idCol), explode(shingleArray("tokens", k)).as("shingle"))
 
   /** Build a Bloom bit array over a one-column (`shingle`) DataFrame. The
     * k bit positions are computed WITH Spark's own `xxhash64` expression
@@ -650,22 +655,19 @@ object Dedup {
     * verdicts. Short paragraphs (< k tokens) cannot be flagged but still
     * count toward `n_paras` — the denominator is the document. */
   def paraScreen(paras: DataFrame, benchDocs: DataFrame, k: Int = 4): DataFrame = {
-    def shingleArr(toksCol: String) = expr(
-      s"""array_distinct(transform(sequence(0, size($toksCol) - $k),
-         |  i -> concat_ws(' ', slice($toksCol, i + 1, $k))))""".stripMargin)
     // bench side tokenizes on \s+ like parasFromNewlines' paragraphs —
     // both sides must normalize hard wraps identically or a shingle
     // spanning a newline never matches (space-only fixture: identical)
     val benchSet = benchDocs
       .withColumn("btoks", split(trim(col("text")), "\\s+"))
       .filter(size(col("btoks")) >= k)
-      .select(explode(shingleArr("btoks")).as("shingle")).distinct()
+      .select(explode(shingleArray("btoks", k)).as("shingle")).distinct()
     // both output branches below re-read `paras`; pin the paragraph
     // explosion once (lazy — materialized on first use)
     val parasP = paras.localCheckpoint(false)
     val hits = parasP
       .withColumn("shl",
-        when(size(col("ptoks")) >= k, shingleArr("ptoks"))
+        when(size(col("ptoks")) >= k, shingleArray("ptoks", k))
           .otherwise(array().cast("array<string>")))
       .select(col("doc_id"), col("para_idx"), explode(col("shl")).as("shingle"))
       .join(broadcast(benchSet), "shingle")

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.Tables
 
@@ -36,24 +35,11 @@ object JsonSource {
     spark.read.schema(src.schema).json(path)
   }
 
-  /** Filter + aggregate answered from the JSON scan. Same query shape as
-    * [[OrcSource.orcScan]] so the two formats' plans diff cleanly: the
-    * ORC plan shows PushedFilters, the JSON plan shows the filter ABOVE a
-    * full parse — the documented reason to convert early. */
+  /** Filter + aggregate answered from the JSON scan — the same
+    * [[OrcSource.scanAgg]] as the ORC variant, so the two formats' plans
+    * diff cleanly: the ORC plan shows PushedFilters, the JSON plan shows
+    * the filter ABOVE a full parse — the documented reason to convert
+    * early. */
   def jsonScan(spark: SparkSession, sfDir: String): DataFrame =
-    ordersJson(spark, sfDir)
-      .filter(col("o_totalprice") > 150000)
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        round(sum(col("o_totalprice")) + lit(1e-9), 2).as("total_price"))
-
-  /** Oracle over the original parquet — valid because the JSON round-trip
-    * is lossless under the explicit schema. */
-  val jsonScanSql: String =
-    """SELECT o_orderstatus, count(*) AS n_orders,
-      |       round(sum(o_totalprice) + 1e-9, 2) AS total_price
-      |FROM orders
-      |WHERE o_totalprice > 150000
-      |GROUP BY o_orderstatus
-      |ORDER BY o_orderstatus""".stripMargin
+    OrcSource.scanAgg(ordersJson(spark, sfDir))
 }

@@ -38,15 +38,22 @@ object OrcSource {
     * predicate pushes into the ORC reader (row-group skipping via ORC
     * stripe statistics — the same scan-pruning contract as parquet). */
   def orcScan(spark: SparkSession, sfDir: String): DataFrame =
-    ordersOrc(spark, sfDir)
+    scanAgg(ordersOrc(spark, sfDir))
+
+  /** The filter + aggregate both format variants answer ([[orcScan]] and
+    * [[JsonSource.jsonScan]]), one query shape so their plans diff
+    * cleanly. */
+  private[sources] def scanAgg(orders: DataFrame): DataFrame =
+    orders
       .filter(col("o_totalprice") > 150000)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
         round(sum(col("o_totalprice")) + lit(1e-9), 2).as("total_price"))
 
-  /** Oracle over the original parquet — valid because the ORC round-trip
-    * is lossless. */
-  val orcScanSql: String =
+  /** Oracle of both scans over the original parquet — valid because the
+    * ORC round-trip is lossless, and so is the JSON one under its
+    * explicit schema. */
+  val scanAggSql: String =
     """SELECT o_orderstatus, count(*) AS n_orders,
       |       round(sum(o_totalprice) + 1e-9, 2) AS total_price
       |FROM orders

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.ext.Dedup
 import graft.ops.Num
 
 /** One flattened sensor reading from an NGSI-LD notification. */
@@ -23,8 +24,10 @@ case class SensorReading(
   *   - per-entity throttle: an update is kept only if ≥ `minGapMs` has
   *     passed since the last KEPT update for that entity id
   *     (`subscriber.py:21-23,112-118`) — implemented as keyed state via
-  *     `flatMapGroupsWithState` with a processing-time timeout so state
-  *     is evicted for idle entities (unbounded entity spaces at 100 TB);
+  *     `flatMapGroupsWithState`, through the one per-key fold
+  *     ([[keyedFold]]) that every keyed operator here shares. State is
+  *     one fixed-width entry per live key and is never evicted; eviction
+  *     would return only as a change with a test that turns it on;
   *   - the engine keeps BOTH event time (`observedAt`) and ingest time,
   *     where the reference discarded event time (ST6);
   *   - exactly-once lands via checkpointed `writeStream`/`foreachBatch`
@@ -71,62 +74,60 @@ object StreamIngest {
         current_timestamp().as("ingest_ts"))
       .filter(col("event_ts").isNotNull)
 
+  /** The one per-key fold under the keyed-state operators here
+    * ([[throttle]], [[anomalyStream]], [[funnelStream]], [[ewmaStream]],
+    * [[cusumStream]], [[scd2Stream]]). It groups `rows` by `key`, sorts
+    * each key's micro-batch rows by `order`, and calls `step` with the
+    * key's stored state (`None` for a new key). `step` returns the new
+    * state and the rows to emit; the state is written back only when it
+    * changed. The sort is what makes a checkpoint replay re-emit the same
+    * rows: the group iterator's arrival order is shuffle-merge order, not
+    * stable across a replay. State is one fixed-width entry per live key
+    * and is never evicted (no timeout is set); eviction would return only
+    * as a change with a test that turns it on. Spark executes
+    * `flatMapGroupsWithState` over batch and streaming Datasets alike. */
+  private def keyedFold[In, K: Encoder, O: Ordering, S: Encoder, Out: Encoder](
+      rows: Dataset[In], mode: OutputMode = OutputMode.Append)(
+      key: In => K, order: In => O)(
+      step: (K, Option[S], Seq[In]) => (S, Seq[Out])): Dataset[Out] =
+    rows.groupByKey(key)
+      .flatMapGroupsWithState[S, Out](mode, GroupStateTimeout.NoTimeout) {
+        (k: K, group: Iterator[In], state: GroupState[S]) =>
+          val prev = state.getOption
+          val (next, out) = step(k, prev, group.toSeq.sortBy(order))
+          if (!prev.contains(next)) state.update(next)
+          out.iterator
+      }
+
   /** Per-entity throttle (reference ST5): keep a reading only if its
     * event time is ≥ `minGapMs` after the last kept reading of the same
-    * entity. State is one timestamp per live entity, evicted after
-    * `stateTtlMs` of inactivity. Works identically over batch and
-    * streaming Datasets (Spark executes `flatMapGroupsWithState` in both
-    * modes). Within a micro-batch, readings are folded in event-time
-    * order for determinism.
+    * entity. State is one timestamp per live entity, never evicted. An
+    * entity whose every row in a micro-batch drops keeps its state
+    * untouched. Readings fold in (event time, sensor) order: a parsed
+    * notification yields one row per sensor SHARING a timestamp, and
+    * without the sensor tie-break WHICH same-ts row survives the throttle
+    * would depend on arrival order, breaking exactly-once re-emission.
     */
-  def throttle(readings: Dataset[SensorReading], minGapMs: Long,
-               stateTtlMs: Option[Long] = None): Dataset[SensorReading] = {
+  def throttle(readings: Dataset[SensorReading], minGapMs: Long): Dataset[SensorReading] = {
     import readings.sparkSession.implicits._
-    // TTL eviction is opt-in: with ProcessingTimeTimeout Spark schedules
-    // continuous empty micro-batches to evaluate timeouts, which a
-    // processAllAvailable-style drain never settles under — so tests (and
-    // bounded-entity deployments) run with NoTimeout, while unbounded
-    // entity spaces pass Some(ttl) to bound state size.
-    val timeoutConf =
-      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    readings.groupByKey(_.entityid)
-      .flatMapGroupsWithState[Long, SensorReading](
-        OutputMode.Append, timeoutConf) {
-        (_: String, rows: Iterator[SensorReading], state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            stateTtlMs.foreach(ttl => state.setTimeoutDuration(ttl))
-            var lastKept = state.getOption.getOrElse(Long.MinValue)
-            // secondary (sensor) key: a parsed notification yields one
-            // row per sensor SHARING a timestamp, and the group
-            // iterator's arrival order is shuffle-merge order — not
-            // stable across a checkpoint replay. Without the tie-break,
-            // WHICH same-ts row survives the throttle is
-            // nondeterministic, breaking exactly-once re-emission (the
-            // same pin every other stateful op here applies via
-            // event_id/stage keys).
-            // `t == lastKept` also passes: the reference throttles per
-            // ENTITY and puts the WHOLE update (every attribute) when
-            // the gap clears (subscriber.py:112-118), so every sibling
-            // sensor row stamped at the kept instant belongs to the
-            // kept update — a strict `>= gap` alone kept only the
-            // sort-first sensor and silently dropped the rest of the
-            // notification.
-            val kept = rows.toSeq
-              .sortBy(r => (r.event_ts.getTime, r.sensor)).filter { r =>
-              val t = r.event_ts.getTime
-              val keep = lastKept == Long.MinValue || t == lastKept ||
-                t - lastKept >= minGapMs
-              if (keep) lastKept = t
-              keep
-            }
-            if (kept.nonEmpty) state.update(lastKept)
-            kept.iterator
-          }
-      }
+    keyedFold(readings)(_.entityid, r => (r.event_ts.getTime, r.sensor)) {
+      (_, st: Option[Long], rows) =>
+        var lastKept = st.getOrElse(Long.MinValue)
+        // `t == lastKept` also passes: the reference throttles per ENTITY
+        // and puts the WHOLE update (every attribute) when the gap clears
+        // (subscriber.py:112-118), so every sibling sensor row stamped at
+        // the kept instant belongs to the kept update — a strict `>= gap`
+        // alone kept only the sort-first sensor and silently dropped the
+        // rest of the notification.
+        val kept = rows.filter { r =>
+          val t = r.event_ts.getTime
+          val keep = lastKept == Long.MinValue || t == lastKept ||
+            t - lastKept >= minGapMs
+          if (keep) lastKept = t
+          keep
+        }
+        (lastKept, kept)
+    }
   }
 
   /** Streaming analog of reference Q2: watermarked hourly average per
@@ -186,6 +187,23 @@ object StreamIngest {
         col("r_sensor"), col("r_value"), col("r_ts"))
   }
 
+  /** The two ingest screens' shared prologue: each document's `tokens`
+    * and `shl`, its distinct k-shingle ARRAY ([[Dedup.shingleArray]]),
+    * empty under k tokens. The screens probe the array inside one
+    * projection, so they keep the array form rather than the exploded
+    * relation. */
+  private def withShingleArray(docs: DataFrame, k: Int): DataFrame =
+    docs
+      .withColumn("tokens", split(col("text"), " "))
+      .withColumn("shl",
+        when(size(col("tokens")) >= k, Dedup.shingleArray("tokens", k))
+          .otherwise(array().cast("array<string>")))
+
+  /** The eval set's distinct k-shingles (one `shingle` column), through
+    * the family-shared shingler [[Dedup.shinglesOf]]. */
+  private def benchShingleSet(benchDocs: DataFrame, k: Int): DataFrame =
+    Dedup.shinglesOf(benchDocs, "bench_id", k).select(col("shingle")).distinct()
+
   /** Streaming contamination screen — decontamination AT INGEST: flag
     * each arriving document that shares any verbatim `k`-token shingle
     * with the (small, static) benchmark/eval set. Deliberately STATELESS:
@@ -204,21 +222,9 @@ object StreamIngest {
     * join back on doc_id when the full row is needed downstream. */
   def contaminationStream(docs: DataFrame, benchDocs: DataFrame,
       k: Int = 4): DataFrame = {
-    def shingleArr = expr(
-      s"""array_distinct(transform(sequence(0, size(tokens) - $k),
-         |  i -> concat_ws(' ', slice(tokens, i + 1, $k))))""".stripMargin)
-    // bench side through the family-shared shingler (Dedup.shinglesOf);
-    // the streaming side keeps the ARRAY form locally (the probe runs
-    // inside one projection, not over an exploded relation)
-    val benchShingles: Array[String] = graft.ext.Dedup
-      .shinglesOf(benchDocs, "bench_id", k)
-      .select(col("shingle")).distinct()
+    val benchShingles: Array[String] = benchShingleSet(benchDocs, k)
       .collect().map(_.getString(0))
-    docs
-      .withColumn("tokens", split(col("text"), " "))
-      .withColumn("shl",
-        when(size(col("tokens")) >= k, shingleArr)
-          .otherwise(array().cast("array<string>")))
+    withShingleArray(docs, k)
       .withColumn("n_shared_shingles",
         size(array_intersect(col("shl"),
           array(benchShingles.toIndexedSeq.map(lit): _*))))
@@ -240,23 +246,9 @@ object StreamIngest {
     * the exact attribution. Emits (doc_id, n_candidate_shingles > 0). */
   def bloomScreenStream(docs: DataFrame, benchDocs: DataFrame,
       k: Int = 4): DataFrame = {
-    def shingleArr = expr(
-      s"""array_distinct(transform(sequence(0, size(tokens) - $k),
-         |  i -> concat_ws(' ', slice(tokens, i + 1, $k))))""".stripMargin)
-    // bench side goes through the family-shared shingler (Dedup
-    // .shinglesOf); the per-doc shl column below stays local because
-    // the streaming side needs the array FORM (probe inside a lambda),
-    // not the exploded relation
-    val benchShingles = graft.ext.Dedup
-      .shinglesOf(benchDocs, "bench_id", k)
-      .select(col("shingle")).distinct()
-    val bits = graft.ext.Dedup.bloomBits(benchShingles, numHashes = 5)
-    val probe = graft.ext.Dedup.bloomProbeSql(bits, numHashes = 5, term = "s")
-    docs
-      .withColumn("tokens", split(col("text"), " "))
-      .withColumn("shl",
-        when(size(col("tokens")) >= k, shingleArr)
-          .otherwise(array().cast("array<string>")))
+    val bits = Dedup.bloomBits(benchShingleSet(benchDocs, k), numHashes = 5)
+    val probe = Dedup.bloomProbeSql(bits, numHashes = 5, term = "s")
+    withShingleArray(docs, k)
       .withColumn("n_candidate_shingles",
         size(expr(s"filter(shl, s -> $probe)")))
       .filter(col("n_candidate_shingles") > 0)
@@ -275,47 +267,32 @@ object StreamIngest {
     * twin `q_anomaly_zscore` scores against the FULL-corpus per-user
     * moments; the streaming op is the prefix-causal variant, and the
     * spec replays it against an exact sequential model. Events sort
-    * within a micro-batch (same device as [[throttle]]); TTL eviction is
-    * opt-in for unbounded user spaces. Input schema: (user_id LONG,
+    * within a micro-batch (same device as [[throttle]]); the state is
+    * never evicted ([[keyedFold]]). Input schema: (user_id LONG,
     * event_id LONG, value DOUBLE, ts LONG micros). */
-  def anomalyStream(events: DataFrame,
-      stateTtlMs: Option[Long] = None): Dataset[(Long, Long, Double, Boolean)] = {
+  def anomalyStream(events: DataFrame): Dataset[(Long, Long, Double, Boolean)] = {
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.select(col("user_id").cast("long"), col("event_id").cast("long"),
+    val in = events.select(col("user_id").cast("long"), col("event_id").cast("long"),
         col("value").cast("double"), col("ts").cast("long"))
       .as[(Long, Long, Double, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Double, Double, Double), (Long, Long, Double, Boolean)](
-        OutputMode.Append, timeoutConf) {
-        (uid: Long, rows: Iterator[(Long, Long, Double, Long)],
-         state: GroupState[(Double, Double, Double)]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            stateTtlMs.foreach(ttl => state.setTimeoutDuration(ttl))
-            var (n, mean, m2) = state.getOption.getOrElse((0.0, 0.0, 0.0))
-            val out = rows.toSeq.sortBy(r => (r._4, r._2)).map {
-              case (_, eid, v, _) =>
-                // score against prior state (sample variance, matching
-                // stddev_samp)
-                val z =
-                  if (n >= 2.0 && m2 > 0.0) (v - mean) / math.sqrt(m2 / (n - 1.0))
-                  else 0.0
-                // Welford update
-                n += 1.0
-                val d = v - mean
-                mean += d / n
-                m2 += d * (v - mean)
-                (uid, eid, Num.r4(z), math.abs(z) > 2)
-            }
-            state.update((n, mean, m2))
-            out.iterator
-          }
-      }
+    keyedFold(in)(_._1, r => (r._4, r._2)) {
+      (uid, st: Option[(Double, Double, Double)], rows) =>
+        var (n, mean, m2) = st.getOrElse((0.0, 0.0, 0.0))
+        val out = rows.map { case (_, eid, v, _) =>
+          // score against prior state (sample variance, matching
+          // stddev_samp)
+          val z =
+            if (n >= 2.0 && m2 > 0.0) (v - mean) / math.sqrt(m2 / (n - 1.0))
+            else 0.0
+          // Welford update
+          n += 1.0
+          val d = v - mean
+          mean += d / n
+          m2 += d * (v - mean)
+          (uid, eid, Num.r4(z), math.abs(z) > 2)
+        }
+        ((n, mean, m2), out)
+    }
   }
 
   /** Streaming ordered funnel — the incremental twin of the batch
@@ -332,49 +309,34 @@ object StreamIngest {
     * min-ts comparisons; cross-batch regressions (an event older than
     * the user's current stage entry) cannot retro-advance the machine —
     * the watermark-bounded reorder window is the deployment knob, and
-    * the batch operator is the exact replay for audits. TTL eviction is
-    * opt-in for unbounded user spaces, same rationale as [[throttle]].
+    * the batch operator is the exact replay for audits. The state is
+    * never evicted ([[keyedFold]]).
     * Input schema: (user_id LONG, event_type STRING, ts LONG micros). */
-  def funnelStream(events: DataFrame,
-      stateTtlMs: Option[Long] = None): Dataset[(Long, Int)] = {
+  def funnelStream(events: DataFrame): Dataset[(Long, Int)] = {
     import events.sparkSession.implicits._
     val stages = Array("view", "click", "purchase")
-    val timeoutConf =
-      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.select(col("user_id").cast("long"), col("event_type"),
+    // Tie-break equal timestamps by FUNNEL ORDER (view < click <
+    // purchase), not lexicographically — a same-ts (view, click) pair
+    // must advance two stages exactly as the batch funnel's
+    // `min(click ts) >= min(view ts)` comparison counts it, or the
+    // "batch operator is the exact replay" audit contract breaks.
+    // Unknown event types sort last; they never match a stage.
+    def ord(tpe: String): Int = {
+      val i = stages.indexOf(tpe); if (i < 0) stages.length else i
+    }
+    val in = events.select(col("user_id").cast("long"), col("event_type"),
         col("ts").cast("long"))
       .as[(Long, String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Int, Long), (Long, Int)](
-        OutputMode.Update, timeoutConf) {
-        (uid: Long, rows: Iterator[(Long, String, Long)],
-         state: GroupState[(Int, Long)]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            stateTtlMs.foreach(ttl => state.setTimeoutDuration(ttl))
-            var (stage, tEntry) =
-              state.getOption.getOrElse((0, Long.MinValue))
-            // Tie-break equal timestamps by FUNNEL ORDER (view < click <
-            // purchase), not lexicographically — a same-ts (view, click)
-            // pair must advance two stages exactly as the batch funnel's
-            // `min(click ts) >= min(view ts)` comparison counts it, or the
-            // "batch operator is the exact replay" audit contract breaks.
-            // Unknown event types sort last; they never match a stage.
-            def ord(tpe: String): Int = {
-              val i = stages.indexOf(tpe); if (i < 0) stages.length else i
-            }
-            rows.toSeq.sortBy(r => (r._3, ord(r._2))).foreach { case (_, tpe, ts) =>
-              if (stage < stages.length && tpe == stages(stage) && ts >= tEntry) {
-                stage += 1; tEntry = ts
-              }
-            }
-            state.update((stage, tEntry))
-            Iterator.single((uid, stage))
+    keyedFold(in, OutputMode.Update)(_._1, r => (r._3, ord(r._2))) {
+      (uid, st: Option[(Int, Long)], rows) =>
+        var (stage, tEntry) = st.getOrElse((0, Long.MinValue))
+        rows.foreach { case (_, tpe, ts) =>
+          if (stage < stages.length && tpe == stages(stage) && ts >= tEntry) {
+            stage += 1; tEntry = ts
           }
-      }
+        }
+        ((stage, tEntry), Seq((uid, stage)))
+    }
   }
 
   /** Streaming EWMA — the monitoring smoother as keyed state: ONE
@@ -388,39 +350,24 @@ object StreamIngest {
     * operational gain; α already discounts the past geometrically).
     * The spec replays an exact sequential model across batch splits.
     * Emits (user_id, event_id, ewma) per event, r4-rounded on emit
-    * only — state carries full precision so splits cannot drift. TTL
-    * eviction is opt-in, same rationale as [[throttle]]. Input schema:
+    * only — state carries full precision so splits cannot drift. The
+    * state is never evicted ([[keyedFold]]). Input schema:
     * (user_id LONG, event_id LONG, value DOUBLE, ts LONG). */
-  def ewmaStream(events: DataFrame, alpha: Double = 0.3,
-      stateTtlMs: Option[Long] = None): Dataset[(Long, Long, Double)] = {
+  def ewmaStream(events: DataFrame, alpha: Double = 0.3): Dataset[(Long, Long, Double)] = {
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.select(col("user_id").cast("long"), col("event_id").cast("long"),
+    val in = events.select(col("user_id").cast("long"), col("event_id").cast("long"),
         col("value").cast("double"), col("ts").cast("long"))
       .as[(Long, Long, Double, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Boolean, Double), (Long, Long, Double)](
-        OutputMode.Append, timeoutConf) {
-        (uid: Long, rows: Iterator[(Long, Long, Double, Long)],
-         state: GroupState[(Boolean, Double)]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            stateTtlMs.foreach(ttl => state.setTimeoutDuration(ttl))
-            var (seeded, y) = state.getOption.getOrElse((false, 0.0))
-            val out = rows.toSeq.sortBy(r => (r._4, r._2)).map {
-              case (_, eid, v, _) =>
-                y = if (seeded) alpha * v + (1 - alpha) * y else v
-                seeded = true
-                (uid, eid, Num.r4(y))
-            }
-            state.update((seeded, y))
-            out.iterator
-          }
-      }
+    keyedFold(in)(_._1, r => (r._4, r._2)) {
+      (uid, st: Option[(Boolean, Double)], rows) =>
+        var (seeded, y) = st.getOrElse((false, 0.0))
+        val out = rows.map { case (_, eid, v, _) =>
+          y = if (seeded) alpha * v + (1 - alpha) * y else v
+          seeded = true
+          (uid, eid, Num.r4(y))
+        }
+        ((seeded, y), out)
+    }
   }
 
   /** Streaming CUSUM changepoint monitor — the batch `q_cusum`
@@ -440,49 +387,35 @@ object StreamIngest {
     * micro-batch; state carries full precision, r4 rounding happens on
     * emit only. Users absent from the calibration table (or with a
     * degenerate σ) carry a zero statistic and never flag, matching the
-    * batch op. TTL eviction is opt-in, same rationale as [[throttle]].
+    * batch op. The state is never evicted ([[keyedFold]]).
     * Input schema: (user_id LONG, event_id LONG, value DOUBLE, ts
     * LONG); stats schema: (user_id, mu, sigma). */
-  def cusumStream(events: DataFrame, stats: DataFrame,
-      stateTtlMs: Option[Long] = None): Dataset[(Long, Long, Double, Boolean)] = {
+  def cusumStream(events: DataFrame, stats: DataFrame)
+      : Dataset[(Long, Long, Double, Boolean)] = {
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     val calib = broadcast(stats.select(
       col("user_id").cast("long").as("user_id"),
       col("mu").cast("double").as("mu"),
       col("sigma").cast("double").as("sigma")))
-    events.select(col("user_id").cast("long"), col("event_id").cast("long"),
+    val in = events.select(col("user_id").cast("long"), col("event_id").cast("long"),
         col("value").cast("double"), col("ts").cast("long"))
       .join(calib, Seq("user_id"), "left")
       .select(col("user_id"), col("event_id"), col("value"), col("ts"),
         coalesce(col("mu"), lit(0.0)).as("mu"),
         coalesce(col("sigma"), lit(0.0)).as("sigma"))
       .as[(Long, Long, Double, Long, Double, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Double, Double), (Long, Long, Double, Boolean)](
-        OutputMode.Append, timeoutConf) {
-        (uid: Long, rows: Iterator[(Long, Long, Double, Long, Double, Double)],
-         state: GroupState[(Double, Double)]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            stateTtlMs.foreach(ttl => state.setTimeoutDuration(ttl))
-            var (c, m) = state.getOption.getOrElse((0.0, Double.PositiveInfinity))
-            val out = rows.toSeq.sortBy(r => (r._4, r._2)).map {
-              case (_, eid, v, _, mu, sigma) =>
-                val ok = sigma != 0.0
-                c += (if (ok) v - mu - 0.5 * sigma else 0.0)
-                m = math.min(m, c)
-                val s = c - math.min(m, 0.0)
-                (uid, eid, Num.r4(s), ok && s > 4.0 * sigma)
-            }
-            state.update((c, m))
-            out.iterator
-          }
-      }
+    keyedFold(in)(_._1, r => (r._4, r._2)) {
+      (uid, st: Option[(Double, Double)], rows) =>
+        var (c, m) = st.getOrElse((0.0, Double.PositiveInfinity))
+        val out = rows.map { case (_, eid, v, _, mu, sigma) =>
+          val ok = sigma != 0.0
+          c += (if (ok) v - mu - 0.5 * sigma else 0.0)
+          m = math.min(m, c)
+          val s = c - math.min(m, 0.0)
+          (uid, eid, Num.r4(s), ok && s > 4.0 * sigma)
+        }
+        ((c, m), out)
+    }
   }
 
   /** Streaming SCD Type-2 — the CDC form of [[graft.ops.Relational.scd2]]:
@@ -503,60 +436,42 @@ object StreamIngest {
     * the earlier closed interval instead of keeping both history rows;
     * a feed without unique change keys must read by version RANGE per
     * user instead of max-version per (user_id, event_id). Rows sort by (ts, event_id)
-    * within each micro-batch; TTL eviction opt-in as in [[throttle]].
+    * within each micro-batch; the state is never evicted ([[keyedFold]]).
     * Input schema: (user_id LONG, event_id LONG, ts LONG micros).
     * Emits (user_id, event_id, version, valid_from, valid_to, is_current)
     * with valid_to = -1 standing for the open interval's NULL. */
-  def scd2Stream(events: DataFrame,
-      stateTtlMs: Option[Long] = None)
-      : Dataset[(Long, Long, Long, Long, Long, Boolean)] = {
+  def scd2Stream(events: DataFrame): Dataset[(Long, Long, Long, Long, Long, Boolean)] = {
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.select(col("user_id").cast("long"), col("event_id").cast("long"),
+    val in = events.select(col("user_id").cast("long"), col("event_id").cast("long"),
         col("ts").cast("long"))
       .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Long),
-        (Long, Long, Long, Long, Long, Boolean)](
-        OutputMode.Append, timeoutConf) {
-        (uid: Long, rows: Iterator[(Long, Long, Long)],
-         state: GroupState[(Long, Long, Long)]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            stateTtlMs.foreach(ttl => state.setTimeoutDuration(ttl))
-            var stOpt = state.getOption
-            val out = Seq.newBuilder[(Long, Long, Long, Long, Long, Boolean)]
-            rows.toSeq.sortBy(r => (r._3, r._2)).foreach { case (_, eid, ts) =>
-              stOpt match {
-                // CROSS-BATCH late-data guard (the funnelStream
-                // `ts >= tEntry` posture): an event older than the
-                // standing version's valid_from cannot supersede it —
-                // emitting would close the current version with
-                // valid_to < valid_from (an inverted interval) and
-                // promote a STALE row to is_current, diverging from the
-                // batch SCD2 build's global ts order. Within a batch the
-                // sort handles ordering; across batches late events are
-                // conclusively dropped, the standard streaming SCD2
-                // policy.
-                case Some((_, prevFrom, _)) if ts < prevFrom => ()
-                case Some((prevEid, prevFrom, ver)) =>
-                  // close the predecessor, open the new version
-                  out += ((uid, prevEid, ver + 1, prevFrom, ts, false))
-                  out += ((uid, eid, ver + 2, ts, -1L, true))
-                  stOpt = Some((eid, ts, ver + 2))
-                case None =>
-                  out += ((uid, eid, 1L, ts, -1L, true))
-                  stOpt = Some((eid, ts, 1L))
-              }
-            }
-            stOpt.foreach(state.update)
-            out.result().iterator
+    keyedFold(in)(_._1, r => (r._3, r._2)) {
+      (uid, st: Option[(Long, Long, Long)], rows) =>
+        var cur = st
+        val out = rows.flatMap { case (_, eid, ts) =>
+          cur match {
+            // CROSS-BATCH late-data guard (the funnelStream `ts >= tEntry`
+            // posture): an event older than the standing version's
+            // valid_from cannot supersede it — emitting would close the
+            // current version with valid_to < valid_from (an inverted
+            // interval) and promote a STALE row to is_current, diverging
+            // from the batch SCD2 build's global ts order. Within a batch
+            // the sort handles ordering; across batches late events are
+            // conclusively dropped, the standard streaming SCD2 policy.
+            case Some((_, prevFrom, _)) if ts < prevFrom => Nil
+            case Some((prevEid, prevFrom, ver)) =>
+              // close the predecessor, open the new version
+              cur = Some((eid, ts, ver + 2))
+              Seq((uid, prevEid, ver + 1, prevFrom, ts, false),
+                (uid, eid, ver + 2, ts, -1L, true))
+            case None =>
+              cur = Some((eid, ts, 1L))
+              Seq((uid, eid, 1L, ts, -1L, true))
           }
-      }
+        }
+        // a group is never empty, so a new key's first row opened a version
+        (cur.get, out)
+    }
   }
 
   /** PII scrub at ingest — the cleaning stage run where the data LANDS:

@@ -15,5 +15,6 @@ class RegistrySpec extends SparkSpec {
     val o = SparkEntry.oracleSql
     assert(o("d_dedup_pipeline_bucketed") == o("d_dedup_pipeline"))
     assert(o("e_ann_index_lookup") == o("e_ann_ivfpq"))
+    assert(o("q_json_scan") == o("q_orc_scan"))
   }
 }
