@@ -365,21 +365,42 @@ object ScaleUpBench {
     * estimate at x30 exceeds the broadcast threshold so the initial
     * plan says SortMergeJoin, and AQE re-promotes to BroadcastHashJoin
     * once the 24-row aggregated side is measured. That repromotion is
-    * the behavior this check exists to CONFIRM, not flag. */
-  private def finalPlanShape(df: DataFrame): Seq[String] = {
+    * the behavior this check exists to CONFIRM, not flag. Returned with
+    * the number of rows the query produced. */
+  private def finalPlan(df: DataFrame): (Seq[String], Long) = {
     // Execute through the df's OWN QueryExecution so ITS AdaptiveSparkPlan
     // reaches isFinalPlan=true (a noop-sink write would finalize a
     // separate write-command plan instead), but count InternalRows rather
     // than collect()ing them — a selective query at x30 returns millions
     // of rows and a driver-side collect would OOM the sweep.
-    df.queryExecution.toRdd.count(): Unit
-    df.queryExecution.executedPlan.treeString.linesIterator
+    val rows = df.queryExecution.toRdd.count()
+    val shape = df.queryExecution.executedPlan.treeString.linesIterator
       .map(_.dropWhile(c => !c.isLetter))
       .map(_.takeWhile(_.isLetter))
       .filter(_.nonEmpty)
       .takeWhile(_ != "Initial") // stop at "== Initial Plan =="
       .filterNot(Set("AQEShuffleRead", "InputAdapter", "WholeStageCodegen"))
       .toSeq
+    (shape, rows)
+  }
+
+  /** Do two final plans, each with its result's row count, have the same
+    * shape? Exact operator sequence, or the same operator MULTISET — the
+    * latter admits AQE flipping a BroadcastHashJoin's build side (both of
+    * q4's aggregated inputs are ~24 rows; which one AQE measures as
+    * smaller at runtime may differ per scale). Also the same when a side
+    * whose result has at most one row lacks exactly one `Sort` the other
+    * side has: AQE's `OptimizeOneRowPlan` drops a Sort over a child it
+    * measured at ≤ 1 row (q1's protocol sort at sf0.001 x1, where the
+    * last hour holds one event). A strategy change (BHJ->SMJ, new
+    * Exchange) still reads as different. An empty shape is never the
+    * same as anything. */
+  private[graft] def sameShape(a: Seq[String], aRows: Long, b: Seq[String], bRows: Long): Boolean = {
+    def same(s: Seq[String], t: Seq[String]) = s.nonEmpty && (s == t || s.sorted == t.sorted)
+    def lessOneSort(t: Seq[String]) = t.indices.filter(t(_) == "Sort").map(t.patch(_, Nil, 1))
+    same(a, b) ||
+      (aRows <= 1 && lessOneSort(b).exists(same(a, _))) ||
+      (bRows <= 1 && lessOneSort(a).exists(same(_, b)))
   }
 
   private def seconds(work: => Unit): Double = {
@@ -468,9 +489,9 @@ object ScaleUpBench {
     // change in the artifact: record it as the FAILED sentinel (emitted
     // as JSON null below), never as an empty shape that would read as
     // plan drift.
-    val FAILED = Seq("__FAILED__")
-    def shapes(dir: String): Map[String, Seq[String]] = sweepQueries.map { name =>
-      try name -> finalPlanShape(SparkEntry.queries(name)(spark, dir))
+    val FAILED = (Seq("__FAILED__"), -1L)
+    def shapes(dir: String): Map[String, (Seq[String], Long)] = sweepQueries.map { name =>
+      try name -> finalPlan(SparkEntry.queries(name)(spark, dir))
       catch {
         case NonFatal(e) =>
           System.err.println(s"[scaleup] plan probe $name @ $dir failed: ${e.getMessage}")
@@ -499,20 +520,15 @@ object ScaleUpBench {
         n -> (if (a > 0 && b > 0) b / a else -1.0)
       }
       val planSame = sweepQueries.map { n =>
-        // Exact operator sequence, or the same operator MULTISET — the
-        // latter admits AQE flipping a BroadcastHashJoin's build side
-        // (both of q4's aggregated inputs are ~24 rows; which one AQE
-        // measures as smaller at runtime may differ per scale). A
-        // strategy change (BHJ->SMJ, new Exchange) still trips it.
         // A FAILED probe on either side emits null: `false` always
         // means a REAL shape change, never a crashed query.
-        val probeFailed = Seq(x1Shapes.get(n), xkShapes.get(n))
-          .exists(_.forall(_ == FAILED))
-        val same = x1Shapes.get(n).exists { s =>
-          s.nonEmpty && xkShapes.get(n).exists(t => t == s || t.sorted == s.sorted)
+        val probeFailed = Seq(x1Shapes.get(n), xkShapes.get(n)).exists(_.forall(_ == FAILED))
+        val same = (x1Shapes.get(n), xkShapes.get(n)) match {
+          case (Some((s, sRows)), Some((t, tRows))) => sameShape(s, sRows, t, tRows)
+          case _ => false
         }
         if (!probeFailed && !same) System.err.println(
-          s"[scaleup] plan shape drift for $n at x$k:\n  x1=${x1Shapes.getOrElse(n, Nil).mkString(">")}\n  x$k=${xkShapes.getOrElse(n, Nil).mkString(">")}")
+          s"[scaleup] plan shape drift for $n at x$k:\n  x1=${x1Shapes.get(n).fold("")(_._1.mkString(">"))}\n  x$k=${xkShapes.get(n).fold("")(_._1.mkString(">"))}")
         "\"" + n + (if (probeFailed) "\":null" else s"""":$same""")
       }.mkString("{", ",", "}")
       val layoutJson = if (layoutQueries.isEmpty) "" else {
@@ -599,7 +615,7 @@ object ScaleUpBench {
       val serve = Bench.timeQuery((_, _) =>
         Similarity.serveBatch(batch, prefix = pfx), spark, dir, runs).median
       Map("build_sec" -> build, "serve_sec" -> serve,
-        "shape" -> finalPlanShape(Similarity.serveBatch(batch, prefix = pfx)))
+        "shape" -> finalPlan(Similarity.serveBatch(batch, prefix = pfx))._1)
     }
 
     /** [[probes]] `d_dedup_serve` / `d_dedup_serve_pruned`: store build

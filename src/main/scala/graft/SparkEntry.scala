@@ -27,96 +27,79 @@ object SparkEntry {
 
   private[graft] type Q = (SparkSession, String) => DataFrame
 
-  /** Does the plan contain a distribution-REQUIRED shuffle (an exchange
-    * EnsureRequirements inserted for an aggregate / join / window /
-    * distinct), as opposed to an author-injected round-robin repartition
-    * ([[Tables.widen]], shuffleOrigin REPARTITION_BY_NUM)?
+  /** Does every input of the plan's LAST stage arrive through a
+    * distribution-REQUIRED shuffle (an exchange EnsureRequirements inserted
+    * for an aggregate / join / window / distinct)? Only the TOPMOST
+    * exchange on each path from the root counts: what lies below it runs
+    * in earlier stages whatever the presentation sort does. A path that
+    * reaches a leaf (a scan) without an exchange, or whose topmost exchange
+    * is an author-injected round-robin repartition ([[Tables.widen]],
+    * shuffleOrigin REPARTITION_BY_NUM), answers no. A broadcast exchange is
+    * computed by its own job, so its side does not feed the last stage.
     *
-    * The distinction decides the protocol-sort form (see [[srt]]): a
-    * RangePartitioning sort's bound-sampling pass re-executes exactly the
-    * child's LAST stage — everything above its topmost exchange (stages
-    * below an existing shuffle boundary are computed once and their
-    * shuffle files reused). When the child ends in its own
-    * ENSURE_REQUIREMENTS exchange, that re-executed segment is the trivial
-    * post-shuffle tail (a final HashAggregate over partial rows), so
-    * sampling is a cheap shuffle re-read. An author-injected round-robin
-    * exchange is the opposite case by construction: widen exists precisely
-    * to parallelize EXPENSIVE compute above it (regex stats, md5
-    * shingles), so sampling re-runs that whole compute. AQE note: a plan
-    * with any exchange is wrapped in AdaptiveSparkPlanExec, whose children
-    * are not reachable via TreeNode traversal — recurse through its
-    * (pre-execution) executedPlan explicitly. Subqueries are NOT
-    * traversed: within one execution a subquery result is computed once
-    * and shared by the sampling and real passes. */
-  private def hasRequiredShuffle(plan: org.apache.spark.sql.execution.SparkPlan): Boolean = {
+    * AQE note: a plan with any exchange is wrapped in AdaptiveSparkPlanExec,
+    * whose children are not reachable via TreeNode traversal — recurse
+    * through its (pre-execution) executedPlan explicitly. Subqueries are
+    * NOT traversed: they run in their own jobs. */
+  private[graft] def endsInRequiredShuffle(plan: org.apache.spark.sql.execution.SparkPlan): Boolean = {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ENSURE_REQUIREMENTS,
+      ReusedExchangeExec, ShuffleExchangeLike}
     plan match {
-      case a: AdaptiveSparkPlanExec => hasRequiredShuffle(a.executedPlan)
-      case e: ShuffleExchangeLike =>
-        e.shuffleOrigin == ENSURE_REQUIREMENTS || e.children.exists(hasRequiredShuffle)
-      case p => p.children.exists(hasRequiredShuffle)
+      case a: AdaptiveSparkPlanExec => endsInRequiredShuffle(a.executedPlan)
+      case r: ReusedExchangeExec => endsInRequiredShuffle(r.child)
+      case e: ShuffleExchangeLike => e.shuffleOrigin == ENSURE_REQUIREMENTS
+      case _: BroadcastExchangeLike => true
+      case p => p.children.nonEmpty && p.children.forall(endsInRequiredShuffle)
     }
   }
 
   /** Protocol adapter: append the deterministic presentation sort the
     * driver's row-order-sensitive hash needs. Library operators return
-    * UNSORTED frames; only this registry pays the sort.
+    * UNSORTED frames; only this registry pays the sort. Every form below
+    * gives the same total order on the keys; they differ in the jobs and
+    * exchanges they add.
     *
-    * CHILD-AWARE form (round 22, VERDICT r21 item 1; guide §2.4/§1.4).
-    * Round 21 swapped every query to repartition(1)+sortWithinPartitions
-    * unconditionally; the driver's 32-core bench split the outcome exactly
-    * on the child's plan shape:
+    *   - child whose last stage reads only a distribution-required shuffle
+    *     ([[endsInRequiredShuffle]]: aggregate / join / window tops, q2,
+    *     q_agg_pricing, d_dedup_minhash): `coalesce(1)` +
+    *     sortWithinPartitions. The shuffle-reduced rows are already
+    *     partitioned; coalescing them into one task adds no exchange and no
+    *     job, where orderBy's range sort paid a bound-sampling job plus a
+    *     range-exchange stage on every query (1.67 of the 5.67 jobs of an
+    *     e2ebench dashboard query). The single task runs only the
+    *     post-shuffle tail above the exchange.
     *
-    *   - child with NO required exchange (filtered scan q1 1.38×, widened
-    *     regex projection d_text_stats 2.08× — driver-measured wins): a
-    *     global orderBy's RangePartitioning bound-sampling pass re-executes
-    *     the child's full compute before the real pass, silently doubling
-    *     the operator. The single-partition shuffle sort produces the
-    *     identical total row order with one exchange and no sampling.
-    *     KEEP repartition(1)+sortWithinPartitions here.
+    *   - any other child (filtered scan q1, a widened regex projection
+    *     d_text_stats whose topmost exchange is round-robin):
+    *     repartition(1) + sortWithinPartitions. Coalescing here would run
+    *     the child's whole compute in one task (round 22 measured
+    *     coalesce(1) 2× slower on d_text_stats, whose regex compute sits
+    *     above widen's round-robin exchange), and a global orderBy's
+    *     bound-sampling pass re-executes it before the real pass (driver-
+    *     measured: q1 1.38×, d_text_stats 2.08× from avoiding it).
     *
-    *   - child ending in its own ENSURE_REQUIREMENTS exchange (aggregate /
-    *     join / window tops: q2 4.4× SLOWER, q4 1.6×, q_agg_pricing 1.23×,
-    *     q_count_distinct 1.22× — driver-measured regressions, CI-tight):
-    *     there the sampling pass only re-reads shuffle output plus a
-    *     trivial final-aggregate tail, so the swap bought nothing and paid
-    *     a single-reducer round-robin funnel that was pathological at 32
-    *     threads on the driver's box. RESTORE orderBy here (the r20 shape,
-    *     whose driver numbers are the verdict's acceptance targets).
-    *     Round-22 mechanism A/B at local[32] sf0.1 (plans/r22/
-    *     protocol_sort_ab.txt): coalesce(1)+sortWithinPartitions is
-    *     slightly faster still on tiny agg outputs (q2 0.179 vs 0.313
-    *     orderBy) but serializes the whole post-shuffle stage — measured
-    *     2× WORSE where that stage carries compute (d_text_stats 0.435 vs
-    *     0.228) — and has no driver-side ground truth, so orderBy is the
-    *     evidence-backed choice.
-    *
-    * Scale posture (VERDICT r21 item 2): with this rule the claim "a real
-    * 100 TB presentation sort uses orderBy's range sort" is now CODE, not
-    * a comment, for every shuffle-reduced output; the single-partition
-    * form survives only on exchange-free children, whose protocol outputs
-    * the driver collects and hashes row-by-row by contract. For corpora
-    * where even those outputs are too big for one partition,
-    * `spark.graft.protocolSort=range` forces the scalable range sort on
-    * every path (`single` forces the r21 shape; default `auto` = the
-    * child-aware rule). The decision is memoized per (session, data dir) —
-    * it is a plan-shape probe, never data — so repeated bench runs do not
-    * pay the extra physical planning pass. */
-  private def srt(fn: Q, keys: Column*): Q = {
+    * Round 21's SinglePartition exchange over EVERY child regressed q2
+    * 4.4× at 32 cores; no form here puts a SinglePartition exchange over a
+    * shuffle-reduced child. For corpora where even the protocol outputs
+    * are too big for one partition, `spark.graft.protocolSort=range`
+    * forces the scalable range sort on every path (`single` forces
+    * repartition(1) everywhere; default `auto` = the rule above). The
+    * decision is memoized per (session, data dir) — it is a plan-shape
+    * probe, never data — so repeated bench runs do not pay the extra
+    * physical planning pass. */
+  private[graft] def srt(fn: Q, keys: Column*): Q = {
     val shape = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Boolean]
     (s, d) => {
       val df = fn(s, d)
-      val mode = s.conf.get("spark.graft.protocolSort", "auto")
-      val range = mode match {
-        case "range"  => true
-        case "single" => false
+      s.conf.get("spark.graft.protocolSort", "auto") match {
+        case "range"  => df.orderBy(keys: _*)
+        case "single" => df.repartition(1).sortWithinPartitions(keys: _*)
         case _ =>
-          shape.computeIfAbsent((s, d),
-            _ => hasRequiredShuffle(df.queryExecution.executedPlan)).booleanValue()
+          val reduced = shape.computeIfAbsent((s, d),
+            _ => endsInRequiredShuffle(df.queryExecution.executedPlan)).booleanValue()
+          (if (reduced) df.coalesce(1) else df.repartition(1)).sortWithinPartitions(keys: _*)
       }
-      if (range) df.orderBy(keys: _*)
-      else df.repartition(1).sortWithinPartitions(keys: _*)
     }
   }
 

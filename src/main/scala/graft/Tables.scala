@@ -1,7 +1,13 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Loaders for the driver-generated parquet corpus (TESTDATA.md).
   *
@@ -9,10 +15,66 @@ import org.apache.spark.sql.functions._
   * no `inferSchema` is needed; scans are columnar and Catalyst pushes
   * filters/projections into the reader (the reference's Hive-over-HBase
   * layer could do neither — see SURVEY.md §4).
+  *
+  * Every open reads ONE parquet footer on the driver and hands the schema
+  * it declares to the reader. A plain `spark.read.parquet(path)` derives
+  * the same schema through `mergeSchemasInParallel`, which starts one
+  * Spark job per table read even with mergeSchema off: at dashboard scale
+  * that job was the largest fixed cost of a query. Nothing is cached:
+  * every call reads its footer again, so a rewritten table is seen at
+  * once.
   */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    open(spark, sfDir, name)._1
+
+  /** `name`'s frame and the footer its schema came from. */
+  private def open(spark: SparkSession, sfDir: String, name: String): (DataFrame, ParquetMetadata) = {
+    val path = s"$sfDir/$name.parquet"
+    val footer = readFooter(spark, dataFile(spark, path))
+    (spark.read.schema(footerSchema(spark, footer)).parquet(path), footer)
+  }
+
+  /** The file whose footer speaks for `path`: `path` itself, or the
+    * lexicographically first visible `.parquet` file of a directory (the
+    * layout Spark writes). Fails naming `path` when there is none. */
+  private def dataFile(spark: SparkSession, path: String): Path = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.getFileStatus(p).isDirectory) p
+    else {
+      val files = fs.listStatus(p).toIndexedSeq.filter { st =>
+        val n = st.getPath.getName
+        st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }.map(_.getPath)
+      require(files.nonEmpty, s"$path: directory holds no parquet data file")
+      files.minBy(_.getName)
+    }
+  }
+
+  private def readFooter(spark: SparkSession, file: Path): ParquetMetadata = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** The schema Spark's own parquet inference derives from one footer
+    * (its `readSchemaFromFooter`): the Spark schema a Spark writer stored
+    * under the row-metadata key, else the parquet schema converted under
+    * the session's conf (nanosAsLong, inferTimestampNTZ, binary-as-string,
+    * INT96-as-timestamp). */
+  private def footerSchema(spark: SparkSession, footer: ParquetMetadata): StructType = {
+    val meta = footer.getFileMetaData
+    Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(s => scala.util.Try(DataType.fromJson(s)).toOption)
+      .collect { case st: StructType => st }
+      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
+  }
+
+  /** One parquet file's schema from its footer, without a Spark job. Throws
+    * when the file has no readable footer (a torn write). */
+  private[graft] def fileSchema(spark: SparkSession, file: String): StructType =
+    footerSchema(spark, readFooter(spark, new Path(file)))
 
   def region(spark: SparkSession, sfDir: String): DataFrame    = table(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame    = table(spark, sfDir, "nation")
@@ -49,10 +111,10 @@ object Tables {
     * DuckDB applies the same ns→µs truncation / NTZ-as-UTC reading, so
     * oracle comparisons line up exactly. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = eventsRaw(spark, sfDir)
+    val (raw, footer) = open(spark, sfDir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
-        if (longTsIsNanos(spark, sfDir))
+        if (tsIsNanos(spark, sfDir, footer))
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
         else
           raw.withColumn("ts", timestamp_micros(col("ts")))
@@ -69,43 +131,34 @@ object Tables {
     * (1e17 ns ≈ 1973, 1e17 µs ≈ year 5138). Falls back to a one-column
     * aggregate in the (never-written-by-Spark-or-DuckDB) case of a
     * stats-free footer. Driver-side cost: one footer read of one file. */
-  private[graft] def longTsIsNanos(spark: SparkSession, sfDir: String): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p0 = new org.apache.hadoop.fs.Path(s"$sfDir/events.parquet")
-    val fs = p0.getFileSystem(conf)
-    val file =
-      if (fs.getFileStatus(p0).isDirectory)
-        fs.listStatus(p0).toIndexedSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .minBy(_.getPath.getName.toString).getPath
-      else p0
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    try {
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      val schema = reader.getFooter.getFileMetaData.getSchema
-      val prim = schema.getType(schema.getFieldIndex("ts")).asPrimitiveType()
-      prim.getLogicalTypeAnnotation match {
-        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-          t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
-        case _ =>
-          import scala.jdk.CollectionConverters._
-          val maxes = reader.getFooter.getBlocks.asScala
-            .flatMap(_.getColumns.asScala)
-            .filter(_.getPath.toDotString == "ts")
-            .flatMap { c =>
-              val s = c.getStatistics
-              if (s != null && s.hasNonNullValue)
-                Some(s.genericGetMax.asInstanceOf[java.lang.Long].longValue)
-              else None
-            }
-          val mx =
-            if (maxes.nonEmpty) maxes.max
-            else eventsRaw(spark, sfDir)
-              .agg(max(abs(col("ts")))).head.getLong(0)
-          mx >= 100000000000000000L // 1e17
-      }
-    } finally reader.close()
+  private[graft] def longTsIsNanos(spark: SparkSession, sfDir: String): Boolean =
+    tsIsNanos(spark, sfDir, readFooter(spark, dataFile(spark, s"$sfDir/events.parquet")))
+
+  /** [[longTsIsNanos]] on an already-read `events` footer. */
+  private def tsIsNanos(spark: SparkSession, sfDir: String, footer: ParquetMetadata): Boolean = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    val schema = footer.getFileMetaData.getSchema
+    val prim = schema.getType(schema.getFieldIndex("ts")).asPrimitiveType()
+    prim.getLogicalTypeAnnotation match {
+      case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+        t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+      case _ =>
+        import scala.jdk.CollectionConverters._
+        val maxes = footer.getBlocks.asScala
+          .flatMap(_.getColumns.asScala)
+          .filter(_.getPath.toDotString == "ts")
+          .flatMap { c =>
+            val s = c.getStatistics
+            if (s != null && s.hasNonNullValue)
+              Some(s.genericGetMax.asInstanceOf[java.lang.Long].longValue)
+            else None
+          }
+        val mx =
+          if (maxes.nonEmpty) maxes.max
+          else eventsRaw(spark, sfDir)
+            .agg(max(abs(col("ts")))).head.getLong(0)
+        mx >= 100000000000000000L // 1e17
+    }
   }
 
   /** `events` with `ts` still the NATIVE footer type of the scan (long

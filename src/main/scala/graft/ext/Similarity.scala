@@ -744,9 +744,14 @@ object Similarity {
     val emb = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
     // the Lloyd assignment feeds BOTH self-join sides and the final
     // left join — pin it once instead of re-running the quantizer scan
-    // three times
+    // three times. Eager: three branches of one action read it, and a
+    // lazy checkpoint lets concurrent stages compute the same partition
+    // twice. DETERMINISM PRECONDITION: the branches agree because they
+    // read the one pinned copy; reruns of the operator agree only while
+    // the lineage stays deterministic (frozen Lloyd centroids over the
+    // embeddings scan, no sample/rand).
     val (assignedRaw, _) = ivfQuantize(emb)
-    val assigned = assignedRaw.localCheckpoint(false)
+    val assigned = assignedRaw.localCheckpoint(true)
     val a = assigned.select(col("cell"), col("vec_id"), col("embedding").as("ea"))
     val b = assigned.select(col("cell"), col("vec_id").as("vec_b"),
       col("embedding").as("eb"))

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Day-fold maintenance for the streamed lake — the missing composition
   * between the streaming day sink (`StreamIngest.startDaySink`: a
@@ -242,7 +243,7 @@ object LakeFold {
     if (files.isEmpty) return None
     val failures = scala.collection.mutable.ListBuffer.empty[(String, Throwable)]
     val found = files.iterator.map { f =>
-      try Some(spark.read.parquet(f.toString).schema)
+      try Some(Tables.fileSchema(spark, f.toString))
       catch {
         case scala.util.control.NonFatal(e) => failures += f.toString -> e; None
       }
@@ -674,7 +675,7 @@ object LakeFold {
         !st.getPath.getName.startsWith("."))
       .map(_.getPath.toString)
     val readable = files.filter { f =>
-      try { spark.read.parquet(f).schema; true }
+      try { Tables.fileSchema(spark, f); true }
       catch { case scala.util.control.NonFatal(e) =>
         log.warn(s"salvage day=$day: skipping unreadable (torn) file $f: " +
           e.getMessage)

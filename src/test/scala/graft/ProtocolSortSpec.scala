@@ -5,18 +5,21 @@ import org.apache.spark.sql.functions._
 /** Optimization invariants for the registry's protocol sort and the
   * widen helper (rounds 21–22).
   *
-  *  1. `SparkEntry.srt` is CHILD-AWARE (round 22, VERDICT r21 item 1):
-  *     - a query whose child plan has NO distribution-required exchange
-  *       (filtered scan q1, widened regex projection d_text_stats) plans
-  *       a SinglePartition exchange + in-partition sort — a global
-  *       orderBy's RangePartitioning bound-sampling pass would re-execute
-  *       the child's full compute (driver-measured: q1 1.38×,
-  *       d_text_stats 2.08× from avoiding it);
+  *  1. `SparkEntry.srt` is CHILD-AWARE:
+  *     - a query whose child's topmost exchange is NOT distribution-
+  *       required (exchange-free filtered scan q1, or a round-robin
+  *       widen under a regex projection d_text_stats) plans a
+  *       SinglePartition exchange + in-partition sort — coalescing would
+  *       run the child's compute in one task, and a global orderBy's
+  *       RangePartitioning bound-sampling pass would re-execute it
+  *       (driver-measured: q1 1.38×, d_text_stats 2.08× from avoiding
+  *       it);
   *     - a query whose child ends in its own ENSURE_REQUIREMENTS exchange
   *       (aggregate/join/window tops: q2, q_agg_pricing, d_dedup_minhash)
-  *       plans orderBy's range sort — there sampling only re-reads
-  *       shuffle output, and the unconditional single-partition funnel
-  *       was a driver-measured 4.4× regression on q2 at 32 cores (r21).
+  *       plans coalesce(1) + in-partition sort: no exchange above the
+  *       child's own and no sampling job. No SinglePartition exchange
+  *       over a shuffle-reduced child — that unconditional funnel was a
+  *       driver-measured 4.4× regression on q2 at 32 cores (r21).
   *     - `spark.graft.protocolSort=range` forces the scalable range sort
   *       on every path (the 100 TB presentation-sort posture);
   *       default `auto` applies the child-aware rule.
@@ -52,19 +55,54 @@ class ProtocolSortSpec extends SparkSpec {
     }
   }
 
-  test("shuffle-reduced children get orderBy's range sort, not the single-partition funnel") {
-    Seq("q2_hourly_avg", "q_agg_pricing", "d_dedup_minhash").foreach { name =>
-      val plan = planOf(name)
-      assert(plan.contains("rangepartitioning"),
-        s"$name: protocol sort lost its range exchange — the " +
-          "unconditional single-partition form regressed q2 4.4× at 32 " +
-          "cores (VERDICT r21)")
-      // widen's round-robin exchange (d_dedup_minhash) is also
-      // REPARTITION_BY_NUM — only the SinglePartition form is forbidden
-      assert(!plan.contains("SinglePartition, REPARTITION_BY_NUM"),
-        s"$name: single-partition repartition reintroduced on a " +
-          "shuffle-reduced child")
+  /** Shuffle exchanges in a frame's physical plan, through AQE's wrapper. */
+  private def exchanges(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    def go(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => go(a.executedPlan)
+      case e: ShuffleExchangeLike => 1 + e.children.map(go).sum
+      case q => q.children.map(go).sum
     }
+    go(df.queryExecution.executedPlan)
+  }
+
+  test("shuffle-reduced children are sorted in one coalesced partition, with no exchange of their own") {
+    Seq("q2_hourly_avg" -> ops.ReferenceQueries.q2HourlyAvg _,
+      "q_agg_pricing" -> ops.Relational.aggPricing _,
+      "d_dedup_minhash" -> ext.Dedup.dedupMinhash _).foreach { case (name, bare) =>
+      val df = SparkEntry.queries(name)(spark, sf001)
+      val plan = planOf(name)
+      assert(!plan.contains("rangepartitioning"),
+        s"$name: range sort reintroduced — its bound-sampling job and range " +
+          "exchange are pure per-query overhead over a shuffle-reduced child")
+      assert(!plan.contains("SinglePartition"),
+        s"$name: single-partition exchange over a shuffle-reduced child " +
+          "(the r21 funnel: q2 4.4× slower at 32 cores)")
+      assert(plan.contains("Coalesce"), s"$name: protocol sort is not coalesce(1)")
+      assert(exchanges(df) == exchanges(bare(spark, sf001)),
+        s"$name: the protocol sort added an exchange above the child's own")
+      val ranged = {
+        spark.conf.set("spark.graft.protocolSort", "range")
+        try SparkEntry.queries(name)(spark, sf001).collect().toSeq
+        finally spark.conf.unset("spark.graft.protocolSort")
+      }
+      assert(df.collect().toSeq == ranged, s"$name: rows or row order differ from orderBy's")
+    }
+  }
+
+  test("a child whose topmost exchange is round-robin keeps the SinglePartition sort") {
+    // a required shuffle BELOW the topmost exchange does not count: the
+    // round-robin repartition is what feeds the last stage
+    val child: SparkEntry.Q = (s, _) =>
+      s.range(0, 1000).groupBy((col("id") % 7).as("k")).count().repartition(3)
+    val sorted = SparkEntry.srt(child, col("k"))(spark, sf001)
+    assert(!SparkEntry.endsInRequiredShuffle(child(spark, sf001).queryExecution.executedPlan))
+    val plan = sorted.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    assert(plan.contains("SinglePartition"), plan)
+    assert(!plan.contains("rangepartitioning") && !plan.contains("Coalesce"), plan)
+    assert(sorted.collect().map(_.getLong(0)).toSeq == (0L until 7L))
   }
 
   test("spark.graft.protocolSort=range forces the scalable range sort everywhere") {

@@ -93,6 +93,24 @@ class ScaleUpBenchSpec extends AnyFunSuite {
     assert(!got.get("replay_same").asBoolean)
   }
 
+  test("plan shapes match modulo a Sort dropped over a result of at most one row") {
+    // the q1 shapes at sf0.001: x1 returns one row and AQE's
+    // OptimizeOneRowPlan drops its protocol Sort, x2 returns two
+    val x1 = Seq("AdaptiveSparkPlan", "ResultQueryStage", "ShuffleQueryStage", "Exchange",
+      "Project", "Filter", "ColumnarToRow", "FileScan")
+    val x2 = x1.patch(2, Seq("Sort"), 0)
+    assert(sameShape(x1, 1, x2, 2) && sameShape(x2, 2, x1, 1))
+    assert(sameShape(x1, 0, x2, 5))
+    assert(!sameShape(x1, 2, x2, 2), "a Sort missing over two rows is a real change")
+    assert(!sameShape(x1, 1, x2.patch(2, Seq("Sort"), 0), 2), "only one Sort may go")
+    assert(!sameShape(x1, 1, x2.updated(4, "BroadcastExchange"), 2), "the rest must still match")
+    // the build-side flip the multiset rule admits, and an empty shape
+    val q4 = Seq("BroadcastHashJoin", "HashAggregate", "BroadcastExchange", "HashAggregate")
+    assert(sameShape(q4, 24, Seq("BroadcastHashJoin", "BroadcastExchange", "HashAggregate",
+      "HashAggregate"), 24))
+    assert(!sameShape(Nil, 0, Nil, 0))
+  }
+
   test("SPARK_GRAFT_SCALEUP_QUERIES refuses an unknown name and accepts every query and probe") {
     val all = SparkEntry.queries.keys.toSeq.sorted ++ probes.map(_.name)
     assert(parseQueries(Some(all.mkString(" , "))) == all)
