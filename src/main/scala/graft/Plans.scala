@@ -4,15 +4,24 @@ import java.nio.file.{Files, Paths}
 
 /** Dumps the formatted physical plan of every Bench headline query to
   * PLANS.md — reviewable evidence of pushdown/broadcast/shuffle shape
-  * without re-running anything. Usage: sbt "runMain graft.Plans [sfDir]".
+  * without re-running anything. Usage:
+  * sbt "runMain graft.Plans [sfDir [name ...]]". Names restrict the dump
+  * to those registry queries (any registry row, not only the audited
+  * set) and print it to stdout, so a subset dump never overwrites the
+  * committed PLANS.md.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val only = args.drop(1).toSeq
+    val unknown = only.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"not registry queries: ${unknown.mkString(", ")}")
     val spark = GraftSession.local(GraftSession.cpus(32))
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of the Bench headline set\n\n")
+    sb.append(
+      if (only.isEmpty) "# PLANS — formatted physical plans of the Bench headline set\n\n"
+      else "# Formatted physical plans of the named registry queries\n\n")
     sb.append(s"Generated by `graft.Plans` against `$sfDir`. Regenerate with\n")
     sb.append("`sbt \"runMain graft.Plans\"` after plan-affecting changes.\n")
     // Headline set plus the scale-path operators whose plan shape IS the
@@ -41,7 +50,8 @@ object Plans {
       "q_partition_pruned", "q_schema_drift", "d_daily_ingest",
       "d_dsir_weights", "d_dsir_weights_wide", "d_dsir_resample",
       "d_dsir_kl", "d_dsir_kl_streamed")
-    audited.foreach { name =>
+    val dumped = if (only.nonEmpty) only else audited
+    dumped.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
         val df = fn(spark, sfDir)
         sb.append(s"\n## $name\n\n```\n")
@@ -50,8 +60,11 @@ object Plans {
         sb.append("```\n")
       }
     }
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"[plans] wrote PLANS.md (${audited.size} queries)")
+    if (only.nonEmpty) print(sb.toString)
+    else {
+      Files.writeString(Paths.get("PLANS.md"), sb.toString)
+      println(s"[plans] wrote PLANS.md (${audited.size} queries)")
+    }
     spark.stop()
   }
 }

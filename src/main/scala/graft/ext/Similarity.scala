@@ -16,6 +16,15 @@ import org.apache.spark.sql.expressions.Window
   * instead of a global sort. The LSH variant is the 100 TB path: random
   * hyperplane signatures turn the all-pairs problem into a bucket-keyed
   * shuffle, and only within-bucket candidates get exact scoring.
+  *
+  * Every ranked `(q_id, rank)` row runs on one top-k vector-search
+  * skeleton: a query set ([[querySet]], the first n vectors keyed
+  * `q_id`) broadcast against the corpus, a candidate scorer rounded
+  * before ranking, and a per-key top-k with an ascending id tie-break
+  * ([[topK]]); the two-stage retrievals end in one exact-cosine re-rank
+  * ([[exactRerank]]). Their DuckDB twins share the oracle fragments
+  * [[cosineSql]] and [[topKSql]]. Operators and oracles stay independent
+  * code: a bug in a shared oracle fragment fails many rows loudly.
   */
 object Similarity {
 
@@ -30,21 +39,24 @@ object Similarity {
     * query should fail loudly. */
   private val BlueGreenRaceRetries = 2
 
+  /** The bounded cause chain of `t` (the failure itself first) — both
+    * race signatures below search it. */
+  private def causes(t: Throwable): Iterator[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(16)
+
   /** Does this failure's cause chain say "the files the plan resolved
     * no longer exist"? — the signature of a read racing a rebuild's
     * drop+recreate. Spark surfaces it as FAILED_READ_FILE.FILE_NOT_EXIST
     * (a SparkException error class) or a raw FileNotFoundException,
     * depending on where in the scan the miss lands. */
-  private def isMissingFileError(t: Throwable): Boolean = {
-    val chain = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(16)
-    chain.exists {
+  private def isMissingFileError(t: Throwable): Boolean =
+    causes(t).exists {
       case _: java.io.FileNotFoundException => true
       case e =>
         val m = Option(e.getMessage).getOrElse("")
         m.contains("FAILED_READ_FILE") || m.contains("FILE_NOT_EXIST") ||
           m.contains("does not exist")
     }
-  }
 
   /** The full rebuild-race signature: mid-execution file loss
     * ([[isMissingFileError]]) OR the resolve-phase variants — the
@@ -52,15 +64,12 @@ object Similarity {
     * the version/model surfaces as a missing TABLE (the catalog window
     * between drop and recreate), not missing files. */
   private def isRebuildRaceError(t: Throwable): Boolean =
-    isMissingFileError(t) || {
-      val chain = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(16)
-      chain.exists {
-        case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException => true
-        case e =>
-          val m = Option(e.getMessage).getOrElse("")
-          m.contains("TABLE_OR_VIEW_NOT_FOUND") ||
-            m.contains("Table or view not found")
-      }
+    isMissingFileError(t) || causes(t).exists {
+      case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException => true
+      case e =>
+        val m = Option(e.getMessage).getOrElse("")
+        m.contains("TABLE_OR_VIEW_NOT_FOUND") ||
+          m.contains("Table or view not found")
     }
 
   /** Bound on the blue-green settle loop: each pass is one catalog
@@ -93,63 +102,112 @@ object Similarity {
     expr(s"cosine_sim($a, $b)")
   }
 
+  /** The shared ANN query set: the vectors of `df` with vec_id < `n`,
+    * keyed `q_id`, carrying `cols` (usually [[qe]]). */
+  private def querySet(df: DataFrame, n: Int = 10)(cols: Column*): DataFrame =
+    df.filter(col("vec_id") < n).select(col("vec_id").as("q_id") +: cols: _*)
+
+  /** The query embedding under the name every cosine scorer reads. */
+  private def qe: Column = col("embedding").as("qe")
+
+  /** Exact cosine of a corpus `embedding` against its query's `qe`,
+    * rounded (Num.r4) before any ranking reads it. */
+  private def exactSim(spark: SparkSession): Column =
+    Num.r4(cosine(spark, "embedding", "qe")).as("sim")
+
+  /** Per-`key` top-`k` of scored candidates, as (key, rank, tie, the
+    * other scored columns in order). `rank` is row_number (IntegerType,
+    * 1..k, no gaps) over `score`, then `tie` ascending; a key with fewer
+    * than k candidates keeps fewer rows. Scores arrive rounded, so ties
+    * break on the id exactly as in the oracles. Under `desc` a NULL
+    * score (a zero-norm vector) ranks after every non-null one, DuckDB's
+    * default NULLS LAST; the ascending scores ranked here (ADC, Hamming,
+    * cell distance) are never NULL. */
+  private[graft] def topK(scored: DataFrame, k: Int, score: Column,
+      key: String = "q_id", tie: String = "neighbor_id"): DataFrame = {
+    val rest = scored.columns.filterNot(c => c == key || c == tie)
+    scored
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col(key)).orderBy(score, asc(tie))))
+      .filter(col("rank") <= k)
+      .select((Seq(key, "rank", tie) ++ rest).map(col): _*)
+  }
+
+  /** Second stage of the two-stage retrievals ([[hammingRerank]],
+    * [[annPqRefine]], [[mrlAnn]]): join the shortlist's (q_id,
+    * neighbor_id) pairs back to the float vectors of `emb` and the
+    * broadcast queries `q` (q_id, qe), and keep the exact-cosine top-3. */
+  private def exactRerank(spark: SparkSession, shortlist: DataFrame,
+      emb: DataFrame, q: DataFrame): DataFrame =
+    topK(shortlist.select(col("q_id"), col("neighbor_id"))
+        .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding")),
+          Seq("neighbor_id"))
+        .join(broadcast(q), Seq("q_id"))
+        .select(col("q_id"), col("neighbor_id"), exactSim(spark)), 3, desc("sim"))
+
+  /** DuckDB cosine of two float lists, NULL when either norm is zero —
+    * the family law of the native Spark expression. */
+  private def cosineSql(a: String, b: String): String =
+    s"""list_sum(list_transform(list_zip($a, $b),
+       |  p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
+       |/ nullif(sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
+       |/ nullif(sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)""".stripMargin
+
+  /** The oracle twin of Num.r4, applied to every score before ranking. */
+  private def r4Sql(x: String): String = s"round($x + 1e-9, 4)"
+
+  /** DuckDB top-k tail: rank the rows of `src` per `key` by `order`
+    * (score, then the ascending id), keep ranks 1..k, select `out`. */
+  private def topKSql(out: String, src: String, k: Int, order: String,
+      key: String = "q_id"): String =
+    s"""SELECT $out FROM (
+       |  SELECT *, CAST(row_number() OVER (PARTITION BY $key
+       |            ORDER BY $order) AS INT) AS rank
+       |  FROM $src)
+       |WHERE rank <= $k ORDER BY $key, rank""".stripMargin
+
+  /** Oracle twin of [[exactRerank]]: the exact cosine of every (q_id,
+    * neighbor_id) pair of CTE `short`, top-3 per query. */
+  private def exactRerankSql(short: String): String =
+    s"""rer AS (
+       |  SELECT s.q_id, s.neighbor_id,
+       |    ${r4Sql(cosineSql("ne.embedding", "qe.embedding"))} AS sim
+       |  FROM $short s JOIN embeddings ne ON ne.vec_id = s.neighbor_id
+       |                JOIN embeddings qe ON qe.vec_id = s.q_id)
+       |${topKSql("q_id, rank, neighbor_id, sim", "rer", 3, "sim DESC, neighbor_id ASC")}""".stripMargin
+
   /** Brute-force cosine top-10 for one query vector (vec_id 0),
     * broadcast to every partition. */
   def knnBrute(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-    emb.join(broadcast(q))
-      .select(col("vec_id"), Num.r4(cosine(spark, "embedding", "qe")).as("sim"))
+    emb.join(broadcast(emb.filter(col("vec_id") === 0).select(qe)))
+      .select(col("vec_id"), exactSim(spark))
       .orderBy(desc("sim"), asc("vec_id"))
       .limit(10)
   }
 
-  val knnBruteSql: String =
-    """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-      |d AS (
-      |  SELECT e.vec_id,
-      |         list_sum(list_transform(list_zip(e.embedding, q.qe),
-      |           p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) AS dotqe,
-      |         sqrt(list_sum(list_transform(e.embedding,
-      |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS norm_e,
-      |         sqrt(list_sum(list_transform(q.qe,
-      |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS norm_q
-      |  FROM embeddings e CROSS JOIN q)
-      |SELECT vec_id, round(dotqe / nullif(norm_e, 0) / nullif(norm_q, 0) + 1e-9, 4) AS sim
-      |FROM d ORDER BY sim DESC, vec_id ASC LIMIT 10""".stripMargin
+  def knnBruteSql: String =
+    s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
+       |SELECT e.vec_id, ${r4Sql(cosineSql("e.embedding", "q.qe"))} AS sim
+       |FROM embeddings e CROSS JOIN q ORDER BY sim DESC, vec_id ASC LIMIT 10""".stripMargin
 
   /** Brute-force top-3 neighbors for each of the first 20 query vectors:
     * broadcast-nested-loop of a tiny query set against the corpus, then a
     * per-query ranking window. The oracle checks the ranking semantics. */
   def knnPerVec(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val q = emb.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), asc("neighbor_id"))
-    emb.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        Num.r4(cosine(spark, "embedding", "qe")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("sim"))
+    topK(emb.join(broadcast(querySet(emb, 20)(qe)), col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id").as("neighbor_id"), exactSim(spark)),
+      3, desc("sim"))
   }
 
-  val knnPerVecSql: String =
-    """WITH sims AS (
-      |  SELECT q.vec_id AS q_id, e.vec_id AS neighbor_id,
-      |         round(
-      |           list_sum(list_transform(list_zip(e.embedding, q.embedding),
-      |             p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      |           / nullif(sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-      |           / nullif(sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-      |           + 1e-9, 4) AS sim
-      |  FROM embeddings q JOIN embeddings e
-      |    ON q.vec_id < 20 AND e.vec_id != q.vec_id)
-      |SELECT q_id, rank, neighbor_id, sim FROM (
-      |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-      |            ORDER BY sim DESC, neighbor_id ASC) AS INT) AS rank
-      |  FROM sims)
-      |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
+  def knnPerVecSql: String =
+    s"""WITH sims AS (
+       |  SELECT q.vec_id AS q_id, e.vec_id AS neighbor_id,
+       |         ${r4Sql(cosineSql("e.embedding", "q.embedding"))} AS sim
+       |  FROM embeddings q JOIN embeddings e
+       |    ON q.vec_id < 20 AND e.vec_id != q.vec_id)
+       |${topKSql("q_id, rank, neighbor_id, sim", "sims", 3, "sim DESC, neighbor_id ASC")}""".stripMargin
 
   /** Per-vector stats via higher-order folds (norms, extrema). */
   def embStats(spark: SparkSession, sfDir: String): DataFrame =
@@ -163,7 +221,7 @@ object Similarity {
           / size(col("embedding"))).as("mean_val"),
         Num.r4(array_max(col("embedding")).cast("double")).as("max_val"))
 
-  val embStatsSql: String =
+  def embStatsSql: String =
     """SELECT vec_id, label,
       |       round(sqrt(list_sum(list_transform(embedding,
       |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) + 1e-9, 4) AS l2_norm,
@@ -261,27 +319,33 @@ object Similarity {
       probes: Int): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
     val (assigned, cents) = ivfQuantize(emb)
-    def sqDist(cent: Array[Double]): Column = ivfSqDist(cent)
-    // Query side: rank ALL cells by distance (ties to the smaller cell id,
-    // matching assign()'s array_position-of-min) and probe the top
-    // `probes`. probes=1 reproduces the plain own-cell lookup exactly.
-    val pw = Window.partitionBy(col("vec_id")).orderBy(asc("dist"), asc("cell"))
-    val queries = emb.filter(col("vec_id") < 10)
-      .withColumn("darr", array(cents.map(sqDist).toIndexedSeq: _*))
-      .select(col("vec_id"), col("embedding"),
-        posexplode(col("darr")).as(Seq("cell", "dist")))
-      .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") <= probes)
-      .select(col("vec_id").as("q_id"), col("cell"), col("embedding").as("qe"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), asc("neighbor_id"))
-    assigned.join(broadcast(queries), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("cell"), col("vec_id").as("neighbor_id"),
-        Num.r4(cosine(spark, "embedding", "qe")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("cell"), col("sim"))
+    inCellTop3(spark, assigned, probeCells(emb, cents, probes)
+      .select(col("vec_id").as("q_id"), col("cell"), qe))
   }
+
+  /** The query side of every IVF probe: rank ALL cells by distance for
+    * each query vector (vec_id < 10; ties to the smaller cell id,
+    * matching [[withCoarseCell]]'s array_position-of-min) and keep the
+    * nearest `probes` as (vec_id, embedding, cell). probes = 1
+    * reproduces the plain own-cell lookup exactly. */
+  private def probeCells(emb: DataFrame, cents: Array[Array[Double]],
+      probes: Int): DataFrame =
+    topK(emb.filter(col("vec_id") < 10)
+        .withColumn("darr", array(cents.map(ivfSqDist).toIndexedSeq: _*))
+        .select(col("vec_id"), col("embedding"),
+          posexplode(col("darr")).as(Seq("cell", "dist"))),
+      probes, asc("dist"), key = "vec_id", tie = "cell")
+
+  /** The in-cell exact-cosine top-3 of the IVF family: corpus rows
+    * (vec_id, cell, embedding) meet the broadcast query probes (q_id,
+    * cell, qe) on their cell; `extra` columns follow the score. */
+  private def inCellTop3(spark: SparkSession, assigned: DataFrame,
+      queries: DataFrame, extra: Column*): DataFrame =
+    topK(assigned.join(broadcast(queries), Seq("cell"))
+        .filter(col("vec_id") =!= col("q_id"))
+        .select(Seq(col("q_id"), col("cell"), col("vec_id").as("neighbor_id"),
+          exactSim(spark)) ++ extra: _*),
+      3, desc("sim"))
 
   /** DuckDB twin of annIvf/annIvfProbe2: the same seeds, two unrolled
     * Lloyd rounds (assignment = row_number argmin over the cross join —
@@ -289,8 +353,8 @@ object Similarity {
     * array_position-of-min — and centroid update = round(avg + 1e-9, 6)
     * with empty-cell carry-over), then the same in-cell cosine top-3; the
     * query side keeps its `probes` nearest cells (rn <= probes). */
-  val annIvfSql: String = ivfSql(probes = 1)
-  val annIvfProbe2Sql: String = ivfSql(probes = 2)
+  def annIvfSql: String = ivfSql(probes = 1)
+  def annIvfProbe2Sql: String = ivfSql(probes = 2)
 
   private def ivfAssignCte(a: String, c: String, src: String = "e"): String =
     s"""$a AS (SELECT vec_id, v, cell FROM (
@@ -313,23 +377,34 @@ object Similarity {
   /** Shared CTE chain replaying [[ivfQuantize]] in DuckDB: seeds c0, two
     * unrolled Lloyd rounds, final full-corpus assignment `a3(vec_id, v,
     * cell)` — used by the IVF-query oracles and the semantic-dedup oracle
-    * so the twins cannot drift from each other. */
-  private lazy val ivfCellCtesSql: String =
+    * so the twins cannot drift from each other. `baseOnly` trains (seeds
+    * and both rounds) over the base corpus `etr` only — vec_id % 5 != 0,
+    * the standing 80 % of the incremental and streamed index oracles —
+    * while `a3` still assigns every vector with the frozen `c2`. */
+  private def ivfCellCtesSql(baseOnly: Boolean = false): String = {
+    val tr = if (baseOnly) "etr" else "e"
+    val etr = if (baseOnly) "\netr AS (SELECT vec_id, v FROM e WHERE vec_id % 5 != 0)," else ""
     s"""e AS (
        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
+       |  FROM embeddings),$etr
        |c0 AS (
        |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cell, v AS cv
-       |  FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 16)),
+       |  FROM (SELECT vec_id, v FROM $tr ORDER BY vec_id LIMIT 16)),
        |c0l AS (SELECT cell, CAST(generate_subscripts(cv, 1) - 1 AS INT) AS dim,
        |               unnest(cv) AS x
        |        FROM c0),
-       |${ivfAssignCte("a1", "c0")},
+       |${ivfAssignCte("a1", "c0", tr)},
        |${ivfUpdateCte("m1", "a1", "c0l", "c1l", "c1")},
        |c1l2 AS (SELECT cell, dim, cv AS x FROM c1l),
-       |${ivfAssignCte("a2", "c1")},
+       |${ivfAssignCte("a2", "c1", tr)},
        |${ivfUpdateCte("m2", "a2", "c1l2", "c2l", "c2")},
        |${ivfAssignCte("a3", "c2")}""".stripMargin
+  }
+
+  /** The base/new label column of the incremental and streamed index
+    * oracles (`id` % 5 = 0 arrived after training); empty otherwise. */
+  private def srcSql(id: String, baseOnly: Boolean): String =
+    if (baseOnly) s",\n    CASE WHEN $id % 5 = 0 THEN 'new' ELSE 'base' END AS src" else ""
 
   /** Query-side coarse-cell argmin (the probe contract shared by the IVF
     * oracles and the IVFPQ oracle — one definition so a tie-break or
@@ -343,27 +418,18 @@ object Similarity {
        |             p -> (p[1] - p[2]) * (p[1] - p[2]))) ASC, c.cell ASC) AS rn
        |  FROM e CROSS JOIN c2 c WHERE e.vec_id < 10) WHERE rn <= $probes)""".stripMargin
 
-  private def ivfSql(probes: Int): String = {
-    s"""WITH $ivfCellCtesSql,
+  private def ivfSql(probes: Int, baseOnly: Boolean = false): String =
+    s"""WITH ${ivfCellCtesSql(baseOnly)},
        |${ivfQueryCellCte("aq", probes)},
        |sims AS (
        |  SELECT q.q_id, a.cell, a.vec_id AS neighbor_id,
-       |    round(
-       |      list_sum(list_transform(list_zip(ea.embedding, eq.embedding),
-       |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-       |      / nullif(sqrt(list_sum(list_transform(ea.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-       |      / nullif(sqrt(list_sum(list_transform(eq.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-       |      + 1e-9, 4) AS sim
+       |    ${r4Sql(cosineSql("ea.embedding", "eq.embedding"))} AS sim${srcSql("a.vec_id", baseOnly)}
        |  FROM (SELECT vec_id AS q_id, cell FROM aq) q
        |  JOIN a3 a ON a.cell = q.cell AND a.vec_id != q.q_id
        |  JOIN embeddings ea ON ea.vec_id = a.vec_id
        |  JOIN embeddings eq ON eq.vec_id = q.q_id)
-       |SELECT q_id, rank, neighbor_id, cell, sim FROM (
-       |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-       |            ORDER BY sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM sims)
-       |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
-  }
+       |${topKSql("q_id, rank, neighbor_id, cell, sim" + (if (baseOnly) ", src" else ""),
+            "sims", 3, "sim DESC, neighbor_id ASC")}""".stripMargin
 
   /** MLlib-KMeans formulation of the same IVF dataflow — the library twin
     * for callers who want the battle-tested trainer (k-means||, tolerance
@@ -379,16 +445,7 @@ object Similarity {
       .fit(emb)
     val assigned = model.transform(emb)
       .select(col("vec_id"), col("cell"), col("embedding"))
-    val queries = assigned.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("cell"), col("embedding").as("qe"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), asc("neighbor_id"))
-    assigned.join(broadcast(queries), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("cell"), col("vec_id").as("neighbor_id"),
-        Num.r4(cosine(spark, "embedding", "qe")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("cell"), col("sim"))
+    inCellTop3(spark, assigned, querySet(assigned)(col("cell"), qe))
   }
 
   /** Embedding-cosine near-duplicate pairs, EXACT-SMALL formulation: all
@@ -419,18 +476,14 @@ object Similarity {
       .select(col("vec_a"), col("vec_b"), Num.r4(col("sim_raw")).as("sim"))
   }
 
-  val cosineDedupSql: String =
-    """WITH sims AS (
-      |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-      |         list_sum(list_transform(list_zip(a.embedding, b.embedding),
-      |           p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      |         / nullif(sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-      |         / nullif(sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-      |         AS sim_raw
-      |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-      |SELECT vec_a, vec_b, round(sim_raw + 1e-9, 4) AS sim
-      |FROM sims WHERE sim_raw >= 0.35
-      |ORDER BY vec_a, vec_b""".stripMargin
+  def cosineDedupSql: String =
+    s"""WITH sims AS (
+       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+       |         ${cosineSql("a.embedding", "b.embedding")} AS sim_raw
+       |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
+       |SELECT vec_a, vec_b, ${r4Sql("sim_raw")} AS sim
+       |FROM sims WHERE sim_raw >= 0.35
+       |ORDER BY vec_a, vec_b""".stripMargin
 
   /** Deterministic pseudo-random hyperplane component: Knuth
     * multiplicative hash scaled to [-0.5, 0.5). Pure integer arithmetic
@@ -485,8 +538,8 @@ object Similarity {
 
   /** [[cosineDedupLshSql]] without the presentation ORDER BY — reusable
     * as a CTE body by composite oracles (cross-modal dedup). */
-  val cosineDedupLshCoreSql: String =
-    """WITH b0 AS (
+  def cosineDedupLshCoreSql: String =
+    s"""WITH b0 AS (
       |  SELECT vec_id, embedding, unnest(range(0, 16)) AS t
       |  FROM embeddings),
       |buckets AS (
@@ -502,26 +555,23 @@ object Similarity {
       |  FROM buckets a JOIN buckets b
       |    ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
       |sims AS (
-      |  SELECT vec_a, vec_b,
-      |    list_sum(list_transform(list_zip(ea.embedding, eb.embedding),
-      |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      |    / nullif(sqrt(list_sum(list_transform(ea.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-      |    / nullif(sqrt(list_sum(list_transform(eb.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0) AS sim_raw
+      |  SELECT vec_a, vec_b, ${cosineSql("ea.embedding", "eb.embedding")} AS sim_raw
       |  FROM pairs JOIN embeddings ea ON ea.vec_id = vec_a
       |             JOIN embeddings eb ON eb.vec_id = vec_b)
-      |SELECT vec_a, vec_b, round(sim_raw + 1e-9, 4) AS sim
+      |SELECT vec_a, vec_b, ${r4Sql("sim_raw")} AS sim
       |FROM sims WHERE sim_raw >= 0.35""".stripMargin
 
-  val cosineDedupLshSql: String =
+  def cosineDedupLshSql: String =
     cosineDedupLshCoreSql + "\nORDER BY vec_a, vec_b"
 
   /** Big-endian sign-bit fold of one 32-dim half into a BIGINT — the
     * load-bearing packing contract of the binary-code family (two
     * halves so no intermediate touches the BIGINT sign bit in either
-    * engine). ONE Scala and ONE SQL definition shared by hammingAnn
-    * and hammingRerank: editing a copy (threshold, slice bounds) would
-    * leave the two operators computing DIFFERENT codes while each
-    * still passes its own oracle. */
+    * engine). ONE Scala and ONE SQL definition, read only through
+    * [[hammingScores]] and [[hammingPairsSql]] — the codes both
+    * hammingAnn and hammingRerank rank: a second copy (threshold, slice
+    * bounds) could leave the two operators computing DIFFERENT codes
+    * while each still passes its own oracle. */
   private def signHalf(off: Int): Column = expr(
     s"""aggregate(slice(embedding, $off, 32), CAST(0 AS BIGINT),
        |  (acc, x) -> acc * 2 + IF(x > 0, 1, 0))""".stripMargin)
@@ -544,43 +594,39 @@ object Similarity {
     * entire point of this operator. Ties (equal Hamming) break by
     * neighbor_id — pure integer arithmetic throughout, so the oracle
     * replays exactly. */
-  def hammingAnn(spark: SparkSession, sfDir: String): DataFrame = {
-    def half(off: Int) = signHalf(off)
-    val codes = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), half(1).as("code_lo"), half(33).as("code_hi"))
-    val queries = codes.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"),
-        col("code_lo").as("q_lo"), col("code_hi").as("q_hi"))
-    val w = Window.partitionBy(col("q_id")).orderBy(asc("hamming"), asc("neighbor_id"))
-    codes.crossJoin(broadcast(queries))
+  def hammingAnn(spark: SparkSession, sfDir: String): DataFrame =
+    topK(hammingScores(Tables.embeddings(spark, sfDir)), 3, asc("hamming"))
+
+  /** Hamming distance from every corpus sign code to each query's code,
+    * as (q_id, neighbor_id, hamming) — the scored candidates
+    * [[hammingAnn]] ranks and [[hammingRerank]] shortlists. */
+  private def hammingScores(emb: DataFrame): DataFrame = {
+    val codes = emb.select(col("vec_id"), signHalf(1).as("code_lo"), signHalf(33).as("code_hi"))
+    codes.crossJoin(broadcast(
+        querySet(codes)(col("code_lo").as("q_lo"), col("code_hi").as("q_hi"))))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
         (expr("bit_count(code_lo ^ q_lo)") + expr("bit_count(code_hi ^ q_hi)"))
           .cast("int").as("hamming"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("hamming"))
   }
 
-  val hammingAnnSql: String = {
-    def half(lo: Int, hi: Int): String = signHalfSql(lo, hi)
-    s"""WITH codes AS (
+  /** Oracle twin of [[hammingScores]]: the CTEs `codes` and `pairs`. */
+  private def hammingPairsSql: String =
+    s"""codes AS (
        |  SELECT vec_id,
-       |    ${half(1, 32)} AS code_lo,
-       |    ${half(33, 64)} AS code_hi
+       |    ${signHalfSql(1, 32)} AS code_lo,
+       |    ${signHalfSql(33, 64)} AS code_hi
        |  FROM embeddings),
        |pairs AS (
        |  SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
        |         CAST(bit_count(xor(c.code_lo, q.code_lo))
        |              + bit_count(xor(c.code_hi, q.code_hi)) AS INT) AS hamming
        |  FROM codes c JOIN codes q
-       |    ON q.vec_id < 10 AND c.vec_id != q.vec_id)
-       |SELECT q_id, rank, neighbor_id, hamming FROM (
-       |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-       |            ORDER BY hamming ASC, neighbor_id ASC) AS INT) AS rank
-       |  FROM pairs)
-       |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
-  }
+       |    ON q.vec_id < 10 AND c.vec_id != q.vec_id)""".stripMargin
+
+  def hammingAnnSql: String =
+    s"""WITH $hammingPairsSql
+       |${topKSql("q_id, rank, neighbor_id, hamming", "pairs", 3, "hamming ASC, neighbor_id ASC")}""".stripMargin
 
   /** Two-stage binary retrieval — Hamming shortlist, exact-cosine re-rank
     * (the binary-code analogue of [[annPqRefine]], and the standard
@@ -593,66 +639,16 @@ object Similarity {
     * break by neighbor_id on integer Hamming, so stage-1's cutoff — and
     * therefore the final ranking — replays exactly in the oracle. */
   def hammingRerank(spark: SparkSession, sfDir: String): DataFrame = {
-    def half(off: Int) = signHalf(off)
     val emb = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
-    val codes = emb.select(col("vec_id"), half(1).as("code_lo"), half(33).as("code_hi"))
-    val queries = codes.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"),
-        col("code_lo").as("q_lo"), col("code_hi").as("q_hi"))
-    val sw = Window.partitionBy(col("q_id")).orderBy(asc("hamming"), asc("neighbor_id"))
-    val shortlist = codes.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        (expr("bit_count(code_lo ^ q_lo)") + expr("bit_count(code_hi ^ q_hi)"))
-          .cast("int").as("hamming"))
-      .withColumn("srank", row_number().over(sw))
-      .filter(col("srank") <= 16)
-      .select(col("q_id"), col("neighbor_id"))
-    val qe = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), asc("neighbor_id"))
-    shortlist
-      .join(emb.withColumnRenamed("vec_id", "neighbor_id"), Seq("neighbor_id"))
-      .join(broadcast(qe), Seq("q_id"))
-      .select(col("q_id"), col("neighbor_id"),
-        Num.r4(cosine(spark, "embedding", "qe")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("sim"))
+    exactRerank(spark, topK(hammingScores(emb), 16, asc("hamming")), emb,
+      querySet(emb)(qe))
   }
 
-  val hammingRerankSql: String = {
-    def half(lo: Int, hi: Int): String = signHalfSql(lo, hi)
-    s"""WITH codes AS (
-       |  SELECT vec_id,
-       |    ${half(1, 32)} AS code_lo,
-       |    ${half(33, 64)} AS code_hi
-       |  FROM embeddings),
+  def hammingRerankSql: String =
+    s"""WITH $hammingPairsSql,
        |shortlist AS (
-       |  SELECT q_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |             bit_count(xor(c.code_lo, q.code_lo))
-       |               + bit_count(xor(c.code_hi, q.code_hi)) ASC,
-       |             c.vec_id ASC) AS srank
-       |    FROM codes c JOIN codes q
-       |      ON q.vec_id < 10 AND c.vec_id != q.vec_id)
-       |  WHERE srank <= 16),
-       |rer AS (
-       |  SELECT s.q_id, s.neighbor_id,
-       |    round(list_sum(list_transform(list_zip(ne.embedding, qe.embedding),
-       |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-       |      / nullif(sqrt(list_sum(list_transform(ne.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-       |      / nullif(sqrt(list_sum(list_transform(qe.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-       |      + 1e-9, 4) AS sim
-       |  FROM shortlist s JOIN embeddings ne ON ne.vec_id = s.neighbor_id
-       |                   JOIN embeddings qe ON qe.vec_id = s.q_id)
-       |SELECT q_id, rank, neighbor_id, sim FROM (
-       |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-       |            ORDER BY sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM rer)
-       |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
-  }
+       |  ${topKSql("q_id, neighbor_id", "pairs", 16, "hamming ASC, neighbor_id ASC")}),
+       |${exactRerankSql("shortlist")}""".stripMargin
 
   /** RaBitQ-style corrected binary retrieval (Gao & Long, SIGMOD 2024):
     * rank by an ESTIMATE of the true cosine reconstructed from the sign
@@ -679,11 +675,9 @@ object Similarity {
       col("embedding"),
       expr("sqrt(aggregate(embedding, 0D, (a, x) -> a + cast(x AS double) * cast(x AS double)))").as("nrm"),
       expr("aggregate(embedding, 0D, (a, x) -> a + abs(cast(x AS double)))").as("abs_sum"))
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-        expr("sqrt(aggregate(embedding, 0D, (a, x) -> a + cast(x AS double) * cast(x AS double)))").as("qnrm"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("est"), asc("neighbor_id"))
-    corpus.crossJoin(broadcast(queries))
+    val queries = querySet(emb)(qe,
+      expr("sqrt(aggregate(embedding, 0D, (a, x) -> a + cast(x AS double) * cast(x AS double)))").as("qnrm"))
+    val scored = corpus.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
         Num.r4(
@@ -695,13 +689,11 @@ object Similarity {
             // the denominator 0, which ANSI division would THROW on
             / when(col("qnrm") * col("abs_sum") =!= 0.0,
                 col("qnrm") * col("abs_sum"))).as("est"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("est"))
+    topK(scored, 3, desc("est"))
   }
 
-  val rabitqAnnSql: String =
-    """WITH s AS (
+  def rabitqAnnSql: String =
+    s"""WITH s AS (
       |  SELECT vec_id, embedding,
       |    sqrt(list_sum(list_transform(embedding,
       |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm,
@@ -715,11 +707,7 @@ object Similarity {
       |          p -> (CASE WHEN p[1] > 0 THEN 1.0 ELSE -1.0 END) * CAST(p[2] AS DOUBLE)))
       |      / nullif(q.nrm * c.abs_sum, 0) + 1e-9, 4) AS est
       |  FROM s c JOIN s q ON q.vec_id < 10 AND c.vec_id != q.vec_id)
-      |SELECT q_id, rank, neighbor_id, est FROM (
-      |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-      |            ORDER BY est DESC, neighbor_id ASC) AS INT) AS rank
-      |  FROM pairs)
-      |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
+      |${topKSql("q_id, rank, neighbor_id, est", "pairs", 3, "est DESC, neighbor_id ASC")}""".stripMargin
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
     * arXiv:2303.09540): cluster the embedding space with the SAME
@@ -768,15 +756,13 @@ object Similarity {
         col("pruned_by"), col("n_near").isNull.as("kept"))
   }
 
-  val semanticDedupSql: String =
-    s"""WITH $ivfCellCtesSql,
+  def semanticDedupSql: String =
+    s"""WITH ${ivfCellCtesSql()},
        |m AS (
        |  SELECT a.vec_id, CAST(count(*) AS BIGINT) AS n_near,
        |         min(b.vec_id) AS pruned_by
        |  FROM a3 a JOIN a3 b ON a.cell = b.cell AND b.vec_id < a.vec_id
-       |  WHERE list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))
-       |        / nullif(sqrt(list_sum(list_transform(a.v, x -> x * x))), 0)
-       |        / nullif(sqrt(list_sum(list_transform(b.v, x -> x * x))), 0) >= 0.35
+       |  WHERE ${cosineSql("a.v", "b.v")} >= 0.35
        |  GROUP BY a.vec_id)
        |SELECT a.vec_id, a.cell, coalesce(m.n_near, 0) AS n_near, m.pruned_by,
        |       m.n_near IS NULL AS kept
@@ -796,7 +782,7 @@ object Similarity {
       .agg(Num.r4(avg(col("col").cast("double"))).as("mean_val"),
         count(lit(1)).as("n_vecs"))
 
-  val centroidsSql: String =
+  def centroidsSql: String =
     """SELECT label, dim,
       |       round(avg(x) + 1e-9, 4) AS mean_val,
       |       count(*) AS n_vecs
@@ -830,34 +816,33 @@ object Similarity {
     // FOUR aggregates below (cell×tok, cell, tok, grand total) read this
     // frame under different grouping keys — no exchange reuse applies,
     // so without the pin each one re-runs the Lloyd assignment scan, the
-    // documents join, and the token explode (the ivfPqIndex/pcaProject
-    // house pattern)
+    // documents join, and the token explode. Eager: the four aggregates
+    // are branches of one action, and a lazy checkpoint lets their
+    // concurrent stages compute the same partition twice (logged as
+    // "Block rdd_… already exists"), the semanticDedup/winnowOverlap case.
     val docToks = Tables.documents(spark, sfDir)
       .join(assigned.select(col("vec_id").as("doc_id"), col("cell")), "doc_id")
       .select(col("cell"), explode(split(col("text"), " ")).as("tok"))
-      .localCheckpoint(false)
+      .localCheckpoint(true)
     val cellTok = docToks.groupBy(col("cell"), col("tok"))
       .agg(count(lit(1)).as("n_ct"))
       .filter(col("n_ct") >= 3)
     val cellTotals = docToks.groupBy(col("cell")).agg(count(lit(1)).as("n_cell"))
     val corpus = docToks.groupBy(col("tok")).agg(count(lit(1)).as("n_t"))
     val total = docToks.agg(count(lit(1)).as("n_tot"))
-    val w = Window.partitionBy(col("cell")).orderBy(desc("lift"), asc("tok"))
-    cellTok
-      .join(cellTotals, "cell")
-      .join(broadcast(corpus), "tok")
-      .crossJoin(broadcast(total))
-      .select(col("cell"), col("tok"), col("n_ct"),
-        Num.r4((col("n_ct").cast("double") / col("n_cell"))
-          / (col("n_t").cast("double") / col("n_tot"))).as("lift"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= 3)
-      .select(col("cell"), col("rank"), col("tok"), col("n_ct"), col("lift"))
+    topK(cellTok
+        .join(cellTotals, "cell")
+        .join(broadcast(corpus), "tok")
+        .crossJoin(broadcast(total))
+        .select(col("cell"), col("tok"), col("n_ct"),
+          Num.r4((col("n_ct").cast("double") / col("n_cell"))
+            / (col("n_t").cast("double") / col("n_tot"))).as("lift")),
+      3, desc("lift"), key = "cell", tie = "tok")
   }
 
   /** DuckDB twin of [[clusterTopics]] over the shared IVF cell chain. */
-  lazy val clusterTopicsSql: String =
-    s"""WITH $ivfCellCtesSql,
+  def clusterTopicsSql: String =
+    s"""WITH ${ivfCellCtesSql()},
        |dt AS (
        |  SELECT a.cell, unnest(string_split(d.text, ' ')) AS tok
        |  FROM documents d JOIN a3 a ON a.vec_id = d.doc_id),
@@ -874,11 +859,7 @@ object Similarity {
        |  FROM ct JOIN cc ON cc.cell = ct.cell
        |          JOIN tc ON tc.tok = ct.tok
        |          CROSS JOIN tt)
-       |SELECT cell, rank, tok, n_ct, lift FROM (
-       |  SELECT *, CAST(row_number() OVER (PARTITION BY cell
-       |            ORDER BY lift DESC, tok ASC) AS INT) AS rank
-       |  FROM sc)
-       |WHERE rank <= 3 ORDER BY cell, rank""".stripMargin
+       |${topKSql("cell, rank, tok, n_ct, lift", "sc", 3, "lift DESC, tok ASC", key = "cell")}""".stripMargin
 
   /** Incremental IVF index maintenance — the ANN analog of
     * `d_dedup_incremental`: a production vector index absorbs INSERTS by
@@ -903,18 +884,8 @@ object Similarity {
     def assignWith(df: DataFrame) = withCoarseCell(cents)(df)
     val assignAll = assignWith(emb)
       .select(col("vec_id"), col("cell"), col("embedding"))
-    val qcell = assignWith(emb.filter(col("vec_id") < 10))
-      .select(col("vec_id").as("q_id"), col("cell"), col("embedding").as("qe"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), asc("neighbor_id"))
-    assignAll.join(broadcast(qcell), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("cell"), col("vec_id").as("neighbor_id"),
-        Num.r4(cosine(spark, "embedding", "qe")).as("sim"),
-        when(col("vec_id") % 5 === 0, lit("new")).otherwise(lit("base")).as("src"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("cell"),
-        col("sim"), col("src"))
+    inCellTop3(spark, assignAll, querySet(assignWith(emb))(col("cell"), qe),
+      when(col("vec_id") % 5 === 0, lit("new")).otherwise(lit("base")).as("src"))
   }
 
   /** DuckDB twin of [[annIvfIncremental]]: the Lloyd chain trains over
@@ -922,42 +893,7 @@ object Similarity {
     * final assignment `a3` runs over the FULL corpus with the frozen
     * `c2` centroids, and the query probes reuse the shared cell-argmin
     * contract. */
-  lazy val annIvfIncrementalSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |etr AS (SELECT vec_id, v FROM e WHERE vec_id % 5 != 0),
-       |c0 AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cell, v AS cv
-       |  FROM (SELECT vec_id, v FROM etr ORDER BY vec_id LIMIT 16)),
-       |c0l AS (SELECT cell, CAST(generate_subscripts(cv, 1) - 1 AS INT) AS dim,
-       |               unnest(cv) AS x
-       |        FROM c0),
-       |${ivfAssignCte("a1", "c0", "etr")},
-       |${ivfUpdateCte("m1", "a1", "c0l", "c1l", "c1")},
-       |c1l2 AS (SELECT cell, dim, cv AS x FROM c1l),
-       |${ivfAssignCte("a2", "c1", "etr")},
-       |${ivfUpdateCte("m2", "a2", "c1l2", "c2l", "c2")},
-       |${ivfAssignCte("a3", "c2")},
-       |${ivfQueryCellCte("aq", 1)},
-       |sims AS (
-       |  SELECT q.q_id, a.cell, a.vec_id AS neighbor_id,
-       |    round(
-       |      list_sum(list_transform(list_zip(ea.embedding, eq.embedding),
-       |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-       |      / nullif(sqrt(list_sum(list_transform(ea.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-       |      / nullif(sqrt(list_sum(list_transform(eq.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-       |      + 1e-9, 4) AS sim,
-       |    CASE WHEN a.vec_id % 5 = 0 THEN 'new' ELSE 'base' END AS src
-       |  FROM (SELECT vec_id AS q_id, cell FROM aq) q
-       |  JOIN a3 a ON a.cell = q.cell AND a.vec_id != q.q_id
-       |  JOIN embeddings ea ON ea.vec_id = a.vec_id
-       |  JOIN embeddings eq ON eq.vec_id = q.q_id)
-       |SELECT q_id, rank, neighbor_id, cell, sim, src FROM (
-       |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-       |            ORDER BY sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM sims)
-       |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
+  def annIvfIncrementalSql: String = ivfSql(probes = 1, baseOnly = true)
 
   /** Two-component PCA by deterministic power iteration — the
     * dimensionality-reduction / whitening stage of an embedding pipeline
@@ -1031,7 +967,7 @@ object Similarity {
     * re-evaluate the whole upstream tree combinatorially (measured:
     * > 2 min inlined vs 0.5 s materialized at sf0.001); the norm is a
     * 1-row CTE cross-joined in for the same reason. */
-  val pcaProjectSql: String = {
+  def pcaProjectSql: String = {
     def iterBlock(wName: String, vName: String, nName: String, src: String,
         vcol: String, prevV: Option[String]): String = {
       val sExpr = prevV match {
@@ -1168,9 +1104,7 @@ object Similarity {
     arms.reduce(_.unionAll(_))
   }
 
-  // lazy: interpolates annSq8Sql, which is declared LATER in this object —
-  // eager init would capture null (Scala vals initialize top-to-bottom).
-  lazy val annRecallEvalSql: String = {
+  def annRecallEvalSql: String = {
     def arm(body: String, name: String): String =
       s"""SELECT '$name' AS method,
          |  round((SELECT count(*) FROM (SELECT q_id, neighbor_id FROM ($body))
@@ -1227,7 +1161,7 @@ object Similarity {
         .as("s"))
   }
 
-  val silhouetteSql: String =
+  def silhouetteSql: String =
     """WITH cd AS (
       |  SELECT label AS c_label,
       |         CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS dim,
@@ -1275,7 +1209,7 @@ object Similarity {
             / (col("q_max") - col("q_min")) * 255.0 + 0.5))
           .cast("int").as("q"))
 
-  val quantizeSql: String =
+  def quantizeSql: String =
     """SELECT vec_id, dim,
       |       round(q_min + 1e-9, 4) AS q_min,
       |       round(q_max + 1e-9, 4) AS q_max,
@@ -1314,24 +1248,20 @@ object Similarity {
           |  mn + floor((cast(x AS double) - mn) / (mx - mn) * 255.0 + 0.5)
           |       * (mx - mn) / 255.0))""".stripMargin))
       .select(col("vec_id"), col("dq"))
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"),
-        expr("transform(embedding, x -> cast(x AS double))").as("qe"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("est"), asc("neighbor_id"))
-    dq.crossJoin(broadcast(queries))
+    val queries = querySet(emb)(
+      expr("transform(embedding, x -> cast(x AS double))").as("qe"))
+    val scored = dq.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
         Num.r4(
           expr("""aggregate(zip_with(dq, qe, (a, b) -> a * b), 0D, (s, x) -> s + x)""")
             / sqrt(expr("aggregate(dq, 0D, (s, x) -> s + x * x)"))
             / sqrt(expr("aggregate(qe, 0D, (s, x) -> s + x * x)"))).as("est"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("est"))
+    topK(scored, 3, desc("est"))
   }
 
-  val annSq8Sql: String =
-    """WITH s AS (
+  def annSq8Sql: String =
+    s"""WITH s AS (
       |  SELECT vec_id, embedding,
       |    round(CAST(list_min(embedding) AS DOUBLE) + 1e-9, 4) AS mn,
       |    round(CAST(list_max(embedding) AS DOUBLE) + 1e-9, 4) AS mx
@@ -1348,15 +1278,9 @@ object Similarity {
       |  FROM embeddings WHERE vec_id < 10),
       |pairs AS (
       |  SELECT q.q_id, d.vec_id AS neighbor_id,
-      |    round(list_sum(list_transform(list_zip(d.dq, q.qe), p -> p[1] * p[2]))
-      |      / sqrt(list_sum(list_transform(d.dq, x -> x * x)))
-      |      / sqrt(list_sum(list_transform(q.qe, x -> x * x))) + 1e-9, 4) AS est
+      |    ${r4Sql(cosineSql("d.dq", "q.qe"))} AS est
       |  FROM d JOIN q ON d.vec_id != q.q_id)
-      |SELECT q_id, rank, neighbor_id, est FROM (
-      |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-      |            ORDER BY est DESC, neighbor_id ASC) AS INT) AS rank
-      |  FROM pairs)
-      |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
+      |${topKSql("q_id, rank, neighbor_id, est", "pairs", 3, "est DESC, neighbor_id ASC")}""".stripMargin
 
   /** Hard-negative mining — the contrastive-training data op (dense
     * retriever / embedding-model training: each anchor needs the most
@@ -1370,35 +1294,20 @@ object Similarity {
   def hardNegatives(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"), col("label"))
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-        col("label").as("q_label"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), asc("neighbor_id"))
-    emb.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("q_id") && col("label") =!= col("q_label"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("label"),
-        Num.r4(cosine(spark, "embedding", "qe")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("neighbor_id"),
-        col("label"), col("sim"))
+    topK(emb.crossJoin(broadcast(querySet(emb)(qe, col("label").as("q_label"))))
+        .filter(col("vec_id") =!= col("q_id") && col("label") =!= col("q_label"))
+        .select(col("q_id"), col("vec_id").as("neighbor_id"), col("label"),
+          exactSim(spark)),
+      3, desc("sim"))
   }
 
-  val hardNegativesSql: String =
-    """WITH pairs AS (
-      |  SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id, c.label,
-      |    round(list_sum(list_transform(list_zip(c.embedding, q.embedding),
-      |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      |      / nullif(sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-      |      / nullif(sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-      |      + 1e-9, 4) AS sim
-      |  FROM embeddings c JOIN embeddings q
-      |    ON q.vec_id < 10 AND c.vec_id != q.vec_id AND c.label != q.label)
-      |SELECT q_id, rank, neighbor_id, label, sim FROM (
-      |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-      |            ORDER BY sim DESC, neighbor_id ASC) AS INT) AS rank
-      |  FROM pairs)
-      |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
+  def hardNegativesSql: String =
+    s"""WITH pairs AS (
+       |  SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id, c.label,
+       |    ${r4Sql(cosineSql("c.embedding", "q.embedding"))} AS sim
+       |  FROM embeddings c JOIN embeddings q
+       |    ON q.vec_id < 10 AND c.vec_id != q.vec_id AND c.label != q.label)
+       |${topKSql("q_id, rank, neighbor_id, label, sim", "pairs", 3, "sim DESC, neighbor_id ASC")}""".stripMargin
 
   /** Random-hyperplane LSH — the approximate-NN scale path. 8 hyperplanes
     * give a 256-bucket signature; each vector's nearest neighbor is
@@ -1443,8 +1352,8 @@ object Similarity {
       .select(col("vec_id"), col("bucket"), col("n_bucket"), col("nn_id"), col("nn_sim"))
   }
 
-  val annLshSql: String =
-    """WITH b AS (
+  def annLshSql: String =
+    s"""WITH b AS (
       |  SELECT vec_id, embedding,
       |    CAST(list_sum(list_transform(range(0, 8), j ->
       |      CASE WHEN list_sum(list_transform(range(0, 64), i ->
@@ -1455,12 +1364,7 @@ object Similarity {
       |counts AS (SELECT bucket, count(*) AS n_bucket FROM b GROUP BY bucket),
       |sims AS (
       |  SELECT a.vec_id, e.vec_id AS nn_id,
-      |    round(
-      |      list_sum(list_transform(list_zip(a.embedding, e.embedding),
-      |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      |      / nullif(sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-      |      / nullif(sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-      |      + 1e-9, 4) AS nn_sim
+      |    ${r4Sql(cosineSql("a.embedding", "e.embedding"))} AS nn_sim
       |  FROM b a JOIN b e ON a.bucket = e.bucket AND e.vec_id != a.vec_id),
       |best AS (
       |  SELECT vec_id, nn_id, nn_sim FROM (
@@ -1605,13 +1509,8 @@ object Similarity {
   /** PQ ANN: rank the corpus by ADC distance per query, keep the top 3.
     * Ties break by neighbor_id on the rounded distance, so the oracle
     * replays the cutoff exactly. */
-  def annPq(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(asc("adc"), asc("neighbor_id"))
-    pqAdcScores(spark, sfDir)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("adc"))
-  }
+  def annPq(spark: SparkSession, sfDir: String): DataFrame =
+    topK(pqAdcScores(spark, sfDir), 3, asc("adc"))
 
   /** Two-stage PQ retrieval — the production pattern (FAISS `refine`):
     * ADC shortlist of 16 from the compressed codes, then exact cosine
@@ -1621,22 +1520,8 @@ object Similarity {
     * pairs against the embeddings scan. */
   def annPqRefine(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
-    val sw = Window.partitionBy(col("q_id")).orderBy(asc("adc"), asc("neighbor_id"))
-    val shortlist = pqAdcScores(spark, sfDir)
-      .withColumn("srank", row_number().over(sw))
-      .filter(col("srank") <= 16)
-      .select(col("q_id"), col("neighbor_id"))
-    val qe = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), asc("neighbor_id"))
-    shortlist
-      .join(emb.withColumnRenamed("vec_id", "neighbor_id"), Seq("neighbor_id"))
-      .join(broadcast(qe), Seq("q_id"))
-      .select(col("q_id"), col("neighbor_id"),
-        Num.r4(cosine(spark, "embedding", "qe")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("sim"))
+    exactRerank(spark, topK(pqAdcScores(spark, sfDir), 16, asc("adc")), emb,
+      querySet(emb)(qe))
   }
 
   /** IVFPQ — the composition production ANN systems actually deploy
@@ -1729,13 +1614,7 @@ object Similarity {
     def residual(vecCol: String) = zip_with(
       col(vecCol), element_at(centLit, col("cell") + 1),
       (x, c) => x.cast("double") - c)
-    val pw = Window.partitionBy(col("vec_id")).orderBy(asc("dist"), asc("cell"))
-    val qcell = emb.filter(col("vec_id") < 10)
-      .withColumn("darr", array(cents.map(ivfSqDist).toIndexedSeq: _*))
-      .select(col("vec_id"), col("embedding"),
-        posexplode(col("darr")).as(Seq("cell", "dist")))
-      .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") <= probes)
+    val qcell = probeCells(emb, cents, probes)
       .select(col("vec_id"), col("cell"), residual("embedding").as("rv"))
     val qt = qcell
       .select(col("vec_id"), col("cell"),
@@ -1749,15 +1628,12 @@ object Similarity {
       .agg(expr("transform(array_sort(collect_list(struct(m, dt))), s -> s.dt)")
         .as("dtabs"))
       .select(col("vec_id").as("q_id"), col("cell"), col("dtabs"))
-    val w = Window.partitionBy(col("q_id")).orderBy(asc("adc"), asc("neighbor_id"))
     graft.functions.AdcSum.register(emb.sparkSession)
-    codesWithCell.join(broadcast(qt), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("cell"), col("vec_id").as("neighbor_id"),
-        Num.r4(expr("adc_sum(codes, dtabs)")).as("adc"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("cell"), col("adc"))
+    topK(codesWithCell.join(broadcast(qt), Seq("cell"))
+        .filter(col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("cell"), col("vec_id").as("neighbor_id"),
+          Num.r4(expr("adc_sum(codes, dtabs)")).as("adc")),
+      3, asc("adc"))
   }
 
   private def annIvfPqImpl(spark: SparkSession, sfDir: String,
@@ -2294,11 +2170,7 @@ object Similarity {
     val emb = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
     val rot = emb.select(col("vec_id"),
       opqRotate(opqPermutation(emb, "embedding")).as("rv"))
-    val w = Window.partitionBy(col("q_id")).orderBy(asc("adc"), asc("neighbor_id"))
-    pqAdcScoresOf(rot, "rv")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("adc"))
+    topK(pqAdcScoresOf(rot, "rv"), 3, asc("adc"))
   }
 
   /** DuckDB twin of [[annIvfPqImpl]]: the shared IVF cell chain
@@ -2306,15 +2178,24 @@ object Similarity {
     * them + one ADC table per (query, probed cell), all in one WITH.
     * `qts` here is keyed (q_id, pcell) because multiprobe residuals are
     * cell-relative; candidates join on their own cell = pcell. */
-  private def ivfPqSql(probes: Int): String =
-    s"""WITH $ivfCellCtesSql,
+  private def ivfPqSql(probes: Int, baseOnly: Boolean = false): String = {
+    // the streamed index trains PQ over the base residuals `ctr` only
+    // and encodes every vector (`psv`) with the frozen codebook
+    val (ctr, train) =
+      if (baseOnly)
+        (s"""ctr AS (SELECT vec_id, cell, rv FROM cres WHERE vec_id % 5 != 0),
+            |psvt AS (
+            |  ${pqSvCteSql("ctr", "rv")}),
+            |""".stripMargin, "psvt")
+      else ("", "psv")
+    s"""WITH ${ivfCellCtesSql(baseOnly)},
        |cres AS (
        |  SELECT a.vec_id, a.cell,
        |         list_transform(list_zip(a.v, c.cv), p -> p[1] - p[2]) AS rv
        |  FROM a3 a JOIN c2 c ON c.cell = a.cell),
-       |psv AS (
+       |${ctr}psv AS (
        |  ${pqSvCteSql("cres", "rv")}),
-       |${pqTrainCtes("p", "psv")},
+       |${pqTrainCtes("p", train, encodeSv = "psv")},
        |${ivfQueryCellCte("qcell", probes)},
        |qres AS (
        |  SELECT q.vec_id, q.cell AS pcell,
@@ -2326,18 +2207,16 @@ object Similarity {
        |adcs AS (
        |  SELECT q.q_id, q.pcell AS cell, pc.vec_id AS neighbor_id,
        |         round(list_sum(list_transform(list_zip(pc.codes, q.dtabs),
-       |           p -> p[2][p[1] + 1])) + 1e-9, 4) AS adc
+       |           p -> p[2][p[1] + 1])) + 1e-9, 4) AS adc${srcSql("pc.vec_id", baseOnly)}
        |  FROM pcodes pc
        |  JOIN a3 a ON a.vec_id = pc.vec_id
        |  JOIN qts q ON q.pcell = a.cell AND pc.vec_id != q.q_id)
-       |SELECT q_id, rank, neighbor_id, cell, adc FROM (
-       |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-       |            ORDER BY adc ASC, neighbor_id ASC) AS INT) AS rank
-       |  FROM adcs)
-       |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
+       |${topKSql("q_id, rank, neighbor_id, cell, adc" + (if (baseOnly) ", src" else ""),
+            "adcs", 3, "adc ASC, neighbor_id ASC")}""".stripMargin
+  }
 
-  lazy val annIvfPqSql: String = ivfPqSql(probes = 1)
-  lazy val annIvfPqProbe2Sql: String = ivfPqSql(probes = 2)
+  def annIvfPqSql: String = ivfPqSql(probes = 1)
+  def annIvfPqProbe2Sql: String = ivfPqSql(probes = 2)
 
   /** DuckDB twin of the STREAMED index fold
     * ([[graft.streaming.StreamAnnIndex.annIndexStreamed]]): the coarse
@@ -2349,54 +2228,7 @@ object Similarity {
     * subvectors), and queries score the union store through the standard
     * single-probe ADC chain — each neighbor labeled base/new so the
     * result itself proves the streamed-in rows are retrievable. */
-  lazy val annIndexStreamedSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |etr AS (SELECT vec_id, v FROM e WHERE vec_id % 5 != 0),
-       |c0 AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cell, v AS cv
-       |  FROM (SELECT vec_id, v FROM etr ORDER BY vec_id LIMIT 16)),
-       |c0l AS (SELECT cell, CAST(generate_subscripts(cv, 1) - 1 AS INT) AS dim,
-       |               unnest(cv) AS x
-       |        FROM c0),
-       |${ivfAssignCte("a1", "c0", "etr")},
-       |${ivfUpdateCte("m1", "a1", "c0l", "c1l", "c1")},
-       |c1l2 AS (SELECT cell, dim, cv AS x FROM c1l),
-       |${ivfAssignCte("a2", "c1", "etr")},
-       |${ivfUpdateCte("m2", "a2", "c1l2", "c2l", "c2")},
-       |${ivfAssignCte("a3", "c2")},
-       |cres AS (
-       |  SELECT a.vec_id, a.cell,
-       |         list_transform(list_zip(a.v, c.cv), p -> p[1] - p[2]) AS rv
-       |  FROM a3 a JOIN c2 c ON c.cell = a.cell),
-       |ctr AS (SELECT vec_id, cell, rv FROM cres WHERE vec_id % 5 != 0),
-       |psvt AS (
-       |  ${pqSvCteSql("ctr", "rv")}),
-       |psv AS (
-       |  ${pqSvCteSql("cres", "rv")}),
-       |${pqTrainCtes("p", "psvt", encodeSv = "psv")},
-       |${ivfQueryCellCte("qcell", 1)},
-       |qres AS (
-       |  SELECT q.vec_id, q.cell AS pcell,
-       |         list_transform(list_zip(e.v, c.cv), p -> p[1] - p[2]) AS rv
-       |  FROM qcell q JOIN e ON e.vec_id = q.vec_id JOIN c2 c ON c.cell = q.cell),
-       |qsv AS (
-       |  ${pqSvCteSql("qres", "rv", ", pcell")}),
-       |${pqAdcTableCtes("qsv", s"pc$PqIters", "", probeKey = true)},
-       |adcs AS (
-       |  SELECT q.q_id, q.pcell AS cell, pc.vec_id AS neighbor_id,
-       |         round(list_sum(list_transform(list_zip(pc.codes, q.dtabs),
-       |           p -> p[2][p[1] + 1])) + 1e-9, 4) AS adc,
-       |         CASE WHEN pc.vec_id % 5 = 0 THEN 'new' ELSE 'base' END AS src
-       |  FROM pcodes pc
-       |  JOIN a3 a ON a.vec_id = pc.vec_id
-       |  JOIN qts q ON q.pcell = a.cell AND pc.vec_id != q.q_id)
-       |SELECT q_id, rank, neighbor_id, cell, adc, src FROM (
-       |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-       |            ORDER BY adc ASC, neighbor_id ASC) AS INT) AS rank
-       |  FROM adcs)
-       |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
+  def annIndexStreamedSql: String = ivfPqSql(probes = 1, baseOnly = true)
 
   private def pqAssignCte(a: String, c: String, sv: String): String =
     s"""$a AS (SELECT vec_id, m, sv, cell FROM (
@@ -2485,7 +2317,7 @@ object Similarity {
        |        FROM qt GROUP BY q_id$pKey)""".stripMargin
   }
 
-  private lazy val pqCtesSql: String = {
+  private def pqCtesSql: String = {
     s"""se AS (
        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
        |  FROM embeddings),
@@ -2493,52 +2325,35 @@ object Similarity {
        |  ${pqSvCteSql("se", "v")}),
        |${pqTrainCtes("", "sv")},
        |${pqAdcTableCtes("sv", s"c$PqIters", "WHERE s.vec_id < 10")},
-       |adcs AS (
+       |${flatAdcsSql("codes")}""".stripMargin
+  }
+
+  /** The flat ADC scores (CTE `adcs`) of every corpus code word of
+    * `codes` against each query's `qts` table — the flat-PQ and OPQ
+    * oracles' candidate scorer. */
+  private def flatAdcsSql(codes: String): String =
+    s"""adcs AS (
        |  SELECT q.q_id, c.vec_id AS neighbor_id,
        |         round(list_sum(list_transform(list_zip(c.codes, q.dtabs),
        |           p -> p[2][p[1] + 1])) + 1e-9, 4) AS adc
-       |  FROM codes c CROSS JOIN qts q WHERE c.vec_id != q.q_id)""".stripMargin
-  }
+       |  FROM $codes c CROSS JOIN qts q WHERE c.vec_id != q.q_id)""".stripMargin
 
-  val annPqSql: String =
+  def annPqSql: String =
     s"""WITH $pqCtesSql
-       |SELECT q_id, rank, neighbor_id, adc FROM (
-       |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-       |            ORDER BY adc ASC, neighbor_id ASC) AS INT) AS rank
-       |  FROM adcs)
-       |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
+       |${topKSql("q_id, rank, neighbor_id, adc", "adcs", 3, "adc ASC, neighbor_id ASC")}""".stripMargin
 
-  val annPqRefineSql: String =
+  def annPqRefineSql: String =
     s"""WITH $pqCtesSql,
        |short AS (
-       |  SELECT q_id, neighbor_id FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY q_id
-       |              ORDER BY adc ASC, neighbor_id ASC) AS srank
-       |    FROM adcs)
-       |  WHERE srank <= 16),
-       |sims AS (
-       |  SELECT s.q_id, s.neighbor_id,
-       |    round(
-       |      list_sum(list_transform(list_zip(en.embedding, eq.embedding),
-       |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-       |      / nullif(sqrt(list_sum(list_transform(en.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-       |      / nullif(sqrt(list_sum(list_transform(eq.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-       |      + 1e-9, 4) AS sim
-       |  FROM short s
-       |  JOIN embeddings en ON en.vec_id = s.neighbor_id
-       |  JOIN embeddings eq ON eq.vec_id = s.q_id)
-       |SELECT q_id, rank, neighbor_id, sim FROM (
-       |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-       |            ORDER BY sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM sims)
-       |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
+       |  ${topKSql("q_id, neighbor_id", "adcs", 16, "adc ASC, neighbor_id ASC")}),
+       |${exactRerankSql("short")}""".stripMargin
 
   /** DuckDB twin of [[annOpq]]: replay the variance ranking (same
     * round(var_samp + 1e-9, 6) contract), the snake allocation, and the
     * within-subspace slot layout, rebuild the permuted vectors, then run
     * the IDENTICAL o-namespaced PQ training + ADC chain the flat-PQ
     * oracle uses. */
-  val annOpqSql: String =
+  def annOpqSql: String =
     s"""WITH se AS (
        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
        |  FROM embeddings),
@@ -2567,16 +2382,8 @@ object Similarity {
        |  ${pqSvCteSql("re", "v")}),
        |${pqTrainCtes("o", "osv")},
        |${pqAdcTableCtes("osv", s"oc$PqIters", "WHERE s.vec_id < 10")},
-       |adcs AS (
-       |  SELECT q.q_id, c.vec_id AS neighbor_id,
-       |         round(list_sum(list_transform(list_zip(c.codes, q.dtabs),
-       |           p -> p[2][p[1] + 1])) + 1e-9, 4) AS adc
-       |  FROM ocodes c CROSS JOIN qts q WHERE c.vec_id != q.q_id)
-       |SELECT q_id, rank, neighbor_id, adc FROM (
-       |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-       |            ORDER BY adc ASC, neighbor_id ASC) AS INT) AS rank
-       |  FROM adcs)
-       |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
+       |${flatAdcsSql("ocodes")}
+       |${topKSql("q_id, rank, neighbor_id, adc", "adcs", 3, "adc ASC, neighbor_id ASC")}""".stripMargin
 
   /** Matryoshka energy ladder (Kusupati et al., MRL) — for each vector,
     * the L2 norm of its first-{8,16,32,64} dims and the fraction of total
@@ -2596,7 +2403,7 @@ object Similarity {
           .as("energy_ratio"))
   }
 
-  val mrlEnergySql: String =
+  def mrlEnergySql: String =
     """SELECT vec_id, label, CAST(t.prefix AS INT) AS prefix,
       |       round(sqrt(list_sum(list_transform(list_slice(embedding, 1, t.prefix),
       |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) + 1e-9, 4) AS norm_prefix,
@@ -2627,66 +2434,28 @@ object Similarity {
     * house determinism contract for ANN rankings). */
   def mrlAnn(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val q = emb.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val wc = Window.partitionBy(col("q_id"))
-      .orderBy(desc("coarse_sim"), asc("neighbor_id"))
+    val q = querySet(emb, 20)(qe)
     // the coarse ranking window carries ONLY (q_id, neighbor_id,
     // coarse_sim) — full vectors join back onto the ≤ 20·|Q| survivors
     // (the hammingRerank/annPqRefine shortlist shape); shipping both
     // 64-dim arrays through the per-query shuffle would move ~512 B of
     // floats per (query, corpus) pair, defeating the truncate-then-
     // refine byte cut the operator exists to demonstrate
-    val cand = emb.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        Num.r4(cosine(spark, "slice(embedding, 1, 32)", "slice(qe, 1, 32)"))
-          .as("coarse_sim"))
-      .withColumn("crank", row_number().over(wc))
-      .filter(col("crank") <= 20)
-    val we = Window.partitionBy(col("q_id"))
-      .orderBy(desc("sim"), asc("neighbor_id"))
-    cand
-      .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding")),
-        Seq("neighbor_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .select(col("q_id"), col("neighbor_id"),
-        Num.r4(cosine(spark, "embedding", "qe")).as("sim"))
-      .withColumn("rank", row_number().over(we))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("sim"))
+    val cand = topK(emb.join(broadcast(q), col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id").as("neighbor_id"),
+          Num.r4(cosine(spark, "slice(embedding, 1, 32)", "slice(qe, 1, 32)"))
+            .as("coarse_sim")),
+      20, desc("coarse_sim"))
+    exactRerank(spark, cand, emb, q)
   }
 
-  val mrlAnnSql: String =
-    """WITH coarse AS (
-      |  SELECT q.vec_id AS q_id, e.vec_id AS neighbor_id,
-      |         q.embedding AS qe, e.embedding AS ne,
-      |         round(
-      |           list_sum(list_transform(list_zip(list_slice(e.embedding, 1, 32),
-      |                                            list_slice(q.embedding, 1, 32)),
-      |             p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      |           / sqrt(list_sum(list_transform(list_slice(e.embedding, 1, 32),
-      |               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |           / sqrt(list_sum(list_transform(list_slice(q.embedding, 1, 32),
-      |               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |           + 1e-9, 4) AS coarse_sim
-      |  FROM embeddings q JOIN embeddings e ON q.vec_id < 20 AND e.vec_id != q.vec_id),
-      |cand AS (
-      |  SELECT q_id, neighbor_id, qe, ne FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY q_id
-      |              ORDER BY coarse_sim DESC, neighbor_id ASC) AS crank
-      |    FROM coarse) WHERE crank <= 20),
-      |exact AS (
-      |  SELECT q_id, neighbor_id,
-      |         round(
-      |           list_sum(list_transform(list_zip(ne, qe),
-      |             p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      |           / nullif(sqrt(list_sum(list_transform(ne, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-      |           / nullif(sqrt(list_sum(list_transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 0)
-      |           + 1e-9, 4) AS sim
-      |  FROM cand)
-      |SELECT q_id, rank, neighbor_id, sim FROM (
-      |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
-      |            ORDER BY sim DESC, neighbor_id ASC) AS INT) AS rank
-      |  FROM exact)
-      |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
+  def mrlAnnSql: String =
+    s"""WITH coarse AS (
+       |  SELECT q.vec_id AS q_id, e.vec_id AS neighbor_id,
+       |    ${r4Sql(cosineSql("list_slice(e.embedding, 1, 32)", "list_slice(q.embedding, 1, 32)"))}
+       |      AS coarse_sim
+       |  FROM embeddings q JOIN embeddings e ON q.vec_id < 20 AND e.vec_id != q.vec_id),
+       |cand AS (
+       |  ${topKSql("q_id, neighbor_id", "coarse", 20, "coarse_sim DESC, neighbor_id ASC")}),
+       |${exactRerankSql("cand")}""".stripMargin
 }

@@ -197,6 +197,25 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("top-k skeleton: id tie-break, gap-free int ranks, short keys, NULL scores last") {
+    import spark.implicits._
+    // q1: three tied scores above a lower one; q2: a single candidate;
+    // q3: a NULL score (a zero-norm vector) beside two real ones
+    val scored = Seq[(Long, Long, Option[Double])](
+      (1L, 30L, Some(0.5)), (1L, 10L, Some(0.5)), (1L, 20L, Some(0.5)),
+      (1L, 5L, Some(0.1)), (2L, 7L, Some(0.9)),
+      (3L, 1L, None), (3L, 2L, Some(-0.3)), (3L, 3L, Some(0.2)))
+      .toDF("q_id", "neighbor_id", "sim")
+    val top = Similarity.topK(scored, 3, desc("sim"))
+    assert(top.columns.toSeq == Seq("q_id", "rank", "neighbor_id", "sim"))
+    assert(top.schema("rank").dataType == org.apache.spark.sql.types.IntegerType)
+    val got = top.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+    assert(got == Seq(
+      (1L, 1, 10L), (1L, 2, 20L), (1L, 3, 30L),
+      (2L, 1, 7L),
+      (3L, 1, 3L), (3L, 2, 2L), (3L, 3, 1L)))
+  }
+
   test("bigram lm replays a driver-side conditional model exactly") {
     val got = TextAnalysis.bigramLm(spark, sf001).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
