@@ -2,7 +2,8 @@ package graft.ext
 
 import graft.Tables
 import graft.ops.Num
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.streaming.StreamStoreOps
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -817,9 +818,10 @@ object Dedup {
 
   /** The (doc_id, group_id) labeling of [[connectedComponentsWithRounds]]
     * and its round count. `localMaxEdges` is the driver-finish bound: when
-    * the canonical edge set holds at most that many edges (and at least
-    * one), it is collected and finished by union-find on the driver
-    * ([[localStar]]) in 0 rounds instead of star contraction. A
+    * the canonical edge set holds at most that many distinct edges, one
+    * bounded collect (`StreamStoreOps.distinctUpTo`) brings it to the
+    * driver, where union-find ([[localStar]]) finishes it in 0 rounds
+    * instead of star contraction. A
     * micro-batch's within-batch graph is tiny, and each contraction round
     * costs several small jobs whatever the data volume. The labels are the
     * component minimum on both paths, so they are identical; the default 0
@@ -837,12 +839,18 @@ object Dedup {
     // job per frame; eager=false still truncates lineage and caches the
     // blocks, but lets the round's OWN count() action be the materializer
     // — one job per round instead of two, same blocks, same reclamation.
-    var edges = pairs
+    val canonical = pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
         least(col("doc_a"), col("doc_b")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(false)
+    // Under the bound, one bounded collect (distinct on the driver) feeds
+    // the union-find directly: no distinct exchange, no count job, no
+    // second read of a checkpoint. Past it the collect is wasted and the
+    // rounds below recompute the edges.
+    val local = Option.when(localMaxEdges > 0)(
+      StreamStoreOps.distinctUpTo(canonical, localMaxEdges)).flatten
+    var edges = local.fold(canonical.distinct().localCheckpoint(false))(
+      es => localStar(pairs.sparkSession, es))
     // Carry each round's count AND xor-fingerprint forward instead of
     // re-computing them on the (checkpointed) previous edge set — one
     // fewer job per round, and the fingerprint gates the exact except.
@@ -850,13 +858,9 @@ object Dedup {
       val row = df.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
       (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
     }
-    var (edgeCount, edgeXor) = countAndXor(edges)
+    var (edgeCount, edgeXor) = if (local.isDefined) (0L, 0L) else countAndXor(edges)
     var rounds = 0
-    var done = edgeCount == 0
-    if (!done && edgeCount <= localMaxEdges) {
-      edges = localStar(edges)
-      done = true
-    }
+    var done = local.isDefined || edgeCount == 0
     while (!done) {
       require(rounds < maxRounds,
         s"star contraction did not converge in $maxRounds rounds")
@@ -910,13 +914,12 @@ object Dedup {
       .localCheckpoint(false), rounds)
   }
 
-  /** Driver-side finish of [[componentLabelsWithRounds]]: collects the
-    * canonical (u, v) edges (the caller bounds their count) and runs
-    * union-find, always linking the larger root under the smaller, so
-    * every root is its component's minimum. Returns the converged star
-    * forest the contraction rounds would reach: one (u → min) edge per
-    * non-minimum node. */
-  private def localStar(edges: DataFrame): DataFrame = {
+  /** Driver-side finish of [[componentLabelsWithRounds]]: union-find over
+    * the collected canonical (u, v) edges, always linking the larger root
+    * under the smaller, so every root is its component's minimum. Returns
+    * the converged star forest the contraction rounds would reach: one
+    * (u → min) edge per non-minimum node. */
+  private def localStar(spark: SparkSession, edges: Seq[Row]): DataFrame = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var root = x
@@ -925,12 +928,12 @@ object Dedup {
       while (y != root) { val up = parent(y); parent(y) = root; y = up }
       root
     }
-    edges.collect().foreach { r =>
+    edges.foreach { r =>
       val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
       if (a != b) parent(math.max(a, b)) = math.min(a, b)
     }
     val star = parent.keys.toSeq.map(u => (u, find(u)))
-    edges.sparkSession.createDataFrame(star).toDF("u", "v")
+    spark.createDataFrame(star).toDF("u", "v")
   }
 
   /** Near-duplicate GROUPS from a precomputed similarity pair frame — the
@@ -1210,123 +1213,129 @@ object Dedup {
     * fall-back to the unpruned scan) and pushed as IN-filters into the
     * store scans BEFORE the joins. Semantically a no-op — each filter
     * restricts an equi-join input to the only keys the join could match —
-    * but physically it reaches the parquet reader: Spark pushes a
-    * min..max range for large IN-lists, so a doc_id-ordered toks store
-    * (the natural layout of an append-only store with monotonic ids)
-    * skips every row group outside the candidates' id range instead of
-    * decoding every kept doc's token array, and an empty key set
-    * short-circuits the scan entirely (the no-candidates fast path). */
+    * but physically it reaches the parquet reader: under the widened
+    * native-IN window the key set reaches row-group dictionaries and page
+    * indexes, so a sorted/bucketed store skips at page granularity, and
+    * an empty key set short-circuits the scan entirely (the
+    * no-candidates fast path). [[streamDedupServe]] is the same step
+    * with the store reads also covering the caller's append guards. */
   private[graft] def streamDedupStep(batch: DataFrame, storeBands: DataFrame,
       storeToks: DataFrame,
       pre: Option[(DataFrame, DataFrame)] = None,
       prune: Boolean = false,
       maxPruneKeys: Int = 100000): (DataFrame, DataFrame, DataFrame) = {
-    // Native-IN pushdown window (pruned serve only): parquet receives an
-    // IN-list as a real In predicate only up to
-    // spark.sql.parquet.pushdown.inFilterThreshold values (default 10);
-    // bigger lists collapse to a min..max range — which skips nothing
-    // for uniform md5 band keys and only coarsely for candidate doc_ids.
-    // Raised, the key SET reaches row-group dictionaries and page
-    // indexes, so a sorted/bucketed store skips at page granularity.
-    // Every store scan below executes eagerly inside this call (the
-    // candidate frame and verdicts are localCheckpoint'ed; the returned
-    // kept frames read only batch-side pinned inputs), so the setting is
-    // saved/restored around the body. 1000 bounds the per-row-group
-    // membership check; larger key lists keep today's range behavior.
-    // CONCURRENCY CAVEAT: the conf is SESSION-global — this call assumes
-    // it owns the SparkSession for its duration (true here: every serve
-    // path drives one foreachBatch at a time). Two concurrent streams
-    // sharing one session would see each other's threshold and could
-    // restore a stale value on interleaved exits; such a deployment
-    // gives each stream its own `SparkSession.newSession()` (separate
-    // conf, shared catalog/executors) instead of sharing this one.
-    val spark = batch.sparkSession
-    val inKey = "spark.sql.parquet.pushdown.inFilterThreshold"
-    val savedIn = if (prune) Some(spark.conf.get(inKey)) else None
-    if (prune) spark.conf.set(inKey, math.min(maxPruneKeys, 1000))
-    try {
-    // The batch's band/token frames are pinned EAGERLY (one job each):
-    // the store join, the within-batch self-join, both verify joins and
-    // the kept frames re-read them (and CC rounds over a graph above the
-    // cap once per round), and re-hashing every shingle per read costs
-    // far more than the two materialization jobs. A caller that already
-    // holds them — the batch twin computes signatures ONCE for all four
-    // waves — passes them via `pre` and pays neither hash nor job.
-    val (bandsB, toksB) = pre.getOrElse((
-      minhashBands(batch).localCheckpoint(true),
-      batch.select(col("doc_id"),
-        array_distinct(split(col("text"), " ")).as("toks")).localCheckpoint(true)))
-    // Bounded driver-side collect (capped): IN-list for the store-bands
-    // scan. Band keys are md5 strings, so the pushed min..max range spans
-    // the keyspace — the win here is the empty-set short-circuit and the
-    // pre-join row cut; the range-pruning payoff is the toks scan below.
-    val storeBandsP =
-      if (!prune) storeBands
-      else {
-        val keys = bandsB.select(col("band")).distinct()
-          .limit(maxPruneKeys + 1).collect().map(_.getString(0)).toIndexedSeq
-        if (keys.isEmpty) storeBands.filter(lit(false))
-        else if (keys.length > maxPruneKeys) storeBands
-        else storeBands.filter(col("band").isin(keys: _*))
-      }
-    val storeCand0 = storeBandsP.as("o")
-      .join(bandsB.as("n"),
-        col("o.band_idx") === col("n.band_idx") && col("o.band") === col("n.band") &&
-          col("o.doc_id") =!= col("n.doc_id"))
-      .select(col("o.doc_id").as("doc_a"), col("n.doc_id").as("doc_b"))
-      .distinct()
-    // Pruning needs the candidate ids on the driver, and the verify join
-    // reuses the frame — pin it once so the band join runs once, not
-    // twice (candidates are micro-batch-bounded: band-collision fan-in
-    // of one batch).
-    val storeCand = if (prune) storeCand0.localCheckpoint(true) else storeCand0
-    val storeToksP =
-      if (!prune) storeToks
-      else {
-        val ids = storeCand.select(col("doc_a")).distinct()
-          .limit(maxPruneKeys + 1).collect().map(_.getLong(0)).toIndexedSeq
-        if (ids.isEmpty) storeToks.filter(lit(false))
-        else if (ids.length > maxPruneKeys) storeToks
-        else storeToks.filter(col("doc_id").isin(ids: _*))
-      }
-    // Pinned once: the survivors anti-join (the within-batch candidates
-    // and the component nodes) and the verdict join all read it, and
-    // unpinned each would re-run the verify join and the toks store scan.
-    // Bounded by the micro-batch: one row per matched batch doc.
-    val storeMatch = jaccardVerifyToks(storeCand, storeToksP, toksB)
-      .groupBy(col("doc_b").as("doc_id"))
-      .agg(min(col("doc_a")).as("matched_old"))
-      .localCheckpoint(true)
-    val survivors = batch.select(col("doc_id"))
-      .join(storeMatch.select(col("doc_id")), Seq("doc_id"), "left_anti")
-    val bandsR = bandsB.join(survivors, "doc_id")
-    val withinCand = bandsR.as("a")
-      .join(bandsR.as("b"),
-        col("a.band_idx") === col("b.band_idx") && col("a.band") === col("b.band") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    val withinPairs = jaccardVerifyToks(withinCand, toksB, toksB)
-    // Labels only (group_size is never read), finished on the driver when
-    // the within-batch graph fits under the same driver-collect cap.
-    val groups = componentLabelsWithRounds(survivors, withinPairs,
-      localMaxEdges = maxPruneKeys)._1
-    // kept: survived the store check AND is its component's representative.
-    // group_id is NULL exactly for store-dropped docs (not in `survivors`),
-    // so the conjunction below is never NULL: the left conjunct is false
-    // precisely when the right one is NULL.
-    val verdicts = batch.select(col("doc_id"), col("source"))
-      .join(storeMatch, Seq("doc_id"), "left")
-      .join(groups, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("source"),
-        (col("matched_old").isNull && col("group_id") === col("doc_id")).as("kept"),
-        coalesce(col("matched_old"),
-          when(col("group_id") =!= col("doc_id"), col("group_id"))).as("matched_old"))
-      .localCheckpoint(true)
-    val keptIds = verdicts.filter(col("kept")).select(col("doc_id"))
-    (verdicts, bandsB.join(keptIds, "doc_id"), toksB.join(keptIds, "doc_id"))
-    } finally savedIn.foreach(spark.conf.set(inKey, _))
+    val s = streamDedupServe(batch, storeBands, storeToks, Some(IndexedSeq.empty),
+      Option.when(prune)(maxPruneKeys), pre)
+    (s.verdicts, s.keptBands, s.keptToks)
   }
+
+  /** [[streamDedupServe]]'s result: [[streamDedupStep]]'s three frames
+    * plus the store frames the step read — each a pinned slice when
+    * pruned under the cap, else the caller's frame as given. */
+  private[graft] final case class Served(verdicts: DataFrame,
+      keptBands: DataFrame, keptToks: DataFrame,
+      bandsRead: DataFrame, toksRead: DataFrame)
+
+  /** [[streamDedupStep]] with ONE read per store table, shared with the
+    * caller's append guards (`StreamDedup.processBatch`). Pruned
+    * (`pruneCap` set) and with `guardIds` under the cap, each store table
+    * is read once and pinned:
+    *
+    *   - bands: `band IN batch keys OR doc_id IN guardIds`. The candidate
+    *     join reads it unchanged — a row outside the batch's band keys
+    *     matches no batch band — and the caller's (doc_id, band_idx)
+    *     guard reads its `doc_id IN guardIds` part;
+    *   - toks: `doc_id IN (candidate ids ∪ guardIds)`, read by the verify
+    *     join and by the caller's toks guard.
+    *
+    * `guardIds` None (past the cap) or a key set past `pruneCap` keeps
+    * that table's read lazy and unpruned. */
+  private[graft] def streamDedupServe(batch: DataFrame, storeBands: DataFrame,
+      storeToks: DataFrame, guardIds: Option[IndexedSeq[Long]],
+      pruneCap: Option[Int] = Some(StreamStoreOps.MaxPruneKeys),
+      pre: Option[(DataFrame, DataFrame)] = None): Served =
+    // Every pinned store read below executes inside the widened native-IN
+    // pushdown window (StreamStoreOps.withPushdownInWindow; its doc has
+    // the session-global caveat).
+    StreamStoreOps.withPushdownInWindow(batch.sparkSession) {
+      // The batch's band/token frames are pinned EAGERLY (one job each):
+      // the store join, the within-batch self-join, both verify joins and
+      // the kept frames re-read them (and CC rounds over a graph above the
+      // cap once per round), and re-hashing every shingle per read costs
+      // far more than the two materialization jobs. A caller that already
+      // holds them — the batch twin computes signatures ONCE for all four
+      // waves — passes them via `pre` and pays neither hash nor job.
+      val (bandsB, toksB) = pre.getOrElse((
+        minhashBands(batch).localCheckpoint(true),
+        batch.select(col("doc_id"),
+          array_distinct(split(col("text"), " ")).as("toks")).localCheckpoint(true)))
+      // Band keys are md5 strings, so a pushed range would span the
+      // keyspace — the win is the native IN-set, the empty-set
+      // short-circuit and the pre-join row cut.
+      val bandKeys = pruneCap.flatMap(StreamStoreOps.distinctKeys[String](bandsB, "band", _))
+      val bandsRead = StreamStoreOps.pinnedSlice(storeBands,
+        for (ks <- bandKeys; ids <- guardIds) yield
+          StreamStoreOps.isIn(col("band"), ks) || StreamStoreOps.isIn(col("doc_id"), ids))
+      // No distinct: a pair sharing k bands appears k ≤ 4 times, which
+      // the id collect (distinct on the driver) and the verify's min
+      // aggregate absorb, and a distinct costs an exchange job.
+      val storeCand0 = bandsRead.as("o")
+        .join(bandsB.as("n"),
+          col("o.band_idx") === col("n.band_idx") && col("o.band") === col("n.band") &&
+            col("o.doc_id") =!= col("n.doc_id"))
+        .select(col("o.doc_id").as("doc_a"), col("n.doc_id").as("doc_b"))
+      // Pruning needs the candidate ids on the driver, and the verify join
+      // reuses the frame — pin it once so the band join runs once, not
+      // twice (candidates are micro-batch-bounded: band-collision fan-in
+      // of one batch).
+      val storeCand = if (pruneCap.isDefined) storeCand0.localCheckpoint(true) else storeCand0
+      val candIds = pruneCap.flatMap(StreamStoreOps.distinctKeys[Long](storeCand, "doc_a", _))
+      val toksRead = StreamStoreOps.pinnedSlice(storeToks,
+        for (cs <- candIds; ids <- guardIds) yield
+          StreamStoreOps.isIn(col("doc_id"), (cs ++ ids).distinct))
+      // Pinned once: the survivors anti-join (the within-batch candidates
+      // and the component nodes) and the verdict join all read it, and
+      // unpinned each would re-run the verify join and the toks store scan.
+      // Bounded by the micro-batch: at most one row per batch doc, as are
+      // `survivors`, the component labels and the kept ids. All four are
+      // broadcast by hint: their pinned inputs carry no size estimate the
+      // planner trusts, and adaptive execution would otherwise shuffle
+      // both sides of each join and only then turn it into a broadcast —
+      // three jobs per join instead of one.
+      val storeMatch = broadcast(jaccardVerifyToks(storeCand, toksRead, toksB)
+        .groupBy(col("doc_b").as("doc_id"))
+        .agg(min(col("doc_a")).as("matched_old"))
+        .localCheckpoint(true))
+      val survivors = batch.select(col("doc_id"))
+        .join(storeMatch.select(col("doc_id")), Seq("doc_id"), "left_anti")
+      val bandsR = bandsB.join(broadcast(survivors), "doc_id")
+      val withinCand = bandsR.as("a")
+        .join(bandsR.as("b"),
+          col("a.band_idx") === col("b.band_idx") && col("a.band") === col("b.band") &&
+            col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .distinct()
+      val withinPairs = jaccardVerifyToks(withinCand, toksB, toksB)
+      // Labels only (group_size is never read), finished on the driver when
+      // the within-batch graph fits under the same driver-collect cap.
+      val groups = componentLabelsWithRounds(survivors, withinPairs,
+        localMaxEdges = pruneCap.getOrElse(StreamStoreOps.MaxPruneKeys).toLong)._1
+      // kept: survived the store check AND is its component's representative.
+      // group_id is NULL exactly for store-dropped docs (not in `survivors`),
+      // so the conjunction below is never NULL: the left conjunct is false
+      // precisely when the right one is NULL.
+      val verdicts = batch.select(col("doc_id"), col("source"))
+        .join(storeMatch, Seq("doc_id"), "left")
+        .join(broadcast(groups), Seq("doc_id"), "left")
+        .select(col("doc_id"), col("source"),
+          (col("matched_old").isNull && col("group_id") === col("doc_id")).as("kept"),
+          coalesce(col("matched_old"),
+            when(col("group_id") =!= col("doc_id"), col("group_id"))).as("matched_old"))
+        .localCheckpoint(true)
+      val keptIds = broadcast(verdicts.filter(col("kept")).select(col("doc_id")))
+      Served(verdicts, bandsB.join(keptIds, "doc_id"), toksB.join(keptIds, "doc_id"),
+        bandsRead, toksRead)
+    }
 
   /** The oracled batch twin of the streaming dedup filter: the documents
     * table arrives in FOUR waves (src0-4, src5-9, src10-14, src15-19 —

@@ -108,13 +108,17 @@ private[graft] trait StoreOperator {
 
   /** Append one frame per store table (None: nothing to write), in the
     * declared crash-window order. insertInto is positional: each frame
-    * is selected in its table's column order and must be pinned, not
-    * read from a table a later append mutates. */
+    * is selected in its table's column order. Every frame whose plan
+    * reads a store table is pinned before the FIRST append
+    * ([[StreamStoreOps.frozen]]), so no insert plan reads a store table
+    * and no frame sees an earlier append of its own batch; a frame built
+    * only from pinned blocks is inserted as it is. */
   protected def appendInOrder(spark: SparkSession, prefix: String,
       frames: Option[DataFrame]*): Unit = {
     require(frames.length == storeTables.length,
       s"$opName: ${frames.length} frames for ${storeTables.length} store tables")
-    storeTables.zip(frames).foreach { case (t, f) =>
+    val fixed = frames.map(_.map(StreamStoreOps.frozen(_, storeTableNames(prefix))))
+    storeTables.zip(fixed).foreach { case (t, f) =>
       f.foreach(StreamStoreOps.appendToStore(spark,
         tableName(prefix, t.suffix), _, t.sortCols))
     }
@@ -152,7 +156,7 @@ private[graft] trait StoreOperator {
     val ledger = spark.table(tableName(prefix, "ledger"))
     if (batchD.isEmpty) return Left(ledger.filter(lit(false)))
     val decided = StreamStoreOps.decidedSlice(spark, ledger,
-      StreamStoreOps.batchKeys(batchD, "doc_id"))
+      StreamStoreOps.distinctKeys[Long](batchD, "doc_id"))
     if (decided.filter(col("batch_id") === batchId).limit(1).count() > 0) {
       val undecided = batchD
         .join(decided.select(col("doc_id")), Seq("doc_id"), "left_anti")

@@ -84,7 +84,7 @@ object StreamAnnIndex extends StoreOperator {
       // store-side read pruned by the batch's own ids (capped — over
       // the cap the full scan is the cheaper plan anyway); restricting
       // the anti-join's right side to left-side keys is a no-op
-      val batchIds = StreamStoreOps.batchKeys(encoded, "vec_id")
+      val batchIds = StreamStoreOps.distinctKeys[Long](encoded, "vec_id")
       val slice = StreamStoreOps.keySlice(
         spark.table(tableName(prefix, "codes"))
           .select(col("vec_id"), col("cell").as("standing_cell")),
@@ -92,7 +92,6 @@ object StreamAnnIndex extends StoreOperator {
       val fresh = encoded
         .join(slice, Seq("vec_id"), "left_anti")
         .select(col("vec_id"), col("cell"), col("codes"))
-        .localCheckpoint(true)
       appendInOrder(spark, prefix, Some(fresh))
       // Append-revision stamp: blue-green serve loops key their codes
       // re-list on (rebuild id, store rev), so new vectors become
@@ -101,7 +100,7 @@ object StreamAnnIndex extends StoreOperator {
       // not just fresh appends — so the crash window "files landed,
       // stamp didn't" heals on the batch's replay instead of leaving
       // the rows invisible to running serve fleets indefinitely.
-      if (batchIds.nonEmpty) bumpRev(spark, prefix)
+      if (batchIds.forall(_.nonEmpty)) bumpRev(spark, prefix)
       // Ack cell = the cell the vector is SERVED from: the STANDING
       // row's cell when the insert-once guard kept it (a re-submitted
       // vec_id with a changed embedding must not be acked into a cell

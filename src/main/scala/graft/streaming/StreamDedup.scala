@@ -38,7 +38,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Exactly-once contract (same posture as the lake fold's anti-join
   * idiom, `sources/LakeFold.scala`): writes land store-first,
-  * decisions-last, and every append is anti-joined on doc_id, so each
+  * decisions-last, and each store append is anti-joined against the rows
+  * already present (bands on (doc_id, band_idx), toks on doc_id; the
+  * decisions append needs no guard — see [[processBatch]]), so each
   * crash window converges under Spark's batch replay —
   *
   *   - crash BEFORE any append: plain re-run.
@@ -56,6 +58,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     the recorded verdicts — the sink must be idempotent per batchId,
   *     the contract checkpoint recovery already imposes on every
   *     foreachBatch writer.
+  *
+  * A micro-batch reads each store table once: the ledger by the batch's
+  * doc_ids, bands by the batch's band keys OR doc_ids, toks by the
+  * candidate OR batch doc_ids. Each read is pinned once and serves both
+  * the dedup step and the append guards. A frame is pinned if and only
+  * if its plan reads a store table: every frame an append's guard reads
+  * is frozen before the first append, and no insert plan reads a store
+  * table. Past the key cap the reads stay lazy (a pin would copy a
+  * corpus-sized table), and the guarded frames that read them are
+  * pinned instead.
   *
   * Verdict rows: (doc_id, source, kept, matched_old, batch_id) —
   * matched_old is the smallest verified kept-corpus match (store drop),
@@ -144,111 +156,96 @@ object StreamDedup extends StoreOperator {
       Seq("doc_id")))
 
   /** One micro-batch: decide fresh docs, append store then decisions
-    * (each anti-joined — see the object doc's crash-window analysis),
-    * and return the batch's full verdict frame (fresh decisions plus
-    * replayed ones, already eagerly materialized — safe to hand to any
-    * sink after the appends). Exposed package-private so specs can
-    * drive replay/crash windows without a running stream. */
+    * (each guarded — see the object doc's crash-window analysis), and
+    * return the batch's full verdict frame (fresh decisions plus replayed
+    * ones, built only from blocks pinned before the appends — safe to
+    * hand to any sink after them). Each store table is read once
+    * (pruned under the cap) and each read is pinned once for all its
+    * consumers; a frame is pinned only where its plan reads a store
+    * table. Exposed package-private so specs can drive replay/crash
+    * windows without a running stream. */
   private[graft] def processBatch(spark: SparkSession, prefix: String,
       batch: DataFrame, batchId: Long): DataFrame = {
     ensureStore(spark, prefix)
     // The whole batch evaluates inside the widened native-IN pushdown
-    // window (StreamStoreOps doc): the decide-split and append-guard
+    // window (StreamStoreOps doc): the decide-split and store-read
     // IN-lists routinely exceed parquet's 10-key default, above which
     // the pushed predicate degrades to a min..max range that skips
     // nothing for scattered ids — every eager evaluation (checkpoints,
-    // inserts) happens in here; streamDedupStep's own nested window is
+    // inserts) happens in here; streamDedupServe's own nested window is
     // harmless.
     StreamStoreOps.withPushdownInWindow(spark) {
-    // The decide-exactly-once split reads the decisions ledger, which
-    // grows with the TOTAL corpus while the batch stays micro-batch-sized
-    // — prune it by the batch's own doc_ids (bounded collect, capped;
-    // restricting either side of an equi-/anti-join on doc_id to the
-    // batch's ids is a no-op). With a doc_id-ordered ledger layout
-    // ([[compactStore]]) the pushed id range skips files outright.
     // Within-batch doc_id collapse (StoreOperator.collapse): without it
     // a redelivered doc flows through twice — duplicate verdict
     // emissions, duplicate ledger/toks rows multiplying every later
     // replay join, and (for same-id-different-text redelivery) a
     // minhash signature silently merged from both texts. One
     // deterministic winner (smallest (source, text)) pins replay.
-    // batch1 (one row per doc_id, so the id collect needs no distinct)
-    // feeds the id collect, the replay join, and the fresh split;
-    // decided feeds the replay join and the fresh anti-join — both
-    // pinned ONCE (decidedSlice pins the under-cap ledger slice and
-    // stays lazy over the cap) instead of re-running the window / the
-    // ledger scan per consumer.
     val batch1 = StoreOperator.collapse(batch, "doc_id", col("source"), col("text"))
       .localCheckpoint(true)
-    val batchIds = StreamStoreOps.batchKeys(batch1, "doc_id")
+    // The batch's doc_ids (one bounded collect; None past the cap) prune
+    // every store read: the ledger here, bands and toks in
+    // streamDedupServe. Restricting either side of a doc_id equi-/anti-
+    // join to the batch's ids is a no-op, and the store tables grow with
+    // the TOTAL corpus while the batch stays micro-batch-sized.
+    val batchIds = StreamStoreOps.distinctKeys[Long](batch1, "doc_id")
     val decided = StreamStoreOps.decidedSlice(
       spark, spark.table(tableName(prefix, "decisions")), batchIds)
-    // Both sides of the already-decided split are frozen BEFORE any
-    // append (decidedSlice pinned the ledger slice; the frames below
-    // checkpoint): the appends mutate the very tables these frames
-    // read, and a lazy evaluation after the decisions append would
-    // double-count the batch's own fresh docs as replayed.
-    val replayed = decided
-      .join(batch1.select(col("doc_id")), Seq("doc_id"))
-      .select(col("doc_id"), col("source"), col("kept"),
-        col("matched_old"), col("batch_id"))
-      .localCheckpoint(true)
+    // The decide-exactly-once split, frozen BEFORE any append: the
+    // appends mutate the ledger `decided` reads, and a lazy evaluation
+    // after the decisions append would count the batch's own fresh docs
+    // as replayed. Under the cap `decided` is the pinned slice of exactly
+    // this batch's recorded rows, so it IS the replayed set; past it the
+    // lazy ledger is joined to the batch's ids and pinned (`frozen`).
+    // One pin of `batch1 LEFT JOIN decided` would cost as many jobs, but
+    // its join size estimate (a product) would reach every frame derived
+    // from `fresh`, and the planner would shuffle joins it now broadcasts.
+    val replayed = StreamStoreOps.frozen(
+      batchIds.fold(decided.join(batch1.select(col("doc_id")), Seq("doc_id")))(_ => decided)
+        .select(col("doc_id"), col("source"), col("kept"), col("matched_old"), col("batch_id")),
+      storeTableNames(prefix))
     val fresh = batch1
       .join(decided.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("source"), col("text"))
       .localCheckpoint(true)
-    // prune = true: the store tables are parquet-backed and grow without
-    // bound while the batch stays micro-batch-sized — exactly the shape
-    // probe-side store pruning exists for (see streamDedupStep's doc; a
-    // doc_id-ordered toks layout turns the pushed id range into row-group
-    // skips, and a batch with no store candidates never scans toks at all).
-    val (verdicts, keptBands, keptToks) = graft.ext.Dedup.streamDedupStep(
-      fresh, spark.table(tableName(prefix, "bands")),
-      spark.table(tableName(prefix, "toks")), prune = true)
-    // Anti-joined appends: each frame is materialized (localCheckpoint)
-    // before its insert so no plan both reads and writes one table.
-    // The guard's left side carries only BATCH doc_ids, so restricting
-    // the store-side read to those ids is a no-op on the anti-join — and
-    // turns a per-batch full-store scan+distinct (a term that grows with
-    // the kept corpus) into the same capped IN-list prune the decisions
-    // ledger uses above; over the cap the full scan is the cheaper plan
-    // anyway. With the doc_id-ordered/bucketed store layouts the pushed
-    // id set skips row groups (and whole buckets for toks/decisions).
-    def storeIdSlice(table: String): DataFrame = StreamStoreOps.keySlice(
-      spark.table(table).select(col("doc_id")), "doc_id", batchIds).distinct()
-    // the bands guard anti-joins on (doc_id, band_idx), NOT doc_id
+    // One pinned read of bands and of toks serves the step's joins and
+    // the append guards below (streamDedupServe's doc has the slices).
+    val step = graft.ext.Dedup.streamDedupServe(fresh,
+      spark.table(tableName(prefix, "bands")), spark.table(tableName(prefix, "toks")),
+      batchIds)
+    // Guarded appends. Each guard reads the `doc_id IN batch ids` part of
+    // the step's store read — restricting it to the batch's ids is a
+    // no-op on the anti-join, whose left side carries only batch docs.
+    // The bands guard anti-joins on (doc_id, band_idx), NOT doc_id
     // alone: a doc's 4 band rows land across multiple bucket FILES, and
     // a crash mid job-commit can persist some files without the rest —
     // a doc-granular guard would then see the doc "present" on replay
     // and permanently drop its missing bands (future near-duplicates
     // colliding only on those bands would be kept). toks/decisions are
     // one row per doc and keep the doc-granular guard.
-    val bandSlice = StreamStoreOps.keySlice(
-      spark.table(tableName(prefix, "bands")).select(col("doc_id"), col("band_idx")),
-      "doc_id", batchIds).distinct()
-    val newBands = keptBands
-      .join(bandSlice, Seq("doc_id", "band_idx"), "left_anti")
+    val newBands = step.keptBands
+      .join(StreamStoreOps.keySlice(step.bandsRead.select(col("doc_id"), col("band_idx")),
+        "doc_id", batchIds), Seq("doc_id", "band_idx"), "left_anti")
       .select(col("doc_id"), col("band_idx"), col("band"))
-      .localCheckpoint(true)
-    val newToks = keptToks
-      .join(storeIdSlice(tableName(prefix, "toks")), Seq("doc_id"), "left_anti")
+    val newToks = step.keptToks
+      .join(StreamStoreOps.keySlice(step.toksRead.select(col("doc_id")),
+        "doc_id", batchIds), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("toks"))
-      .localCheckpoint(true)
-    val freshDecisions = verdicts
+    // No guard anti-join on the decisions — it is provably redundant:
+    // freshDecisions derives from `fresh` = batch1 ∖ decided, with
+    // `decided` frozen before any append and only this batch writing the
+    // ledger, so a second anti-join against the same set removes nothing
+    // in any crash window (partial-append residue lands in `decided` on
+    // the NEXT replay, where those docs take the replayed path).
+    val freshDecisions = step.verdicts
       .withColumn("batch_id", lit(batchId))
       .select(col("doc_id"), col("source"), col("kept"),
         col("matched_old"), col("batch_id"))
-      .localCheckpoint(true)
+    // Under the cap the three frames read only pinned blocks, so each
+    // anti-join runs inside its insert and no insert plan reads a store
+    // table; past it a guard reads a lazy store table, and appendInOrder
+    // pins that frame before the first append (StreamStoreOps.frozen).
     // Each append follows its table's LIVE bucket layout (the counts
-    // drift upward across compactStore rebucketings; the checkpoints
-    // above already isolated the read sides, so the lazy repartition is
-    // safe to evaluate inside the insert). No guard anti-join on the
-    // decisions — it is provably redundant: freshDecisions derives from
-    // `fresh` = batch1 ∖ decided, with `decided` PINNED before any
-    // append and only this batch writing the ledger, so a second
-    // anti-join against the same pinned set removes nothing in any
-    // crash window (partial-append residue lands in `decided` on the
-    // NEXT replay, where those docs take the replayed path).
+    // drift upward across compactStore rebucketings).
     appendInOrder(spark, prefix, Some(newBands), Some(newToks),
       Some(freshDecisions))
     freshDecisions.union(replayed)

@@ -224,7 +224,7 @@ object StreamDsir extends StoreOperator {
     val scoresToAppend =
       if (!st.recovering) freshK
       else freshK.join(spark.table(tableName(prefix, "scores")).select(col("doc_id")),
-        Seq("doc_id"), "left_anti").localCheckpoint(true)
+        Seq("doc_id"), "left_anti")
     appendInOrder(spark, prefix,
       Option.when(!st.recovering)(Seq((batchId, tKey, tDoc, nSel))
         .toDF("batch_id", "t_key", "t_doc", "n_sel")),

@@ -1,25 +1,41 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
 /** Store-read and store-append primitives shared by the streaming
   * store operators ([[StoreOperator]]) — one source of truth for the
-  * capped ledger-slice prune, the native-IN pushdown window and the
-  * bucket-aligned append, so a fix to any of them cannot silently
-  * diverge between the operators. */
+  * capped one-job key collect, the key-slice prune, the native-IN
+  * pushdown window, the pin rule and the bucket-aligned append, so a
+  * fix to any of them cannot silently diverge between the operators. */
 private[graft] object StreamStoreOps {
 
   /** Cap on any probe-side key collect: above it, the unpruned scan is
     * the cheaper plan anyway. */
   val MaxPruneKeys = 100000
 
-  /** The batch's `key` values for a store-side prune, collected capped at
-    * one past [[MaxPruneKeys]] (past the cap [[keySlice]] keeps the full
-    * scan, so the exact count above it never matters). */
-  def batchKeys(batch: DataFrame, key: String): IndexedSeq[Long] =
-    batch.select(col(key)).limit(MaxPruneKeys + 1).collect()
-      .map(_.getLong(0)).toIndexedSeq
+  /** The distinct rows of `df`, collected by ONE result job (after any
+    * shuffle stages of `df`'s own plan) with the distinct done on the
+    * driver; None when there are more than `cap`. Each task ships at most
+    * `cap + 1` distinct rows, so the driver holds at most partitions ×
+    * (cap + 1) — a `distinct()` before the collect would cost an exchange
+    * job, and a `limit` collect scans partitions in several jobs. */
+  def distinctUpTo(df: DataFrame, cap: Long): Option[IndexedSeq[Row]] = {
+    val shipped = df.mapPartitions { rows =>
+      val seen = scala.collection.mutable.HashSet.empty[Row]
+      while (rows.hasNext && seen.size <= cap) seen += rows.next()
+      seen.iterator
+    }(Encoders.row(df.schema)).collect()
+    Some(shipped.distinct.toIndexedSeq).filter(_.length <= cap)
+  }
+
+  /** The distinct `key` values of `df` for a store-side prune
+    * ([[distinctUpTo]]); None past `cap` — there [[keySlice]] keeps the
+    * unpruned scan, the cheaper plan anyway. */
+  def distinctKeys[T](df: DataFrame, key: String,
+      cap: Long = MaxPruneKeys): Option[IndexedSeq[T]] =
+    distinctUpTo(df.select(col(key)), cap).map(_.map(_.getAs[T](0)))
 
   /** A store table's LIVE catalog bucket spec (None: flat). It drifts
     * upward across compaction rebucketings, so appends and compaction
@@ -46,30 +62,55 @@ private[graft] object StreamStoreOps {
     try body finally spark.conf.set(inKey, saved)
   }
 
+  /** `c IN keys`; an empty list is plain false, which the optimizer
+    * turns into an empty relation with no scan. */
+  def isIn[T](c: Column, keys: Seq[T]): Column =
+    if (keys.isEmpty) lit(false) else c.isin(keys: _*)
+
   /** Capped key-slice prune — THE store-read shape of every streaming
     * operator here (decide splits, append guards, ack joins): the store
     * grows with the corpus while the batch stays micro-batch-sized, so
     * restricting the store side of a key-equi/anti-join to the batch's
     * own keys is a no-op on the join and turns the read into a pushed
     * IN-list (bucket/row-group pruned under [[withPushdownInWindow]]).
-    * Empty batch → empty slice; over [[MaxPruneKeys]] → the unpruned
-    * frame (the full scan is the cheaper plan anyway). One definition
-    * so a cap/semantics fix cannot silently diverge between operators. */
-  def keySlice(df: DataFrame, key: String, ids: IndexedSeq[Long]): DataFrame =
-    if (ids.isEmpty) df.filter(lit(false))
-    else if (ids.length > MaxPruneKeys) df
-    else df.filter(col(key).isin(ids: _*))
+    * No keys → empty slice; None (past the cap, [[distinctKeys]]) → the
+    * unpruned frame (the full scan is the cheaper plan anyway). One
+    * definition so a cap/semantics fix cannot silently diverge between
+    * operators. */
+  def keySlice[T](df: DataFrame, key: String, keys: Option[Seq[T]]): DataFrame =
+    keys.fold(df)(ks => df.filter(isIn(col(key), ks)))
 
-  /** The decided-set slice of a change ledger: [[keySlice]] on doc_id,
-    * pushed natively via [[withPushdownInWindow]] and pinned; over the
-    * cap the unpruned scan stays LAZY — a localCheckpoint would pin the
-    * entire corpus-sized ledger to executor storage. */
+  /** A store read filtered by `pred` and pinned once (eager
+    * localCheckpoint) for the batch's several consumers; None (a key set
+    * past the cap) keeps the unpruned read LAZY — a localCheckpoint would
+    * pin the entire corpus-sized table to executor storage. */
+  def pinnedSlice(df: DataFrame, pred: Option[Column]): DataFrame =
+    pred.fold(df)(p => df.filter(p).localCheckpoint(true))
+
+  /** The decided-set slice of a change ledger: [[pinnedSlice]] on the
+    * batch's doc_ids, pushed natively via [[withPushdownInWindow]]. */
   def decidedSlice(spark: SparkSession, ledger: DataFrame,
-      batchIds: IndexedSeq[Long]): DataFrame =
+      batchIds: Option[Seq[Long]]): DataFrame =
     withPushdownInWindow(spark) {
-      if (batchIds.length > MaxPruneKeys) ledger
-      else keySlice(ledger, "doc_id", batchIds).localCheckpoint(true)
+      pinnedSlice(ledger, batchIds.map(isIn(col("doc_id"), _)))
     }
+
+  /** `df`, pinned (eager localCheckpoint) if and only if its plan reads
+    * one of `tables` — the rule for every frame a store append writes
+    * ([[StoreOperator.appendInOrder]]). A lazy read of a store table
+    * evaluated inside an insert would see the batch's earlier appends
+    * (and an insert would read the table it writes); a frame built only
+    * from pinned blocks is frozen already, and a pin would only add a
+    * job. */
+  def frozen(df: DataFrame, tables: Seq[String]): DataFrame = {
+    val names = tables.map(_.toLowerCase).toSet
+    val readsStore = df.queryExecution.analyzed.exists {
+      case r: LogicalRelation =>
+        r.catalogTable.exists(t => names(t.identifier.table.toLowerCase))
+      case _ => false
+    }
+    if (readsStore) df.localCheckpoint(true) else df
+  }
 
   /** Bucket-layout-aligned append shared by every store-backed streaming
     * operator ([[StoreOperator.appendInOrder]]): repartition on the

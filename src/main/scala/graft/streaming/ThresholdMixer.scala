@@ -267,7 +267,7 @@ private[graft] abstract class ThresholdMixer extends StoreOperator {
     val docsToAppend =
       if (!st.recovering) freshK // normal path: no existence probe at all
       else freshK.join(spark.table(docsT).select(col("doc_id")),
-        Seq("doc_id"), "left_anti").localCheckpoint(true)
+        Seq("doc_id"), "left_anti")
     appendInOrder(spark, prefix, thrRows,
       Some(docsToAppend.select(spark.table(docsT).columns.toSeq.map(col): _*)),
       Some(delta))

@@ -558,4 +558,122 @@ class StreamDedupSpec extends SparkSpec {
     }
     dropStore("sd_cr")
   }
+
+  /** `body`'s result and every store-table scan executed by the queries
+    * it runs, as (query number, table), for tables named `tablePrefix*`.
+    * AQE's nested trees are walked explicitly (initial and final plan,
+    * each query stage's subtree), since `plan.foreach` stops at them. */
+  private def storeScans[T](tablePrefix: String)(body: => T): (T, Seq[(Int, String)]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]
+    val queries = new java.util.concurrent.atomic.AtomicInteger
+    def record(q: Int, plan: org.apache.spark.sql.execution.SparkPlan): Unit =
+      (plan +: plan.subqueriesAll).foreach(_.foreach {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          record(q, a.initialPlan); record(q, a.executedPlan)
+        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+          record(q, s.plan)
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.tableIdentifier.map(_.table).filter(_.startsWith(tablePrefix))
+            .foreach(t => seen.add((q, t)): Unit)
+        case _ => ()
+      })
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        record(queries.incrementAndGet(), qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val out = try {
+      val r = body
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(queries.get > 0, "no executed query captured — audit inert")
+    (out, seen.toArray(Array.empty[(Int, String)]).toSeq)
+  }
+
+  test("a served batch reads each store table in exactly one executed query") {
+    Seq("bands", "toks", "decisions")
+      .foreach(t => graft.sources.TableOps.dropWithLocation(spark, s"sd_one_$t"))
+    val byWave = (0 until 2).map { w =>
+      Tables.documents(spark, sf001)
+        .filter(floor(substring(col("source"), 4, 10).cast("int") / 5) === w)
+        .select(col("doc_id"), col("source"), col("text"))
+    }
+    StreamDedup.processBatch(spark, "sd_one", byWave(0), 0L).count(): Unit
+    val (served, scans) = storeScans("sd_one_") {
+      StreamDedup.processBatch(spark, "sd_one", byWave(1), 1L)
+    }
+    Seq("bands", "toks", "decisions").foreach { t =>
+      val reads = scans.collect { case (q, n) if n == s"sd_one_$t" => q }.distinct
+      assert(reads.size == 1,
+        s"sd_one_$t read by ${reads.size} executed queries (want 1): $scans")
+    }
+    // the fixture must drop a wave-1 doc against the store, or the
+    // verify join never reads the toks slice
+    assert(served.join(byWave(0).select(col("doc_id").as("matched_old")),
+      "matched_old").count() > 0, "fixture: no wave-1 doc matched the stored wave 0")
+    dropStore("sd_one")
+  }
+
+  test("a crash that landed only part of a doc's bands appends exactly the missing band rows") {
+    dropStore("sd_pb")
+    StreamDedup.ensureStore(spark, "sd_pb")
+    val batch = Tables.documents(spark, sf001)
+      .filter(substring(col("source"), 4, 10).cast("int") < 5)
+      .select(col("doc_id"), col("source"), col("text"))
+    // the crashed attempt: the bands append committed only the bucket
+    // files holding band_idx 0-1 of each kept doc (a crash mid
+    // job-commit); no toks, no decision was written, nothing was emitted
+    val (verdicts, kb, _) = ext.Dedup.streamDedupStep(
+      batch, spark.table("sd_pb_bands"), spark.table("sd_pb_toks"))
+    def bandRows(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("doc_id"), col("band_idx"), col("band")).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq
+    val want = bandRows(kb).toSet
+    kb.filter(col("band_idx") < 2).select(col("doc_id"), col("band_idx"), col("band"))
+      .write.insertInto("sd_pb_bands")
+    val planted = bandRows(spark.table("sd_pb_bands")).toSet
+    assert(planted.nonEmpty && planted.size < want.size, "fixture: nothing partial planted")
+    val firstV = verdicts
+      .select(col("doc_id"), col("kept"), coalesce(col("matched_old"), lit(-1L)))
+      .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getLong(2))).toSet
+    val replay = rowsOf(StreamDedup.processBatch(spark, "sd_pb", batch, 0L))
+    assert(replay.map(t => (t._1, t._3, t._4)) == firstV,
+      "partial-bands replay changed a verdict or matched_old")
+    // exactly the missing (doc_id, band_idx) rows were appended: the
+    // store holds every kept band row once, and nothing else
+    val stored = bandRows(spark.table("sd_pb_bands"))
+    assert(stored.size == stored.toSet.size, "replay duplicated a band row")
+    assert(stored.toSet == want,
+      s"store bands differ from the kept rows: missing=${(want -- stored).take(3)} " +
+        s"extra=${(stored.toSet -- want).take(3)}")
+    val keptDocs = firstV.count(_._2).toLong
+    assert(spark.table("sd_pb_toks").count() == keptDocs &&
+      spark.table("sd_pb_toks").select(col("doc_id")).distinct().count() == keptDocs,
+      "toks must hold one row per kept doc")
+    assert(spark.table("sd_pb_decisions").count() == firstV.size.toLong,
+      "decisions must hold one row per doc")
+    dropStore("sd_pb")
+  }
+
+  test("an append pins a frame if and only if its plan reads a store table") {
+    dropStore("sd_fz")
+    StreamDedup.ensureStore(spark, "sd_fz")
+    val tables = StreamDedup.storeTableNames("sd_fz")
+    def readsFiles(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation])
+    // a lazy store read is pinned: its plan reads blocks, not the table
+    val storeRead = spark.table("sd_fz_toks").filter(col("doc_id") > 0L)
+    val pinned = graft.streaming.StreamStoreOps.frozen(storeRead, tables)
+    assert(readsFiles(storeRead) && !readsFiles(pinned), "store read not pinned")
+    // frames built from pinned blocks, or reading no store table, stay as they are
+    val fromPins = pinned.select(col("doc_id"))
+    assert(graft.streaming.StreamStoreOps.frozen(fromPins, tables) eq fromPins)
+    val other = Tables.documents(spark, sf001).select(col("doc_id"))
+    assert(graft.streaming.StreamStoreOps.frozen(other, tables) eq other)
+    dropStore("sd_fz")
+  }
 }
