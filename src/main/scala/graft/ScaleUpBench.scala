@@ -162,7 +162,7 @@ object ScaleUpBench {
       * the candidate+verify step alone. The delta between the two is the
       * bookkeeping the round-16 verdict flagged (the append-guard
       * anti-joins were full store scan+distinct per batch until round
-      * 17's capped IN-list prune, and toks/decisions were flat until the
+      * 17's store-read prune, and toks/decisions were flat until the
       * doc_id bucketing): per pass, a fresh 250-doc batch (125 near-dups
       * of copy-0 store docs, 125 pass-salted novel docs — novel SALT is
       * per-pass so earlier passes' kept docs never match later ones, and
@@ -629,10 +629,8 @@ object ScaleUpBench {
         // store file count is a constant B at every factor instead of
         // tracking the replica's file count (the x100 residual named in
         // SCALING.md was dominated by a corpus-tracking file pile, not
-        // bytes), the store side of the candidate join is co-partitioned,
-        // and the batch's band IN-list skips pages/dictionaries inside the
-        // sorted bucket files instead of collapsing to a useless md5
-        // min..max range.
+        // bytes), and the store side of the candidate join is
+        // co-partitioned.
         val bandsDf = Dedup.minhashBands(docs)
         if (pruned) {
           val b = StreamDedup.BandBuckets

@@ -3,7 +3,7 @@ package graft.ext
 import graft.Tables
 import graft.ops.Num
 import graft.streaming.StreamStoreOps
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -816,10 +816,25 @@ object Dedup {
       .select(col("doc_id"), col("group_id"), col("group_size")), rounds)
   }
 
+  /** The distinct rows of `df`, collected by ONE result job (after any
+    * shuffle stages of `df`'s own plan) with the distinct done on the
+    * driver; None when there are more than `cap`. Each task ships at most
+    * `cap + 1` distinct rows, so the driver holds at most partitions ×
+    * (cap + 1) — a `distinct()` before the collect would cost an exchange
+    * job, and a `limit` collect scans partitions in several jobs. */
+  private def distinctUpTo(df: DataFrame, cap: Long): Option[IndexedSeq[Row]] = {
+    val shipped = df.mapPartitions { rows =>
+      val seen = scala.collection.mutable.HashSet.empty[Row]
+      while (rows.hasNext && seen.size <= cap) seen += rows.next()
+      seen.iterator
+    }(Encoders.row(df.schema)).collect()
+    Some(shipped.distinct.toIndexedSeq).filter(_.length <= cap)
+  }
+
   /** The (doc_id, group_id) labeling of [[connectedComponentsWithRounds]]
     * and its round count. `localMaxEdges` is the driver-finish bound: when
     * the canonical edge set holds at most that many distinct edges, one
-    * bounded collect (`StreamStoreOps.distinctUpTo`) brings it to the
+    * bounded collect ([[distinctUpTo]]) brings it to the
     * driver, where union-find ([[localStar]]) finishes it in 0 rounds
     * instead of star contraction. A
     * micro-batch's within-batch graph is tiny, and each contraction round
@@ -848,7 +863,7 @@ object Dedup {
     // second read of a checkpoint. Past it the collect is wasted and the
     // rounds below recompute the edges.
     val local = Option.when(localMaxEdges > 0)(
-      StreamStoreOps.distinctUpTo(canonical, localMaxEdges)).flatten
+      distinctUpTo(canonical, localMaxEdges)).flatten
     var edges = local.fold(canonical.distinct().localCheckpoint(false))(
       es => localStar(pairs.sparkSession, es))
     // Carry each round's count AND xor-fingerprint forward instead of
@@ -1199,143 +1214,140 @@ object Dedup {
     * and the verified store matches are eagerly localCheckpoint'ed once —
     * signatures and the store verify run once per batch, not once per
     * downstream join. The within-batch components are finished on the
-    * driver when their graph has at most `maxPruneKeys` edges (the same
-    * driver-collect cap as pruning); a larger graph runs the star
-    * contraction rounds from a truncated lineage.
+    * driver when their graph has at most `maxLocalEdges` edges; a larger
+    * graph runs the star contraction rounds from a truncated lineage.
     *
     * `prune = true` turns on PROBE-SIDE STORE PRUNING — the serve-path
     * optimization for a parquet-backed store that dwarfs the micro-batch
     * (the `StreamDedup` production shape; the x100 serve sweep showed the
-    * two store scans are the whole growth term). The batch's distinct
-    * band keys, and then the candidate doc_ids, are collected (both
-    * bounded by the micro-batch: ≤ bands-per-doc × batch docs keys and
-    * ≤ verified-candidate fan-in ids, capped at `maxPruneKeys` with a
-    * fall-back to the unpruned scan) and pushed as IN-filters into the
-    * store scans BEFORE the joins. Semantically a no-op — each filter
-    * restricts an equi-join input to the only keys the join could match —
-    * but physically it reaches the parquet reader: under the widened
-    * native-IN window the key set reaches row-group dictionaries and page
-    * indexes, so a sorted/bucketed store skips at page granularity, and
-    * an empty key set short-circuits the scan entirely (the
-    * no-candidates fast path). [[streamDedupServe]] is the same step
-    * with the store reads also covering the caller's append guards. */
+    * two store scans are the whole growth term). Each store table is read
+    * once, by a pinned broadcast semi-join on the batch's own keys
+    * (`StreamStoreOps.probe`), BEFORE the joins: bands on the batch's
+    * (band_idx, band) pairs, toks on the store candidates' doc_ids. Both
+    * key frames are micro-batch-bounded (≤ bands-per-doc × batch docs
+    * pairs, ≤ verified-candidate fan-in ids). Semantically a no-op — each
+    * probe restricts an equi-join input to the only keys the join could
+    * match. Physically the toks probe also pushes the candidates' doc_id
+    * range, so a doc_id-sorted store skips the row groups outside it, and
+    * an empty candidate set reads no toks at all (the no-candidates fast
+    * path); the md5 band keys span their keyspace, so the bands probe
+    * pushes no range. [[streamDedupServe]] is the same step with the toks probe also
+    * covering the caller's append guards. */
   private[graft] def streamDedupStep(batch: DataFrame, storeBands: DataFrame,
       storeToks: DataFrame,
       pre: Option[(DataFrame, DataFrame)] = None,
       prune: Boolean = false,
-      maxPruneKeys: Int = 100000): (DataFrame, DataFrame, DataFrame) = {
-    val s = streamDedupServe(batch, storeBands, storeToks, Some(IndexedSeq.empty),
-      Option.when(prune)(maxPruneKeys), pre)
+      maxLocalEdges: Int = MaxLocalEdges): (DataFrame, DataFrame, DataFrame) = {
+    val s = streamDedupServe(batch, storeBands, storeToks, prune, guard = None,
+      maxLocalEdges, pre)
     (s.verdicts, s.keptBands, s.keptToks)
   }
 
+  /** Default driver-finish bound of the streaming step's within-batch
+    * component graph, in edges ([[componentLabelsWithRounds]]). */
+  private[graft] val MaxLocalEdges = 100000
+
   /** [[streamDedupServe]]'s result: [[streamDedupStep]]'s three frames
-    * plus the store frames the step read — each a pinned slice when
-    * pruned under the cap, else the caller's frame as given. */
+    * plus the store frames the step read — each a pinned probe when
+    * pruned, else the caller's frame as given. */
   private[graft] final case class Served(verdicts: DataFrame,
       keptBands: DataFrame, keptToks: DataFrame,
       bandsRead: DataFrame, toksRead: DataFrame)
 
   /** [[streamDedupStep]] with ONE read per store table, shared with the
-    * caller's append guards (`StreamDedup.processBatch`). Pruned
-    * (`pruneCap` set) and with `guardIds` under the cap, each store table
-    * is read once and pinned:
+    * caller's append guards (`StreamDedup.processBatch`). Pruned, each
+    * store table is read once, by a pinned semi-join probe:
     *
-    *   - bands: `band IN batch keys OR doc_id IN guardIds`. The candidate
-    *     join reads it unchanged — a row outside the batch's band keys
-    *     matches no batch band — and the caller's (doc_id, band_idx)
-    *     guard reads its `doc_id IN guardIds` part;
-    *   - toks: `doc_id IN (candidate ids ∪ guardIds)`, read by the verify
-    *     join and by the caller's toks guard.
-    *
-    * `guardIds` None (past the cap) or a key set past `pruneCap` keeps
-    * that table's read lazy and unpruned. */
+    *   - bands: on the batch's (band_idx, band) pairs. The candidate join
+    *     reads it unchanged — a row outside those pairs matches no batch
+    *     band — and the caller's (doc_id, band_idx) guard reads it too: a
+    *     crashed attempt's band rows for a batch doc carry the same pairs;
+    *   - toks: on the candidate doc_ids, plus, with `guard` (the
+    *     [[graft.streaming.StreamStoreOps.KeyRange]] of the caller's batch
+    *     doc_ids), the batch's own doc_ids, read by the verify join and
+    *     by the caller's toks guard. The pushed range is the candidates'
+    *     range OR the guard range. */
   private[graft] def streamDedupServe(batch: DataFrame, storeBands: DataFrame,
-      storeToks: DataFrame, guardIds: Option[IndexedSeq[Long]],
-      pruneCap: Option[Int] = Some(StreamStoreOps.MaxPruneKeys),
-      pre: Option[(DataFrame, DataFrame)] = None): Served =
-    // Every pinned store read below executes inside the widened native-IN
-    // pushdown window (StreamStoreOps.withPushdownInWindow; its doc has
-    // the session-global caveat).
-    StreamStoreOps.withPushdownInWindow(batch.sparkSession) {
-      // The batch's band/token frames are pinned EAGERLY (one job each):
-      // the store join, the within-batch self-join, both verify joins and
-      // the kept frames re-read them (and CC rounds over a graph above the
-      // cap once per round), and re-hashing every shingle per read costs
-      // far more than the two materialization jobs. A caller that already
-      // holds them — the batch twin computes signatures ONCE for all four
-      // waves — passes them via `pre` and pays neither hash nor job.
-      val (bandsB, toksB) = pre.getOrElse((
-        minhashBands(batch).localCheckpoint(true),
-        batch.select(col("doc_id"),
-          array_distinct(split(col("text"), " ")).as("toks")).localCheckpoint(true)))
-      // Band keys are md5 strings, so a pushed range would span the
-      // keyspace — the win is the native IN-set, the empty-set
-      // short-circuit and the pre-join row cut.
-      val bandKeys = pruneCap.flatMap(StreamStoreOps.distinctKeys[String](bandsB, "band", _))
-      val bandsRead = StreamStoreOps.pinnedSlice(storeBands,
-        for (ks <- bandKeys; ids <- guardIds) yield
-          StreamStoreOps.isIn(col("band"), ks) || StreamStoreOps.isIn(col("doc_id"), ids))
-      // No distinct: a pair sharing k bands appears k ≤ 4 times, which
-      // the id collect (distinct on the driver) and the verify's min
-      // aggregate absorb, and a distinct costs an exchange job.
-      val storeCand0 = bandsRead.as("o")
-        .join(bandsB.as("n"),
-          col("o.band_idx") === col("n.band_idx") && col("o.band") === col("n.band") &&
-            col("o.doc_id") =!= col("n.doc_id"))
-        .select(col("o.doc_id").as("doc_a"), col("n.doc_id").as("doc_b"))
-      // Pruning needs the candidate ids on the driver, and the verify join
-      // reuses the frame — pin it once so the band join runs once, not
-      // twice (candidates are micro-batch-bounded: band-collision fan-in
-      // of one batch).
-      val storeCand = if (pruneCap.isDefined) storeCand0.localCheckpoint(true) else storeCand0
-      val candIds = pruneCap.flatMap(StreamStoreOps.distinctKeys[Long](storeCand, "doc_a", _))
-      val toksRead = StreamStoreOps.pinnedSlice(storeToks,
-        for (cs <- candIds; ids <- guardIds) yield
-          StreamStoreOps.isIn(col("doc_id"), (cs ++ ids).distinct))
-      // Pinned once: the survivors anti-join (the within-batch candidates
-      // and the component nodes) and the verdict join all read it, and
-      // unpinned each would re-run the verify join and the toks store scan.
-      // Bounded by the micro-batch: at most one row per batch doc, as are
-      // `survivors`, the component labels and the kept ids. All four are
-      // broadcast by hint: their pinned inputs carry no size estimate the
-      // planner trusts, and adaptive execution would otherwise shuffle
-      // both sides of each join and only then turn it into a broadcast —
-      // three jobs per join instead of one.
-      val storeMatch = broadcast(jaccardVerifyToks(storeCand, toksRead, toksB)
-        .groupBy(col("doc_b").as("doc_id"))
-        .agg(min(col("doc_a")).as("matched_old"))
-        .localCheckpoint(true))
-      val survivors = batch.select(col("doc_id"))
-        .join(storeMatch.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      val bandsR = bandsB.join(broadcast(survivors), "doc_id")
-      val withinCand = bandsR.as("a")
-        .join(bandsR.as("b"),
-          col("a.band_idx") === col("b.band_idx") && col("a.band") === col("b.band") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-      val withinPairs = jaccardVerifyToks(withinCand, toksB, toksB)
-      // Labels only (group_size is never read), finished on the driver when
-      // the within-batch graph fits under the same driver-collect cap.
-      val groups = componentLabelsWithRounds(survivors, withinPairs,
-        localMaxEdges = pruneCap.getOrElse(StreamStoreOps.MaxPruneKeys).toLong)._1
-      // kept: survived the store check AND is its component's representative.
-      // group_id is NULL exactly for store-dropped docs (not in `survivors`),
-      // so the conjunction below is never NULL: the left conjunct is false
-      // precisely when the right one is NULL.
-      val verdicts = batch.select(col("doc_id"), col("source"))
-        .join(storeMatch, Seq("doc_id"), "left")
-        .join(broadcast(groups), Seq("doc_id"), "left")
-        .select(col("doc_id"), col("source"),
-          (col("matched_old").isNull && col("group_id") === col("doc_id")).as("kept"),
-          coalesce(col("matched_old"),
-            when(col("group_id") =!= col("doc_id"), col("group_id"))).as("matched_old"))
-        .localCheckpoint(true)
-      val keptIds = broadcast(verdicts.filter(col("kept")).select(col("doc_id")))
-      Served(verdicts, bandsB.join(keptIds, "doc_id"), toksB.join(keptIds, "doc_id"),
-        bandsRead, toksRead)
+      storeToks: DataFrame, prune: Boolean,
+      guard: Option[StreamStoreOps.KeyRange],
+      maxLocalEdges: Int = MaxLocalEdges,
+      pre: Option[(DataFrame, DataFrame)] = None): Served = {
+    // The batch's band/token frames are pinned EAGERLY (one job each):
+    // the store join, the within-batch self-join, both verify joins and
+    // the kept frames re-read them (and CC rounds over a graph above the
+    // bound once per round), and re-hashing every shingle per read costs
+    // far more than the two materialization jobs. A caller that already
+    // holds them — the batch twin computes signatures ONCE for all four
+    // waves — passes them via `pre` and pays neither hash nor job.
+    val (bandsB, toksB) = pre.getOrElse((
+      minhashBands(batch).localCheckpoint(true),
+      batch.select(col("doc_id"),
+        array_distinct(split(col("text"), " ")).as("toks")).localCheckpoint(true)))
+    val bandsRead =
+      if (prune) StreamStoreOps.probe(storeBands, bandsB.select(col("band_idx"), col("band")))
+      else storeBands
+    // No distinct: a pair sharing k bands appears k ≤ 4 times, which
+    // the toks probe's semi-join and the verify's min aggregate absorb,
+    // and a distinct costs an exchange job.
+    val storeCand0 = bandsRead.as("o")
+      .join(bandsB.as("n"),
+        col("o.band_idx") === col("n.band_idx") && col("o.band") === col("n.band") &&
+          col("o.doc_id") =!= col("n.doc_id"))
+      .select(col("o.doc_id").as("doc_a"), col("n.doc_id").as("doc_b"))
+    // The toks probe needs the candidate ids, and the verify join reuses
+    // the frame — pin it once (observing its doc_id range) so the band
+    // join runs once, not twice (candidates are micro-batch-bounded:
+    // band-collision fan-in of one batch).
+    val (storeCand, toksRead) = if (!prune) (storeCand0, storeToks) else {
+      val (cand, candRange) = StreamStoreOps.pinRanged(storeCand0, "doc_a")
+      val candKeys = cand.select(col("doc_a").as("doc_id"))
+      (cand, StreamStoreOps.probe(storeToks,
+        guard.fold(candKeys)(_ => candKeys.union(toksB.select(col("doc_id")))),
+        candRange +: guard.toSeq: _*))
     }
+    // Pinned once: the survivors anti-join (the within-batch candidates
+    // and the component nodes) and the verdict join all read it, and
+    // unpinned each would re-run the verify join and the toks store scan.
+    // Bounded by the micro-batch: at most one row per batch doc, as are
+    // `survivors`, the component labels and the kept ids. All four are
+    // broadcast by hint: their pinned inputs carry no size estimate the
+    // planner trusts, and adaptive execution would otherwise shuffle
+    // both sides of each join and only then turn it into a broadcast —
+    // three jobs per join instead of one.
+    val storeMatch = broadcast(jaccardVerifyToks(storeCand, toksRead, toksB)
+      .groupBy(col("doc_b").as("doc_id"))
+      .agg(min(col("doc_a")).as("matched_old"))
+      .localCheckpoint(true))
+    val survivors = batch.select(col("doc_id"))
+      .join(storeMatch.select(col("doc_id")), Seq("doc_id"), "left_anti")
+    val bandsR = bandsB.join(broadcast(survivors), "doc_id")
+    val withinCand = bandsR.as("a")
+      .join(bandsR.as("b"),
+        col("a.band_idx") === col("b.band_idx") && col("a.band") === col("b.band") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+    val withinPairs = jaccardVerifyToks(withinCand, toksB, toksB)
+    // Labels only (group_size is never read), finished on the driver when
+    // the within-batch graph has at most `maxLocalEdges` edges.
+    val groups = componentLabelsWithRounds(survivors, withinPairs,
+      localMaxEdges = maxLocalEdges.toLong)._1
+    // kept: survived the store check AND is its component's representative.
+    // group_id is NULL exactly for store-dropped docs (not in `survivors`),
+    // so the conjunction below is never NULL: the left conjunct is false
+    // precisely when the right one is NULL.
+    val verdicts = batch.select(col("doc_id"), col("source"))
+      .join(storeMatch, Seq("doc_id"), "left")
+      .join(broadcast(groups), Seq("doc_id"), "left")
+      .select(col("doc_id"), col("source"),
+        (col("matched_old").isNull && col("group_id") === col("doc_id")).as("kept"),
+        coalesce(col("matched_old"),
+          when(col("group_id") =!= col("doc_id"), col("group_id"))).as("matched_old"))
+      .localCheckpoint(true)
+    val keptIds = broadcast(verdicts.filter(col("kept")).select(col("doc_id")))
+    Served(verdicts, bandsB.join(keptIds, "doc_id"), toksB.join(keptIds, "doc_id"),
+      bandsRead, toksRead)
+  }
 
   /** The oracled batch twin of the streaming dedup filter: the documents
     * table arrives in FOUR waves (src0-4, src5-9, src10-14, src15-19 —

@@ -31,7 +31,7 @@ private[graft] final case class StoreTable(suffix: String, ddl: Option[String],
   *     ([[resetStore]]) and the four-wave replay loop ([[replayWaves]]);
   *   - the one `foreachBatch` + `checkpointLocation` starter ([[start]]);
   *   - the ledger operators' prologue ([[decidedSplit]]: decided-set
-  *     slice, replay fast path, undecided-docs guard) and the thresholds
+  *     probe, replay fast path, undecided-docs guard) and the thresholds
   *     state read ([[thrState]]: ahead / prev-cur / recovering /
   *     inconsistent-store guards);
   *   - compaction of every store table ([[compactStoreTables]]: the
@@ -140,23 +140,24 @@ private[graft] trait StoreOperator {
   }
 
   /** The decided-set prologue of a ledger operator (`<prefix>_ledger`,
-    * keyed on doc_id, carrying batch_id). `batchD` is the collapsed,
-    * pinned batch. Left = the emission with nothing to compute: empty
-    * for an empty batch, the recorded rows for a committed one; Right =
-    * the batch's never-decided rows.
+    * keyed on doc_id, carrying batch_id). `batch` is the collapsed batch;
+    * it is pinned here. Left = the emission with nothing to compute:
+    * empty for an empty batch, the recorded rows for a committed one;
+    * Right = the batch's never-decided rows.
     *
-    * ONE pruned ledger read serves the replay detection and the fresh
-    * split (capped IN-list, [[StreamStoreOps.decidedSlice]]). Ledger rows
+    * ONE pinned ledger probe on the batch's doc_ids
+    * ([[StreamStoreOps.probe]], the batch's doc_id range observed by its
+    * pin) serves the replay detection and the fresh split. Ledger rows
     * for this batch_id mean the batch fully committed — but ONLY if every
     * batch doc is decided: a fresh checkpoint restarted against a used
     * store presents old batch ids with NEW docs, and silently re-emitting
     * history would swallow them, so that refuses. */
   protected def decidedSplit(spark: SparkSession, prefix: String,
-      batchD: DataFrame, batchId: Long): Either[DataFrame, DataFrame] = {
+      batch: DataFrame, batchId: Long): Either[DataFrame, DataFrame] = {
     val ledger = spark.table(tableName(prefix, "ledger"))
-    if (batchD.isEmpty) return Left(ledger.filter(lit(false)))
-    val decided = StreamStoreOps.decidedSlice(spark, ledger,
-      StreamStoreOps.distinctKeys[Long](batchD, "doc_id"))
+    val (batchD, ids) = StreamStoreOps.pinRanged(batch, "doc_id")
+    if (ids.isEmpty) return Left(ledger.filter(lit(false)))
+    val decided = StreamStoreOps.probe(ledger, batchD.select(col("doc_id")), ids)
     if (decided.filter(col("batch_id") === batchId).limit(1).count() > 0) {
       val undecided = batchD
         .join(decided.select(col("doc_id")), Seq("doc_id"), "left_anti")

@@ -46,12 +46,13 @@ import graft.ext.Similarity
   * `annServeStream` restart contract.
   *
   * 100 TB posture: per batch the work is O(|batch| · (k·d + M·K·d))
-  * map-side arithmetic (model enters as plan literals), one capped
-  * vec_id IN-list probe of the store (bucket/row-group pruned — never
-  * a full scan below the cap), and a bucket-aligned append; the
-  * standing corpus is never scanned, shuffled, or rewritten on the hot
-  * path. [[compactStore]] owns the append file pile and rescales the
-  * bucket count with store bytes, the same maintenance contract as
+  * map-side arithmetic (model enters as plan literals), one broadcast
+  * semi-join probe of the store's (vec_id, cell) columns on the batch's
+  * vec_ids (the batch's vec_id range pushed to the scan, so only row
+  * groups overlapping it are read), and a bucket-aligned append; the
+  * standing corpus is never shuffled or rewritten on the hot path.
+  * [[compactStore]] owns the append file pile and rescales the bucket
+  * count with store bytes, the same maintenance contract as
   * [[StreamDedup]]. */
 object StreamAnnIndex extends StoreOperator {
   protected val opName = "streamingIndexAdd"
@@ -61,9 +62,9 @@ object StreamAnnIndex extends StoreOperator {
   override protected val sideTables = Seq("centroids", "codebooks")
 
   /** One micro-batch: encode against the frozen model, append the
-    * not-yet-present rows (anti-joined on vec_id, store side pruned by
-    * the batch's own capped id list), and return the batch's ack frame
-    * (vec_id, cell, batch_id) — deterministic per batch, so replays
+    * not-yet-present rows (anti-joined on vec_id against one pinned
+    * probe of the store on the batch's own ids), and return the batch's
+    * ack frame (vec_id, cell, batch_id) — deterministic per batch, so replays
     * re-emit it bit-identically (see the object doc's crash-window
     * analysis). The acked cell is the cell the vector is SERVED from:
     * for a vec_id the insert-once guard found already standing — e.g.
@@ -77,42 +78,40 @@ object StreamAnnIndex extends StoreOperator {
   private[graft] def processBatch(spark: SparkSession, prefix: String,
       batch: DataFrame, batchId: Long): DataFrame = {
     val (cents, cb) = Similarity.loadIvfPqModel(spark, prefix)
-    StreamStoreOps.withPushdownInWindow(spark) {
-      val encoded = Similarity.ivfPqEncode(StoreOperator.collapse(
-          batch.select(col("vec_id"), col("embedding")), "vec_id", col("embedding")),
-        cents, cb).localCheckpoint(true)
-      // store-side read pruned by the batch's own ids (capped — over
-      // the cap the full scan is the cheaper plan anyway); restricting
-      // the anti-join's right side to left-side keys is a no-op
-      val batchIds = StreamStoreOps.distinctKeys[Long](encoded, "vec_id")
-      val slice = StreamStoreOps.keySlice(
-        spark.table(tableName(prefix, "codes"))
-          .select(col("vec_id"), col("cell").as("standing_cell")),
-        "vec_id", batchIds)
-      val fresh = encoded
-        .join(slice, Seq("vec_id"), "left_anti")
-        .select(col("vec_id"), col("cell"), col("codes"))
-      appendInOrder(spark, prefix, Some(fresh))
-      // Append-revision stamp: blue-green serve loops key their codes
-      // re-list on (rebuild id, store rev), so new vectors become
-      // servable at the next serve-batch boundary WITHOUT a restart
-      // (Similarity.codesVersion). Stamped on every non-empty batch —
-      // not just fresh appends — so the crash window "files landed,
-      // stamp didn't" heals on the batch's replay instead of leaving
-      // the rows invisible to running serve fleets indefinitely.
-      if (batchIds.forall(_.nonEmpty)) bumpRev(spark, prefix)
-      // Ack cell = the cell the vector is SERVED from: the STANDING
-      // row's cell when the insert-once guard kept it (a re-submitted
-      // vec_id with a changed embedding must not be acked into a cell
-      // the index never stored), the fresh encoding's otherwise. Read
-      // after the append, both branches agree for this batch's fresh
-      // rows, so the frame stays deterministic under replay.
-      encoded.select(col("vec_id"), col("cell"))
-        .join(slice, Seq("vec_id"), "left")
-        .select(col("vec_id"),
-          coalesce(col("standing_cell"), col("cell")).as("cell"))
-        .withColumn("batch_id", lit(batchId))
-    }
+    // the pin observes the batch's vec_id range for the store probe
+    val (encoded, idRange) = StreamStoreOps.pinRanged(Similarity.ivfPqEncode(
+        StoreOperator.collapse(batch.select(col("vec_id"), col("embedding")),
+          "vec_id", col("embedding")),
+      cents, cb), "vec_id")
+    // the standing rows of the batch's vec_ids, one pinned probe;
+    // restricting the anti-join's right side to left-side keys is a no-op
+    val standing = StreamStoreOps.probe(
+      spark.table(tableName(prefix, "codes"))
+        .select(col("vec_id"), col("cell").as("standing_cell")),
+      encoded.select(col("vec_id")), idRange)
+    val fresh = encoded
+      .join(standing, Seq("vec_id"), "left_anti")
+      .select(col("vec_id"), col("cell"), col("codes"))
+    appendInOrder(spark, prefix, Some(fresh))
+    // Append-revision stamp: blue-green serve loops key their codes
+    // re-list on (rebuild id, store rev), so new vectors become
+    // servable at the next serve-batch boundary WITHOUT a restart
+    // (Similarity.codesVersion). Stamped on every non-empty batch —
+    // not just fresh appends — so the crash window "files landed,
+    // stamp didn't" heals on the batch's replay instead of leaving
+    // the rows invisible to running serve fleets indefinitely.
+    if (!idRange.isEmpty) bumpRev(spark, prefix)
+    // Ack cell = the cell the vector is SERVED from: the STANDING
+    // row's cell when the insert-once guard kept it (a re-submitted
+    // vec_id with a changed embedding must not be acked into a cell
+    // the index never stored), the fresh encoding's otherwise. The
+    // probe was pinned before the append, so the frame is deterministic
+    // under replay.
+    encoded.select(col("vec_id"), col("cell"))
+      .join(standing, Seq("vec_id"), "left")
+      .select(col("vec_id"),
+        coalesce(col("standing_cell"), col("cell")).as("cell"))
+      .withColumn("batch_id", lit(batchId))
   }
 
   private def bumpRev(spark: SparkSession, prefix: String): Unit =

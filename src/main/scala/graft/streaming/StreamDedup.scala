@@ -26,15 +26,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     corpus (the round-14 scale residual, SCALING.md).
   *   - `<prefix>_toks`      (doc_id, toks) — distinct-token sets for
   *     exact-Jaccard verification; only candidate-matched doc_ids are
-  *     ever read. BUCKETED+SORTED on doc_id, so the pushed candidate
-  *     id set prunes whole buckets and row groups, and the verify
-  *     join's store side arrives pre-partitioned. Old document BODIES
+  *     ever joined. BUCKETED+SORTED on doc_id, so the pushed candidate
+  *     id range skips the row groups outside it. Old document BODIES
   *     are never stored or read.
   *   - `<prefix>_decisions` (doc_id, source, kept, matched_old,
   *     batch_id) — the decide-exactly-once ledger: docs already present
   *     are never re-processed, and a replayed batch re-emits their
   *     recorded verdicts unchanged. BUCKETED+SORTED on doc_id like
-  *     toks (the decide-split probe is a doc_id IN-list).
+  *     toks (the decide-split probe pushes the batch's doc_id range).
   *
   * Exactly-once contract (same posture as the lake fold's anti-join
   * idiom, `sources/LakeFold.scala`): writes land store-first,
@@ -59,15 +58,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     the contract checkpoint recovery already imposes on every
   *     foreachBatch writer.
   *
-  * A micro-batch reads each store table once: the ledger by the batch's
-  * doc_ids, bands by the batch's band keys OR doc_ids, toks by the
-  * candidate OR batch doc_ids. Each read is pinned once and serves both
-  * the dedup step and the append guards. A frame is pinned if and only
-  * if its plan reads a store table: every frame an append's guard reads
-  * is frozen before the first append, and no insert plan reads a store
-  * table. Past the key cap the reads stay lazy (a pin would copy a
-  * corpus-sized table), and the guarded frames that read them are
-  * pinned instead.
+  * A micro-batch reads each store table once, by one pinned broadcast
+  * semi-join probe ([[StreamStoreOps.probe]]) on a batch-bounded key
+  * frame: the ledger on the batch's doc_ids, bands on the batch's
+  * (band_idx, band) pairs, toks on the candidate and batch doc_ids. The
+  * doc_id probes also push the [min, max] range of their keys, observed
+  * by the key frame's own pin. Each probe serves both the dedup step and
+  * the append guards, and no insert plan reads a store table. The probe
+  * never plans a literal IN-list: its planning time does not grow with
+  * the batch, and it needs no key collect and no cap.
   *
   * Verdict rows: (doc_id, source, kept, matched_old, batch_id) —
   * matched_old is the smallest verified kept-corpus match (store drop),
@@ -83,9 +82,9 @@ object StreamDedup extends StoreOperator {
     * defaults true — a single-column `band` bucket layout reads
     * "Bucketed: false (disabled by query planner)" and shuffles the
     * store anyway). Bucket PRUNING is single-column-only and therefore
-    * forgone; what the batch's band IN-list still gets is page/
-    * dictionary skipping inside each sorted bucket file (streamDedupStep
-    * pushes the key set natively). 16 fits the test corpus; a
+    * forgone, and the md5 band keys span their keyspace, so the batch's
+    * bands probe pushes no range either: the semi-join drops the
+    * non-matching rows after the scan. 16 fits the test corpus; a
     * corpus-sized deployment scales it with store bytes (buckets ≈
     * store size / target file size) so each bucket file stays
     * right-sized while the FILE COUNT stays constant — the per-batch
@@ -137,8 +136,8 @@ object StreamDedup extends StoreOperator {
     * micro-batch's candidate join reads a bounded file set and shuffles
     * only the batch side, doc_id-keyed joins (the verify join, the
     * append guards) find the store side pre-partitioned, and the pushed
-    * doc_id IN-lists prune whole BUCKETS (single-column bucket pruning)
-    * on top of the row-group skips the within-bucket sort provides.
+    * doc_id ranges skip the row groups the within-bucket sort keeps
+    * outside them.
     * `d_dedup_pipeline_bucketed` proves bucketing cannot change any
     * answer; a store created before this DDL (flat toks/decisions from
     * rounds <= 16) keeps working — appends and compaction follow the
@@ -159,76 +158,62 @@ object StreamDedup extends StoreOperator {
     * (each guarded — see the object doc's crash-window analysis), and
     * return the batch's full verdict frame (fresh decisions plus replayed
     * ones, built only from blocks pinned before the appends — safe to
-    * hand to any sink after them). Each store table is read once
-    * (pruned under the cap) and each read is pinned once for all its
-    * consumers; a frame is pinned only where its plan reads a store
-    * table. Exposed package-private so specs can drive replay/crash
-    * windows without a running stream. */
+    * hand to any sink after them). Each store table is read once, by one
+    * pinned semi-join probe ([[StreamStoreOps.probe]]) that serves all
+    * its consumers, so no insert plan reads a store table. Exposed
+    * package-private so specs can drive replay/crash windows without a
+    * running stream. */
   private[graft] def processBatch(spark: SparkSession, prefix: String,
       batch: DataFrame, batchId: Long): DataFrame = {
     ensureStore(spark, prefix)
-    // The whole batch evaluates inside the widened native-IN pushdown
-    // window (StreamStoreOps doc): the decide-split and store-read
-    // IN-lists routinely exceed parquet's 10-key default, above which
-    // the pushed predicate degrades to a min..max range that skips
-    // nothing for scattered ids — every eager evaluation (checkpoints,
-    // inserts) happens in here; streamDedupServe's own nested window is
-    // harmless.
-    StreamStoreOps.withPushdownInWindow(spark) {
     // Within-batch doc_id collapse (StoreOperator.collapse): without it
     // a redelivered doc flows through twice — duplicate verdict
     // emissions, duplicate ledger/toks rows multiplying every later
     // replay join, and (for same-id-different-text redelivery) a
     // minhash signature silently merged from both texts. One
-    // deterministic winner (smallest (source, text)) pins replay.
-    val batch1 = StoreOperator.collapse(batch, "doc_id", col("source"), col("text"))
-      .localCheckpoint(true)
-    // The batch's doc_ids (one bounded collect; None past the cap) prune
-    // every store read: the ledger here, bands and toks in
-    // streamDedupServe. Restricting either side of a doc_id equi-/anti-
-    // join to the batch's ids is a no-op, and the store tables grow with
-    // the TOTAL corpus while the batch stays micro-batch-sized.
-    val batchIds = StreamStoreOps.distinctKeys[Long](batch1, "doc_id")
-    val decided = StreamStoreOps.decidedSlice(
-      spark, spark.table(tableName(prefix, "decisions")), batchIds)
+    // deterministic winner (smallest (source, text)) pins replay. The
+    // pin also observes the batch's doc_id range, which every doc_id
+    // probe below pushes to its store scan.
+    val (batch1, batchRange) = StreamStoreOps.pinRanged(
+      StoreOperator.collapse(batch, "doc_id", col("source"), col("text")), "doc_id")
     // The decide-exactly-once split, frozen BEFORE any append: the
-    // appends mutate the ledger `decided` reads, and a lazy evaluation
-    // after the decisions append would count the batch's own fresh docs
-    // as replayed. Under the cap `decided` is the pinned slice of exactly
-    // this batch's recorded rows, so it IS the replayed set; past it the
-    // lazy ledger is joined to the batch's ids and pinned (`frozen`).
-    // One pin of `batch1 LEFT JOIN decided` would cost as many jobs, but
-    // its join size estimate (a product) would reach every frame derived
-    // from `fresh`, and the planner would shuffle joins it now broadcasts.
-    val replayed = StreamStoreOps.frozen(
-      batchIds.fold(decided.join(batch1.select(col("doc_id")), Seq("doc_id")))(_ => decided)
-        .select(col("doc_id"), col("source"), col("kept"), col("matched_old"), col("batch_id")),
-      storeTableNames(prefix))
+    // appends mutate the ledger, and a lazy evaluation after the
+    // decisions append would count the batch's own fresh docs as
+    // replayed. The probe pins exactly this batch's recorded rows, so it
+    // IS the replayed set. `fresh` is batch1 anti-join that set rather
+    // than one pin of `batch1 LEFT JOIN decided`: a left join's size
+    // estimate (a product) would reach every frame derived from `fresh`,
+    // and the planner would shuffle joins it now broadcasts.
+    val decided = StreamStoreOps.probe(spark.table(tableName(prefix, "decisions")),
+      batch1.select(col("doc_id")), batchRange)
+    val replayed = decided
+      .select(col("doc_id"), col("source"), col("kept"), col("matched_old"), col("batch_id"))
     val fresh = batch1
       .join(decided.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .localCheckpoint(true)
-    // One pinned read of bands and of toks serves the step's joins and
-    // the append guards below (streamDedupServe's doc has the slices).
+    // One pinned probe of bands and of toks serves the step's joins and
+    // the append guards below (streamDedupServe's doc has the probes).
     val step = graft.ext.Dedup.streamDedupServe(fresh,
       spark.table(tableName(prefix, "bands")), spark.table(tableName(prefix, "toks")),
-      batchIds)
-    // Guarded appends. Each guard reads the `doc_id IN batch ids` part of
-    // the step's store read — restricting it to the batch's ids is a
-    // no-op on the anti-join, whose left side carries only batch docs.
-    // The bands guard anti-joins on (doc_id, band_idx), NOT doc_id
-    // alone: a doc's 4 band rows land across multiple bucket FILES, and
-    // a crash mid job-commit can persist some files without the rest —
-    // a doc-granular guard would then see the doc "present" on replay
-    // and permanently drop its missing bands (future near-duplicates
-    // colliding only on those bands would be kept). toks/decisions are
-    // one row per doc and keep the doc-granular guard.
+      prune = true, guard = Some(batchRange))
+    // Guarded appends, each anti-joined against the step's pinned probe
+    // of its table: the bands probe holds every stored row carrying one
+    // of the batch's (band_idx, band) pairs, among them any crashed
+    // attempt's rows for a batch doc (same text, same pairs); the toks
+    // probe holds the batch's own doc_ids. The bands guard anti-joins on
+    // (doc_id, band_idx), NOT doc_id alone: a doc's 4 band rows land
+    // across multiple bucket FILES, and a crash mid job-commit can
+    // persist some files without the rest — a doc-granular guard would
+    // then see the doc "present" on replay and permanently drop its
+    // missing bands (future near-duplicates colliding only on those
+    // bands would be kept). toks/decisions are one row per doc and keep
+    // the doc-granular guard.
     val newBands = step.keptBands
-      .join(StreamStoreOps.keySlice(step.bandsRead.select(col("doc_id"), col("band_idx")),
-        "doc_id", batchIds), Seq("doc_id", "band_idx"), "left_anti")
+      .join(step.bandsRead.select(col("doc_id"), col("band_idx")),
+        Seq("doc_id", "band_idx"), "left_anti")
       .select(col("doc_id"), col("band_idx"), col("band"))
     val newToks = step.keptToks
-      .join(StreamStoreOps.keySlice(step.toksRead.select(col("doc_id")),
-        "doc_id", batchIds), Seq("doc_id"), "left_anti")
+      .join(step.toksRead.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("toks"))
     // No guard anti-join on the decisions — it is provably redundant:
     // freshDecisions derives from `fresh` = batch1 ∖ decided, with
@@ -240,16 +225,12 @@ object StreamDedup extends StoreOperator {
       .withColumn("batch_id", lit(batchId))
       .select(col("doc_id"), col("source"), col("kept"),
         col("matched_old"), col("batch_id"))
-    // Under the cap the three frames read only pinned blocks, so each
-    // anti-join runs inside its insert and no insert plan reads a store
-    // table; past it a guard reads a lazy store table, and appendInOrder
-    // pins that frame before the first append (StreamStoreOps.frozen).
-    // Each append follows its table's LIVE bucket layout (the counts
-    // drift upward across compactStore rebucketings).
+    // The three frames read only pinned blocks, so each anti-join runs
+    // inside its insert. Each append follows its table's LIVE bucket
+    // layout (the counts drift upward across compactStore rebucketings).
     appendInOrder(spark, prefix, Some(newBands), Some(newToks),
       Some(freshDecisions))
     freshDecisions.union(replayed)
-    }
   }
 
   /** Small-file compaction of the three store tables — the maintenance

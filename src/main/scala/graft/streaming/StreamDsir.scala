@@ -131,12 +131,12 @@ object StreamDsir extends StoreOperator {
         batch.select(col("doc_id"), col("source"), col("text")),
         "doc_id", col("source"), col("text"))
       .filter(!col("source").isin(targetSources: _*))
-    val batchD = TextAnalysis.dsirScore(pool, spark.table(tableName(prefix, "model")),
+    val scored = TextAnalysis.dsirScore(pool, spark.table(tableName(prefix, "model")),
         seed, buckets)
-      .localCheckpoint(true)
-    // fresh pool docs (never decided); crash-residue scores rows of THIS
-    // batch are excluded from every old-side read below
-    val freshK = decidedSplit(spark, prefix, batchD, batchId) match {
+    // fresh pool docs (never decided; decidedSplit pins the scored
+    // batch); crash-residue scores rows of THIS batch are excluded from
+    // every old-side read below
+    val freshK = decidedSplit(spark, prefix, scored, batchId) match {
       case Left(emission) => return emission
       case Right(f) => f.localCheckpoint(true)
     }

@@ -1,41 +1,57 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
 /** Store-read and store-append primitives shared by the streaming
   * store operators ([[StoreOperator]]) — one source of truth for the
-  * capped one-job key collect, the key-slice prune, the native-IN
-  * pushdown window, the pin rule and the bucket-aligned append, so a
-  * fix to any of them cannot silently diverge between the operators. */
+  * store probe, the pin rule and the bucket-aligned append, so a fix to
+  * any of them cannot silently diverge between the operators. */
 private[graft] object StreamStoreOps {
 
-  /** Cap on any probe-side key collect: above it, the unpruned scan is
-    * the cheaper plan anyway. */
-  val MaxPruneKeys = 100000
-
-  /** The distinct rows of `df`, collected by ONE result job (after any
-    * shuffle stages of `df`'s own plan) with the distinct done on the
-    * driver; None when there are more than `cap`. Each task ships at most
-    * `cap + 1` distinct rows, so the driver holds at most partitions ×
-    * (cap + 1) — a `distinct()` before the collect would cost an exchange
-    * job, and a `limit` collect scans partitions in several jobs. */
-  def distinctUpTo(df: DataFrame, cap: Long): Option[IndexedSeq[Row]] = {
-    val shipped = df.mapPartitions { rows =>
-      val seen = scala.collection.mutable.HashSet.empty[Row]
-      while (rows.hasNext && seen.size <= cap) seen += rows.next()
-      seen.iterator
-    }(Encoders.row(df.schema)).collect()
-    Some(shipped.distinct.toIndexedSeq).filter(_.length <= cap)
+  /** The closed range [lo, hi] of a Long key column; `lo > hi` is the
+    * range of a frame with no rows ([[KeyRange.Empty]]). */
+  final case class KeyRange(lo: Long, hi: Long) {
+    def isEmpty: Boolean = lo > hi
+    /** `c` inside the range: two literals a parquet scan pushes and
+      * checks against row-group statistics; plain false when empty. */
+    def covers(c: Column): Column = if (isEmpty) lit(false) else c.between(lo, hi)
+  }
+  object KeyRange {
+    val Empty: KeyRange = KeyRange(Long.MaxValue, Long.MinValue)
   }
 
-  /** The distinct `key` values of `df` for a store-side prune
-    * ([[distinctUpTo]]); None past `cap` — there [[keySlice]] keeps the
-    * unpruned scan, the cheaper plan anyway. */
-  def distinctKeys[T](df: DataFrame, key: String,
-      cap: Long = MaxPruneKeys): Option[IndexedSeq[T]] =
-    distinctUpTo(df.select(col(key)), cap).map(_.map(_.getAs[T](0)))
+  /** `df` pinned (eager localCheckpoint) together with the [[KeyRange]]
+    * of its Long column `key`. The range is a `Dataset.observe` metric of
+    * the pin's own job, read back from that query when the pin returns:
+    * no extra job and no listener wait. */
+  def pinRanged(df: DataFrame, key: String): (DataFrame, KeyRange) = {
+    val observed = df.observe("graft_key_range",
+      min(col(key)).cast("long"), max(col(key)).cast("long"))
+    val pinned = observed.localCheckpoint(true)
+    val row = observed.queryExecution.observedMetrics("graft_key_range")
+    (pinned, if (row.isNullAt(0)) KeyRange.Empty else KeyRange(row.getLong(0), row.getLong(1)))
+  }
+
+  /** THE store probe of every streaming operator (ledger splits, append
+    * guards, candidate and verify reads): the rows of `store` whose
+    * `keys` columns match a row of the pinned, batch-bounded `keys`
+    * frame, as `store ⋉ broadcast(keys)`, pinned (eager localCheckpoint)
+    * for the batch's several consumers. The store grows with the corpus
+    * while the keys stay micro-batch-sized, so restricting the store
+    * side of a key-equi/anti-join to the batch's own keys is a no-op on
+    * that join. `ranges` (each the [[KeyRange]] of a part of the keys,
+    * on `keys`' first column) are pushed to the scan before the join as
+    * an OR of two-literal ranges, so a key-sorted store skips the row
+    * groups outside them; ranges that are all empty read nothing. Unlike
+    * a literal IN-list, the plan does not grow with the key count. */
+  def probe(store: DataFrame, keys: DataFrame, ranges: KeyRange*): DataFrame = {
+    val on = keys.columns.toSeq
+    val ranged = ranges.map(_.covers(col(on.head))).reduceOption(_ || _)
+      .fold(store)(store.filter)
+    ranged.join(broadcast(keys), on, "left_semi").localCheckpoint(true)
+  }
 
   /** A store table's LIVE catalog bucket spec (None: flat). It drifts
     * upward across compaction rebucketings, so appends and compaction
@@ -43,57 +59,6 @@ private[graft] object StreamStoreOps {
   def liveBucketSpec(spark: SparkSession, table: String)
       : Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] =
     graft.sources.TableOps.catalogMeta(spark, table).bucketSpec
-
-  /** Run `body` with the parquet native-IN pushdown window widened to
-    * 1000 keys: parquet receives an IN-list as a real In predicate only
-    * up to `spark.sql.parquet.pushdown.inFilterThreshold` values
-    * (default 10); bigger lists collapse to a min..max range, which
-    * skips nothing for uniform hash keys and only coarsely for doc
-    * ids. Raised, the key SET reaches row-group dictionaries and page
-    * indexes. CONCURRENCY CAVEAT: the conf is SESSION-global — the
-    * caller is assumed to own the SparkSession for the duration (true
-    * of every foreachBatch serve path: one batch at a time). Two
-    * concurrent streams sharing a session would see each other's
-    * threshold; give each its own `SparkSession.newSession()` instead. */
-  def withPushdownInWindow[T](spark: SparkSession)(body: => T): T = {
-    val inKey = "spark.sql.parquet.pushdown.inFilterThreshold"
-    val saved = spark.conf.get(inKey)
-    spark.conf.set(inKey, 1000)
-    try body finally spark.conf.set(inKey, saved)
-  }
-
-  /** `c IN keys`; an empty list is plain false, which the optimizer
-    * turns into an empty relation with no scan. */
-  def isIn[T](c: Column, keys: Seq[T]): Column =
-    if (keys.isEmpty) lit(false) else c.isin(keys: _*)
-
-  /** Capped key-slice prune — THE store-read shape of every streaming
-    * operator here (decide splits, append guards, ack joins): the store
-    * grows with the corpus while the batch stays micro-batch-sized, so
-    * restricting the store side of a key-equi/anti-join to the batch's
-    * own keys is a no-op on the join and turns the read into a pushed
-    * IN-list (bucket/row-group pruned under [[withPushdownInWindow]]).
-    * No keys → empty slice; None (past the cap, [[distinctKeys]]) → the
-    * unpruned frame (the full scan is the cheaper plan anyway). One
-    * definition so a cap/semantics fix cannot silently diverge between
-    * operators. */
-  def keySlice[T](df: DataFrame, key: String, keys: Option[Seq[T]]): DataFrame =
-    keys.fold(df)(ks => df.filter(isIn(col(key), ks)))
-
-  /** A store read filtered by `pred` and pinned once (eager
-    * localCheckpoint) for the batch's several consumers; None (a key set
-    * past the cap) keeps the unpruned read LAZY — a localCheckpoint would
-    * pin the entire corpus-sized table to executor storage. */
-  def pinnedSlice(df: DataFrame, pred: Option[Column]): DataFrame =
-    pred.fold(df)(p => df.filter(p).localCheckpoint(true))
-
-  /** The decided-set slice of a change ledger: [[pinnedSlice]] on the
-    * batch's doc_ids, pushed natively via [[withPushdownInWindow]]. */
-  def decidedSlice(spark: SparkSession, ledger: DataFrame,
-      batchIds: Option[Seq[Long]]): DataFrame =
-    withPushdownInWindow(spark) {
-      pinnedSlice(ledger, batchIds.map(isIn(col("doc_id"), _)))
-    }
 
   /** `df`, pinned (eager localCheckpoint) if and only if its plan reads
     * one of `tables` — the rule for every frame a store append writes
@@ -113,29 +78,38 @@ private[graft] object StreamStoreOps {
   }
 
   /** Bucket-layout-aligned append shared by every store-backed streaming
-    * operator ([[StoreOperator.appendInOrder]]): repartition on the
-    * table's LIVE bucket columns/count (it drifts upward across
-    * compaction rebucketings) so each task carries exactly one bucket
-    * id — an append adds at most one file per NON-EMPTY bucket instead
-    * of tasks × buckets; a flat legacy table keeps the batch-sized
-    * sorted single-file append. The bucketed writer enforces the
-    * catalog sort spec per bucket file, so both layouts stay
-    * stats-tight on the probe key. Deliberate trade-off vs the flat
-    * layout's one file per append: a micro-batch spread across B
-    * buckets writes up to min(|batch|, B) small files per table, so
-    * the inter-compaction file pile grows B× faster — the price of
-    * the Exchange-free store joins and bucket-pruned probes the
-    * layout buys; the compaction cadence owns the pile,
-    * and at deployment scale batches outweigh bucket counts, amortizing
-    * the per-file cost back out. */
+    * operator ([[StoreOperator.appendInOrder]]): hash-repartition on the
+    * table's LIVE bucket columns (the count drifts upward across
+    * compaction rebucketings) into [[writeTasks]] tasks, a divisor of the
+    * bucket count. The bucket id is pmod(h, B) and the task is pmod(h, t);
+    * for t dividing B, pmod(h, B) mod t = pmod(h, t), so each bucket id
+    * lands in exactly one task and an append adds at most one file per
+    * NON-EMPTY bucket, from B/t times fewer tasks than one per bucket.
+    * A flat legacy
+    * table keeps the batch-sized sorted single-file append. The bucketed
+    * writer enforces the catalog sort spec per bucket file, so both
+    * layouts stay stats-tight on the probe key. Deliberate trade-off vs
+    * the flat layout's one file per append: a micro-batch spread across
+    * B buckets writes up to min(|batch|, B) small files per table, so the
+    * inter-compaction file pile grows B× faster — the price of the
+    * Exchange-free store joins the layout buys; the compaction cadence
+    * owns the pile, and at deployment scale batches outweigh bucket
+    * counts, amortizing the per-file cost back out. */
   def appendToStore(spark: SparkSession, table: String,
       df: DataFrame, sortCols: Seq[String]): Unit = {
     val laid = liveBucketSpec(spark, table) match {
       case Some(s) =>
-        df.repartition(s.numBuckets, s.bucketColumnNames.map(col): _*)
+        df.repartition(writeTasks(spark, s.numBuckets), s.bucketColumnNames.map(col): _*)
       case None =>
         df.coalesce(1).sortWithinPartitions(sortCols.head, sortCols.tail: _*)
     }
     laid.write.insertInto(table)
+  }
+
+  /** Write tasks of a bucketed append: the largest divisor of
+    * `numBuckets` that is at most `spark.sql.shuffle.partitions`. */
+  private def writeTasks(spark: SparkSession, numBuckets: Int): Int = {
+    val cap = spark.sessionState.conf.numShufflePartitions
+    (1 to numBuckets).filter(d => numBuckets % d == 0 && d <= cap).max
   }
 }

@@ -135,9 +135,9 @@ private[graft] abstract class ThresholdMixer extends StoreOperator {
     // an at-least-once redelivery must recompute the same totals.
     val prepared = batch.select(
       Seq(col("doc_id"), col("source")) ++ weightExpr.map(_.as("tok")): _*)
-    val batchD = StoreOperator.collapse(prepared, "doc_id",
-      prepared.columns.tail.map(col).toSeq: _*).localCheckpoint(true)
-    val fresh = decidedSplit(spark, prefix, batchD, batchId) match {
+    val collapsed = StoreOperator.collapse(prepared, "doc_id",
+      prepared.columns.tail.map(col).toSeq: _*)
+    val fresh = decidedSplit(spark, prefix, collapsed, batchId) match {
       case Left(emission) => return emission
       case Right(f) => f
     }

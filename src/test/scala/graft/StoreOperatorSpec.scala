@@ -246,4 +246,51 @@ class StoreOperatorSpec extends SparkSpec {
       }
     }
   }
+
+  test("a bucketed append writes at most one file per bucket id, in the largest bucket-count divisor of tasks") {
+    val t = "so_bucket_append"
+    graft.sources.TableOps.dropWithLocation(spark, t)
+    spark.sql(s"CREATE TABLE $t (doc_id BIGINT, v STRING) USING parquet " +
+      "CLUSTERED BY (doc_id) SORTED BY (doc_id) INTO 16 BUCKETS")
+    val dir = new org.apache.hadoop.fs.Path(
+      graft.sources.TableOps.catalogMeta(spark, t).location)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files = fs.listStatus(dir).map(_.getPath.getName)
+      .filter(n => !n.startsWith("_") && !n.startsWith(".")).toSet
+    val sc = spark.sparkContext
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    // shuffle partitions → the largest divisor of 16 at most that many
+    try Seq(6 -> 4, 3 -> 2, 16 -> 16, 40 -> 16).zipWithIndex.foreach {
+      case ((partitions, want), i) =>
+        spark.conf.set(key, partitions.toString)
+        val rows = spark.range(i * 1000L, i * 1000L + 400L)
+          .select(col("id").as("doc_id"), col("id").cast("string").as("v"))
+        val before = files
+        val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]
+        val l = new org.apache.spark.scheduler.SparkListener {
+          override def onStageCompleted(
+              e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+            stages.add((e.stageInfo.stageId, e.stageInfo.numTasks)): Unit
+        }
+        org.apache.spark.GraftListenerBus.drain(sc)
+        sc.addSparkListener(l)
+        try {
+          StreamStoreOps.appendToStore(spark, t, rows, Seq("doc_id"))
+          org.apache.spark.GraftListenerBus.drain(sc)
+        } finally sc.removeSparkListener(l)
+        val added = (files -- before).toSeq
+        val buckets = added.map(n => org.apache.spark.sql.execution.datasources
+          .BucketingUtils.getBucketId(n).getOrElse(fail(s"no bucket id in $n")))
+        assert(buckets.size == buckets.distinct.size,
+          s"$partitions partitions: an append wrote two files for one bucket: ${added.sorted}")
+        assert(buckets.size == 16, s"$partitions partitions: 400 rows filled ${buckets.size} of 16 buckets")
+        // the write stage is the append's last stage
+        val write = stages.asScala.maxBy(_._1)
+        assert(write._2 == want,
+          s"$partitions partitions: write stage ran ${write._2} tasks, want $want")
+    } finally spark.conf.set(key, saved)
+    assert(spark.table(t).count() == 1600L)
+    graft.sources.TableOps.dropWithLocation(spark, t)
+  }
 }

@@ -202,12 +202,11 @@ class StreamDedupSpec extends SparkSpec {
     assert(ktQ.select(col("doc_id")).collect().toSet ==
       ktP.select(col("doc_id")).collect().toSet,
       "pruning changed the kept toks rows")
-    // tiny cap: every key list overflows maxPruneKeys → unpruned fall-back,
-    // and the within-batch graph (> 1 edge) takes star contraction instead
-    // of the driver finish
+    // tiny driver-finish bound: the within-batch graph (> 1 edge) takes
+    // star contraction instead of the driver finish
     val (vCap, kbC, ktC) = ext.Dedup.streamDedupStep(
       batch, spark.table("sd_pr_bands"), spark.table("sd_pr_toks"),
-      prune = true, maxPruneKeys = 1)
+      prune = true, maxLocalEdges = 1)
     assert(norm(vCap) == norm(vPlain), "cap fall-back diverged")
     val batchIds = batch.select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(norm(vPlain).count(v => !v._2 && batchIds.contains(v._3)) >= 2,
@@ -250,40 +249,51 @@ class StreamDedupSpec extends SparkSpec {
     StreamDedup.processBatch(spark, "sd_ps",
       docs.filter(col("src_num") < 10).drop("src_num"), 0L).count(): Unit
     // capture EVERY plan the serve batch executes (localCheckpoint pins,
-    // anti-join guards, inserts) and flag store-table scans that carry
-    // no pushed filter — the corpus-proportional shape the capped
-    // IN-list prunes exist to remove (the ledger was pruned first; the
-    // append guards regressed to full scan+distinct until round 17)
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]
+    // anti-join guards, inserts) and, per store-table scan, its pushed
+    // filters and the keys of the LeftSemi join it sits under, if any —
+    // inferred IsNotNull filters alone would make any scan look "pruned"
+    final case class Scan(table: String, pushed: String, hasIn: Boolean,
+        semiKeys: Option[Set[String]])
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Scan]
     // plan.foreach does NOT descend into AQE's nested trees — an
     // AdaptiveSparkPlanExec holds its live plan behind executedPlan and
     // each QueryStageExec wraps its subtree as a leaf — so walk them
     // explicitly or every scan under an exchange goes uncounted
     val dbg = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    def record(plan: org.apache.spark.sql.execution.SparkPlan): Unit =
-      (plan +: plan.subqueriesAll).foreach(_.foreach {
+    def walk(plan: org.apache.spark.sql.execution.SparkPlan,
+        semi: Option[Set[String]]): Unit = {
+      plan.subqueries.foreach(walk(_, None))
+      plan match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
           // walk the INITIAL plan as well: AQE's empty-relation
           // propagation can eliminate an already-materialized (or
           // never-needed) scan from the final plan, hiding the shape
           // this audit exists to check
-          record(a.initialPlan); record(a.executedPlan)
-        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          record(s.plan)
+          walk(a.initialPlan, semi); walk(a.executedPlan, semi)
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+          walk(q.plan, semi)
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+            if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi =>
+          walk(j.left, Some(j.leftKeys.flatMap(_.references.map(_.name)).toSet))
+          walk(j.right, semi)
         case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.tableIdentifier.map(_.table).filter(_.startsWith("sd_ps_"))
-            .foreach { t =>
-              seen.add((t,
-                f.dataFilters.nonEmpty || f.partitionFilters.nonEmpty)): Unit
-            }
-        case _ => ()
-      })
+          f.tableIdentifier.map(_.table).filter(_.startsWith("sd_ps_")).foreach { t =>
+            val hasIn = f.dataFilters.exists(_.exists {
+              case _: org.apache.spark.sql.catalyst.expressions.In |
+                   _: org.apache.spark.sql.catalyst.expressions.InSet => true
+              case _ => false
+            })
+            seen.add(Scan(t, f.metadata.getOrElse("PushedFilters", ""), hasIn, semi)): Unit
+          }
+        case other => other.children.foreach(walk(_, semi))
+      }
+    }
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
           durationNs: Long): Unit = {
         dbg.add(s"$funcName :: ${qe.executedPlan.nodeName}"): Unit
-        record(qe.executedPlan)
+        walk(qe.executedPlan, None)
       }
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
@@ -293,25 +303,26 @@ class StreamDedupSpec extends SparkSpec {
     try {
       StreamDedup.processBatch(spark, "sd_ps",
         docs.filter(col("src_num") >= 10).drop("src_num"), 1L).count(): Unit
-      // listener delivery is async — wait until the capture stabilizes
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(200)
-        val n = seen.size
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
-    val scans = seen.toArray(Array.empty[(String, Boolean)]).toSeq
+    val scans = seen.toArray(Array.empty[Scan]).toSeq
     // the audit must have SEEN all three stores, or it proves nothing
     Seq("sd_ps_bands", "sd_ps_toks", "sd_ps_decisions").foreach(t =>
-      assert(scans.exists(_._1 == t),
+      assert(scans.exists(_.table == t),
         s"no $t scan captured — audit inert; captured=$scans; " +
           s"events=${dbg.toArray.mkString(" | ")}"))
-    val unfiltered = scans.collect { case (t, false) => t }.distinct
-    assert(unfiltered.isEmpty,
-      s"serve path executed UNFILTERED store scans of: ${unfiltered.mkString(", ")}")
+    // toks and decisions: the batch-bounded doc_id range reaches the scan
+    for (s <- scans if s.table != "sd_ps_bands")
+      assert(s.pushed.contains("GreaterThanOrEqual(doc_id,") &&
+        s.pushed.contains("LessThanOrEqual(doc_id,"),
+        s"${s.table} scan pushes no doc_id range: ${s.pushed}")
+    // bands: every scan is the store side of the (band_idx, band) semi-join
+    for (s <- scans if s.table == "sd_ps_bands")
+      assert(s.semiKeys.contains(Set("band_idx", "band")),
+        s"bands scan not under a LeftSemi join on (band_idx, band): $s")
+    // no store scan plans a literal IN-list
+    val inLists = scans.filter(s => s.hasIn || s.pushed.contains("In("))
+    assert(inLists.isEmpty, s"store scans with an IN-list: $inLists")
     dropStore("sd_ps")
   }
 
